@@ -114,6 +114,19 @@ def _footer_gated_broadcast(sf_dir: str, table: str, df: DataFrame) -> DataFrame
         return F.broadcast(df)
     return df.hint("shuffle_hash")
 
+
+def _order_key_mirrors(spark: SparkSession, sf_dir: str) -> dict[str, str] | None:
+    """{"orders": name, "lineitem": name} of the mirrors co-bucketed on the
+    order key (sources/bucketed.py), or None below the mirror threshold,
+    with ``SPARK_GRAFT_NO_BUCKETED=1`` or on any failure. One spec list
+    for every adopter, so they all share the same two mirrors."""
+    from cuny_courses_spark.sources.bucketed import clustered_views
+
+    return clustered_views(
+        spark, sf_dir, [("orders", "o_orderkey"), ("lineitem", "l_orderkey")]
+    )
+
+
 # Exact cents images (FIXTURES scale contract), shared across the texts.
 _EP = "CAST(round(l_extendedprice * 100) AS BIGINT)"
 _DISC = "CAST(round(l_discount * 100) AS BIGINT)"
@@ -154,24 +167,18 @@ def q_sql_q4_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max pruning at 100 TB; a 3× smaller probe side locally).
 
     r16 (guide §2.4/§6): above the mirror threshold both sides come from
-    the ingest-time order-key bucketed mirrors (sources/bucketed.py) —
-    the fo⋈lineitem join runs exchange-free on the co-bucketed sorted
-    scans (hint stripped; sort-free SMJ) and the count(DISTINCT
-    o_orderkey) partial-dedup reuses the same clustering. Oracle text
-    verbatim; below the threshold the r15 text runs unchanged."""
-    from cuny_courses_spark.sources.bucketed import clustered_views
-
-    mirrors = clustered_views(
-        spark,
-        sf_dir,
-        [("orders", "o_orderkey"), ("lineitem", "l_orderkey")],
-    )
+    the ingest-time order-key bucketed mirrors (sources/bucketed.py) and
+    the SHUFFLE_HASH(fo) hint stays: the fo⋈lineitem join is a per-bucket
+    shuffled-hash join on the co-bucketed scans — no Exchange and no Sort
+    on either side (without the hint the planner takes a sort-merge join
+    that sorts both mirrors) — and the count(DISTINCT o_orderkey)
+    partial-dedup reuses the same clustering. Oracle text verbatim; below
+    the threshold the r15 text runs unchanged."""
+    mirrors = _order_key_mirrors(spark, sf_dir)
     if mirrors is None:
         return run_sql(spark, sf_dir, _Q4)
-    sql = (
-        _Q4.replace("/*+ SHUFFLE_HASH(fo) */ ", "")
-        .replace("FROM orders", f"FROM {mirrors['orders']}")
-        .replace("FROM fo JOIN lineitem", f"FROM fo JOIN {mirrors['lineitem']}")
+    sql = _Q4.replace("FROM orders", f"FROM {mirrors['orders']}").replace(
+        "FROM fo JOIN lineitem", f"FROM fo JOIN {mirrors['lineitem']}"
     )
     return run_sql(spark, sf_dir, sql)
 
@@ -301,24 +308,15 @@ def q_sql_q10_returned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r16 optimization round (guide §2.4/§6): above the mirror threshold
     both fact sides come from the ingest-time order-key bucketed mirrors
-    (sources/bucketed.py) — the lineitem⋈od join runs exchange-free on
-    the co-bucketed scans (SHUFFLE_HASH hint stripped: the sortBy'd
-    buckets feed a sort-free SMJ), leaving only the small per-custkey
-    aggregate shuffle. Oracle text verbatim; below the threshold the
-    r15 text runs unchanged."""
-    from cuny_courses_spark.sources.bucketed import clustered_views
-
-    mirrors = clustered_views(
-        spark,
-        sf_dir,
-        [("orders", "o_orderkey"), ("lineitem", "l_orderkey")],
-    )
+    (sources/bucketed.py) — the lineitem⋈od join keeps SHUFFLE_HASH(od)
+    and runs as a per-bucket shuffled-hash join on the co-bucketed scans,
+    leaving only the small per-custkey aggregate shuffle. Oracle text
+    verbatim; below the threshold the r15 text runs unchanged."""
+    mirrors = _order_key_mirrors(spark, sf_dir)
     if mirrors is None:
         return run_sql(spark, sf_dir, _Q10)
-    sql = (
-        _Q10.replace("/*+ SHUFFLE_HASH(od) */ ", "")
-        .replace("FROM orders", f"FROM {mirrors['orders']}")
-        .replace("FROM lineitem JOIN od", f"FROM {mirrors['lineitem']} JOIN od")
+    sql = _Q10.replace("FROM orders", f"FROM {mirrors['orders']}").replace(
+        "FROM lineitem JOIN od", f"FROM {mirrors['lineitem']} JOIN od"
     )
     return run_sql(spark, sf_dir, sql)
 
@@ -863,9 +861,23 @@ def q_sql_q18_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     posture above, unchanged. The DuckDB oracle keeps the _Q18 text
     verbatim; ×100 ordered-collect equality + per-SF oracle hashes prove
     the forms identical. ×100 A/B (interleaved, best-of-5): 6.58 →
-    2.77 s, new wins every lap pair; plans/r15/q_sql_q18_*."""
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
+    2.77 s, new wins every lap pair; plans/r15/q_sql_q18_*.
+
+    Above the mirror threshold lineitem and orders come from the same
+    order-key bucketed mirrors as q21/q10/q4/q12 (sources/bucketed.py):
+    the per-order sum reuses the lineitem mirror's bucketing and
+    big⋈orders is a per-bucket shuffled-hash join built on `big` — no
+    Exchange on either fact side, so there is nothing for the
+    checkpoint probe to save and this path runs no probe jobs at all.
+    Below the threshold, or with ``SPARK_GRAFT_NO_BUCKETED=1``, the
+    two-phase form above runs unchanged."""
+    mirrors = _order_key_mirrors(spark, sf_dir)
+    if mirrors is None:
+        li = load(spark, sf_dir, "lineitem")
+        o = load(spark, sf_dir, "orders")
+    else:
+        li = spark.table(mirrors["lineitem"])
+        o = spark.table(mirrors["orders"])
     c = load(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
@@ -876,9 +888,12 @@ def q_sql_q18_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("sum_qty") > 300)
     )
-    # |big| ≤ one row per distinct l_orderkey ≤ |orders| (FK contract),
-    # so the orders footer bounds the probe decision.
-    bigj = _checkpointed_small(big, sf_dir, "orders")
+    if mirrors is None:
+        # |big| ≤ one row per distinct l_orderkey ≤ |orders| (FK
+        # contract), so the orders footer bounds the probe decision.
+        bigj = _checkpointed_small(big, sf_dir, "orders")
+    else:
+        bigj = big.hint("shuffle_hash")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     top = (
         o.join(bigj, o.o_orderkey == bigj["l_orderkey"])
@@ -964,25 +979,17 @@ def q_sql_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     key (sources/bucketed.py). Both rollups and the fact join then reuse
     the scan's bucket partitioning — ZERO fact exchanges (the r15
     sidecar's q_sql_q21_bucketed A/B, 3.88 → 2.13 s at ×100, promoted to
-    the declared path); the SHUFFLE_HASH hint is stripped on this path
-    because the sortBy'd buckets feed a sort-free SMJ. Same rows by
+    the declared path); the SHUFFLE_HASH(ord) hint stays, so the join is
+    a per-bucket shuffled-hash join with no Sort on either side. Same rows by
     construction (the mirror is the base table re-laid-out); the DuckDB
     oracle keeps the _Q21 text verbatim and the driver's hash gate plus
     tools/check.py --amplify prove equality. Below the threshold (every
     driver correctness SF) the r15 text runs unchanged."""
-    from cuny_courses_spark.sources.bucketed import clustered_views
-
-    mirrors = clustered_views(
-        spark,
-        sf_dir,
-        [("orders", "o_orderkey"), ("lineitem", "l_orderkey")],
-    )
+    mirrors = _order_key_mirrors(spark, sf_dir)
     if mirrors is None:
         return run_sql(spark, sf_dir, _Q21)
-    sql = (
-        _Q21.replace("/*+ SHUFFLE_HASH(ord) */ ", "")
-        .replace("FROM orders", f"FROM {mirrors['orders']}")
-        .replace("FROM lineitem JOIN ord", f"FROM {mirrors['lineitem']} JOIN ord")
+    sql = _Q21.replace("FROM orders", f"FROM {mirrors['orders']}").replace(
+        "FROM lineitem JOIN ord", f"FROM {mirrors['lineitem']} JOIN ord"
     )
     return run_sql(spark, sf_dir, sql)
 
@@ -1160,19 +1167,19 @@ def q_sql_q12_priority_by_class(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r16 (guide §2.4/§6): above the mirror threshold both sides come from
     the ingest-time order-key bucketed mirrors (sources/bucketed.py) —
-    the one fact join runs exchange-free on the co-bucketed sorted
-    scans; only the 2-group aggregate shuffles. Oracle text verbatim;
-    below the threshold the r15 text runs unchanged."""
-    from cuny_courses_spark.sources.bucketed import clustered_views
-
-    mirrors = clustered_views(
-        spark,
-        sf_dir,
-        [("orders", "o_orderkey"), ("lineitem", "l_orderkey")],
-    )
+    the one fact join is a per-bucket shuffled-hash join on the
+    co-bucketed scans, pinned by SHUFFLE_HASH on the orders mirror
+    (unhinted, the planner broadcasts the whole orders mirror: a
+    driver-side collect and hash build that grows with SF); only the
+    2-group aggregate shuffles. Oracle text verbatim; below the threshold
+    the r15 text runs unchanged."""
+    mirrors = _order_key_mirrors(spark, sf_dir)
     if mirrors is None:
         return run_sql(spark, sf_dir, _Q12)
     sql = _Q12.replace(
+        "SELECT l_returnflag",
+        f"SELECT /*+ SHUFFLE_HASH({mirrors['orders']}) */ l_returnflag",
+    ).replace(
         "FROM orders JOIN lineitem",
         f"FROM {mirrors['orders']} JOIN {mirrors['lineitem']}",
     )

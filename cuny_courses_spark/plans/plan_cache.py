@@ -4,7 +4,8 @@ Building a registered query repeats identically on every invocation:
 ~tens of py4j round trips to construct the logical plan, then eager
 Catalyst analysis. This module memoizes the ANALYZED Dataset per
 
-    (SparkSession, query name, sf_dir, content signature of sf_dir)
+    (SparkSession, query name, sf_dir, content signature of sf_dir,
+     scale profile, SPARK_GRAFT_NO_BUCKETED)
 
 and returns a fresh ``select("*")`` wrapper over it on every call.
 
@@ -68,12 +69,15 @@ def get_or_build(
     try:
         per_session = _CACHE.setdefault(spark, {})
         # The scale profile picks ALGORITHMS (session.is_small_input), so a
-        # plan built under one profile must never serve the other.
+        # plan built under one profile must never serve the other; the
+        # mirror kill switch picks the LAYOUT (sources/bucketed.py), so
+        # flipping it mid-process must change which plan runs.
         key = (
             name,
             sf_dir,
             _dir_signature(sf_dir),
             _session.is_small_input(sf_dir),
+            os.environ.get("SPARK_GRAFT_NO_BUCKETED", ""),
         )
         df = per_session.get(key)
     except Exception:

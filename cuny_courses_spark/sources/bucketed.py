@@ -16,7 +16,14 @@ can never serve a stale copy.
 At 100 TB this is exactly what a production deployment does: write the
 fact tables bucketed on their dominant join key at ingest (Spark
 ``bucketBy``; Iceberg ``bucket(N, key)`` partition transforms), so every
-downstream per-key join/aggregate skips its shuffle forever. The bucket
+downstream per-key join/aggregate skips its shuffle forever. Two mirrors
+bucketed on the same key with the same bucket count join bucket by
+bucket: adopters pin a shuffled-hash join with a ``SHUFFLE_HASH``
+hint, which needs neither an Exchange nor a Sort. The mirrors
+are written WITHOUT ``sortBy``: Spark reads a bucket's sort order only
+under ``spark.sql.legacy.bucketedTableScan.outputOrdering`` (off by
+default, never set here), so a sorted write would be pure build cost and
+a sort-merge join over the mirrors still sorts both sides. The bucket
 count is scale-adaptive (~256 MB of source bytes per bucket, floor 32 —
 the local profile's shuffle partition count), parameterised via
 ``SPARK_GRAFT_BUCKETS``.
@@ -172,10 +179,11 @@ def _build_mirror(
     name: str,
     src_bytes: int,
 ) -> None:
-    """Write the mirror: DROP stale same-(table, key) signatures, clear
-    leftover warehouse dirs from dead sessions (an in-memory catalog
-    forgets its tables; ``saveAsTable`` refuses an existing path), then
-    one bucketed+sorted write of the full source table."""
+    """Write the mirror: DROP stale same-(table, key) signatures (and
+    forget them in ``_KNOWN``), clear leftover warehouse dirs from dead
+    sessions (an in-memory catalog forgets its tables; ``saveAsTable``
+    refuses an existing path), then one bucketed write of the full source
+    table."""
     import shutil
     from urllib.parse import urlparse
 
@@ -202,8 +210,11 @@ def _build_mirror(
             reverse=True,
         )
         for old in others[2:]:
-            spark.sql(f"DROP TABLE IF EXISTS {os.path.basename(old)}")
+            dropped = os.path.basename(old)
+            spark.sql(f"DROP TABLE IF EXISTS {dropped}")
             shutil.rmtree(old, ignore_errors=True)
+            for k in [k for k, v in _KNOWN.items() if v == dropped]:
+                del _KNOWN[k]
         shutil.rmtree(os.path.join(wh, name), ignore_errors=True)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     spark.sparkContext.setJobDescription(f"ingest: bucketed mirror {name}")
@@ -213,15 +224,11 @@ def _build_mirror(
         n = _n_buckets(src_bytes)
         (
             # Repartition on the bucket key FIRST so each write task holds
-            # exactly one bucket → ONE file per bucket. Spark only treats
-            # a bucket as sorted when it is a single file, so this is
-            # what makes ``sortBy`` usable downstream: co-bucketed SMJs
-            # then skip BOTH sorts (the first mirror cut q21's fact
-            # exchange but still paid two 60 M-row sorts per lap).
+            # exactly one bucket → ONE file per bucket instead of one per
+            # (task, bucket): fewer, larger files for every later scan.
             load(spark, sf_dir, table)
             .repartition(n, F.col(key))
             .write.bucketBy(n, key)
-            .sortBy(key)
             .mode("overwrite")
             .saveAsTable(name)
         )
