@@ -1412,17 +1412,65 @@ def _physical_key(key: str, cm: dict) -> str:
     return cm.get(key, key)
 
 
+def _applicable_dv_versions(doc: dict, f: str) -> tuple[int, ...]:
+    """The commit versions of the deletion vectors that apply to data
+    file ``f`` — the same rule as ``_applicable_dvs`` (a DV of the
+    file's bucket committed after the file was added), kept as versions
+    rather than sidecar paths."""
+    dvs = doc.get("dvs")
+    if not dvs:
+        return ()
+    av = doc.get("added", {}).get(f, 0)
+    es = dvs.get(str(_bucket_of_path(f)), [])
+    return tuple(sorted({d["v"] for d in es if d["v"] > av}))
+
+
+def _read_dv_keys(
+    spark: SparkSession, doc: dict, paths: list[str]
+) -> DataFrame:
+    """DV sidecars ``paths`` as one frame of the PHYSICAL key column,
+    read under an explicit one-column schema so no schema-inference job
+    runs: the column name comes from the first sidecar's footer (read
+    with pyarrow, no Spark job), its type from the manifest schema. A sidecar whose
+    footer type differs from the manifest's (or a manifest without a
+    schema) falls back to an inferring read."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    col = pq.read_schema(paths[0]).field(0)
+    fields = (doc.get("schema") or {}).get("fields", [])
+    fld = next((f for f in fields if f["name"] == col.name), None)
+    if fld is not None:
+        sf = T.StructField.fromJson(fld)
+        if to_arrow_type(sf.dataType) == col.type:
+            return spark.read.schema(T.StructType([sf])).parquet(*paths)
+    return spark.read.parquet(*paths)
+
+
 def _read_snapshot_files(
     spark: SparkSession, doc: dict, files: list[str]
 ) -> DataFrame:
     """Read data files under the manifest schema with merge-on-read
-    deletes applied: files are GROUPED by their applicable-DV signature
-    (group count is bounded by delete commits since the last OPTIMIZE,
-    not by file count), each group subtracts its DV keys with one
-    broadcast anti-join, groups union back. DVs are KB-scale by design
-    — a delete writes |deleted keys in bucket| longs and OPTIMIZE folds
-    the ledger into clean files — so the broadcast side is bounded by
-    the un-compacted delete backlog, never by table size.
+    deletes applied: files are GROUPED by the set of DV VERSIONS that
+    apply to them (``_applicable_dv_versions``), and each group
+    subtracts, with one broadcast anti-join, the sidecars of those
+    versions from EVERY bucket. The group count is the number of
+    distinct version sets — it grows with delete commits since the last
+    OPTIMIZE, not with the buckets or files a delete touches — and each
+    group reads its sidecars under an explicit schema, so a read costs
+    one broadcast job per group plus its scan. DVs are KB-scale by design — a delete
+    writes |deleted keys| longs and OPTIMIZE folds the ledger into
+    clean files — so the broadcast side is bounded by the un-compacted
+    delete backlog, never by table size.
+
+    Layout invariant that makes the cross-bucket anti-join exact: on
+    every layout that can carry DVs (the hash layout and a recorded
+    ``bucket_expr``) a key's bucket is a function of the key, and
+    ``rebucket`` and both OPTIMIZE verbs fold pending DVs into the rows
+    they rewrite — so a sidecar of another bucket never holds a key of
+    this file, and restricted to the file's own bucket the chosen
+    versions select exactly ``_applicable_dvs``.
 
     Returns the snapshot's LOGICAL columns: physical file columns are
     aliased through the snapshot's column mapping (a no-op for tables
@@ -1434,14 +1482,20 @@ def _read_snapshot_files(
     rd = (
         spark.read.schema(T.StructType.fromJson(sch)) if sch else spark.read
     )
+    by_version: dict[int, list[str]] = {}
+    for es in (doc.get("dvs") or {}).values():
+        for d in es:
+            by_version.setdefault(d["v"], []).append(d["path"])
     groups: dict[tuple, list[str]] = {}
     for f in files:
-        groups.setdefault(_applicable_dvs(doc, f), []).append(f)
+        groups.setdefault(_applicable_dv_versions(doc, f), []).append(f)
     parts = []
-    for dvp, fs in sorted(groups.items()):
+    for vs, fs in sorted(groups.items()):
         df = rd.parquet(*fs)
-        if dvp:
-            dvk = spark.read.parquet(*dvp)
+        if vs:
+            dvk = _read_dv_keys(
+                spark, doc, sorted(p for v in vs for p in by_version[v])
+            )
             # DV schema is exactly [key column] — key-unique table, so
             # an anti-join on it deletes the same row set a positional
             # bitmap would.
@@ -1478,7 +1532,7 @@ def pending_dv_keys(
         paths.update(_applicable_dvs(doc, f))
     if not paths:
         return None
-    dvk = spark.read.parquet(*sorted(paths)).distinct()
+    dvk = _read_dv_keys(spark, doc, sorted(paths)).distinct()
     return _to_logical(dvk, _colmap(doc))
 
 
@@ -1900,7 +1954,8 @@ def delete_merge_on_read(
     rewriting any data file. The child manifest re-references every
     parent file verbatim and attaches per-bucket DELETION-VECTOR
     sidecars (tiny parquet files of just the deleted keys); readers
-    subtract them with one broadcast anti-join (``_apply_dvs``).
+    subtract them with a broadcast anti-join
+    (``_read_snapshot_files``).
 
     This is the write-amplification fix CoW can't give: a 1-row GDPR
     delete under ``merge_upsert`` rewrites its whole bucket (GBs at
@@ -2112,6 +2167,48 @@ def append_snapshot(
     return rep["version"], True
 
 
+def _rewrite_files(
+    spark: SparkSession,
+    table_dir: str,
+    parent: dict,
+    parent_version: int,
+    files: list[str],
+    key: str,
+) -> tuple[str | None, list[str]]:
+    """Rewrite ``files`` of snapshot ``parent`` into one new file per
+    bucket; return ``(staging dir, new files)`` — ``(None, [])`` when
+    there is nothing to rewrite. The shared half of both OPTIMIZE verbs.
+
+    The files are read with ONE ``_read_snapshot_files`` call: under the
+    parent MANIFEST schema, so fragments that predate a schema evolution
+    normalize to the current shape (missing columns read as null), and
+    with each file's applicable DVs folded in (per-file scoping: a
+    post-delete append's re-inserted keys survive the fold). Each row's
+    bucket is re-derived with the table's layout expression, as every
+    other writer does — on a layout that can carry DVs it is the bucket
+    the row was read from."""
+    if not files:
+        return None, []
+    cm = _colmap(parent)
+    df = _to_physical(_read_snapshot_files(spark, parent, files), cm)
+    lb = _layout_bucket_exprs(parent)
+    nb = _table_n_buckets(parent)
+    # per-attempt unique staging (r9 ADVICE): a fixed v{N} dir with
+    # mode=overwrite would let a commit-race LOSER delete the winner's
+    # already-referenced files before failing at publish.
+    staging = os.path.join(
+        table_dir, "data", f"v{parent_version + 1}_{uuid.uuid4().hex[:8]}"
+    )
+    new_files = _write_buckets(
+        df.withColumn(
+            "_b", lb(df) if lb else _bucket_of(_physical_key(key, cm), nb)
+        ),
+        staging,
+        nb,
+    )
+    return staging, new_files
+
+
 def optimize_compact(
     spark: SparkSession, table_dir: str, parent_version: int, key: str
 ) -> list[str]:
@@ -2122,10 +2219,9 @@ def optimize_compact(
     time-travelable version like any other, and concurrent readers of the
     parent snapshot are untouched (their files are immutable; VACUUM
     reclaims the superseded fragments later). Rewrite volume is bounded
-    by the fragmented buckets only; at 100 TB this runs bucket-parallel
-    with no shuffle at all (each bucket's fragments are read and
-    rewritten in place — the repartition below is by ``_b``, a
-    co-partitioning no-op semantically)."""
+    by the fragmented buckets only: they are read with ONE DV-aware
+    scan and written back through ``_write_buckets``, whose one hash
+    exchange on ``_b`` gathers each bucket's rows into its new file."""
     parent = _read_manifest_doc(table_dir, parent_version)
     parent_stats = parent.get("stats", {})
     parent_schema = parent.get("schema")
@@ -2142,43 +2238,15 @@ def optimize_compact(
         for b, ps in by_bucket.items()
         if len(ps) == 1 and str(b) not in parent_dvs
     ]
-    frag = {
-        b: ps
+    frag = [
+        p
         for b, ps in by_bucket.items()
         if len(ps) > 1 or str(b) in parent_dvs
-    }
-    if frag:
-        # fragments may predate a schema evolution — _read_snapshot_files
-        # reads them under the parent MANIFEST schema so compaction
-        # normalizes old files to the current shape (missing columns
-        # materialize as null) AND applies each file's applicable DVs
-        # (per-file scoping: a post-delete append's re-inserted keys
-        # survive the fold).
-        parts = [
-            _read_snapshot_files(spark, parent, ps).withColumn(
-                "_b", F.lit(b)
-            )
-            for b, ps in frag.items()
-        ]
-        merged = parts[0]
-        for d in parts[1:]:
-            merged = merged.unionByName(d)
-        # per-attempt unique staging (r9 ADVICE): a fixed v{N} dir with
-        # mode=overwrite would let a commit-race LOSER delete the
-        # winner's already-referenced files before failing at publish.
-        staging = os.path.join(
-            table_dir,
-            "data",
-            f"v{parent_version + 1}_{uuid.uuid4().hex[:8]}",
-        )
-        new_files = _write_buckets(
-            _to_physical(merged, _colmap(parent)),  # files store physical
-            staging,
-            _table_n_buckets(parent),
-        )
-    else:
-        staging = None
-        new_files = []
+        for p in ps
+    ]
+    staging, new_files = _rewrite_files(
+        spark, table_dir, parent, parent_version, frag, key
+    )
     stats = {p: parent_stats[p] for p in reused if p in parent_stats}
     stats.update(
         _file_key_stats(
@@ -8044,37 +8112,17 @@ def optimize_small_files(
         return int((parent_stats.get(p) or {}).get("rows") or 0)
 
     reused: list[str] = []
-    frag: dict[int, list[str]] = {}
-    for b, ps in by_bucket.items():
+    frag: list[str] = []
+    for ps in by_bucket.values():
         smalls = [p for p in ps if _rows(p) < threshold_rows]
         if len(smalls) >= 2:
-            frag[b] = smalls
+            frag.extend(smalls)
             reused.extend(p for p in ps if p not in smalls)
         else:
             reused.extend(ps)
-    if frag:
-        parts = [
-            _read_snapshot_files(spark, parent, ps).withColumn(
-                "_b", F.lit(b)
-            )
-            for b, ps in frag.items()
-        ]
-        merged = parts[0]
-        for d in parts[1:]:
-            merged = merged.unionByName(d)
-        staging = os.path.join(
-            table_dir,
-            "data",
-            f"v{parent_version + 1}_{uuid.uuid4().hex[:8]}",
-        )
-        new_files = _write_buckets(
-            _to_physical(merged, _colmap(parent)),
-            staging,
-            _table_n_buckets(parent),
-        )
-    else:
-        staging = None
-        new_files = []
+    staging, new_files = _rewrite_files(
+        spark, table_dir, parent, parent_version, frag, key
+    )
     stats = {p: parent_stats[p] for p in reused if p in parent_stats}
     stats.update(
         _file_key_stats(

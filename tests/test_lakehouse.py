@@ -2613,3 +2613,182 @@ def test_branch_chain_parents_and_isolation(spark, tmp_path):
         lh.read_branch(spark, table_dir, "dev").count()
         == base.count() + extra.count()
     )
+
+
+def _kv(spark, table_dir, version=None):
+    return {
+        r["k"]: r["v"]
+        for r in lh.snapshot_read(spark, table_dir, version).collect()
+    }
+
+
+def _kv_table(spark, table_dir, n=320, **kw):
+    rows = [(k, 3 * k) for k in range(n)]
+    lh.snapshot_write(
+        spark.createDataFrame(rows, "k long, v long"), table_dir, key="k", **kw
+    )
+    return dict(rows)
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan after ``df`` ran — the final adaptive
+    plan alone, without AQE's initial plan beside it."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def _jobs_of(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dv_versions_per_bucket_match_replay(spark, tmp_path):
+    """DVs at two versions on a 16-bucket table: bucket 3 carries DVs at
+    {v3, v5}, bucket 7 only at v5, and files of both buckets were added
+    before, between and after the deletes. Reads at v3, v4, v5 and HEAD
+    equal a pure-Python replay of the commits."""
+    table_dir = str(tmp_path / "lake_dv_versions")
+    model = _kv_table(spark, table_dir)
+    history = {1: dict(model)}
+
+    def append(v, keys):
+        rows = [(k, 5 * k) for k in keys]
+        model.update(rows)
+        got, _ = lh.append_snapshot(
+            table_dir, v, spark.createDataFrame(rows, "k long, v long"),
+            key="k",
+        )
+        history[got] = dict(model)
+        return got
+
+    def delete(v, keys):
+        for k in keys:
+            model.pop(k, None)
+        got, _ = lh.delete_merge_on_read(
+            spark, table_dir, v,
+            spark.createDataFrame([(k,) for k in keys], "k long"), key="k",
+        )
+        history[got] = dict(model)
+        return got
+
+    v = append(1, range(320, 352))  # v2: bucket 3 and 7 get v2 files
+    v = delete(v, [3, 19, 35, 323])  # v3: bucket 3 only
+    v = append(v, range(352, 384))  # v4
+    v = delete(v, [51, 355, 7, 23, 359, 999])  # v5: buckets 3 and 7
+    v = append(v, [3, 7, 384])  # v6: re-inserts after both deletes
+    assert v == 6
+    doc = lh._read_manifest_doc(table_dir, 5)
+    assert sorted(e["v"] for e in doc["dvs"]["3"]) == [3, 5]
+    assert [e["v"] for e in doc["dvs"]["7"]] == [5]
+    assert set(doc["dvs"]) == {"3", "7"}
+    for ver in (3, 4, 5, None):
+        want = history[ver or max(history)]
+        assert _kv(spark, table_dir, ver) == want, f"v{ver} diverged"
+
+
+def test_dv_resurrection_survives_read_and_optimize(spark, tmp_path):
+    """Delete key k, re-append k in a later commit: k survives the read
+    and OPTIMIZE with its new value, while an older file of another
+    bucket that carries a DV at the same version loses only its own
+    deleted key."""
+    table_dir = str(tmp_path / "lake_dv_resurrect")
+    model = _kv_table(spark, table_dir)
+    k, other = 21, 38  # buckets 5 and 6
+    v, _ = lh.delete_merge_on_read(
+        spark, table_dir, 1,
+        spark.createDataFrame([(k,), (other,)], "k long"), key="k",
+    )
+    model.pop(k)
+    model.pop(other)
+    v, _ = lh.append_snapshot(
+        table_dir, v, spark.createDataFrame([(k, -1)], "k long, v long"),
+        key="k",
+    )
+    model[k] = -1
+    assert _kv(spark, table_dir) == model
+    # the bucket-6 v1 file lost exactly its deleted key
+    doc = lh._read_manifest_doc(table_dir, v)
+    (f6,) = [f for f in doc["files"] if lh._bucket_of_path(f) == 6]
+    got6 = {
+        r["k"] for r in lh._read_snapshot_files(spark, doc, [f6]).collect()
+    }
+    assert got6 == {x for x in range(320) if x % 16 == 6} - {other}
+    lh.optimize_compact(spark, table_dir, v, key="k")
+    assert _kv(spark, table_dir) == model
+    doc = lh._read_manifest_doc(table_dir, lh.latest_version(table_dir))
+    assert not doc.get("dvs")
+    buckets = [lh._bucket_of_path(f) for f in doc["files"]]
+    assert len(buckets) == len(set(buckets))
+
+
+def test_dv_on_range_layout_read_and_optimize_match_replay(spark, tmp_path):
+    """A range layout (``bucket_expr``) with DVs at two versions: reads
+    and OPTIMIZE match a replay, and OPTIMIZE writes every row back into
+    its range bucket."""
+    table_dir = str(tmp_path / "lake_dv_range")
+    w = 20
+    model = _kv_table(
+        spark, table_dir, bucket_expr=f"CAST(k DIV {w} AS INT)"
+    )
+    v = 1
+    for dels in ([5, 45, 46, 301], [6, 47, 250, 999]):
+        for x in dels:
+            model.pop(x, None)
+        v, _ = lh.delete_merge_on_read(
+            spark, table_dir, v,
+            spark.createDataFrame([(x,) for x in dels], "k long"), key="k",
+        )
+        assert _kv(spark, table_dir, v) == model
+    lh.optimize_compact(spark, table_dir, v, key="k")
+    assert _kv(spark, table_dir) == model
+    doc = lh._read_manifest_doc(table_dir, v + 1)
+    for f in doc["files"]:
+        s = doc["stats"][f]
+        b = lh._bucket_of_path(f)
+        assert b * w <= s["min"] <= s["max"] < (b + 1) * w
+
+
+def test_dv_in_every_bucket_reads_with_one_anti_join(spark, tmp_path):
+    """A DV in all 16 buckets: the HEAD read plans ONE broadcast anti-join
+    over ONE data scan, and both the read and OPTIMIZE run at most three
+    Spark jobs (one broadcast per bucket cost 34 before)."""
+    from pyspark.sql import functions as F
+
+    table_dir = str(tmp_path / "lake_dv_all")
+    model = _kv_table(spark, table_dir)
+    dels = [k for k in model if k % 7 == 0]
+    v, n_dv = lh.delete_merge_on_read(
+        spark, table_dir, 1,
+        spark.createDataFrame([(k,) for k in dels], "k long"), key="k",
+    )
+    assert n_dv == 16
+    agg = lh.snapshot_read(spark, table_dir).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")
+    )
+    out = []
+    assert _jobs_of(spark, "dv_read", lambda: out.append(agg.collect())) <= 3
+    want = {k: x for k, x in model.items() if k % 7}
+    assert tuple(out[0][0]) == (len(want), sum(want.values()))
+    plan = _final_plan(agg)
+    anti = [
+        ln for ln in plan.splitlines()
+        if "BroadcastHashJoin" in ln and "LeftAnti" in ln
+    ]
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    data = [ln for ln in scans if "struct<k:bigint,v:bigint>" in ln]
+    assert len(anti) == 1, plan
+    assert len(data) == 1 and len(scans) == 2, plan  # data + the DVs
+    n = _jobs_of(
+        spark, "dv_optimize",
+        lambda: lh.optimize_compact(spark, table_dir, v, key="k"),
+    )
+    assert n <= 3
+    assert _kv(spark, table_dir) == want
