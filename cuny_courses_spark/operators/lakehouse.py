@@ -1360,26 +1360,24 @@ def _bucket_of_path(p: str) -> int:
     return int(p.split("_b=")[1].split(os.sep)[0])
 
 
-def _applicable_dvs(doc: dict, f: str) -> tuple[str, ...]:
-    """The deletion vectors that apply to data file ``f``: those of its
-    bucket committed AFTER the file was added. The added-version guard
-    is what makes key-DVs behave like Delta's PER-FILE positional
-    bitmaps: a delete erases the key from files that existed when it
-    ran, while a row re-inserted by a LATER append lives in a younger
-    file and must survive (resurrection would otherwise be impossible
-    until compaction). Files without added-version metadata default to
+def _applicable_dvs(doc: dict, f: str) -> list[dict]:
+    """The deletion-vector entries (``{"v", "path"}``, sorted by path)
+    that apply to data file ``f``: those of its bucket committed AFTER
+    the file was added. The added-version guard is what makes key-DVs
+    behave like Delta's PER-FILE positional bitmaps: a delete erases
+    the key from files that existed when it ran, while a row
+    re-inserted by a LATER append lives in a younger file and must
+    survive (resurrection would otherwise be impossible until
+    compaction). Files without added-version metadata default to
     0 — every DV applies — the sound direction for hand-built
     manifests."""
     dvs = doc.get("dvs")
     if not dvs:
-        return ()
+        return []
     av = doc.get("added", {}).get(f, 0)
-    return tuple(
-        sorted(
-            d["path"]
-            for d in dvs.get(str(_bucket_of_path(f)), [])
-            if d["v"] > av
-        )
+    return sorted(
+        (d for d in dvs.get(str(_bucket_of_path(f)), []) if d["v"] > av),
+        key=lambda d: d["path"],
     )
 
 
@@ -1412,40 +1410,25 @@ def _physical_key(key: str, cm: dict) -> str:
     return cm.get(key, key)
 
 
-def _applicable_dv_versions(doc: dict, f: str) -> tuple[int, ...]:
-    """The commit versions of the deletion vectors that apply to data
-    file ``f`` — the same rule as ``_applicable_dvs`` (a DV of the
-    file's bucket committed after the file was added), kept as versions
-    rather than sidecar paths."""
-    dvs = doc.get("dvs")
-    if not dvs:
-        return ()
-    av = doc.get("added", {}).get(f, 0)
-    es = dvs.get(str(_bucket_of_path(f)), [])
-    return tuple(sorted({d["v"] for d in es if d["v"] > av}))
-
-
 def _read_dv_keys(
     spark: SparkSession, doc: dict, paths: list[str]
 ) -> DataFrame:
     """DV sidecars ``paths`` as one frame of the PHYSICAL key column,
     read under an explicit one-column schema so no schema-inference job
     runs: the column name comes from the first sidecar's footer (read
-    with pyarrow, no Spark job), its type from the manifest schema. A sidecar whose
-    footer type differs from the manifest's (or a manifest without a
-    schema) falls back to an inferring read."""
+    with pyarrow, no Spark job), its field from the manifest schema.
+    Sidecars written before a ``widen_column`` of the key keep their
+    narrow encoding and upcast under the wide type, as data files do.
+    A manifest without a schema falls back to an inferring read."""
+    sch = doc.get("schema")
+    if not sch:
+        return spark.read.parquet(*paths)
     import pyarrow.parquet as pq
     from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import to_arrow_type
 
-    col = pq.read_schema(paths[0]).field(0)
-    fields = (doc.get("schema") or {}).get("fields", [])
-    fld = next((f for f in fields if f["name"] == col.name), None)
-    if fld is not None:
-        sf = T.StructField.fromJson(fld)
-        if to_arrow_type(sf.dataType) == col.type:
-            return spark.read.schema(T.StructType([sf])).parquet(*paths)
-    return spark.read.parquet(*paths)
+    name = pq.read_schema(paths[0]).names[0]
+    fld = T.StructType.fromJson(sch)[name]
+    return spark.read.schema(T.StructType([fld])).parquet(*paths)
 
 
 def _read_snapshot_files(
@@ -1453,9 +1436,9 @@ def _read_snapshot_files(
 ) -> DataFrame:
     """Read data files under the manifest schema with merge-on-read
     deletes applied: files are GROUPED by the set of DV VERSIONS that
-    apply to them (``_applicable_dv_versions``), and each group
-    subtracts, with one broadcast anti-join, the sidecars of those
-    versions from EVERY bucket. The group count is the number of
+    apply to them (``_applicable_dvs``), and each group subtracts, with
+    one broadcast anti-join, the sidecars of those versions from every
+    bucket of the group's files. The group count is the number of
     distinct version sets — it grows with delete commits since the last
     OPTIMIZE, not with the buckets or files a delete touches — and each
     group reads its sidecars under an explicit schema, so a read costs
@@ -1482,19 +1465,25 @@ def _read_snapshot_files(
     rd = (
         spark.read.schema(T.StructType.fromJson(sch)) if sch else spark.read
     )
-    by_version: dict[int, list[str]] = {}
-    for es in (doc.get("dvs") or {}).values():
-        for d in es:
-            by_version.setdefault(d["v"], []).append(d["path"])
     groups: dict[tuple, list[str]] = {}
     for f in files:
-        groups.setdefault(_applicable_dv_versions(doc, f), []).append(f)
+        vs = tuple(sorted({d["v"] for d in _applicable_dvs(doc, f)}))
+        groups.setdefault(vs, []).append(f)
+    dvs = doc.get("dvs") or {}
     parts = []
     for vs, fs in sorted(groups.items()):
         df = rd.parquet(*fs)
         if vs:
+            bs = {str(_bucket_of_path(f)) for f in fs}
             dvk = _read_dv_keys(
-                spark, doc, sorted(p for v in vs for p in by_version[v])
+                spark,
+                doc,
+                sorted(
+                    d["path"]
+                    for b in bs
+                    for d in dvs.get(b, [])
+                    if d["v"] in vs
+                ),
             )
             # DV schema is exactly [key column] — key-unique table, so
             # an anti-join on it deletes the same row set a positional
@@ -1529,7 +1518,7 @@ def pending_dv_keys(
     doc = _read_manifest_doc(table_dir, v)
     paths: set[str] = set()
     for f in doc["files"]:
-        paths.update(_applicable_dvs(doc, f))
+        paths.update(d["path"] for d in _applicable_dvs(doc, f))
     if not paths:
         return None
     dvk = _read_dv_keys(spark, doc, sorted(paths)).distinct()
@@ -2174,39 +2163,48 @@ def _rewrite_files(
     parent_version: int,
     files: list[str],
     key: str,
-) -> tuple[str | None, list[str]]:
+) -> tuple[str | None, list[str], dict[str, dict]]:
     """Rewrite ``files`` of snapshot ``parent`` into one new file per
-    bucket; return ``(staging dir, new files)`` — ``(None, [])`` when
-    there is nothing to rewrite. The shared half of both OPTIMIZE verbs.
+    bucket; return ``(staging dir, new files, their manifest stats)`` —
+    ``(None, [], {})`` when there is nothing to rewrite. The shared half
+    of both OPTIMIZE verbs.
 
     The files are read with ONE ``_read_snapshot_files`` call: under the
     parent MANIFEST schema, so fragments that predate a schema evolution
     normalize to the current shape (missing columns read as null), and
     with each file's applicable DVs folded in (per-file scoping: a
     post-delete append's re-inserted keys survive the fold). Each row's
-    bucket is re-derived with the table's layout expression, as every
-    other writer does — on a layout that can carry DVs it is the bucket
-    the row was read from."""
+    bucket is re-derived with the table's layout, as every other writer
+    does: the ACTIVE partition spec's transform on a partition-spec
+    table (its new files record that spec, so they stay prunable), else
+    the recorded ``bucket_expr``, else the key hash. On a layout that
+    can carry DVs that is the bucket the row was read from."""
     if not files:
-        return None, []
+        return None, [], {}
     cm = _colmap(parent)
-    df = _to_physical(_read_snapshot_files(spark, parent, files), cm)
+    pk = _physical_key(key, cm)
+    props = parent.get("props", {})
+    spec = props.get("partition_spec")
     lb = _layout_bucket_exprs(parent)
     nb = _table_n_buckets(parent)
+    df = _to_physical(_read_snapshot_files(spark, parent, files), cm)
+    if spec:
+        b = F.expr(_pspec_expr(spec["transform"], spec["col"]))
+    else:
+        b = lb(df) if lb else _bucket_of(pk, nb)
     # per-attempt unique staging (r9 ADVICE): a fixed v{N} dir with
     # mode=overwrite would let a commit-race LOSER delete the winner's
     # already-referenced files before failing at publish.
     staging = os.path.join(
         table_dir, "data", f"v{parent_version + 1}_{uuid.uuid4().hex[:8]}"
     )
-    new_files = _write_buckets(
-        df.withColumn(
-            "_b", lb(df) if lb else _bucket_of(_physical_key(key, cm), nb)
-        ),
-        staging,
-        nb,
-    )
-    return staging, new_files
+    new_files = _write_buckets(df.withColumn("_b", b), staging, nb)
+    extra = props.get("stats_cols")
+    if spec:
+        stats = _pspec_stats(new_files, pk, spec, extra_cols=extra)
+    else:
+        stats = _file_key_stats(new_files, pk, extra_cols=extra)
+    return staging, new_files, stats
 
 
 def optimize_compact(
@@ -2244,16 +2242,11 @@ def optimize_compact(
         if len(ps) > 1 or str(b) in parent_dvs
         for p in ps
     ]
-    staging, new_files = _rewrite_files(
+    staging, new_files, new_stats = _rewrite_files(
         spark, table_dir, parent, parent_version, frag, key
     )
     stats = {p: parent_stats[p] for p in reused if p in parent_stats}
-    stats.update(
-        _file_key_stats(
-            new_files, _physical_key(key, _colmap(parent)),
-            extra_cols=parent.get("props", {}).get("stats_cols"),
-        )
-    )
+    stats.update(new_stats)
     parent_added = parent.get("added", {})
     added = {p: parent_added.get(p, 0) for p in reused}
     added.update({p: parent_version + 1 for p in new_files})
@@ -3312,7 +3305,10 @@ def incremental_diff(
     # contributed no change and is excluded (work stays ∝ changed
     # buckets, the CDC contract).
     def _sig(doc: dict) -> dict[str, tuple]:
-        return {p: _applicable_dvs(doc, p) for p in doc["files"]}
+        return {
+            p: tuple(d["path"] for d in _applicable_dvs(doc, p))
+            for p in doc["files"]
+        }
 
     so, sn = _sig(old_doc), _sig(new_doc)
     only_old = sorted(p for p, s in so.items() if sn.get(p) != s)
@@ -5344,17 +5340,17 @@ def _pspec_interval(transform: str, value: int) -> tuple[int, int]:
 
 
 def _pspec_stats(
-    files: list[str], key: str, spec: dict
+    files: list[str],
+    key: str,
+    spec: dict,
+    extra_cols: list[str] | None = None,
 ) -> dict[str, dict]:
     """Footer key stats + the file's (spec_id, partition value) — the
     value parsed from the ``_b=`` path segment the layout wrote, exact
     by construction (each file holds exactly one partition value)."""
-    stats = _file_key_stats(files, key)
+    stats = _file_key_stats(files, key, extra_cols=extra_cols)
     for p in files:
-        stats[p]["pspec"] = {
-            "id": spec["id"],
-            "value": int(p.split("_b=")[1].split(os.sep)[0]),
-        }
+        stats[p]["pspec"] = {"id": spec["id"], "value": _bucket_of_path(p)}
     return stats
 
 
@@ -8120,17 +8116,11 @@ def optimize_small_files(
             reused.extend(p for p in ps if p not in smalls)
         else:
             reused.extend(ps)
-    staging, new_files = _rewrite_files(
+    staging, new_files, new_stats = _rewrite_files(
         spark, table_dir, parent, parent_version, frag, key
     )
     stats = {p: parent_stats[p] for p in reused if p in parent_stats}
-    stats.update(
-        _file_key_stats(
-            new_files,
-            _physical_key(key, _colmap(parent)),
-            extra_cols=parent.get("props", {}).get("stats_cols"),
-        )
-    )
+    stats.update(new_stats)
     parent_added = parent.get("added", {})
     added = {p: parent_added.get(p, 0) for p in reused}
     added.update({p: parent_version + 1 for p in new_files})

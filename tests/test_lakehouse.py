@@ -2792,3 +2792,112 @@ def test_dv_in_every_bucket_reads_with_one_anti_join(spark, tmp_path):
     )
     assert n <= 3
     assert _kv(spark, table_dir) == want
+
+
+def test_dv_pruned_read_reads_only_its_buckets_sidecars(spark, tmp_path):
+    """A bucket-pruned read of a table with a DV in every bucket reads
+    the sidecar of its own bucket only, and still applies it."""
+    table_dir = str(tmp_path / "lake_dv_pruned")
+    model = _kv_table(spark, table_dir)
+    dels = [k for k in model if k % 5 == 0]
+    v, n_dv = lh.delete_merge_on_read(
+        spark, table_dir, 1,
+        spark.createDataFrame([(k,) for k in dels], "k long"), key="k",
+    )
+    assert n_dv == 16
+    df = lh.snapshot_read(spark, table_dir, v, buckets={6})
+    files = df.inputFiles()
+    assert len(files) == 2, files  # the bucket-6 data file and its DV
+    assert all("_b=6" in f for f in files), files
+    assert {r["k"] for r in df.collect()} == {
+        k for k in model if k % 16 == 6 and k % 5
+    }
+
+
+def test_dv_sidecars_mixed_width_after_key_widen(spark, tmp_path):
+    """An int key carries a DV, is widened to long, and takes a second
+    DV: int32 and int64 sidecars anti-join together under the manifest's
+    long type, for the read, ``pending_dv_keys`` and OPTIMIZE."""
+    import pyarrow.parquet as pq
+
+    table_dir = str(tmp_path / "lake_dv_widen")
+    rows = [(k, 3 * k) for k in range(160)]
+    lh.snapshot_write(
+        spark.createDataFrame(rows, "k int, v long"), table_dir, key="k"
+    )
+    model = dict(rows)
+    v, _ = lh.delete_merge_on_read(
+        spark, table_dir, 1,
+        spark.createDataFrame([(3,), (20,)], "k int"), key="k",
+    )
+    v = lh.widen_column(table_dir, v, "k", "long")["version"]
+    v, _ = lh.delete_merge_on_read(
+        spark, table_dir, v,
+        spark.createDataFrame([(19,), (35,), (40,)], "k long"), key="k",
+    )
+    for k in (3, 20, 19, 35, 40):
+        model.pop(k)
+    doc = lh._read_manifest_doc(table_dir, v)
+    widths = {
+        str(pq.read_schema(d["path"]).field(0).type)
+        for es in doc["dvs"].values()
+        for d in es
+    }
+    assert widths == {"int32", "int64"}
+    assert _kv(spark, table_dir) == model
+    pend = lh.pending_dv_keys(spark, table_dir)
+    assert sorted(r["k"] for r in pend.collect()) == [3, 19, 20, 35, 40]
+    lh.optimize_compact(spark, table_dir, v, key="k")
+    assert _kv(spark, table_dir) == model
+
+
+def test_optimize_partition_spec_table_keeps_files_prunable(spark, tmp_path):
+    """OPTIMIZE of a partition-spec table lays rewritten rows out under
+    the ACTIVE spec and records it in their stats: after a month → day
+    evolution, a fragmented month bucket is rewritten into day files
+    that ``prune_partitions`` can prune, and the rows are unchanged."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    table_dir = str(tmp_path / "lake_pe_opt")
+    jan1 = datetime.date(2002, 1, 1)
+    rows = [(k, jan1 + datetime.timedelta(days=k % 45)) for k in range(60)]
+    schema = "k long, d date"
+    lh.write_partitioned(
+        spark.createDataFrame(rows, schema), table_dir, key="k",
+        part_col="d", transform="month",
+    )
+    jan10 = datetime.date(2002, 1, 10)
+    extra = [(100 + i, jan10) for i in range(10)]
+    lh.append_partitioned(
+        spark.createDataFrame(extra, schema), table_dir, 1, key="k"
+    )  # v2: January now has two month files
+    lh.evolve_partition_spec(table_dir, 2, "day")  # v3
+    mar = [(200 + i, datetime.date(2002, 3, 1 + i)) for i in range(4)]
+    lh.append_partitioned(
+        spark.createDataFrame(mar, schema), table_dir, 3, key="k"
+    )  # v4
+    want = sorted(rows + extra + mar)
+    files = lh.optimize_compact(spark, table_dir, 4, key="k")
+    got = lh.snapshot_read(spark, table_dir, 5).select("k", "d").collect()
+    assert sorted(tuple(r) for r in got) == want
+    doc4 = lh._read_manifest_doc(table_dir, 4)
+    doc5 = lh._read_manifest_doc(table_dir, 5)
+    new = [f for f in files if f not in doc4["files"]]
+    assert len(new) == 31  # every January day, one file each
+    epoch = datetime.date(1970, 1, 1)
+    for f in new:
+        ps = doc5["stats"][f]["pspec"]
+        assert ps["id"] == 1
+        vals = {
+            r[0]
+            for r in spark.read.parquet(f)
+            .select(F.datediff("d", F.lit(epoch)))
+            .collect()
+        }
+        assert vals == {ps["value"]}
+    day = (jan10 - epoch).days
+    sel, _, per_spec = lh.prune_partitions(table_dir, 5, day, day)
+    assert per_spec == {1: 1}
+    assert len(sel) == 1 and sel[0] in new
