@@ -30,12 +30,15 @@ from cuny_courses_spark.sql import register_views, run_sql
 # pickle-BY-VALUE embeds the function bodies in the serialized task, so
 # any executor can run them with zero deployment coupling. Scope is the
 # modules whose functions execute on workers (r12 adds the Python data
-# source — its stream reader runs in a worker-side python process); relational operators
+# source — its stream reader runs in a worker-side python process; the
+# lakefeed connector carries the pyspark-free lakeformat protocol
+# module's functions with it); relational operators
 # never ship Python. Guarded: pickle-by-value is a portability
 # improvement, not a correctness dependency.
 try:  # pragma: no cover - trivially absent only on exotic pyspark builds
     from pyspark import cloudpickle as _cp
 
+    from cuny_courses_spark import lakeformat as _lakeformat
     from cuny_courses_spark.functions import multimodal as _mm
     from cuny_courses_spark.functions import udfs as _udfs
     from cuny_courses_spark.operators import similarity as _sim
@@ -43,7 +46,7 @@ try:  # pragma: no cover - trivially absent only on exotic pyspark builds
     from cuny_courses_spark.sources import pyds as _pyds
     from cuny_courses_spark.streaming import batch_twins as _bt
 
-    for _m in (_sim, _udfs, _mm, _bt, _pyds, _lakefeed):
+    for _m in (_sim, _udfs, _mm, _bt, _pyds, _lakefeed, _lakeformat):
         _cp.register_pickle_by_value(_m)
 except Exception:
     pass

@@ -75,14 +75,15 @@ cannot evaluate (CHECK constraints, identity/generated columns, custom
 bucket expressions, partition specs) are refused LOUDLY at stream
 start — use the batch writers / foreachBatch for those.
 
-SELF-CONTAINED by design: reader and writer objects are pickled into
-Spark's streaming-runner and executor Python processes, where this
-repo's package is not importable — so this module re-implements BOTH
-sides of the manifest protocol (version lists, bucket groups,
-added-version DV guards, content-addressed group publish, head pointer)
-from the format's spec with json/os/hashlib/pyarrow only, exactly as
-any external Delta/Iceberg ecosystem connector does, and must be kept
-in sync with ``operators/lakehouse.py``.
+ONE PROTOCOL: reader and writer objects are pickled into Spark's
+streaming-runner and executor Python processes, where this repo's
+package is not importable. Both sides of the manifest protocol (version
+lists, bucket groups, the added-version DV rule, the content-addressed
+group publish, the head hint) therefore come from
+``cuny_courses_spark.lakeformat``, the format's single pyspark-free
+implementation that ``operators/lakehouse.py`` uses too. Its functions
+are imported by name and the package registers that module for
+pickle-by-value, so they travel inside the pickled objects.
 """
 
 from __future__ import annotations
@@ -98,6 +99,17 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
     WriterCommitMessage,
+)
+
+from cuny_courses_spark.lakeformat import (
+    applicable_dvs,
+    bucket_of_path as _bucket_of,
+    head_version as _latest_version,
+    publish_snapshot,
+    read_list as _read_list,
+    resolve as _resolve,
+    resolve_list,
+    stage_snapshot,
 )
 
 _EMIT_CHUNK = 1 << 16  # rows per yielded RecordBatch (bounded transfer)
@@ -118,101 +130,13 @@ def _opt(options, name: str, default):
     return default
 
 
-# --------------------------------------------------------------------------
-# manifest protocol, consumer side (mirror of operators/lakehouse.py)
-# --------------------------------------------------------------------------
-
-
-def _manifest_path(table_dir: str, v: int) -> str:
-    return os.path.join(table_dir, "manifest", f"v{v}.json")
-
-
-def _read_list(table_dir: str, v: int) -> dict:
-    with open(_manifest_path(table_dir, v)) as f:
-        return json.load(f)
-
-
-def _resolve(table_dir: str, v: int) -> dict:
-    """Version list → flat doc (files/added/dvs/schema/props), resolving
-    bucket-group manifests — the consumer-side mirror of the writer's
-    ``_read_manifest_doc``."""
-    mdir = os.path.join(table_dir, "manifest")
-    doc = _read_list(table_dir, v)
-    if "groups" not in doc:
-        return doc
-    out = {k: x for k, x in doc.items() if k != "groups"}
-    files: list[str] = []
-    added: dict = {}
-    dvs: dict = {}
-    for g in sorted(doc["groups"]):
-        with open(os.path.join(mdir, doc["groups"][g])) as f:
-            gd = json.load(f)
-        files.extend(gd.get("files", []))
-        added.update(gd.get("added", {}))
-        if gd.get("dvs") and g.startswith("b"):
-            dvs[g[1:]] = gd["dvs"]
-    out["files"] = sorted(files)
-    if added:
-        out["added"] = added
-    if dvs:
-        out["dvs"] = dvs
-    return out
-
-
-def _latest_version(table_dir: str) -> int:
-    """HEAD via pointer + forward probe. Read-only: a CONSUMER never
-    self-heals the pointer (that is the writers' side of the protocol)."""
-    v = 0
-    try:
-        with open(os.path.join(table_dir, "manifest", "_head")) as f:
-            hint = json.load(f).get("version", 0)
-        if hint > 0 and os.path.exists(_manifest_path(table_dir, hint)):
-            v = hint
-    except (OSError, ValueError):
-        pass
-    if v == 0:
-        mdir = os.path.join(table_dir, "manifest")
-        try:
-            vs = [
-                int(f[1:-5])
-                for f in os.listdir(mdir)
-                if f.startswith("v") and f.endswith(".json")
-            ]
-        except FileNotFoundError:
-            return 0
-        if not vs:
-            return 0
-        v = max(vs)
-    while os.path.exists(_manifest_path(table_dir, v + 1)):
-        v += 1
-    return v
-
-
-def _bucket_of(p: str) -> int:
-    return int(p.split("_b=")[1].split(os.sep)[0])
-
-
-def _applicable_dvs(doc: dict, f: str) -> tuple[str, ...]:
-    """DVs applying to file ``f``: its bucket's vectors committed AFTER
-    the file was added (the resurrection guard, mirrored from the
-    writer side)."""
-    dvs = doc.get("dvs")
-    if not dvs:
-        return ()
-    av = doc.get("added", {}).get(f, 0)
-    return tuple(
-        sorted(
-            d["path"]
-            for d in dvs.get(str(_bucket_of(f)), [])
-            if d["v"] > av
-        )
-    )
-
-
 def _file_sigs(doc: dict) -> dict[str, tuple]:
     """A file's effective content signature: (path → applicable DVs).
     Keying the diff on the PAIR is what surfaces DV-only commits."""
-    return {p: _applicable_dvs(doc, p) for p in doc["files"]}
+    return {
+        p: tuple(d["path"] for d in applicable_dvs(doc, p))
+        for p in doc["files"]
+    }
 
 
 def _colmap_of(doc: dict) -> dict:
@@ -593,138 +517,6 @@ def _emit(tbl, p: _FeedPartition, ctype: str):
             yield b
 
 
-# --------------------------------------------------------------------------
-# manifest protocol, producer side (the native streaming SINK's commit —
-# mirror of operators/lakehouse.py commit_snapshot, reduced to appends)
-# --------------------------------------------------------------------------
-
-
-def _publish(tmp: str, final: str) -> None:
-    """Atomic fail-if-exists publish: link(2) + directory fsync — the
-    first-committer-wins claim every lakehouse commit uses."""
-    os.link(tmp, final)
-    dfd = os.open(os.path.dirname(final), os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
-
-
-def _write_group(mdir: str, content: dict) -> str:
-    """Content-addressed bucket-group manifest (sha1 of canonical JSON):
-    identical content → same name → structural sharing with every other
-    writer's groups, no parent bookkeeping."""
-    import hashlib
-
-    payload = json.dumps(content, sort_keys=True)
-    name = f"mg-{hashlib.sha1(payload.encode()).hexdigest()}.json"
-    final = os.path.join(mdir, name)
-    if os.path.exists(final):
-        return name
-    tmp = os.path.join(
-        mdir, f".{name}.tmp.{os.getpid()}.{uuid.uuid4().hex[:6]}"
-    )
-    with open(tmp, "w") as f:
-        f.write(payload)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        pass  # another writer published identical content — benign
-    finally:
-        os.unlink(tmp)
-    return name
-
-
-def _advance_head(table_dir: str, version: int) -> None:
-    hp = os.path.join(table_dir, "manifest", "_head")
-    try:
-        with open(hp) as f:
-            if json.load(f).get("version", 0) >= version:
-                return
-    except (OSError, ValueError):
-        pass
-    tmp = f"{hp}.tmp.{os.getpid()}.{uuid.uuid4().hex[:6]}"
-    with open(tmp, "w") as f:
-        json.dump({"version": version}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, hp)
-
-
-def _commit_version(
-    table_dir: str,
-    version: int,
-    files: list[str],
-    stats: dict,
-    added: dict,
-    dvs: dict | None,
-    schema,
-    props: dict | None,
-    meta: dict,
-    parent_groups: dict | None,
-) -> None:
-    """Publish one snapshot through the two-level manifest tree: shard
-    files by bucket group (content-addressed — untouched buckets
-    re-reference the parent's group files by construction), write the
-    version list with exact ``touched`` metadata (so concurrent batch
-    writers' conflict detection sees this commit as bucket-scoped, not
-    touches-everything), claim atomically, advance the head hint.
-    Raises FileExistsError on a lost race."""
-    mdir = os.path.join(table_dir, "manifest")
-    os.makedirs(mdir, exist_ok=True)
-    by_group: dict[str, list[str]] = {}
-    for p in files:
-        g = f"b{_bucket_of(p)}" if "_b=" in p else "x"
-        by_group.setdefault(g, []).append(p)
-    for b in dvs or {}:
-        by_group.setdefault(f"b{b}", [])
-    groups: dict[str, str] = {}
-    for g in sorted(by_group):
-        gfiles = sorted(by_group[g])
-        content: dict = {"files": gfiles}
-        gstats = {p: stats[p] for p in gfiles if p in stats}
-        if gstats:
-            content["stats"] = gstats
-        gadded = {p: added[p] for p in gfiles if p in added}
-        if gadded:
-            content["added"] = gadded
-        if g.startswith("b") and (dvs or {}).get(g[1:]):
-            content["dvs"] = dvs[g[1:]]
-        groups[g] = _write_group(mdir, content)
-    touched = sorted(
-        k
-        for k in set(groups) | set(parent_groups or {})
-        if groups.get(k) != (parent_groups or {}).get(k)
-    )
-    import time as _time
-
-    doc: dict = {
-        "version": version,
-        "groups": groups,
-        "touched": touched,
-        "ts": _time.time(),
-        "meta": meta,
-    }
-    if props:
-        doc["props"] = props
-    if schema is not None:
-        doc["schema"] = schema
-    tmp = os.path.join(
-        mdir, f".v{version}.json.tmp.{os.getpid()}.{uuid.uuid4().hex[:6]}"
-    )
-    with open(tmp, "w") as f:
-        json.dump(doc, f, sort_keys=True)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        _publish(tmp, _manifest_path(table_dir, version))
-    finally:
-        os.unlink(tmp)
-    _advance_head(table_dir, version)
-
-
 @dataclass
 class _SinkFiles(WriterCommitMessage):
     # [(path, key_min, key_max, rows), ...] staged by one write task
@@ -1017,7 +809,8 @@ class _LakeFeedStreamWriter(DataSourceStreamArrowWriter):
         for _ in range(8):
             head = _latest_version(self.table_dir)
             if head:
-                parent = _resolve(self.table_dir, head)
+                listed = _read_list(self.table_dir, head)
+                parent = resolve_list(self.table_dir, listed)
                 last = ((parent.get("props") or {}).get("txn") or {}).get(
                     self.sink_id
                 )
@@ -1079,7 +872,7 @@ class _LakeFeedStreamWriter(DataSourceStreamArrowWriter):
                         self.sink_id: int(batchId),
                     },
                 }
-                pgroups = _read_list(self.table_dir, head).get("groups")
+                pgroups = listed.get("groups")
             else:
                 # first commit of a fresh table: there are no parent
                 # files for an upsert's DVs to mask — commit without
@@ -1089,24 +882,25 @@ class _LakeFeedStreamWriter(DataSourceStreamArrowWriter):
                 # writer and retries against a non-empty head)
                 files, stats = list(new_files), dict(new_stats)
                 added = {p: 1 for p in new_files}
-                dvs, schema, pgroups = None, self.schema_json, None
+                dvs, schema, pgroups = None, self.schema_json, {}
                 props = {
                     **(self.props or {}),
                     "txn": {self.sink_id: int(batchId)},
                 }
+            doc, _ = stage_snapshot(
+                self.table_dir,
+                head + 1,
+                files,
+                stats=stats,
+                added=added,
+                dvs=dvs,
+                parent_groups=pgroups,
+                meta=meta,
+                props=props,
+                schema=schema,
+            )
             try:
-                _commit_version(
-                    self.table_dir,
-                    head + 1,
-                    files,
-                    stats,
-                    added,
-                    dvs,
-                    schema,
-                    props,
-                    meta,
-                    pgroups,
-                )
+                publish_snapshot(self.table_dir, doc)
             except FileExistsError:
                 continue  # lost the claim — re-resolve head and retry
             if dv_recs and not head:

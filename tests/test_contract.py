@@ -40,3 +40,19 @@ def test_registry_shapes():
 @pytest.mark.parametrize("table", TABLES)
 def test_loader_schema_contract(spark, table):
     validate_schema(spark, SF_DIR, table)
+
+
+def test_link_claim_lives_only_in_lakeformat():
+    """The lakehouse format's link(2) first-committer-wins claim has one
+    implementation, ``cuny_courses_spark/lakeformat.py``. A second
+    ``os.link(`` elsewhere in the package is a fork of the commit
+    protocol that can drift from it."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "cuny_courses_spark"
+    hits = sorted(
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if "os.link(" in p.read_text()
+    )
+    assert hits == ["lakeformat.py"], hits

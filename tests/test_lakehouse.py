@@ -903,6 +903,44 @@ def test_wap_branch_isolation_and_vacuum_root(spark, tmp_path):
     assert lh.snapshot_read(spark, table_dir).count() == base.count() + staged.count()
 
 
+def test_branch_ref_publish_fsyncs_manifest_dir(spark, tmp_path, monkeypatch):
+    """A branch ref is renamed onto ``b-<branch>.json``. Without a
+    directory fsync after that rename, a power loss can revert the ref
+    to its previous snapshot, and ``publish_branch`` would then promote
+    the stale one. The spy records fsyncs (by the path behind the fd)
+    and renames, and requires a manifest-directory fsync after the ref
+    rename."""
+    from pyspark.sql import functions as F
+
+    table_dir = str(tmp_path / "lake_ref")
+    base = spark.range(0, 32).select(F.col("id").alias("k"))
+    lh.snapshot_write(base, table_dir, key="k", version=1)
+    doc = lh._read_manifest_doc(table_dir, 1)
+    mdir = os.path.realpath(os.path.join(table_dir, "manifest"))
+    ref = os.path.join(mdir, "b-audit.json")
+    events: list[tuple[str, str]] = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def _fsync(fd):
+        events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        return real_fsync(fd)
+
+    def _replace(src, dst, *a, **kw):
+        real_replace(src, dst, *a, **kw)
+        events.append(("replace", os.path.realpath(dst)))
+
+    monkeypatch.setattr(os, "fsync", _fsync)
+    monkeypatch.setattr(os, "replace", _replace)
+    lh.commit_snapshot(
+        table_dir, 2, doc["files"], schema=doc.get("schema"), branch="audit"
+    )
+    monkeypatch.undo()
+    assert ("replace", ref) in events, events
+    after = events[events.index(("replace", ref)) + 1 :]
+    assert ("fsync", mdir) in after, events
+    assert lh._read_branch_doc(table_dir, "audit")["branch"] == "audit"
+
+
 def test_randomized_op_sequence_matches_model(spark, tmp_path):
     """Model-based randomized check over the whole write surface (r11 —
     regression armor for the manifest tree + deletion vectors + rebase
@@ -2204,6 +2242,9 @@ def test_lakefeed_sink_commit_is_o1_manifest_reads(spark, tmp_path):
     finally:
         lf._read_list = real_read_list
     assert lf._latest_version(table_dir) == 40
+    # the counter must see the commit's reads at all (a count of 0
+    # would pass the bound below vacuously)
+    assert reads_at[5] > 0, reads_at
     # O(1): the 40th commit reads no more manifests than the 6th
     assert reads_at[39] <= reads_at[5] <= 4, reads_at
 
@@ -2254,6 +2295,52 @@ def test_lakefeed_sink_txn_stamp_survives_batch_writer_commits(
     w.commit([msg2], batchId=0)
     assert lf._latest_version(table_dir) == 2  # skipped
     assert lh.snapshot_read(spark, table_dir).count() == 6
+
+
+def test_lakefeed_sink_commit_keeps_parent_stats_and_touches_one_bucket(
+    spark, tmp_path
+):
+    """The sink assembles its snapshot the way the batch writers do: a
+    one-bucket sink batch on a table the batch writer laid out keeps
+    every parent file's key stats, re-references the other buckets'
+    groups by name, and records only its own bucket as touched (so a
+    concurrent disjoint batch writer can still rebase over it)."""
+    import pyarrow as pa
+
+    from pyspark.sql import functions as F
+
+    from cuny_courses_spark.sources import lakefeed as lf
+
+    table_dir = str(tmp_path / "mirror")
+    base = spark.range(0, 64).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 10).alias("cents"),
+        F.lit("a").alias("st"),
+    )
+    lh.snapshot_write(base, table_dir, key="k")
+    w = _mk_writer(table_dir)
+    msg = w.write(
+        iter(
+            [
+                pa.RecordBatch.from_pydict(
+                    {"k": [1003], "cents": [1], "st": ["z"]}  # bucket 11
+                )
+            ]
+        )
+    )
+    w.commit([msg], batchId=0)
+    assert lf._latest_version(table_dir) == 2
+    g1 = lh._read_list_doc(table_dir, 1)["groups"]
+    l2 = lh._read_list_doc(table_dir, 2)
+    assert l2["touched"] == ["b11"]
+    assert {b: g for b, g in l2["groups"].items() if b != "b11"} == {
+        b: g for b, g in g1.items() if b != "b11"
+    }
+    v1 = lh._read_manifest_doc(table_dir, 1)
+    v2 = lh._read_manifest_doc(table_dir, 2)
+    assert v1["stats"] and all(
+        v2["stats"].get(p) == st for p, st in v1["stats"].items()
+    )
 
 
 def test_lakefeed_sink_default_sink_id_is_per_checkpoint(tmp_path):

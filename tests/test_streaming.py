@@ -999,3 +999,78 @@ def test_upsert_sink_applies_coalesced_net_batch(spark, tmp_path):
         for r in lh.snapshot_read(spark, src_dir).collect()
     }
     assert mir == src  # value-equal to the source head
+
+
+def test_lakefeed_workers_get_lakeformat_by_value(tmp_path):
+    """The streaming runner and executors unpickle the lakefeed source
+    where the package is not importable, so every function it calls,
+    lakeformat's protocol functions included, must travel by value.
+    Running from the repo root hides a by-reference pickle (the workers
+    import the package from the cwd), so the query runs in a subprocess
+    whose cwd is ``tmp_path`` and whose PYTHONPATH lacks the repo; only
+    the driver puts the repo on ``sys.path``."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "drive.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+
+            sys.path.insert(0, {repo!r})
+            from pyspark.sql import SparkSession
+
+            from cuny_courses_spark.operators import lakehouse as lh
+            from cuny_courses_spark.sources.lakefeed import ensure_registered
+
+            spark = (
+                SparkSession.builder.master("local[1]")
+                .config("spark.driver.memory", "512m")
+                .config("spark.ui.enabled", "false")
+                .config("spark.sql.shuffle.partitions", "2")
+                .getOrCreate()
+            )
+            table_dir = {str(tmp_path / "lake")!r}
+            lh.snapshot_write(
+                spark.range(0, 40).selectExpr("id AS k", "3 * id AS c"),
+                table_dir,
+                key="k",
+            )
+            ensure_registered(spark)
+            q = (
+                spark.readStream.format("lakefeed")
+                .option("table_dir", table_dir)
+                .option("key", "k")
+                .load()
+                .writeStream.format("memory")
+                .queryName("byvalue")
+                .outputMode("append")
+                .option("checkpointLocation", {str(tmp_path / "ckpt")!r})
+                .trigger(availableNow=True)
+                .start()
+            )
+            assert q.awaitTermination(300), "query did not terminate"
+            print("ROWS", spark.table("byvalue").count())
+            spark.stop()
+            """
+        )
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p
+        for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.realpath(p) != os.path.realpath(repo)
+    )
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert "ROWS 40" in out.stdout, out.stderr[-4000:]
