@@ -768,39 +768,21 @@ def rebucket(
     re-harvested. This is the knob that re-tunes rewrite amplification
     as a table grows: at 100 TB, doubling the bucket count halves the
     data a single-key merge rewrites — without rewriting history or
-    breaking time travel."""
+    breaking time travel. A partition-spec table is refused: its rows
+    are placed by the spec, not by a key hash."""
     parent = _read_manifest_doc(table_dir, parent_version)
-    cm = _colmap(parent)
-    pk = _physical_key(key, cm)
-    df = _to_physical(snapshot_read(spark, table_dir, parent_version), cm)
-    staging = os.path.join(
-        table_dir, "data", f"v{parent_version + 1}_{uuid.uuid4().hex[:8]}"
-    )
-    files = _write_buckets(
-        df.withColumn("_b", _bucket_of(pk, n_buckets)), staging, n_buckets
-    )
+    _refuse_partition_spec(parent, "rebucket")
     props = dict(parent.get("props", {}))
     props["n_buckets"] = n_buckets
-    # the rewrite above is the DEFAULT hash layout; carrying a parent
+    # the rewrite is the DEFAULT hash layout; carrying a parent
     # bucket_expr forward would make every later append/DV/full-sync
     # bucket new rows with the old expression over hash-laid files —
     # stale file reuse and DV targeting (r11 ADVICE, medium).
     props.pop("bucket_expr", None)
-    scols = props.get("stats_cols")
-    try:
-        commit_snapshot(
-            table_dir,
-            parent_version + 1,
-            files,
-            stats=_file_key_stats(files, pk, extra_cols=scols),
-            schema=parent.get("schema"),
-            added={f: parent_version + 1 for f in files},
-            props=props,
-        )
-    except FileExistsError:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    return files
+    return _rewrite_files(
+        spark, table_dir, parent, parent_version, [], parent["files"], key,
+        props,
+    )
 
 
 def rename_column(
@@ -834,15 +816,8 @@ def rename_column(
     cm[new] = physical
     props = dict(parent.get("props", {}))
     props["colmap"] = cm
-    return commit_snapshot(
-        table_dir,
-        parent_version + 1,
-        parent["files"],
-        stats=parent.get("stats"),
-        schema=sch,
-        dvs=parent.get("dvs"),
-        added=parent.get("added"),
-        props=props,
+    return _commit_metadata(
+        table_dir, parent, parent_version + 1, sch, props,
         rebase_from=parent_version,
     )
 
@@ -890,15 +865,8 @@ def drop_column(table_dir: str, parent_version: int, name: str) -> dict:
     # inert — pruning is driven by predicates over logical columns,
     # which no longer include it — and future stats harvests follow the
     # amended stats_cols.
-    return commit_snapshot(
-        table_dir,
-        parent_version + 1,
-        parent["files"],
-        stats=parent.get("stats"),
-        schema=new_sch,
-        dvs=parent.get("dvs"),
-        added=parent.get("added"),
-        props=props,
+    return _commit_metadata(
+        table_dir, parent, parent_version + 1, new_sch, props,
         rebase_from=parent_version,
     )
 
@@ -939,15 +907,8 @@ def widen_column(
         {**f, "type": new_type} if f["name"] == phys else f
         for f in sch["fields"]
     ]
-    return commit_snapshot(
-        table_dir,
-        parent_version + 1,
-        parent["files"],
-        stats=parent.get("stats"),
-        schema=new_sch,
-        dvs=parent.get("dvs"),
-        added=parent.get("added"),
-        props=parent.get("props"),
+    return _commit_metadata(
+        table_dir, parent, parent_version + 1, new_sch, parent.get("props"),
         rebase_from=parent_version,
     )
 
@@ -1112,7 +1073,138 @@ def _table_n_buckets(doc: dict) -> int:
     writer must bucket new rows and DVs with the SAME modulus the data
     files were laid out with, or hot-bucket targeting and DV application
     silently go wrong after a REBUCKET commit."""
-    return int(doc.get("props", {}).get("n_buckets", _N_BUCKETS))
+    return int((doc.get("props") or {}).get("n_buckets", _N_BUCKETS))
+
+
+def _layout_col(doc: dict, pk: str):
+    """The table's PHYSICAL layout rule as the ``_b`` Column, over the
+    PHYSICAL column names: the active partition spec's transform, else
+    the recorded ``bucket_expr`` (range / Z-order layouts), else the
+    key hash ``pmod(pk, n_buckets)``. Every writer lays out new rows and
+    DV sidecars through this one function — a writer that re-derived
+    the rule by hand would put a row (or a DV) in a different bucket
+    than the files that already hold its key. ``doc`` is a snapshot or
+    ``{"props": …}`` of the table being written (``rebucket`` passes
+    its child props)."""
+    props = doc.get("props") or {}
+    spec = props.get("partition_spec")
+    if spec:
+        return F.expr(_pspec_expr(spec["transform"], spec["col"]))
+    if props.get("bucket_expr"):
+        return F.expr(props["bucket_expr"])
+    return _bucket_of(pk, _table_n_buckets(doc))
+
+
+def _write_layout(df: DataFrame, doc: dict, pk: str, out_dir: str):
+    """``_write_buckets`` of ``df`` under ``doc``'s layout rule."""
+    return _write_buckets(
+        df.withColumn("_b", _layout_col(doc, pk)), out_dir,
+        _table_n_buckets(doc),
+    )
+
+
+def _layout_stats(props: dict | None, files: list[str], pk: str):
+    """Manifest stats of new files written under ``_layout_col``: the
+    partition tuple plus footer stats on a partition-spec table, footer
+    stats of the key and the ``stats_cols`` property otherwise."""
+    props = props or {}
+    spec = props.get("partition_spec")
+    extra = props.get("stats_cols")
+    if spec:
+        return _pspec_stats(files, pk, spec, extra_cols=extra)
+    return _file_key_stats(files, pk, extra_cols=extra)
+
+
+def _refuse_partition_spec(doc: dict, verb: str) -> None:
+    """Key-targeted verbs find a row's bucket from its key alone. On a
+    partition-spec table a row's file follows its partition column, so
+    a key upsert would leave the old row in its file (a duplicate key)
+    and a key DV would never meet its row (a lost delete). Refuse."""
+    spec = (doc.get("props") or {}).get("partition_spec")
+    if spec:
+        raise ValueError(
+            f"{verb} targets rows by key, but this table places rows by "
+            f"{spec['transform']}({spec['col']}); use merge_full_sync or "
+            f"an append instead"
+        )
+
+
+def _staging_dir(table_dir: str, sub: str, version: int) -> str:
+    """Per-attempt unique staging directory for a commit of ``version``
+    (r9 ADVICE): a fixed ``v{N}`` dir written with mode=overwrite would
+    let a commit-race LOSER delete the winner's already-referenced
+    files before failing at publish."""
+    return os.path.join(table_dir, sub, f"v{version}_{uuid.uuid4().hex[:8]}")
+
+
+def _publish_child(
+    table_dir: str,
+    parent: dict,
+    version: int,
+    reused: list[str],
+    new_files: list[str],
+    staging: str | None,
+    pk: str | None,
+    *,
+    schema: dict | None,
+    props: dict | None,
+    dvs: dict | None = None,
+    meta: dict | None = None,
+    rebase_from: int | None = None,
+    branch: str | None = None,
+) -> dict:
+    """The one commit tail of every writer: publish ``reused`` parent
+    files (with the parent's stats and added-versions) plus
+    ``new_files`` (stats harvested under the table's layout, stamped
+    added at ``version``) with ``dvs``, ``schema`` and ``props``. A lost
+    publish race removes only this attempt's ``staging`` directory —
+    never the winner's files — and re-raises FileExistsError for
+    ``commit_with_retry``. ``rebase_from`` is the verb's own: disjoint
+    racers rebase instead of re-staging. Returns the commit report."""
+    pstats = parent.get("stats") or {}
+    padded = parent.get("added") or {}
+    stats = {p: pstats[p] for p in reused if p in pstats}
+    added = {p: padded[p] for p in reused if p in padded}
+    if new_files:
+        stats.update(_layout_stats(props, new_files, pk))
+        added.update({p: version for p in new_files})
+    try:
+        return commit_snapshot(
+            table_dir, version, reused + new_files, stats=stats, meta=meta,
+            schema=schema, dvs=dvs, added=added, props=props,
+            rebase_from=rebase_from, branch=branch,
+        )
+    except FileExistsError:
+        if staging is not None:
+            shutil.rmtree(staging, ignore_errors=True)
+        raise
+
+
+def _cold_dvs(parent: dict, hot: list[int]) -> dict:
+    """The parent's DVs outside the ``hot`` buckets a CoW merge rewrote
+    — the rewrite folded the hot buckets' pending DVs into its rows."""
+    hot_set = {str(b) for b in hot}
+    dvs = parent.get("dvs", {})
+    return {b: es for b, es in dvs.items() if b not in hot_set}
+
+
+def _commit_metadata(
+    table_dir: str,
+    parent: dict,
+    version: int,
+    schema: dict | None,
+    props: dict | None,
+    meta: dict | None = None,
+    rebase_from: int | None = None,
+) -> dict:
+    """A METADATA-ONLY commit: ``parent``'s files, stats, added-versions
+    and DVs re-referenced verbatim as ``version`` under a changed
+    schema, props or meta — zero data written."""
+    return _publish_child(
+        table_dir, parent, version, parent["files"], [], None, None,
+        schema=schema, props=props, dvs=parent.get("dvs"), meta=meta,
+        rebase_from=rebase_from,
+    )
 
 
 def _colmap(doc_or_props: dict | None) -> dict:
@@ -1176,10 +1268,10 @@ def _read_snapshot_files(
     distinct version sets — it grows with delete commits since the last
     OPTIMIZE, not with the buckets or files a delete touches — and each
     group reads its sidecars under an explicit schema, so a read costs
-    one broadcast job per group plus its scan. DVs are KB-scale by design — a delete
-    writes |deleted keys| longs and OPTIMIZE folds the ledger into
-    clean files — so the broadcast side is bounded by the un-compacted
-    delete backlog, never by table size.
+    one broadcast job per group plus its scan. DVs are KB-scale by
+    design — a delete writes |deleted keys| longs and OPTIMIZE folds the
+    ledger into clean files — so the broadcast side is bounded by the
+    un-compacted delete backlog, never by table size.
 
     Layout invariant that makes the cross-bucket anti-join exact: on
     every layout that can carry DVs (the hash layout and a recorded
@@ -1187,7 +1279,12 @@ def _read_snapshot_files(
     ``rebucket`` and both OPTIMIZE verbs fold pending DVs into the rows
     they rewrite — so a sidecar of another bucket never holds a key of
     this file, and restricted to the file's own bucket the chosen
-    versions select exactly ``_applicable_dvs``.
+    versions select exactly ``_applicable_dvs``. The invariant is
+    enforced, not assumed: neither DV writer accepts a partition-spec
+    table, where a row's bucket follows its partition column, not its
+    key — ``delete_merge_on_read`` buckets its sidecars with
+    ``_layout_col`` and refuses a spec, and the lakefeed sink refuses
+    both a spec and a ``bucket_expr`` at stream start.
 
     Returns the snapshot's LOGICAL columns: physical file columns are
     aliased through the snapshot's column mapping (a no-op for tables
@@ -1340,14 +1437,6 @@ def snapshot_write(
     just the initial load."""
     if constraints:
         _validate_constraints(df, {"constraints": list(constraints)})
-    if bucket_expr is not None:
-        bucket_col = F.expr(bucket_expr)
-    b = _bucket_of(key, n_buckets) if bucket_col is None else bucket_col
-    files = _write_buckets(
-        df.withColumn("_b", b),
-        os.path.join(table_dir, "data", f"v{version}"),
-        n_buckets=n_buckets,
-    )
     props: dict = {}
     if stats_cols:
         props["stats_cols"] = list(stats_cols)
@@ -1363,14 +1452,17 @@ def snapshot_write(
         # carried by every writer via props, so appends/merges validate
         # their batches against them forever after.
         props["constraints"] = list(constraints)
-    commit_snapshot(
-        table_dir,
-        version,
-        files,
-        stats=_file_key_stats(files, key, extra_cols=stats_cols),
-        schema=_schema_of(df),
-        added={f: version for f in files},
-        props={**props, **(extra_props or {})} or None,
+    props = {**props, **(extra_props or {})}
+    if bucket_col is None or bucket_expr is not None:
+        bucket_col = _layout_col({"props": props}, key)
+    files = _write_buckets(
+        df.withColumn("_b", bucket_col),
+        os.path.join(table_dir, "data", f"v{version}"),
+        n_buckets=n_buckets,
+    )
+    _publish_child(
+        table_dir, {}, version, [], files, None, key,
+        schema=_schema_of(df), props=props or None,
     )
     return files
 
@@ -1413,10 +1505,12 @@ def merge_upsert(
     narrow changeset can never shrink the table's read schema. Output is
     staged under a per-attempt unique directory — a loser of the commit
     race removes only its OWN staging, never the winner's published
-    files (the append_snapshot staging rule, extended here)."""
+    files (the append_snapshot staging rule, extended here).
+
+    A partition-spec table is refused: there a key alone does not name
+    the file holding its row."""
     parent = _read_manifest_doc(table_dir, parent_version)
-    nb = _table_n_buckets(parent)
-    lb = _layout_bucket_exprs(parent)
+    _refuse_partition_spec(parent, "merge_upsert")
     cm = _colmap(parent)
     pk = _physical_key(key, cm)
     # the merge runs in LOGICAL column space (updates arrive logical,
@@ -1429,26 +1523,17 @@ def merge_upsert(
     # bucket — silent duplicate keys after MERGE (r11 ADVICE, high). The
     # expr is SQL over physical names, so attach _b on the physical form
     # and alias back.
-    _upd_p = _to_physical(updates, cm)
     upd = _to_logical(
-        _upd_p.withColumn("_b", lb(_upd_p) if lb else _bucket_of(pk, nb)),
+        _to_physical(updates, cm).withColumn("_b", _layout_col(parent, pk)),
         cm,
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    staging = os.path.join(
-        table_dir, "data", f"v{parent_version + 1}_{uuid.uuid4().hex[:8]}"
-    )
+    staging = _staging_dir(table_dir, "data", parent_version + 1)
     try:
         hot = sorted(
             r["_b"] for r in upd.select("_b").distinct().collect()
         )  # bounded by the table's bucket count — never data-sized
         parent_files = parent["files"]
-        parent_stats = parent.get("stats", {})
-        parent_schema = parent.get("schema")
-        reused = [
-            p
-            for p in parent_files
-            if int(p.split("_b=")[1].split(os.sep)[0]) not in hot
-        ]
+        reused = [p for p in parent_files if _bucket_of_path(p) not in hot]
         base_hot_files = [p for p in parent_files if p not in set(reused)]
         # manifest-schema + DV-aware read of the hot buckets: pending
         # merge-on-read deletes fold into this rewrite (their DVs don't
@@ -1482,48 +1567,23 @@ def merge_upsert(
         else:
             merged = inserts
         merged_p = _to_physical(merged, cm)
-        new_files = _write_buckets(
-            merged_p.withColumn(
-                "_b", lb(merged_p) if lb else _bucket_of(pk, nb)
-            ),
-            staging,
-            nb,
-        )
+        new_files = _write_layout(merged_p, parent, pk, staging)
         # parent ∪ merged, not _schema_of(merged) alone: with zero hot
         # parent files, merged is just the changeset, whose columns must
         # still widen (never replace) the parent schema. The union runs
         # on the PHYSICAL form — the names the parent schema records.
         _refuse_dropped(parent, _schema_of(merged_p))
-        child_schema = _merge_schemas(parent_schema, _schema_of(merged_p))
+        child_schema = _merge_schemas(
+            parent.get("schema"), _schema_of(merged_p)
+        )
     finally:
         upd.unpersist()
-    scols = parent.get("props", {}).get("stats_cols")
-    stats = {p: parent_stats[p] for p in reused if p in parent_stats}
-    stats.update(_file_key_stats(new_files, pk, extra_cols=scols))
-    hot_set = {str(b) for b in hot}
-    cold_dvs = {
-        b: ps
-        for b, ps in parent.get("dvs", {}).items()
-        if b not in hot_set  # hot buckets folded their DVs in above
-    }
-    parent_added = parent.get("added", {})
-    added = {p: parent_added.get(p, 0) for p in reused}
-    added.update({p: parent_version + 1 for p in new_files})
-    try:
-        commit_snapshot(
-            table_dir,
-            parent_version + 1,
-            reused + new_files,
-            stats=stats,
-            schema=child_schema,
-            dvs=cold_dvs,
-            added=added,
-            props=parent.get("props"),
-            rebase_from=parent_version,  # disjoint racers merge, no re-stage
-        )
-    except FileExistsError:
-        shutil.rmtree(staging, ignore_errors=True)  # only OUR staging
-        raise
+    _publish_child(
+        table_dir, parent, parent_version + 1, reused, new_files, staging, pk,
+        schema=child_schema, props=parent.get("props"),
+        dvs=_cold_dvs(parent, hot),
+        rebase_from=parent_version,  # disjoint racers merge, no re-stage
+    )
     return reused + new_files
 
 
@@ -1553,19 +1613,17 @@ def merge_full_sync(
     The source is persisted before the hot-bucket collect for the same
     nondeterministic-lineage reason as merge_upsert (r8 ADVICE)."""
     parent = _read_manifest_doc(table_dir, parent_version)
-    nb = _table_n_buckets(parent)
-    layout_b = _layout_bucket_exprs(parent)
     cm = _colmap(parent)
     pk = _physical_key(key, cm)
-    # buckets are computed on the PHYSICAL form (bucket_expr is SQL over
-    # physical names); the merge itself runs in logical space.
-    src_p = _to_physical(source, cm)
-    src = src_p.withColumn(
-        "_b", layout_b(src_p) if layout_b else _bucket_of(pk, nb)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    staging = os.path.join(
-        table_dir, "data", f"v{parent_version + 1}_{uuid.uuid4().hex[:8]}"
+    # buckets are computed on the PHYSICAL form (the layout rule is SQL
+    # over physical names); the merge itself runs in logical space.
+    layout = _layout_col(parent, pk)
+    src = (
+        _to_physical(source, cm)
+        .withColumn("_b", layout)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    staging = _staging_dir(table_dir, "data", parent_version + 1)
     try:
         # NULL scope = out of scope (SQL MERGE treats a NULL condition
         # as not-matched → keep): evaluate a three-valued-safe TRUE test
@@ -1575,13 +1633,10 @@ def merge_full_sync(
         scope_t = F.coalesce(scope, F.lit(False))
         if parent["files"]:
             target_all = _read_snapshot_files(spark, parent, parent["files"])
-            scoped_p = _to_physical(target_all.filter(scope_t), cm)
             scoped_buckets = sorted(
                 r["_b"]
-                for r in scoped_p.withColumn(
-                    "_b",
-                    layout_b(scoped_p) if layout_b else _bucket_of(pk, nb),
-                )
+                for r in _to_physical(target_all.filter(scope_t), cm)
+                .withColumn("_b", layout)
                 .select("_b")
                 .distinct()
                 .collect()
@@ -1593,7 +1648,6 @@ def merge_full_sync(
             | {r["_b"] for r in src.select("_b").distinct().collect()}
         )
         parent_files = parent["files"]
-        parent_stats = parent.get("stats", {})
         reused = [p for p in parent_files if _bucket_of_path(p) not in hot]
         hot_files = [p for p in parent_files if p not in set(reused)]
         base_hot = (
@@ -1612,57 +1666,17 @@ def merge_full_sync(
             merged = keep.unionByName(inserts, allowMissingColumns=True)
         else:
             merged = inserts
-        new_files = _write_buckets(
-            merged.withColumn(
-                "_b", layout_b(merged) if layout_b else _bucket_of(pk, nb)
-            ),
-            staging,
-            nb,
-        )
+        new_files = _write_layout(merged, parent, pk, staging)
         _refuse_dropped(parent, _schema_of(merged))
         child_schema = _merge_schemas(parent.get("schema"), _schema_of(merged))
     finally:
         src.unpersist()
-    scols = parent.get("props", {}).get("stats_cols")
-    stats = {p: parent_stats[p] for p in reused if p in parent_stats}
-    stats.update(_file_key_stats(new_files, pk, extra_cols=scols))
-    hot_set = {str(b) for b in hot}
-    cold_dvs = {
-        b: ps
-        for b, ps in parent.get("dvs", {}).items()
-        if b not in hot_set
-    }
-    parent_added = parent.get("added", {})
-    added = {p: parent_added.get(p, 0) for p in reused}
-    added.update({p: parent_version + 1 for p in new_files})
-    try:
-        commit_snapshot(
-            table_dir,
-            parent_version + 1,
-            reused + new_files,
-            stats=stats,
-            schema=child_schema,
-            dvs=cold_dvs,
-            added=added,
-            props=parent.get("props"),
-            rebase_from=parent_version,
-        )
-    except FileExistsError:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
+    _publish_child(
+        table_dir, parent, parent_version + 1, reused, new_files, staging, pk,
+        schema=child_schema, props=parent.get("props"),
+        dvs=_cold_dvs(parent, hot), rebase_from=parent_version,
+    )
     return reused + new_files
-
-
-def _layout_bucket_exprs(parent: dict):
-    """The table's PHYSICAL bucket expression when it is not the default
-    hash layout — recorded as the ``bucket_expr`` table property by
-    range/Z-order writers; None means ``key % n_buckets``. Writers that
-    rewrite buckets must reproduce the layout or file-bucket targeting
-    silently breaks."""
-    expr = parent.get("props", {}).get("bucket_expr")
-    if not expr:
-        return None
-    return lambda df: F.expr(expr)
 
 
 def delete_merge_on_read(
@@ -1692,47 +1706,35 @@ def delete_merge_on_read(
     Returns ``(child_version, n_dv_files)``. DVs stack across commits
     (a bucket may carry several); stats are inherited unchanged — DVs
     only remove rows, so min/max stay sound for pruning and ``rows``
-    becomes a documented upper bound until the next compaction."""
+    becomes a documented upper bound until the next compaction.
+
+    A partition-spec table is refused: its rows are placed by the
+    partition column, so a key's DV could not find its row's bucket."""
     parent = _read_manifest_doc(table_dir, parent_version)
-    nb = _table_n_buckets(parent)
-    staging = os.path.join(
-        table_dir, "dv", f"v{parent_version + 1}_{uuid.uuid4().hex[:8]}"
-    )
+    _refuse_partition_spec(parent, "delete_merge_on_read")
+    staging = _staging_dir(table_dir, "dv", parent_version + 1)
     # DV sidecars must be bucketed with the TABLE'S physical layout
-    # (bucket_expr property when present): _applicable_dvs matches a
-    # DV's bucket against the DATA FILES' path buckets, so hash-bucketed
-    # DVs on a range-layout table would silently miss their rows.
-    lb = _layout_bucket_exprs(parent)
+    # (``_layout_col``: a recorded bucket_expr, else the key hash):
+    # _applicable_dvs matches a DV's bucket against the DATA FILES' path
+    # buckets, so hash-bucketed DVs on a range-layout table would
+    # silently miss their rows.
     cm = _colmap(parent)
     pk = _physical_key(key, cm)
     # DV sidecars store the PHYSICAL key column: they are anti-joined
     # against raw file reads BEFORE logical aliasing.
-    dsel = _to_physical(deletes.select(key), cm)
-    dv_files = _write_buckets(
-        dsel.withColumn("_b", lb(dsel) if lb else _bucket_of(pk, nb)),
-        staging,
-        nb,
+    dv_files = _write_layout(
+        _to_physical(deletes.select(key), cm), parent, pk, staging
     )
     dvs = {b: list(es) for b, es in parent.get("dvs", {}).items()}
     for p in dv_files:
         dvs.setdefault(str(_bucket_of_path(p)), []).append(
             {"path": p, "v": parent_version + 1}
         )
-    try:
-        rep = commit_snapshot(
-            table_dir,
-            parent_version + 1,
-            parent["files"],
-            stats=parent.get("stats"),
-            schema=parent.get("schema"),
-            dvs=dvs,
-            added=parent.get("added"),
-            props=parent.get("props"),
-            rebase_from=parent_version,  # a DV touches only its buckets
-        )
-    except FileExistsError:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
+    rep = _publish_child(
+        table_dir, parent, parent_version + 1, parent["files"], [], staging,
+        pk, schema=parent.get("schema"), props=parent.get("props"), dvs=dvs,
+        rebase_from=parent_version,  # a DV touches only its buckets
+    )
     return rep["version"], len(dv_files)
 
 
@@ -1767,7 +1769,11 @@ def append_snapshot(
     semantics) rather than WAP's single staged snapshot. The branch
     doc's meta carries ``base_version`` (the main fork point, recorded
     by the first branch commit) and ``branch_commits`` forward;
-    ``merge_branch`` consumes both."""
+    ``merge_branch`` consumes both.
+
+    New rows are laid out by the table's layout rule (``_layout_col``):
+    on a partition-spec table one file per value of the ACTIVE spec,
+    with the partition tuple recorded in the file's stats."""
     branch_meta: dict | None = None
     parent_doc: dict | None = None
     if parent_branch is not None:
@@ -1788,21 +1794,15 @@ def append_snapshot(
         branch_meta = {"base_version": parent_version, "branch_commits": 1}
     version = parent_version + 1
 
-    def _already(doc: dict) -> bool:
-        return (
-            batch_id is not None
-            and doc.get("meta", {}).get("batch_id") == batch_id
-        )
-
-    # Replay detection scans parent+1..HEAD, not just parent+1: with
-    # conflict-aware REBASING a batch that lost a disjoint race landed
-    # at a LATER version than parent+1, and a replay of it must still
-    # be recognized (exactly-once survives rebased histories). Raw list
-    # reads only — O(interloping commits), each a KB. Branch stages
-    # (WAP) skip it: a branch ref never claims a main version.
-    if branch is None and batch_id is not None and os.path.exists(
-        _manifest_path(table_dir, version)
-    ):
+    def _replayed() -> int | None:
+        # Replay detection scans parent+1..HEAD, not just parent+1: with
+        # conflict-aware REBASING a batch that lost a disjoint race
+        # landed at a LATER version than parent+1, and a replay of it
+        # must still be recognized (exactly-once survives rebased
+        # histories). Raw list reads only — O(interloping commits),
+        # each a KB.
+        if batch_id is None:
+            return None
         for v in range(version, latest_version(table_dir) + 1):
             # expire_snapshots with a gappy keep list leaves holes in
             # the version range — skip them, matching resolve_as_of's
@@ -1811,81 +1811,60 @@ def append_snapshot(
                 doc = _read_list_doc(table_dir, v)
             except (OSError, ValueError):
                 continue
-            if _already(doc):
-                return v, False  # replayed batch — already committed
-    staging = os.path.join(
-        table_dir, "data", f"v{version}_{uuid.uuid4().hex[:8]}"
-    )
+            if doc.get("meta", {}).get("batch_id") == batch_id:
+                return v
+        return None
+
+    # Branch stages (WAP) skip the pre-check: a branch ref never claims
+    # a main version.
+    if branch is None and batch_id is not None and os.path.exists(
+        _manifest_path(table_dir, version)
+    ):
+        v = _replayed()
+        if v is not None:
+            return v, False  # replayed batch — already committed
     parent = (
         parent_doc
         if parent_doc is not None
         else _read_manifest_doc(table_dir, parent_version)
     )
-    nb = _table_n_buckets(parent)
     cm = _colmap(parent)
     rows = _to_physical(rows, cm)  # writers store PHYSICAL column names
     pk = _physical_key(key, cm)
     _validate_constraints(rows, parent.get("props"))  # CHECK before staging
-    lb = _layout_bucket_exprs(parent)  # honor a recorded non-hash layout
-    new_files = _write_buckets(
-        rows.withColumn("_b", lb(rows) if lb else _bucket_of(pk, nb)),
-        staging,
-        nb,
-    )
-    stats = dict(parent.get("stats", {}))
-    stats.update(
-        _file_key_stats(
-            new_files, pk,
-            extra_cols=parent.get("props", {}).get("stats_cols"),
-        )
-    )
-    added = dict(parent.get("added", {}))
-    added.update({p: version for p in new_files})
+    # The child manifest carries the parent schema WIDENED by the
+    # appended rows' columns — the additive-evolution point: new columns
+    # widen the table schema, and parent files (which lack them) read
+    # them as null through the manifest-schema read path. _merge_schemas
+    # ENFORCES additivity (r9 ADVICE): a batch that omits a parent column
+    # can't narrow the read schema and hide existing data, and a retyped
+    # column raises — as Delta does.
+    _refuse_dropped(parent, _schema_of(rows))
+    schema = _merge_schemas(parent.get("schema"), _schema_of(rows))
+    staging = _staging_dir(table_dir, "data", version)
+    new_files = _write_layout(rows, parent, pk, staging)
+    meta = {
+        **({"batch_id": batch_id} if batch_id is not None else {}),
+        **(branch_meta or {}),
+    }
     try:
-        # The child manifest carries the parent schema WIDENED by the
-        # appended rows' columns — the additive-evolution point: new
-        # columns widen the table schema, and parent files (which lack
-        # them) read them as null through the manifest-schema read path.
-        # _merge_schemas ENFORCES additivity (r9 ADVICE): a batch that
-        # omits a parent column can't narrow the read schema and hide
-        # existing data, and a retyped column raises — as Delta does.
-        _refuse_dropped(parent, _schema_of(rows))
-        rep = commit_snapshot(
-            table_dir,
-            version,
-            parent["files"] + new_files,
-            stats=stats,
-            meta=(
-                {
-                    **({"batch_id": batch_id} if batch_id is not None else {}),
-                    **(branch_meta or {}),
-                }
-                or None
-            ),
-            schema=_merge_schemas(parent.get("schema"), _schema_of(rows)),
-            dvs=parent.get("dvs"),  # pending MoR deletes carry forward
-            added=added,  # appended files post-date those DVs
-            # props_update (r13): commit-scoped property overlay —
-            # identity high-waters advance ATOMICALLY with the rows
-            # they cover (two commits would leave a crash window where
-            # rows exist but the allocator would re-issue their ids).
-            props={
-                **(parent.get("props") or {}),
-                **(props_update or {}),
-            }
+        # Pending MoR deletes carry forward (the appended files post-date
+        # them). props_update (r13) is a commit-scoped property overlay:
+        # identity high-waters advance ATOMICALLY with the rows they
+        # cover (two commits would leave a crash window where rows exist
+        # but the allocator would re-issue their ids).
+        rep = _publish_child(
+            table_dir, parent, version, parent["files"], new_files, staging,
+            pk, schema=schema, meta=meta or None, dvs=parent.get("dvs"),
+            props={**(parent.get("props") or {}), **(props_update or {})}
             or None,
             rebase_from=parent_version,  # appends touch only new buckets
             branch=branch,  # WAP: stage on a branch ref, not a version
         )
     except FileExistsError:
-        shutil.rmtree(staging, ignore_errors=True)  # orphaned staging dir
-        for v in range(version, latest_version(table_dir) + 1):
-            try:
-                doc = _read_list_doc(table_dir, v)
-            except (OSError, ValueError):
-                continue  # expired/gappy version — not our replay
-            if _already(doc):
-                return v, False  # lost the race to our own replay
+        v = _replayed()
+        if v is not None:
+            return v, False  # lost the race to our own replay
         raise
     return rep["version"], True
 
@@ -1895,50 +1874,44 @@ def _rewrite_files(
     table_dir: str,
     parent: dict,
     parent_version: int,
+    reused: list[str],
     files: list[str],
     key: str,
-) -> tuple[str | None, list[str], dict[str, dict]]:
-    """Rewrite ``files`` of snapshot ``parent`` into one new file per
-    bucket; return ``(staging dir, new files, their manifest stats)`` —
-    ``(None, [], {})`` when there is nothing to rewrite. The shared half
-    of both OPTIMIZE verbs.
+    props: dict | None,
+    dvs: dict | None = None,
+    rebase_from: int | None = None,
+) -> list[str]:
+    """The rewrite-and-publish verb body shared by both OPTIMIZE verbs
+    and ``rebucket``: rewrite ``files`` of snapshot ``parent`` into one
+    new file per bucket of the layout ``props`` declare (the parent's,
+    or ``rebucket``'s child props), publish them with the ``reused``
+    parent files and ``dvs`` as ``parent_version + 1``, and return the
+    new files.
 
     The files are read with ONE ``_read_snapshot_files`` call: under the
     parent MANIFEST schema, so fragments that predate a schema evolution
     normalize to the current shape (missing columns read as null), and
     with each file's applicable DVs folded in (per-file scoping: a
     post-delete append's re-inserted keys survive the fold). Each row's
-    bucket is re-derived with the table's layout, as every other writer
-    does: the ACTIVE partition spec's transform on a partition-spec
-    table (its new files record that spec, so they stay prunable), else
-    the recorded ``bucket_expr``, else the key hash. On a layout that
-    can carry DVs that is the bucket the row was read from."""
-    if not files:
-        return None, [], {}
+    bucket is re-derived with the table's layout rule (``_layout_col``),
+    as every other writer does: the ACTIVE partition spec's transform on
+    a partition-spec table (``_publish_child`` records that spec in the
+    new files' stats, so they stay prunable), else the recorded
+    ``bucket_expr``, else the key hash. On a layout that can carry DVs
+    that is the bucket the row was read from."""
     cm = _colmap(parent)
     pk = _physical_key(key, cm)
-    props = parent.get("props", {})
-    spec = props.get("partition_spec")
-    lb = _layout_bucket_exprs(parent)
-    nb = _table_n_buckets(parent)
-    df = _to_physical(_read_snapshot_files(spark, parent, files), cm)
-    if spec:
-        b = F.expr(_pspec_expr(spec["transform"], spec["col"]))
-    else:
-        b = lb(df) if lb else _bucket_of(pk, nb)
-    # per-attempt unique staging (r9 ADVICE): a fixed v{N} dir with
-    # mode=overwrite would let a commit-race LOSER delete the winner's
-    # already-referenced files before failing at publish.
-    staging = os.path.join(
-        table_dir, "data", f"v{parent_version + 1}_{uuid.uuid4().hex[:8]}"
+    staging, new_files = None, []
+    if files:
+        df = _to_physical(_read_snapshot_files(spark, parent, files), cm)
+        staging = _staging_dir(table_dir, "data", parent_version + 1)
+        new_files = _write_layout(df, {"props": props}, pk, staging)
+    _publish_child(
+        table_dir, parent, parent_version + 1, reused, new_files, staging,
+        pk, schema=parent.get("schema"), props=props, dvs=dvs,
+        rebase_from=rebase_from,
     )
-    new_files = _write_buckets(df.withColumn("_b", b), staging, nb)
-    extra = props.get("stats_cols")
-    if spec:
-        stats = _pspec_stats(new_files, pk, spec, extra_cols=extra)
-    else:
-        stats = _file_key_stats(new_files, pk, extra_cols=extra)
-    return staging, new_files, stats
+    return new_files
 
 
 def optimize_compact(
@@ -1955,8 +1928,6 @@ def optimize_compact(
     scan and written back through ``_write_buckets``, whose one hash
     exchange on ``_b`` gathers each bucket's rows into its new file."""
     parent = _read_manifest_doc(table_dir, parent_version)
-    parent_stats = parent.get("stats", {})
-    parent_schema = parent.get("schema")
     parent_dvs = parent.get("dvs", {})
     by_bucket: dict[int, list[str]] = {}
     for p in parent["files"]:
@@ -1976,30 +1947,12 @@ def optimize_compact(
         if len(ps) > 1 or str(b) in parent_dvs
         for p in ps
     ]
-    staging, new_files, new_stats = _rewrite_files(
-        spark, table_dir, parent, parent_version, frag, key
+    # every DV'd bucket is rewritten: no dvs carry
+    return reused + _rewrite_files(
+        spark, table_dir, parent, parent_version, reused, frag, key,
+        parent.get("props"),
+        rebase_from=parent_version,  # compaction of disjoint buckets
     )
-    stats = {p: parent_stats[p] for p in reused if p in parent_stats}
-    stats.update(new_stats)
-    parent_added = parent.get("added", {})
-    added = {p: parent_added.get(p, 0) for p in reused}
-    added.update({p: parent_version + 1 for p in new_files})
-    try:
-        commit_snapshot(
-            table_dir,
-            parent_version + 1,
-            reused + new_files,
-            stats=stats,
-            schema=parent_schema,
-            added=added,  # every DV'd bucket was rewritten: no dvs carry
-            props=parent.get("props"),
-            rebase_from=parent_version,  # compaction of disjoint buckets
-        )
-    except FileExistsError:
-        if staging is not None:
-            shutil.rmtree(staging, ignore_errors=True)
-        raise
-    return reused + new_files
 
 
 @register(
@@ -5086,23 +5039,17 @@ def write_partitioned(
     version: int = 1,
 ) -> list[str]:
     """Create v``version`` partitioned by ``transform(part_col)`` (spec
-    id 0). The spec and its history are TABLE PROPERTIES every later
-    writer reads; per-file partition tuples ride in the manifest
-    stats."""
+    id 0): ``snapshot_write``'s layout and commit steps under the spec
+    props. The spec and its history are TABLE PROPERTIES every later
+    writer reads (``_layout_col``); per-file partition tuples ride in
+    the manifest stats."""
     spec = {"id": 0, "transform": transform, "col": part_col}
-    files = _write_buckets(
-        df.withColumn("_b", F.expr(_pspec_expr(transform, part_col))),
-        os.path.join(table_dir, "data", f"v{version}"),
-    )
-    commit_snapshot(
-        table_dir,
-        version,
-        files,
-        stats=_pspec_stats(files, key, spec),
-        schema=_schema_of(df),
-        added={f: version for f in files},
-        props={"partition_spec": spec, "partition_specs": [spec]},
-        meta={"op": "write_partitioned"},
+    props = {"partition_spec": spec, "partition_specs": [spec]}
+    out_dir = os.path.join(table_dir, "data", f"v{version}")
+    files = _write_layout(df, {"props": props}, key, out_dir)
+    _publish_child(
+        table_dir, {}, version, [], files, None, key,
+        schema=_schema_of(df), props=props, meta={"op": "write_partitioned"},
     )
     return files
 
@@ -5131,15 +5078,8 @@ def evolve_partition_spec(
     }
     props["partition_spec"] = new
     props["partition_specs"] = specs + [new]
-    return commit_snapshot(
-        table_dir,
-        parent_version + 1,
-        doc["files"],
-        stats=doc.get("stats"),
-        schema=doc.get("schema"),
-        dvs=doc.get("dvs"),
-        added=doc.get("added"),
-        props=props,
+    return _commit_metadata(
+        table_dir, doc, parent_version + 1, doc.get("schema"), props,
         meta={"op": "evolve_partition_spec", "spec_id": new["id"]},
     )
 
@@ -5147,38 +5087,21 @@ def evolve_partition_spec(
 def append_partitioned(
     rows: DataFrame, table_dir: str, parent_version: int, key: str
 ) -> list[str]:
-    """Insert-only append laid out under the table's ACTIVE spec (read
-    from parent props — a writer never chooses its own layout): new
-    files one-per-partition-value, parent files re-referenced verbatim,
-    per-file partition tuples recorded under the active spec id."""
-    doc = _read_manifest_doc(table_dir, parent_version)
-    props = dict(doc.get("props") or {})
-    spec = props.get("partition_spec")
-    if not spec:
+    """``append_snapshot`` on a partition-spec table, returning the new
+    files: rows are laid out under the table's ACTIVE spec (read from
+    parent props — a writer never chooses its own layout), one file per
+    partition value, with per-file partition tuples recorded under the
+    active spec id. Raises ValueError on a table without a spec."""
+    doc = _read_list_doc(table_dir, parent_version)
+    if not (doc.get("props") or {}).get("partition_spec"):
         raise ValueError(f"{table_dir} is not a partition-spec table")
-    version = parent_version + 1
-    new_files = _write_buckets(
-        rows.withColumn(
-            "_b", F.expr(_pspec_expr(spec["transform"], spec["col"]))
-        ),
-        os.path.join(table_dir, "data", f"v{version}"),
+    v, _ = append_snapshot(table_dir, parent_version, rows, key)
+    # a commit that rebased over a racer substituted only its own groups
+    # into the head's list, so against the version below it — the
+    # parent, or the racer it rebased onto — it adds exactly its files
+    return sorted(
+        set(read_manifest(table_dir, v)) - set(read_manifest(table_dir, v - 1))
     )
-    stats = dict(doc.get("stats") or {})
-    stats.update(_pspec_stats(new_files, key, spec))
-    added = dict(doc.get("added") or {})
-    added.update({f: version for f in new_files})
-    commit_snapshot(
-        table_dir,
-        version,
-        doc["files"] + new_files,
-        stats=stats,
-        schema=doc.get("schema"),
-        dvs=doc.get("dvs"),
-        added=added,
-        props=props,
-        meta={"op": "append_partitioned"},
-    )
-    return new_files
 
 
 def prune_partitions(
@@ -5509,15 +5432,9 @@ def shallow_clone(
     props = dict(doc.get("props") or {})
     props["clone_of"] = os.path.realpath(src_dir)
     props["clone_version"] = v
-    out = commit_snapshot(
-        dst_dir,
-        1,
-        doc["files"],
-        stats=doc.get("stats"),
-        schema=doc.get("schema"),
-        dvs=doc.get("dvs"),
-        added={f: 1 for f in doc["files"]},
-        props=props,
+    out = _commit_metadata(
+        dst_dir, {**doc, "added": {f: 1 for f in doc["files"]}}, 1,
+        doc.get("schema"), props,
         meta={"op": "shallow_clone", "src": os.path.realpath(src_dir)},
     )
     _register_clone(src_dir, dst_dir, v)
@@ -5648,15 +5565,8 @@ def restore_snapshot(table_dir: str, to_version: int) -> dict:
     with it (they are part of the state being restored)."""
     doc = _read_manifest_doc(table_dir, to_version)
     head = latest_version(table_dir)
-    return commit_snapshot(
-        table_dir,
-        head + 1,
-        doc["files"],
-        stats=doc.get("stats"),
-        schema=doc.get("schema"),
-        dvs=doc.get("dvs"),
-        added=doc.get("added"),
-        props=doc.get("props"),
+    return _commit_metadata(
+        table_dir, doc, head + 1, doc.get("schema"), doc.get("props"),
         meta={"op": "restore", "restored_from": to_version},
     )
 
@@ -7162,15 +7072,8 @@ def set_masking_policy(
     props = dict(parent.get("props", {}))
     props["masks"] = dict(masks)
     props["mask_exempt_roles"] = sorted(exempt_roles or [])
-    return commit_snapshot(
-        table_dir,
-        parent_version + 1,
-        parent["files"],
-        stats=parent.get("stats"),
-        schema=parent.get("schema"),
-        dvs=parent.get("dvs"),
-        added=parent.get("added"),
-        props=props,
+    return _commit_metadata(
+        table_dir, parent, parent_version + 1, parent.get("schema"), props,
         meta={"op": "set_masking_policy", "cols": sorted(masks)},
     )
 
@@ -7322,15 +7225,8 @@ def set_row_policy(
     props = dict(parent.get("props", {}))
     props["row_policy"] = predicate
     props["row_policy_exempt_roles"] = sorted(exempt_roles or [])
-    return commit_snapshot(
-        table_dir,
-        parent_version + 1,
-        parent["files"],
-        stats=parent.get("stats"),
-        schema=parent.get("schema"),
-        dvs=parent.get("dvs"),
-        added=parent.get("added"),
-        props=props,
+    return _commit_metadata(
+        table_dir, parent, parent_version + 1, parent.get("schema"), props,
         meta={"op": "set_row_policy"},
     )
 
@@ -7651,15 +7547,8 @@ def add_bloom_index(
         blooms[p] = {"m": m, "bits": _bloom_of_keys(keys, m, k)}
     props = dict(parent.get("props", {}))
     props["bloom"] = {"col": key, "k": k, "files": blooms}
-    return commit_snapshot(
-        table_dir,
-        parent_version + 1,
-        parent["files"],
-        stats=parent.get("stats"),
-        schema=parent.get("schema"),
-        dvs=parent.get("dvs"),
-        added=parent.get("added"),
-        props=props,
+    return _commit_metadata(
+        table_dir, parent, parent_version + 1, parent.get("schema"), props,
         meta={"op": "add_bloom_index", "col": key},
     )
 
@@ -7839,30 +7728,12 @@ def optimize_small_files(
             reused.extend(p for p in ps if p not in smalls)
         else:
             reused.extend(ps)
-    staging, new_files, new_stats = _rewrite_files(
-        spark, table_dir, parent, parent_version, frag, key
+    new_files = _rewrite_files(
+        spark, table_dir, parent, parent_version, reused, frag, key,
+        parent.get("props"),
+        dvs=parent.get("dvs"),  # pending for untouched files
+        rebase_from=parent_version,
     )
-    stats = {p: parent_stats[p] for p in reused if p in parent_stats}
-    stats.update(new_stats)
-    parent_added = parent.get("added", {})
-    added = {p: parent_added.get(p, 0) for p in reused}
-    added.update({p: parent_version + 1 for p in new_files})
-    try:
-        commit_snapshot(
-            table_dir,
-            parent_version + 1,
-            reused + new_files,
-            stats=stats,
-            schema=parent.get("schema"),
-            dvs=parent.get("dvs"),  # pending for untouched files
-            added=added,
-            props=parent.get("props"),
-            rebase_from=parent_version,
-        )
-    except FileExistsError:
-        if staging is not None:
-            shutil.rmtree(staging, ignore_errors=True)
-        raise
     return reused, new_files
 
 

@@ -103,7 +103,8 @@ from pyspark.sql.datasource import (
 
 from cuny_courses_spark.lakeformat import (
     applicable_dvs,
-    bucket_of_path as _bucket_of,
+    bucket_of_path,
+    bucket_of_path as _bucket_of,  # noqa: F401 (the pre-lakeformat name)
     head_version as _latest_version,
     publish_snapshot,
     read_list as _read_list,
@@ -409,11 +410,11 @@ class _LakeFeedStreamReader(DataSourceStreamReader):
                 only_new = {p: s for p, s in sn.items() if so.get(p) != s}
                 buckets: dict[int, tuple[list, list]] = {}
                 for p, s in only_old.items():
-                    buckets.setdefault(_bucket_of(p), ([], []))[0].append(
+                    buckets.setdefault(bucket_of_path(p), ([], []))[0].append(
                         (p, s)
                     )
                 for p, s in only_new.items():
-                    buckets.setdefault(_bucket_of(p), ([], []))[1].append(
+                    buckets.setdefault(bucket_of_path(p), ([], []))[1].append(
                         (p, s)
                     )
                 for b in sorted(buckets):

@@ -56,3 +56,40 @@ def test_link_claim_lives_only_in_lakeformat():
         if "os.link(" in p.read_text()
     )
     assert hits == ["lakeformat.py"], hits
+
+
+def test_layout_rule_lives_only_in_layout_col():
+    """The lakehouse's physical layout rule (partition spec, else
+    ``bucket_expr``, else the key hash) has one implementation,
+    ``lakehouse._layout_col``. A call of ``_bucket_of`` or
+    ``_pspec_expr`` anywhere else in the package is a writer
+    re-deriving the rule by hand, which is how a writer ends up
+    placing rows or DVs in a different bucket than the files holding
+    their keys."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "cuny_courses_spark"
+
+    def calls(node, fn):
+        # (innermost enclosing function, callee name) of every call
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from calls(child, child.name)
+                continue
+            if isinstance(child, ast.Call):
+                f = child.func
+                yield fn, getattr(f, "id", None) or getattr(f, "attr", None)
+            yield from calls(child, fn)
+
+    callers = set()
+    for p in root.rglob("*.py"):
+        text = p.read_text()
+        assert "_layout_bucket_exprs" not in text, p
+        for fn, name in calls(ast.parse(text), None):
+            if name in ("_bucket_of", "_pspec_expr"):
+                callers.add((p.relative_to(root).as_posix(), fn, name))
+    assert callers == {
+        ("operators/lakehouse.py", "_layout_col", "_bucket_of"),
+        ("operators/lakehouse.py", "_layout_col", "_pspec_expr"),
+    }, sorted(callers)

@@ -1475,6 +1475,28 @@ def test_partition_evolution_metadata_only_and_spec_honored(spark, tmp_path):
     far = (datetime.date(1971, 1, 1) - epoch).days
     sel_far, _, _ = lh.prune_partitions(table_dir, 5, far, far)
     assert victim in sel_far
+    # the generic append_snapshot lays out under the active day spec
+    # too: one file per day, each with its partition tuple, prunable
+    march = o.limit(30).select(
+        (F.col("k") + 9_800_000).alias("k"),
+        F.expr(
+            "date_add(DATE '2002-03-01', CAST(k % 3 AS INT))"
+        ).alias("d"),
+    )
+    v6, committed = lh.append_snapshot(table_dir, 5, march, key="k")
+    assert (v6, committed) == (6, True)
+    doc6 = lh._read_manifest_doc(table_dir, 6)
+    new_v6 = sorted(set(doc6["files"]) - set(doc4["files"]))
+    mar1 = (datetime.date(2002, 3, 1) - epoch).days
+    assert sorted(doc6["stats"][p]["pspec"]["value"] for p in new_v6) == [
+        mar1, mar1 + 1, mar1 + 2
+    ]
+    assert {doc6["stats"][p]["pspec"]["id"] for p in new_v6} == {1}
+    sel6, _, per_spec6 = lh.prune_partitions(table_dir, 6, mar1, mar1)
+    assert per_spec6 == {1: 1}
+    assert [p for p in sel6 if p in new_v6] == [
+        p for p in new_v6 if doc6["stats"][p]["pspec"]["value"] == mar1
+    ]
 
 
 def test_partition_evolution_refusals(spark, tmp_path):
@@ -2988,3 +3010,92 @@ def test_optimize_partition_spec_table_keeps_files_prunable(spark, tmp_path):
     sel, _, per_spec = lh.prune_partitions(table_dir, 5, day, day)
     assert per_spec == {1: 1}
     assert len(sel) == 1 and sel[0] in new
+
+
+def _month_table(spark, table_dir):
+    """60 rows over January and February 2002 in a month-partitioned
+    table at v1: files ``_b=384`` and ``_b=385``."""
+    import datetime
+
+    jan1 = datetime.date(2002, 1, 1)
+    rows = [(k, jan1 + datetime.timedelta(days=k % 45)) for k in range(60)]
+    lh.write_partitioned(
+        spark.createDataFrame(rows, "k long, d date"), table_dir, key="k",
+        part_col="d", transform="month",
+    )
+    return rows
+
+
+@pytest.mark.parametrize(
+    "verb", ["delete_merge_on_read", "merge_upsert", "rebucket"]
+)
+def test_key_verbs_refuse_partition_spec_table(spark, tmp_path, verb):
+    """On a partition-spec table a key alone does not name its row's
+    file: a key DV would never meet its row (a lost delete), a key
+    upsert would write beside the month file holding the old row (a
+    duplicate key), and a rebucket would hash-lay rows out under a
+    table that still declares its spec. Each verb refuses and commits
+    nothing."""
+    import datetime
+
+    table_dir = str(tmp_path / "lake_month")
+    rows = _month_table(spark, table_dir)
+    if verb == "delete_merge_on_read":
+        dels = spark.createDataFrame([(k,) for k in range(5)], "k long")
+        call = lambda: lh.delete_merge_on_read(  # noqa: E731
+            spark, table_dir, 1, dels, "k"
+        )
+    elif verb == "merge_upsert":
+        upd = spark.createDataFrame(
+            [(10, datetime.date(2002, 1, 11))], "k long, d date"
+        )
+        call = lambda: lh.merge_upsert(spark, table_dir, 1, upd, key="k")
+    else:
+        call = lambda: lh.rebucket(spark, table_dir, 1, key="k", n_buckets=4)
+    with pytest.raises(ValueError, match="places rows by"):
+        call()
+    assert lh.latest_version(table_dir) == 1
+    got = lh.snapshot_read(spark, table_dir).select("k", "d").collect()
+    assert sorted(tuple(r) for r in got) == sorted(rows)
+
+
+def test_partition_spec_append_race_keeps_winner_files(spark, tmp_path):
+    """Appends to a partition-spec table stage per attempt: a writer that
+    loses the race at the same parent never touches the winner's
+    committed files. A loser on a disjoint month rebases onto the
+    winner; a loser on the winner's month raises; v2 keeps reading
+    every row it committed either way."""
+    import datetime
+
+    table_dir = str(tmp_path / "lake_month_race")
+    rows = _month_table(spark, table_dir)
+    schema = "k long, d date"
+    mar = [(100 + i, datetime.date(2002, 3, 1 + i)) for i in range(5)]
+    apr = [(200 + i, datetime.date(2002, 4, 1 + i)) for i in range(5)]
+    mar2 = [(300 + i, datetime.date(2002, 3, 10)) for i in range(5)]
+
+    def append(batch):
+        return lh.append_partitioned(
+            spark.createDataFrame(batch, schema), table_dir, 1, key="k"
+        )
+
+    def read(v):
+        got = lh.snapshot_read(spark, table_dir, v).select("k", "d")
+        return sorted(tuple(r) for r in got.collect())
+
+    won = append(mar)  # commits v2
+    outcomes = []
+    for batch in (apr, mar2):  # a disjoint month, then the winner's month
+        try:
+            outcomes.append(append(batch))
+        except FileExistsError:
+            outcomes.append(None)
+        assert read(2) == sorted(rows + mar)
+    rebased, conflicted = outcomes
+    assert rebased is not None and conflicted is None
+    assert lh.latest_version(table_dir) == 3
+    assert read(3) == sorted(rows + mar + apr)
+    head = lh.read_manifest(table_dir, 3)
+    assert set(won) | set(rebased) <= set(head)
+    assert all(os.path.exists(p) for p in head)
+
