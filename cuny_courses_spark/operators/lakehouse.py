@@ -7,7 +7,9 @@ implemented directly on parquet + a manifest log — the same design those
 formats use, reduced to its load-bearing parts:
 
   table_dir/
-    data/v{N}/_b={bucket}/part-*.parquet   -- immutable data files
+    data/v{N}_{uuid8}/_b={bucket}/part-*.parquet
+                                           -- immutable data files, staged
+                                              per commit attempt
     manifest/v{N}.json                     -- MANIFEST LIST: {bucket: group}
     manifest/mg-<sha1>.json                -- bucket-group manifest (files,
                                               stats, added-versions, DVs)
@@ -378,20 +380,7 @@ def read_branch(spark: SparkSession, table_dir: str, branch: str) -> DataFrame:
     group files), while main readers resolving ``latest_version`` never
     do. An empty staged snapshot reads back as an empty frame of the
     branch's manifest schema (the snapshot_read contract)."""
-    from pyspark.sql import types as T
-
     doc = _resolve_list_doc(table_dir, _read_branch_doc(table_dir, branch))
-    if not doc["files"]:
-        sch = doc.get("schema")
-        if sch is None:
-            raise ValueError(
-                f"branch {branch!r} of {table_dir} is empty and carries "
-                "no schema"
-            )
-        return _to_logical(
-            spark.createDataFrame([], T.StructType.fromJson(sch)),
-            _colmap(doc),
-        )
     return _read_snapshot_files(spark, doc, doc["files"])
 
 
@@ -918,9 +907,7 @@ def _refuse_dropped(parent: dict, incoming: dict) -> None:
     name a ``drop_column`` commit retired — the manifest-schema merge
     would otherwise resurrect the dropped values still sitting in old
     files. Re-add under a new logical name instead."""
-    dropped = set(parent.get("props", {}).get("dropped_phys", []))
-    if not dropped:
-        return
+    dropped = set((parent.get("props") or {}).get("dropped_phys", []))
     bad = sorted(
         f["name"] for f in incoming["fields"] if f["name"] in dropped
     )
@@ -990,8 +977,6 @@ def snapshot_read(
     empty snapshot (zero part files) reads back as an empty frame of the
     manifest schema. ``empty_schema`` remains the fallback for manifests
     that carry no schema (hand-built or pre-r9)."""
-    from pyspark.sql import types as T
-
     if version is None:
         version = latest_version(table_dir)
     doc = _read_manifest_doc(table_dir, version)
@@ -1019,13 +1004,7 @@ def snapshot_read(
         )
         sel = set(by_col)  # hoisted: O(n) intersect, not O(n^2) rebuilds
         files = [p for p in files if p in sel]
-    sch = doc.get("schema")
-    if not files:
-        if sch is not None:
-            return _to_logical(
-                spark.createDataFrame([], T.StructType.fromJson(sch)),
-                _colmap(doc),
-            )
+    if not files and doc.get("schema") is None:
         if empty_schema is None:
             raise ValueError(
                 f"snapshot v{version} of {table_dir} is empty and no "
@@ -1095,12 +1074,21 @@ def _layout_col(doc: dict, pk: str):
     return _bucket_of(pk, _table_n_buckets(doc))
 
 
-def _write_layout(df: DataFrame, doc: dict, pk: str, out_dir: str):
-    """``_write_buckets`` of ``df`` under ``doc``'s layout rule."""
-    return _write_buckets(
-        df.withColumn("_b", _layout_col(doc, pk)), out_dir,
-        _table_n_buckets(doc),
+def _write_layout(
+    df: DataFrame, doc: dict, pk: str, table_dir: str, version: int,
+    sub: str = "data", b=None,
+) -> tuple[str, list[str]]:
+    """Stage ``df`` for a commit of ``version`` under ``doc``'s layout
+    rule (or the ``b`` Column of ``snapshot_write(bucket_col=…)``) in a
+    fresh per-attempt ``<sub>/v{version}_{uuid8}`` directory: a fixed
+    ``v{N}`` dir written with mode=overwrite would let a commit-race
+    LOSER delete the winner's already-referenced files before failing
+    at publish (r9 ADVICE). Returns ``(staging, files)``."""
+    staging = os.path.join(
+        table_dir, sub, f"v{version}_{uuid.uuid4().hex[:8]}"
     )
+    df = df.withColumn("_b", _layout_col(doc, pk) if b is None else b)
+    return staging, _write_buckets(df, staging, _table_n_buckets(doc))
 
 
 def _layout_stats(props: dict | None, files: list[str], pk: str):
@@ -1127,14 +1115,6 @@ def _refuse_partition_spec(doc: dict, verb: str) -> None:
             f"{spec['transform']}({spec['col']}); use merge_full_sync or "
             f"an append instead"
         )
-
-
-def _staging_dir(table_dir: str, sub: str, version: int) -> str:
-    """Per-attempt unique staging directory for a commit of ``version``
-    (r9 ADVICE): a fixed ``v{N}`` dir written with mode=overwrite would
-    let a commit-race LOSER delete the winner's already-referenced
-    files before failing at publish."""
-    return os.path.join(table_dir, sub, f"v{version}_{uuid.uuid4().hex[:8]}")
 
 
 def _publish_child(
@@ -1178,14 +1158,6 @@ def _publish_child(
         if staging is not None:
             shutil.rmtree(staging, ignore_errors=True)
         raise
-
-
-def _cold_dvs(parent: dict, hot: list[int]) -> dict:
-    """The parent's DVs outside the ``hot`` buckets a CoW merge rewrote
-    — the rewrite folded the hot buckets' pending DVs into its rows."""
-    hot_set = {str(b) for b in hot}
-    dvs = parent.get("dvs", {})
-    return {b: es for b, es in dvs.items() if b not in hot_set}
 
 
 def _commit_metadata(
@@ -1258,7 +1230,10 @@ def _read_dv_keys(
 
 
 def _read_snapshot_files(
-    spark: SparkSession, doc: dict, files: list[str]
+    spark: SparkSession,
+    doc: dict,
+    files: list[str],
+    path_col: str | None = None,
 ) -> DataFrame:
     """Read data files under the manifest schema with merge-on-read
     deletes applied: files are GROUPED by the set of DV VERSIONS that
@@ -1289,10 +1264,20 @@ def _read_snapshot_files(
     Returns the snapshot's LOGICAL columns: physical file columns are
     aliased through the snapshot's column mapping (a no-op for tables
     never renamed). DV subtraction happens BEFORE the aliasing — DV
-    sidecars store the physical key column."""
+    sidecars store the physical key column. No ``files`` reads as an
+    empty frame of the same logical columns. ``path_col`` names an extra
+    column holding each row's data file path (the scan's own
+    ``_metadata.file_path``)."""
     from pyspark.sql import types as T
 
     sch = doc.get("schema")
+    if not files:
+        if sch is None:
+            raise ValueError("an empty read needs a manifest schema")
+        return _to_logical(
+            spark.createDataFrame([], T.StructType.fromJson(sch)),
+            _colmap(doc),
+        )
     rd = (
         spark.read.schema(T.StructType.fromJson(sch)) if sch else spark.read
     )
@@ -1304,6 +1289,8 @@ def _read_snapshot_files(
     parts = []
     for vs, fs in sorted(groups.items()):
         df = rd.parquet(*fs)
+        if path_col is not None:
+            df = df.withColumn(path_col, F.col("_metadata.file_path"))
         if vs:
             bs = {str(_bucket_of_path(f)) for f in fs}
             dvk = _read_dv_keys(
@@ -1371,7 +1358,8 @@ def _merge_schemas(parent: dict | None, incoming: dict) -> dict:
     and any NEW incoming fields — a batch that merely OMITS a column the
     parent files carry can never narrow the table's read schema and make
     existing data invisible, and a batch that RETYPES a parent column is
-    rejected loudly (the Delta/Iceberg write contract)."""
+    rejected loudly (the Delta/Iceberg write contract). A new field is
+    recorded nullable: the parent's files read it as null."""
     if parent is None:
         return incoming
     by_name = {f["name"]: f for f in incoming["fields"]}
@@ -1388,9 +1376,50 @@ def _merge_schemas(parent: dict | None, incoming: dict) -> dict:
     parent_names = {f["name"] for f in parent["fields"]}
     merged = dict(parent)
     merged["fields"] = list(parent["fields"]) + [
-        f for f in incoming["fields"] if f["name"] not in parent_names
+        {**f, "nullable": True}
+        for f in incoming["fields"]
+        if f["name"] not in parent_names
     ]
     return merged
+
+
+def _admit_batch(
+    parent: dict, rows: DataFrame, key: str
+) -> tuple[DataFrame, str, dict, dict | None]:
+    """The one admission step of every write batch into ``parent`` (a
+    snapshot, or ``{"props": …}`` of a table being created), run on the
+    batch alone and before anything is staged. Returns ``(rows, pk,
+    schema, props)``: the batch in PHYSICAL column names, the physical
+    key, the child manifest schema and the child table properties. It
+    maps logical names to physical ones; refuses a batch that supplies
+    the identity column and allocates ids ``next .. next+n-1`` in key
+    order (a deterministic rank, so a retry recomputes the same ids),
+    advancing the high-water in the returned props — the same commit as
+    the rows it covers; computes or validates generated columns;
+    enforces CHECK constraints and the dropped-name guard; and evolves
+    the schema additively."""
+    props = parent.get("props") or {}
+    cm = _colmap(parent)
+    pk = _physical_key(key, cm)
+    rows = _to_physical(rows, cm)
+    ident = props.get("identity")
+    if ident:
+        id_col, start = ident["col"], int(ident["next"])
+        if id_col in rows.columns:
+            raise ValueError(
+                f"identity column {id_col!r} is GENERATED ALWAYS — "
+                "writers must not supply it"
+            )
+        n = rows.count()
+        rank = F.row_number().over(Window.orderBy(pk)) + start - 1
+        rows = rows.withColumn(id_col, rank.cast("long"))
+        props = {**props, "identity": {"col": id_col, "next": start + n}}
+    rows = _apply_generated(rows, props)
+    _validate_constraints(rows, props)
+    incoming = _schema_of(rows)
+    _refuse_dropped(parent, incoming)
+    schema = _merge_schemas(parent.get("schema"), incoming)
+    return rows, pk, schema, props or None
 
 
 def snapshot_write(
@@ -1407,9 +1436,15 @@ def snapshot_write(
 ) -> list[str]:
     """Create snapshot ``version`` from scratch (full write, no parent).
 
+    Creation is an ordinary commit (``_admit_batch``, per-attempt
+    staging, ``_publish_child``): of two creators of one version the
+    loser removes only its own staging and raises FileExistsError.
+
     ``extra_props`` (r13): caller-supplied TABLE PROPERTIES merged into
-    the commit (identity high-waters, policies) — the generic channel
-    the named kwargs (stats_cols/bucket_expr/constraints) special-case.
+    the commit (identity, generated columns, policies, a partition
+    spec) — the generic channel the named kwargs
+    (stats_cols/bucket_expr/constraints) special-case. A creation with a
+    ``partition_spec`` records ``meta.op = write_partitioned``.
 
     ``bucket_expr`` is ``bucket_col`` as SQL TEXT — preferred for
     non-default layouts because it is also recorded as the
@@ -1435,8 +1470,6 @@ def snapshot_write(
     OPTIMIZE harvests the same columns for its new files and
     multi-column pruning survives the table's whole write history, not
     just the initial load."""
-    if constraints:
-        _validate_constraints(df, {"constraints": list(constraints)})
     props: dict = {}
     if stats_cols:
         props["stats_cols"] = list(stats_cols)
@@ -1452,19 +1485,114 @@ def snapshot_write(
         # carried by every writer via props, so appends/merges validate
         # their batches against them forever after.
         props["constraints"] = list(constraints)
-    props = {**props, **(extra_props or {})}
-    if bucket_col is None or bucket_expr is not None:
-        bucket_col = _layout_col({"props": props}, key)
-    files = _write_buckets(
-        df.withColumn("_b", bucket_col),
-        os.path.join(table_dir, "data", f"v{version}"),
-        n_buckets=n_buckets,
+    table = {"props": {**props, **(extra_props or {})}}
+    spec = "partition_spec" in table["props"]
+    meta = {"op": "write_partitioned"} if spec else None
+    rows, pk, schema, props = _admit_batch(table, df, key)
+    staging, files = _write_layout(
+        rows, table, pk, table_dir, version,
+        b=bucket_col if bucket_expr is None else None,
     )
     _publish_child(
-        table_dir, {}, version, [], files, None, key,
-        schema=_schema_of(df), props=props or None,
+        table_dir, {}, version, [], files, staging, pk,
+        schema=schema, props=props, meta=meta,
     )
     return files
+
+
+def _cow_merge(
+    spark: SparkSession,
+    table_dir: str,
+    parent_version: int,
+    rows: DataFrame,
+    key: str,
+    *,
+    delete_col: str | None = None,
+    scope=None,
+) -> list[str]:
+    """The copy-on-write MERGE body of ``merge_upsert`` (``scope``
+    None) and ``merge_full_sync``. Hot buckets are rewritten whole, so
+    the child keeps exactly the parent DVs of the cold buckets: the
+    rewrite folds the hot buckets' pending DVs into its rows. A full
+    sync's in-scope buckets are the ``_b=`` path buckets of the files
+    holding an in-scope row, read from the scan's own file paths, so
+    files laid out under a retired partition spec are found too.
+
+    The changeset is persisted before the hot-bucket collect so the rows
+    that drive the bucket set and the rows written are the SAME
+    materialization: a nondeterministic lineage could otherwise recompute
+    rows into a bucket outside ``hot`` and silently drop them at the
+    ``isin(hot)`` filter (r8 ADVICE). Hot files get ONE DV-aware read
+    under the parent MANIFEST schema (never footer inference, r9
+    ADVICE). Only rows that reach the files pass ``_admit_batch``. The
+    merge runs in LOGICAL column space (changesets and the scope are
+    logical); the layout bucket is attached on the PHYSICAL form."""
+    parent = _read_manifest_doc(table_dir, parent_version)
+    verb = "merge_upsert" if scope is None else "merge_full_sync"
+    if scope is None:
+        _refuse_partition_spec(parent, verb)
+    if (parent.get("props") or {}).get("identity"):
+        raise ValueError(
+            f"{verb} cannot carry an identity table's ids for matched "
+            "rows; use append_with_identity"
+        )
+    cm = _colmap(parent)
+    pk = _physical_key(key, cm)
+    upd = _to_logical(
+        _to_physical(rows, cm).withColumn("_b", _layout_col(parent, pk)),
+        cm,
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        # bounded by the table's bucket count — never data-sized
+        hot = {r["_b"] for r in upd.select("_b").distinct().collect()}
+        if scope is not None:
+            scope_t = F.coalesce(scope, F.lit(False))  # NULL: out of scope
+            if parent["files"]:
+                scoped = _read_snapshot_files(
+                    spark, parent, parent["files"], path_col="_path"
+                ).filter(scope_t)
+                hot |= {
+                    _bucket_of_path(r["_path"])
+                    for r in scoped.select("_path").distinct().collect()
+                }
+        hot = sorted(hot)
+        reused = [p for p in parent["files"] if _bucket_of_path(p) not in hot]
+        hot_files = [p for p in parent["files"] if _bucket_of_path(p) in hot]
+        upd_hot = upd.filter(F.col("_b").isin(hot)).drop("_b")
+        inserts = upd_hot
+        if scope is None:
+            changeset_keys = upd_hot.select(F.col(key).alias("_uk"))
+            if delete_col is not None:
+                inserts = upd_hot.filter(~F.col(delete_col)).drop(delete_col)
+        inserts, _, schema, props = _admit_batch(parent, inserts, key)
+        merged = inserts
+        if hot_files:
+            base_hot = _read_snapshot_files(spark, parent, hot_files)
+            if scope is None:
+                keep = base_hot.join(
+                    changeset_keys, F.col(key) == F.col("_uk"), "left_anti"
+                )
+            else:
+                keep = base_hot.filter(~scope_t)
+            # allowMissingColumns both ways = additive evolution through
+            # MERGE: new changeset columns widen, absent ones fill null.
+            merged = _to_physical(keep, cm).unionByName(
+                inserts, allowMissingColumns=True
+            )
+        staging, new_files = _write_layout(
+            merged, parent, pk, table_dir, parent_version + 1
+        )
+    finally:
+        upd.unpersist()
+    cold_dvs = {
+        b: es for b, es in parent.get("dvs", {}).items() if int(b) not in hot
+    }
+    _publish_child(
+        table_dir, parent, parent_version + 1, reused, new_files, staging, pk,
+        schema=schema, props=props, dvs=cold_dvs,
+        rebase_from=parent_version,  # disjoint racers merge, no re-stage
+    )
+    return reused + new_files
 
 
 def merge_upsert(
@@ -1476,19 +1604,15 @@ def merge_upsert(
     delete_col: str | None = None,
 ) -> list[str]:
     """Copy-on-write MERGE: upsert ``updates`` into snapshot
-    ``parent_version``, producing ``parent_version + 1``.
+    ``parent_version``, producing ``parent_version + 1`` (``_cow_merge``).
 
     Only buckets containing a changeset key are rewritten (matched rows
     replaced, unmatched keys inserted — full upsert semantics); every
     other parent file is re-referenced in the child manifest unchanged.
     The affected-bucket set is derived from the CHANGESET (one distinct
     over ``|updates|`` rows — changesets are small relative to the table,
-    so this is the cheap side at any scale). The changeset is persisted
-    before the hot-bucket collect so the rows that drive the bucket set
-    and the rows that get written are the SAME materialization — without
-    it, a nondeterministic updates lineage could recompute rows into a
-    bucket outside the collected ``hot`` set and silently drop them at
-    the ``isin(hot)`` filter (r8 ADVICE).
+    so this is the cheap side at any scale). New changeset columns widen
+    the table schema; a narrow changeset never shrinks it.
 
     ``delete_col`` adds the MERGE ... WHEN MATCHED THEN DELETE clause:
     changeset rows where that boolean column is true remove their key
@@ -1496,95 +1620,11 @@ def merge_upsert(
     delete of an absent key is a no-op, matching SQL MERGE). The flag
     column itself never reaches the data files.
 
-    Hot parent files are read under the PARENT MANIFEST SCHEMA (never
-    footer inference): after an additive evolution the hot set mixes
-    physical schemas, and letting Spark sample one footer would
-    nondeterministically drop the evolved column from the rewritten
-    buckets (r9 ADVICE, high). The child schema is the parent schema
-    widened by any new changeset columns (unionByName both ways), so a
-    narrow changeset can never shrink the table's read schema. Output is
-    staged under a per-attempt unique directory — a loser of the commit
-    race removes only its OWN staging, never the winner's published
-    files (the append_snapshot staging rule, extended here).
-
     A partition-spec table is refused: there a key alone does not name
-    the file holding its row."""
-    parent = _read_manifest_doc(table_dir, parent_version)
-    _refuse_partition_spec(parent, "merge_upsert")
-    cm = _colmap(parent)
-    pk = _physical_key(key, cm)
-    # the merge runs in LOGICAL column space (updates arrive logical,
-    # hot parent files read back logical); conversion to the PHYSICAL
-    # names files actually store happens once, just before the write.
-    # The bucket column, though, must follow the table's PHYSICAL layout
-    # (bucket_expr property, e.g. a range layout): hashing the key on a
-    # range-bucketed table would re-reference the file actually holding
-    # a matched key unchanged and write its replacement into a different
-    # bucket — silent duplicate keys after MERGE (r11 ADVICE, high). The
-    # expr is SQL over physical names, so attach _b on the physical form
-    # and alias back.
-    upd = _to_logical(
-        _to_physical(updates, cm).withColumn("_b", _layout_col(parent, pk)),
-        cm,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    staging = _staging_dir(table_dir, "data", parent_version + 1)
-    try:
-        hot = sorted(
-            r["_b"] for r in upd.select("_b").distinct().collect()
-        )  # bounded by the table's bucket count — never data-sized
-        parent_files = parent["files"]
-        reused = [p for p in parent_files if _bucket_of_path(p) not in hot]
-        base_hot_files = [p for p in parent_files if p not in set(reused)]
-        # manifest-schema + DV-aware read of the hot buckets: pending
-        # merge-on-read deletes fold into this rewrite (their DVs don't
-        # carry to the child).
-        base_hot = (
-            _read_snapshot_files(spark, parent, base_hot_files)
-            if base_hot_files
-            else None
-        )
-        upd_hot = upd.filter(F.col("_b").isin(hot)).drop("_b")
-        # anti-join on ALL changeset keys (updates AND deletes) — both
-        # displace the base row; only non-delete rows are re-inserted.
-        changeset_keys = upd_hot.select(F.col(key).alias("_uk"))
-        inserts = (
-            upd_hot.filter(~F.col(delete_col)).drop(delete_col)
-            if delete_col is not None
-            else upd_hot
-        )
-        _validate_constraints(
-            _to_physical(inserts, cm), parent.get("props")
-        )  # constraint exprs use the table's PHYSICAL names
-        if base_hot is not None:
-            keep = base_hot.join(
-                changeset_keys,
-                F.col(key) == F.col("_uk"),
-                "left_anti",
-            )
-            # allowMissingColumns both ways = additive evolution through
-            # MERGE: new changeset columns widen, absent ones fill null.
-            merged = keep.unionByName(inserts, allowMissingColumns=True)
-        else:
-            merged = inserts
-        merged_p = _to_physical(merged, cm)
-        new_files = _write_layout(merged_p, parent, pk, staging)
-        # parent ∪ merged, not _schema_of(merged) alone: with zero hot
-        # parent files, merged is just the changeset, whose columns must
-        # still widen (never replace) the parent schema. The union runs
-        # on the PHYSICAL form — the names the parent schema records.
-        _refuse_dropped(parent, _schema_of(merged_p))
-        child_schema = _merge_schemas(
-            parent.get("schema"), _schema_of(merged_p)
-        )
-    finally:
-        upd.unpersist()
-    _publish_child(
-        table_dir, parent, parent_version + 1, reused, new_files, staging, pk,
-        schema=child_schema, props=parent.get("props"),
-        dvs=_cold_dvs(parent, hot),
-        rebase_from=parent_version,  # disjoint racers merge, no re-stage
+    the file holding its row. An identity table is refused too."""
+    return _cow_merge(
+        spark, table_dir, parent_version, updates, key, delete_col=delete_col
     )
-    return reused + new_files
 
 
 def merge_full_sync(
@@ -1604,79 +1644,18 @@ def merge_full_sync(
     today's partition to today's extract) that plain upsert cannot
     express: upsert never learns a row disappeared upstream.
 
-    CoW at bucket granularity like ``merge_upsert``: the rewrite set is
-    the buckets holding in-scope rows ∪ the source's buckets; every
-    other parent file is re-referenced. With a RANGE bucket layout a
-    key-range scope rewrites only its own buckets — the oracle-pinned
-    reuse evidence; with a hash layout a broad scope touches all
-    buckets, which is the honest cost of full-sync semantics there.
-    The source is persisted before the hot-bucket collect for the same
-    nondeterministic-lineage reason as merge_upsert (r8 ADVICE)."""
-    parent = _read_manifest_doc(table_dir, parent_version)
-    cm = _colmap(parent)
-    pk = _physical_key(key, cm)
-    # buckets are computed on the PHYSICAL form (the layout rule is SQL
-    # over physical names); the merge itself runs in logical space.
-    layout = _layout_col(parent, pk)
-    src = (
-        _to_physical(source, cm)
-        .withColumn("_b", layout)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    CoW at bucket granularity like ``merge_upsert`` (the body is
+    ``_cow_merge``): the rewrite set is the buckets of the files holding
+    in-scope rows ∪ the source's buckets; every other parent file is
+    re-referenced. With a RANGE bucket layout a key-range scope rewrites
+    only its own buckets — the oracle-pinned reuse evidence; with a hash
+    layout a broad scope touches all buckets, which is the honest cost
+    of full-sync semantics there. On a partition-spec table the source
+    is laid out under the ACTIVE spec, and in-scope files of a retired
+    spec are rewritten too."""
+    return _cow_merge(
+        spark, table_dir, parent_version, source, key, scope=scope
     )
-    staging = _staging_dir(table_dir, "data", parent_version + 1)
-    try:
-        # NULL scope = out of scope (SQL MERGE treats a NULL condition
-        # as not-matched → keep): evaluate a three-valued-safe TRUE test
-        # once and use it for BOTH the scoped-bucket set and the keep
-        # filter, so a NULL-scope row's fate never depends on which
-        # physical bucket it lives in (r11 ADVICE, medium).
-        scope_t = F.coalesce(scope, F.lit(False))
-        if parent["files"]:
-            target_all = _read_snapshot_files(spark, parent, parent["files"])
-            scoped_buckets = sorted(
-                r["_b"]
-                for r in _to_physical(target_all.filter(scope_t), cm)
-                .withColumn("_b", layout)
-                .select("_b")
-                .distinct()
-                .collect()
-            )  # bounded by the table's bucket count — never data-sized
-        else:
-            scoped_buckets = []  # empty parent: nothing in scope to sync
-        hot = sorted(
-            set(scoped_buckets)
-            | {r["_b"] for r in src.select("_b").distinct().collect()}
-        )
-        parent_files = parent["files"]
-        reused = [p for p in parent_files if _bucket_of_path(p) not in hot]
-        hot_files = [p for p in parent_files if p not in set(reused)]
-        base_hot = (
-            _read_snapshot_files(spark, parent, hot_files)
-            if hot_files
-            else None
-        )
-        inserts = src.drop("_b")  # physical form already
-        _validate_constraints(inserts, parent.get("props"))
-        if base_hot is not None:
-            # keep: every row whose scope is NOT TRUE (false or NULL) —
-            # every in-scope row is either replaced by its source row or
-            # (absent upstream) deleted, which IS the
-            # not-matched-by-source clause.
-            keep = _to_physical(base_hot.filter(~scope_t), cm)
-            merged = keep.unionByName(inserts, allowMissingColumns=True)
-        else:
-            merged = inserts
-        new_files = _write_layout(merged, parent, pk, staging)
-        _refuse_dropped(parent, _schema_of(merged))
-        child_schema = _merge_schemas(parent.get("schema"), _schema_of(merged))
-    finally:
-        src.unpersist()
-    _publish_child(
-        table_dir, parent, parent_version + 1, reused, new_files, staging, pk,
-        schema=child_schema, props=parent.get("props"),
-        dvs=_cold_dvs(parent, hot), rebase_from=parent_version,
-    )
-    return reused + new_files
 
 
 def delete_merge_on_read(
@@ -1712,7 +1691,6 @@ def delete_merge_on_read(
     partition column, so a key's DV could not find its row's bucket."""
     parent = _read_manifest_doc(table_dir, parent_version)
     _refuse_partition_spec(parent, "delete_merge_on_read")
-    staging = _staging_dir(table_dir, "dv", parent_version + 1)
     # DV sidecars must be bucketed with the TABLE'S physical layout
     # (``_layout_col``: a recorded bucket_expr, else the key hash):
     # _applicable_dvs matches a DV's bucket against the DATA FILES' path
@@ -1722,8 +1700,9 @@ def delete_merge_on_read(
     pk = _physical_key(key, cm)
     # DV sidecars store the PHYSICAL key column: they are anti-joined
     # against raw file reads BEFORE logical aliasing.
-    dv_files = _write_layout(
-        _to_physical(deletes.select(key), cm), parent, pk, staging
+    staging, dv_files = _write_layout(
+        _to_physical(deletes.select(key), cm), parent, pk, table_dir,
+        parent_version + 1, "dv",
     )
     dvs = {b: list(es) for b, es in parent.get("dvs", {}).items()}
     for p in dv_files:
@@ -1745,7 +1724,6 @@ def append_snapshot(
     key: str,
     batch_id: int | None = None,
     branch: str | None = None,
-    props_update: dict | None = None,
     parent_branch: str | None = None,
 ) -> tuple[int, bool]:
     """INSERT-ONLY commit (the streaming-ingest fast path): write only the
@@ -1771,9 +1749,11 @@ def append_snapshot(
     by the first branch commit) and ``branch_commits`` forward;
     ``merge_branch`` consumes both.
 
-    New rows are laid out by the table's layout rule (``_layout_col``):
-    on a partition-spec table one file per value of the ACTIVE spec,
-    with the partition tuple recorded in the file's stats."""
+    The batch passes ``_admit_batch`` (column mapping, identity,
+    generated columns, constraints, additive schema evolution). New rows
+    are laid out by the table's layout rule (``_layout_col``): on a
+    partition-spec table one file per value of the ACTIVE spec, with the
+    partition tuple recorded in the file's stats."""
     branch_meta: dict | None = None
     parent_doc: dict | None = None
     if parent_branch is not None:
@@ -1828,36 +1808,23 @@ def append_snapshot(
         if parent_doc is not None
         else _read_manifest_doc(table_dir, parent_version)
     )
-    cm = _colmap(parent)
-    rows = _to_physical(rows, cm)  # writers store PHYSICAL column names
-    pk = _physical_key(key, cm)
-    _validate_constraints(rows, parent.get("props"))  # CHECK before staging
-    # The child manifest carries the parent schema WIDENED by the
-    # appended rows' columns — the additive-evolution point: new columns
-    # widen the table schema, and parent files (which lack them) read
-    # them as null through the manifest-schema read path. _merge_schemas
-    # ENFORCES additivity (r9 ADVICE): a batch that omits a parent column
-    # can't narrow the read schema and hide existing data, and a retyped
-    # column raises — as Delta does.
-    _refuse_dropped(parent, _schema_of(rows))
-    schema = _merge_schemas(parent.get("schema"), _schema_of(rows))
-    staging = _staging_dir(table_dir, "data", version)
-    new_files = _write_layout(rows, parent, pk, staging)
+    # Admitted after the replay pre-check, so a replayed batch leaves
+    # an identity high-water untouched. The child schema is the parent
+    # schema WIDENED by the appended rows' columns (parent files read
+    # them as null through the manifest-schema read path).
+    rows, pk, schema, props = _admit_batch(parent, rows, key)
+    staging, new_files = _write_layout(rows, parent, pk, table_dir, version)
     meta = {
         **({"batch_id": batch_id} if batch_id is not None else {}),
         **(branch_meta or {}),
     }
     try:
         # Pending MoR deletes carry forward (the appended files post-date
-        # them). props_update (r13) is a commit-scoped property overlay:
-        # identity high-waters advance ATOMICALLY with the rows they
-        # cover (two commits would leave a crash window where rows exist
-        # but the allocator would re-issue their ids).
+        # them).
         rep = _publish_child(
             table_dir, parent, version, parent["files"], new_files, staging,
             pk, schema=schema, meta=meta or None, dvs=parent.get("dvs"),
-            props={**(parent.get("props") or {}), **(props_update or {})}
-            or None,
+            props=props,
             rebase_from=parent_version,  # appends touch only new buckets
             branch=branch,  # WAP: stage on a branch ref, not a version
         )
@@ -1904,8 +1871,9 @@ def _rewrite_files(
     staging, new_files = None, []
     if files:
         df = _to_physical(_read_snapshot_files(spark, parent, files), cm)
-        staging = _staging_dir(table_dir, "data", parent_version + 1)
-        new_files = _write_layout(df, {"props": props}, pk, staging)
+        staging, new_files = _write_layout(
+            df, {"props": props}, pk, table_dir, parent_version + 1
+        )
     _publish_child(
         table_dir, parent, parent_version + 1, reused, new_files, staging,
         pk, schema=parent.get("schema"), props=props, dvs=dvs,
@@ -2971,8 +2939,6 @@ def incremental_diff(
     get exactly the logical delta (the incremental-consumption verb —
     Delta CDF / Iceberg incremental reads — that batch re-diffs of full
     snapshots cannot afford)."""
-    from pyspark.sql import types as T
-
     old_doc = _read_manifest_doc(table_dir, v_from)
     new_doc = _read_manifest_doc(table_dir, v_to)
     if _colmap(old_doc) != _colmap(new_doc):
@@ -3001,16 +2967,8 @@ def incremental_diff(
     only_old = sorted(p for p, s in so.items() if sn.get(p) != s)
     only_new = sorted(p for p, s in sn.items() if so.get(p) != s)
 
-    def _read(files: list[str], doc: dict) -> DataFrame:
-        if not files:
-            sch = doc.get("schema")
-            if sch is None:
-                raise ValueError("empty side of a CDC diff needs a schema")
-            return spark.createDataFrame([], T.StructType.fromJson(sch))
-        return _read_snapshot_files(spark, doc, files)
-
-    old_rows = _read(only_old, old_doc)
-    new_rows = _read(only_new, new_doc)
+    old_rows = _read_snapshot_files(spark, old_doc, only_old)
+    new_rows = _read_snapshot_files(spark, new_doc, only_new)
     # compare on the OLD snapshot's non-key columns: additive evolution
     # may have widened v_to, and a column absent at v_from can't make a
     # row "changed" retroactively.
@@ -5039,19 +4997,15 @@ def write_partitioned(
     version: int = 1,
 ) -> list[str]:
     """Create v``version`` partitioned by ``transform(part_col)`` (spec
-    id 0): ``snapshot_write``'s layout and commit steps under the spec
-    props. The spec and its history are TABLE PROPERTIES every later
-    writer reads (``_layout_col``); per-file partition tuples ride in
-    the manifest stats."""
+    id 0): ``snapshot_write`` under the spec props. The spec and its
+    history are TABLE PROPERTIES every later writer reads
+    (``_layout_col``); per-file partition tuples ride in the manifest
+    stats."""
     spec = {"id": 0, "transform": transform, "col": part_col}
-    props = {"partition_spec": spec, "partition_specs": [spec]}
-    out_dir = os.path.join(table_dir, "data", f"v{version}")
-    files = _write_layout(df, {"props": props}, key, out_dir)
-    _publish_child(
-        table_dir, {}, version, [], files, None, key,
-        schema=_schema_of(df), props=props, meta={"op": "write_partitioned"},
+    return snapshot_write(
+        df, table_dir, key, version=version,
+        extra_props={"partition_spec": spec, "partition_specs": [spec]},
     )
-    return files
 
 
 def evolve_partition_spec(
@@ -7317,28 +7271,14 @@ def create_with_identity(
     may never supply it (refused, as Delta does for GENERATED ALWAYS).
     Initial rows get ids 1..n in ``key`` order; the allocator
     high-water (``identity.next``) is committed as a table property IN
-    THE SAME snapshot as the rows it covers. Returns n.
-
-    Allocation is a deterministic function of the batch (rank by key),
-    so any retry or engine recomputes identical ids — the property that
-    lets the oracle pin every id. The rank is a sort of THE BATCH
-    (bounded ingest unit), never of the table."""
-    if id_col in df.columns:
-        raise ValueError(
-            f"identity column {id_col!r} is GENERATED ALWAYS — "
-            "writers must not supply it"
-        )
-    n = df.count()
-    w = Window.orderBy(key)
-    out = df.withColumn(id_col, F.row_number().over(w).cast("long"))
+    THE SAME snapshot as the rows it covers (``_admit_batch``). Returns
+    n."""
     snapshot_write(
-        out,
-        table_dir,
-        key=key,
-        version=1,
-        extra_props={"identity": {"col": id_col, "next": n + 1}},
+        df, table_dir, key=key, version=1,
+        extra_props={"identity": {"col": id_col, "next": 1}},
     )
-    return n
+    ident = _read_list_doc(table_dir, 1)["props"]["identity"]
+    return int(ident["next"]) - 1
 
 
 def append_with_identity(
@@ -7348,38 +7288,17 @@ def append_with_identity(
     key: str,
     batch_id: int | None = None,
 ) -> tuple[int, bool]:
-    """APPEND to an identity table: ids ``next .. next+n-1`` are
-    allocated to the batch in ``key`` order and the high-water advances
-    ATOMICALLY with the commit (``props_update`` rides the same
-    manifest publish — no crash window where rows exist but their ids
-    could be re-issued). A replayed batch (same batch_id) is skipped by
-    the normal exactly-once guard and leaves the high-water untouched.
-    Gaps can exist across aborted attempts (Delta identity semantics);
-    ids never repeat."""
+    """APPEND to an identity table: ``append_snapshot``, whose admission
+    allocates ids ``next .. next+n-1`` to the batch in ``key`` order and
+    advances the high-water ATOMICALLY with the commit. A replayed batch
+    (same batch_id) is skipped by the normal exactly-once guard and
+    leaves the high-water untouched. Gaps can exist across aborted
+    attempts (Delta identity semantics); ids never repeat."""
     parent = _read_manifest_doc(table_dir, parent_version)
-    ident = (parent.get("props") or {}).get("identity")
-    if not ident:
+    if not (parent.get("props") or {}).get("identity"):
         raise ValueError(f"{table_dir} has no identity column")
-    id_col, start = ident["col"], int(ident["next"])
-    if id_col in rows.columns:
-        raise ValueError(
-            f"identity column {id_col!r} is GENERATED ALWAYS — "
-            "writers must not supply it"
-        )
-    n = rows.count()
-    w = Window.orderBy(key)
-    out = rows.withColumn(
-        id_col, (F.row_number().over(w) + start - 1).cast("long")
-    )
     return append_snapshot(
-        table_dir,
-        parent_version,
-        out,
-        key=key,
-        batch_id=batch_id,
-        props_update={
-            "identity": {"col": id_col, "next": start + n}
-        },
+        table_dir, parent_version, rows, key=key, batch_id=batch_id
     )
 
 
@@ -7419,7 +7338,7 @@ def q_lake_identity_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTITY): the table is created with engine-allocated row ids
     (1..n in key order), an append allocates the NEXT contiguous block
     with the high-water advanced ATOMICALLY in the same commit
-    (``props_update`` — no two-commit crash window), a REPLAYED append
+    (no two-commit crash window), a REPLAYED append
     is skipped leaving the high-water untouched (``replay_skipped``),
     and a writer supplying the identity column explicitly is REFUSED
     (``explicit_id_refused`` — GENERATED ALWAYS semantics). The head
@@ -7570,16 +7489,12 @@ def bloom_point_lookup(
     if version is None:
         version = latest_version(table_dir)
     doc = _read_manifest_doc(table_dir, version)
-    bl = (doc.get("props") or {}).get("bloom")
+    bl = (doc.get("props") or {}).get("bloom") or {"k": 0, "files": {}}
     files = doc["files"]
-    if not bl:
-        df = _read_snapshot_files(spark, doc, files)
-        return df.filter(F.col(key).isin(*values)), len(files), len(files)
-    k = int(bl["k"])
     digests = [
         [
             int(hashlib.md5(f"{v}|{i}".encode()).hexdigest()[:8], 16)
-            for i in range(k)
+            for i in range(int(bl["k"]))
         ]
         for v in values
     ]
@@ -7596,12 +7511,6 @@ def bloom_point_lookup(
 
     fb = bl["files"]
     cand = [p for p in files if p not in fb or _may_contain(fb[p])]
-    if not cand:
-        sch = doc.get("schema")
-        from pyspark.sql import types as T
-
-        empty = spark.createDataFrame([], T.StructType.fromJson(sch))
-        return empty, 0, len(files)
     df = _read_snapshot_files(spark, doc, cand)
     return df.filter(F.col(key).isin(*values)), len(cand), len(files)
 
@@ -7878,11 +7787,12 @@ def create_with_generated(
     """CREATE a table with GENERATED columns: ``generated`` maps column
     → SQL expression over the other columns; the policy is committed as
     a table property so every later writer computes-or-validates it
-    (``append_with_generated``). The classic use is a derived partition
-    key (day from a timestamp) that writers can never get wrong."""
-    props = {"generated": dict(generated)}
-    out = _apply_generated(df, props)
-    snapshot_write(out, table_dir, key=key, version=1, extra_props=props)
+    (``_admit_batch``). The classic use is a derived partition key (day
+    from a timestamp) that writers can never get wrong."""
+    snapshot_write(
+        df, table_dir, key=key, version=1,
+        extra_props={"generated": dict(generated)},
+    )
 
 
 def append_with_generated(
@@ -7892,11 +7802,10 @@ def append_with_generated(
     key: str,
     batch_id: int | None = None,
 ) -> tuple[int, bool]:
-    """APPEND to a generated-columns table: absent generated columns
-    are computed, present ones validated row-for-row against the stored
-    expressions — a mismatching batch is refused before staging."""
-    parent = _read_manifest_doc(table_dir, parent_version)
-    rows = _apply_generated(rows, parent.get("props"))
+    """APPEND to a generated-columns table: ``append_snapshot``, whose
+    admission computes absent generated columns and validates present
+    ones row-for-row against the stored expressions — a mismatching
+    batch is refused before staging."""
     return append_snapshot(
         table_dir, parent_version, rows, key=key, batch_id=batch_id
     )

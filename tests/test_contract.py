@@ -58,21 +58,16 @@ def test_link_claim_lives_only_in_lakeformat():
     assert hits == ["lakeformat.py"], hits
 
 
-def test_layout_rule_lives_only_in_layout_col():
-    """The lakehouse's physical layout rule (partition spec, else
-    ``bucket_expr``, else the key hash) has one implementation,
-    ``lakehouse._layout_col``. A call of ``_bucket_of`` or
-    ``_pspec_expr`` anywhere else in the package is a writer
-    re-deriving the rule by hand, which is how a writer ends up
-    placing rows or DVs in a different bucket than the files holding
-    their keys."""
+def _package_calls():
+    """``(file, source, calls)`` of every package file, where ``calls``
+    lists the ``(innermost enclosing function, callee name)`` of every
+    call in it, parsed with ``ast``."""
     import ast
     from pathlib import Path
 
     root = Path(__file__).resolve().parents[1] / "cuny_courses_spark"
 
     def calls(node, fn):
-        # (innermost enclosing function, callee name) of every call
         for child in ast.iter_child_nodes(node):
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 yield from calls(child, child.name)
@@ -82,14 +77,51 @@ def test_layout_rule_lives_only_in_layout_col():
                 yield fn, getattr(f, "id", None) or getattr(f, "attr", None)
             yield from calls(child, fn)
 
-    callers = set()
     for p in root.rglob("*.py"):
         text = p.read_text()
-        assert "_layout_bucket_exprs" not in text, p
-        for fn, name in calls(ast.parse(text), None):
+        yield p.relative_to(root).as_posix(), text, calls(ast.parse(text), None)
+
+
+def test_layout_rule_lives_only_in_layout_col():
+    """The lakehouse's physical layout rule (partition spec, else
+    ``bucket_expr``, else the key hash) has one implementation,
+    ``lakehouse._layout_col``. A call of ``_bucket_of`` or
+    ``_pspec_expr`` anywhere else in the package is a writer
+    re-deriving the rule by hand, which is how a writer ends up
+    placing rows or DVs in a different bucket than the files holding
+    their keys."""
+    callers = set()
+    for path, text, calls in _package_calls():
+        assert "_layout_bucket_exprs" not in text, path
+        for fn, name in calls:
             if name in ("_bucket_of", "_pspec_expr"):
-                callers.add((p.relative_to(root).as_posix(), fn, name))
+                callers.add((path, fn, name))
     assert callers == {
         ("operators/lakehouse.py", "_layout_col", "_bucket_of"),
         ("operators/lakehouse.py", "_layout_col", "_pspec_expr"),
+    }, sorted(callers)
+
+
+def test_write_batch_checks_live_only_in_admit_batch():
+    """Every lakehouse writer admits its batch through
+    ``lakehouse._admit_batch``: generated columns, CHECK constraints and
+    the dropped-name guard are called from there only, so a writer
+    cannot skip one by skipping a wrapper; no commit-scoped
+    ``props_update`` overlay bypasses it; and data files are written
+    only through ``_write_layout``, the one layout rule."""
+    checks = (
+        "_apply_generated", "_validate_constraints", "_refuse_dropped",
+        "_write_buckets",
+    )
+    callers = set()
+    for path, text, calls in _package_calls():
+        assert "props_update" not in text, path
+        for fn, name in calls:
+            if name in checks:
+                callers.add((path, fn, name))
+    assert callers == {
+        ("operators/lakehouse.py", "_admit_batch", "_apply_generated"),
+        ("operators/lakehouse.py", "_admit_batch", "_validate_constraints"),
+        ("operators/lakehouse.py", "_admit_batch", "_refuse_dropped"),
+        ("operators/lakehouse.py", "_write_layout", "_write_buckets"),
     }, sorted(callers)

@@ -3099,3 +3099,143 @@ def test_partition_spec_append_race_keeps_winner_files(spark, tmp_path):
     assert set(won) | set(rebased) <= set(head)
     assert all(os.path.exists(p) for p in head)
 
+
+
+@pytest.mark.parametrize("verb", ["snapshot_write", "write_partitioned"])
+def test_create_race_keeps_winner_files(spark, tmp_path, verb):
+    """Creation stages per attempt like every other commit: a second
+    create of v1 loses the publish race, raises FileExistsError and
+    removes only its own staging, and v1 still reads every row the
+    winner committed."""
+    import datetime
+
+    table_dir = str(tmp_path / "lake_create_race")
+    day = datetime.date(2002, 1, 1)
+
+    def create(lo):
+        df = spark.createDataFrame(
+            [
+                (k, day + datetime.timedelta(days=k % 40))
+                for k in range(lo, lo + 50)
+            ],
+            "k long, d date",
+        )
+        if verb == "snapshot_write":
+            return lh.snapshot_write(df, table_dir, key="k", version=1)
+        return lh.write_partitioned(
+            df, table_dir, key="k", part_col="d", transform="month", version=1
+        )
+
+    won = create(0)
+    with pytest.raises(FileExistsError):
+        create(1000)
+    got = lh.snapshot_read(spark, table_dir, 1).select("k").collect()
+    assert sorted(r["k"] for r in got) == list(range(50))
+    assert sorted(lh.read_manifest(table_dir, 1)) == sorted(won)
+    assert len(os.listdir(os.path.join(table_dir, "data"))) == 1
+
+
+def test_full_sync_after_partition_evolution_is_exact(spark, tmp_path):
+    """A full sync after a month → day evolution rewrites the month file
+    holding the in-scope rows (found by its ``_b=`` path), not only the
+    buckets of the active spec's values: syncing January to one source
+    row leaves exactly that row in January, and February untouched."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    table_dir = str(tmp_path / "lake_month_sync")
+    rows = _month_table(spark, table_dir)
+    lh.evolve_partition_spec(table_dir, 1, "day")  # v2
+    jan1, feb1 = datetime.date(2002, 1, 1), datetime.date(2002, 2, 1)
+    src = spark.createDataFrame(
+        [(5, jan1 + datetime.timedelta(days=5))], "k long, d date"
+    )
+    lh.merge_full_sync(
+        spark, table_dir, 2, src, key="k",
+        scope=(F.col("d") >= F.lit(jan1)) & (F.col("d") < F.lit(feb1)),
+    )
+    got = lh.snapshot_read(spark, table_dir, 3).select("k", "d").collect()
+    want = [r for r in rows if r[1] >= feb1] + [
+        (5, jan1 + datetime.timedelta(days=5))
+    ]
+    assert sorted(tuple(r) for r in got) == sorted(want)
+
+
+def test_generated_columns_through_every_writer(spark, tmp_path):
+    """Every writer admits its batch through the same step: a merge into
+    a generated-column table computes the column, and a plain append
+    with a mismatching value is refused with the head unmoved."""
+    table_dir = str(tmp_path / "lake_gen")
+    lh.create_with_generated(
+        spark.createDataFrame([(k, k) for k in range(4)], "k long, a long"),
+        table_dir, key="k", generated={"g": "a * 2"},
+    )
+    lh.merge_upsert(
+        spark, table_dir, 1,
+        spark.createDataFrame([(1, 10), (7, 70)], "k long, a long"),
+        key="k",
+    )
+    got = lh.snapshot_read(spark, table_dir, 2).collect()
+    assert sorted((r["k"], r["a"], r["g"]) for r in got) == [
+        (0, 0, 0), (1, 10, 20), (2, 2, 4), (3, 3, 6), (7, 70, 140)
+    ]
+    bad = spark.createDataFrame([(9, 1, 12345)], "k long, a long, g long")
+    with pytest.raises(ValueError, match="generated column"):
+        lh.append_snapshot(table_dir, 2, bad, key="k")
+    assert lh.latest_version(table_dir) == 2
+
+
+def test_identity_column_through_every_writer(spark, tmp_path):
+    """A plain append to an identity table gets fresh ids in key order
+    and advances the high-water; an append supplying the id is refused;
+    a merge is refused, since an upsert cannot carry matched rows'
+    ids."""
+    table_dir = str(tmp_path / "lake_ident")
+    assert lh.create_with_identity(
+        spark.createDataFrame([(k,) for k in range(5)], "k long"),
+        table_dir, key="k", id_col="id",
+    ) == 5
+    lh.append_snapshot(
+        table_dir, 1, spark.createDataFrame([(11,), (10,)], "k long"), key="k"
+    )
+    got = lh.snapshot_read(spark, table_dir, 2).collect()
+    assert sorted((r["k"], r["id"]) for r in got) == [
+        (0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (10, 6), (11, 7)
+    ]
+    doc = lh._read_manifest_doc(table_dir, 2)
+    assert doc["props"]["identity"]["next"] == 8
+    dup = spark.createDataFrame([(20, 1)], "k long, id long")
+    with pytest.raises(ValueError, match="GENERATED ALWAYS"):
+        lh.append_snapshot(table_dir, 2, dup, key="k")
+    upd = spark.createDataFrame([(3,), (30,)], "k long")
+    with pytest.raises(ValueError, match="identity"):
+        lh.merge_upsert(spark, table_dir, 2, upd, key="k")
+    assert lh.latest_version(table_dir) == 2
+
+
+def test_cdc_empty_side_reads_logical_names_after_rename(spark, tmp_path):
+    """An empty side of a CDC diff reads under the same LOGICAL names as
+    a non-empty one: after a rename, an empty merge and an append, the
+    v2 → v4 diff is exactly the appended rows."""
+    table_dir = str(tmp_path / "lake_cdc_rename")
+    lh.snapshot_write(
+        spark.createDataFrame(
+            [(k, k * 10) for k in range(6)], "k long, a long"
+        ),
+        table_dir, key="k",
+    )
+    lh.rename_column(table_dir, 1, "a", "amount")  # v2
+    lh.merge_upsert(
+        spark, table_dir, 2,
+        spark.createDataFrame([], "k long, amount long"), key="k",
+    )  # v3: no rows, every file reused
+    lh.append_snapshot(
+        table_dir, 3,
+        spark.createDataFrame([(100, 7), (101, 8)], "k long, amount long"),
+        key="k",
+    )  # v4
+    got = lh.incremental_diff(spark, table_dir, 2, 4, key="k").collect()
+    assert sorted(tuple(r) for r in got) == [
+        (100, 7, "insert"), (101, 8, "insert")
+    ]
