@@ -16,9 +16,11 @@ re-execution into partial result reuse — wrong thing to measure in a
 bench, and it pins shuffle files for the session lifetime. The
 ``select("*")`` wrapper shares the cached analysis but builds a fresh
 physical plan with fresh RDDs, so optimization, codegen lookup, scans,
-shuffles — ALL data work — re-run on every call. Only driver-side plan
-construction + analysis are saved (prepared-statement semantics; DuckDB's
-~ms re-plan never paid this cost).
+shuffles — ALL data work — re-run on every call; the codegen lookup hits
+Spark's generated-class cache whenever the session's query mix fits in it
+(session.CODEGEN_CACHE_ENTRIES), so a cached plan's compiled code is
+reused too. Only driver-side plan construction + analysis are saved
+(prepared-statement semantics; DuckDB's ~ms re-plan never paid this cost).
 
 A regenerated dataset at the same path, a different scale factor, or a
 fresh session each rebuild from scratch (the content signature walks the

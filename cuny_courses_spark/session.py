@@ -13,6 +13,8 @@ Settings rationale (SURVEY §4):
 - shuffle.partitions: modest default; AQE coalesces below it. On a real
   cluster this is sized to ~target-partition-bytes (128 MB) per SURVEY §7,
   not a constant.
+- codegen cache sized to the query mix (engine-owned sessions only): see
+  CODEGEN_CACHE_ENTRIES.
 """
 
 from __future__ import annotations
@@ -67,6 +69,25 @@ RUNTIME_CONFS: dict[str, str] = {
     # decode probe 0.76→0.63 s). Memory cost is ~1-2 MB per open reader.
     "spark.sql.parquet.columnarReaderBatchSize": "16384",
 }
+
+# Entries in Spark's generated-class cache (spark.sql.codegen.cache.
+# maxEntries, default 100). A query mix that generates more classes than
+# the cache holds evicts each query's classes before it runs again, so
+# every call pays Janino again and runs the new classes interpreted until
+# the JIT warms them up again — the plan cache then saves analysis only.
+# Classes a fresh session compiles for one pass of a mix (4-core host):
+# perfbench ingest_x10 50, heavy_x7 128, short_sf0.1 145; the 23 q_sql_*
+# shapes at sf0.001 357; the first 116 of the 295 registered queries by
+# name, at sf0.001, 1,264. At 100, heavy_x7's steady-state two-round
+# windows recompiled 84-126 classes each; at 1000 they compile none
+# (plans/*/codegen_per_window.py). 1000 holds every serving mix measured,
+# the TPC-H set with 2.8× headroom; a pass over the whole registry runs
+# each query once, so sizing for it buys nothing.
+# It is a STATIC conf — fixed when the session's shared state starts — so
+# it cannot live in RUNTIME_CONFS: configure()'s spark.conf.set would fail
+# and be swallowed. A driver-owned session therefore keeps Spark's default;
+# only get_session() pins it.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 # Below this input size, adaptive execution costs more than it saves:
@@ -340,6 +361,14 @@ def _default_driver_mem() -> str:
     return "8g"
 
 
+def compiled_classes(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far (Spark's
+    ``CodegenMetrics`` compile histogram; a codegen-cache hit compiles
+    nothing). JVM-wide, so take differences around the work measured."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(codegen.METRIC_COMPILATION_TIME().getCount())
+
+
 def get_session(app_name: str = "cuny_courses_spark") -> SparkSession:
     """Engine-owned local session for tests/bench (local[N], AQE, Arrow)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -359,6 +388,7 @@ def get_session(app_name: str = "cuny_courses_spark") -> SparkSession:
             os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Reclaim RELIABLE checkpoint dirs (SPARK_GRAFT_RELIABLE_CKPT_DIR
         # pagerank path) when their RDDs are GC'd — without this, each
         # superstep's checkpoint leaks on disk for the life of a

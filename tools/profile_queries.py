@@ -11,6 +11,11 @@ Timing: warm lap, then best-of-K laps of
 column of every row, no sink cost, unlike toPandas() which also pays
 Arrow collection (recorded separately when --topandas is passed so the
 bench numbers stay comparable). Job-labelled per guide §1.5.
+
+`compiled=N` is the number of generated classes Spark compiled during
+the timed laps. Nonzero means the laps paid Janino compilation and ran
+the new classes interpreted until the JIT warmed them up again (the
+codegen cache evicted this query's classes, or its code changes per call).
 """
 
 from __future__ import annotations
@@ -23,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cuny_courses_spark.registry import queries  # noqa: E402
-from cuny_courses_spark.session import get_session  # noqa: E402
+from cuny_courses_spark.session import compiled_classes, get_session  # noqa: E402
 
 
 def main() -> int:
@@ -65,11 +70,13 @@ def main() -> int:
         sc.setJobDescription(f"{name} warm")
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         best = float("inf")
+        compiled = compiled_classes(spark)
         for lap in range(args.laps):
             sc.setJobDescription(f"{name} lap{lap}")
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
+        compiled = compiled_classes(spark) - compiled
         extra = ""
         if args.topandas:
             fn(spark, sf_dir).toPandas()
@@ -80,7 +87,8 @@ def main() -> int:
                 bp = min(bp, time.perf_counter() - t0)
             extra = f"  toPandas={bp:.4f}s"
         sc.setJobDescription(None)
-        print(f"{name:40s} noop={best:.4f}s{extra}", flush=True)
+        print(f"{name:40s} noop={best:.4f}s compiled={compiled}{extra}",
+              flush=True)
     return 0
 
 
