@@ -1331,7 +1331,8 @@ def pending_dv_keys(
     Precondition (documented, same as the DV read path's key-unique
     contract): keys are unique and not re-inserted after their delete —
     the full effective-state reconstruction for resurrection histories
-    is ``incremental_diff``'s signature machinery, not this helper."""
+    is the change feed (``incremental_diff`` or the lakefeed stream,
+    which diff the data files themselves), not this helper."""
     v = latest_version(table_dir) if version is None else version
     doc = _read_manifest_doc(table_dir, v)
     paths: set[str] = set()
@@ -2927,18 +2928,24 @@ def incremental_diff(
     preimages: bool = False,
 ) -> DataFrame:
     """CDC / change-feed read between two snapshots: every row-level
-    change from ``v_from`` to ``v_to``, classified Delta-CDF-style as
-    ``insert`` / ``update_postimage`` / ``delete`` (plus
-    ``update_preimage`` when ``preimages=True`` — r12), computed by reading
-    ONLY the files the two manifests do not share. CoW rewrites whole
-    buckets, so a rewritten-but-unchanged row appears on both sides of
-    the file diff — the full-outer key join below cancels it (identical
-    non-key values ⇒ not a change). Work is proportional to the CHANGED
-    buckets, never the table: at 100 TB a single-bucket merge yields a
-    CDC read of one old file + one new file, while downstream consumers
-    get exactly the logical delta (the incremental-consumption verb —
-    Delta CDF / Iceberg incremental reads — that batch re-diffs of full
-    snapshots cannot afford)."""
+    change from ``v_from`` to a later ``v_to``, classified Delta-CDF-style
+    as ``insert`` / ``update_postimage`` / ``delete`` (plus
+    ``update_preimage`` when ``preimages=True`` — r12), in the OLD
+    snapshot's logical columns plus ``_change_type``, compared on those
+    columns only (a column a later widen added can't make a row
+    "changed" retroactively). It is the ``lakefeed`` batch read
+    coalesced over the two endpoints, so the stream and this verb share
+    one classifier: it reads ONLY the files the two manifests do not
+    share (path or applicable DVs), cancels rewritten-but-unchanged
+    rows, and costs O(changed buckets), never O(table) — the Delta CDF /
+    Iceberg incremental read that re-diffing full snapshots can't
+    afford at 100 TB."""
+    from pyspark.sql import types as T
+
+    from cuny_courses_spark.sources.lakefeed import ensure_registered
+
+    if v_to <= v_from:
+        raise ValueError(f"CDC diff needs v_from < v_to: {v_from}..{v_to}")
     old_doc = _read_manifest_doc(table_dir, v_from)
     new_doc = _read_manifest_doc(table_dir, v_to)
     if _colmap(old_doc) != _colmap(new_doc):
@@ -2950,82 +2957,31 @@ def incremental_diff(
             "column-rename boundary — split the read at the rename "
             "commit"
         )
-
-    # a file's EFFECTIVE content is (path, its applicable deletion
-    # vectors): a merge-on-read delete changes table state while the
-    # file list stays identical, so the diff keys on the pair — a file
-    # whose path AND applicable-DV set match on both sides provably
-    # contributed no change and is excluded (work stays ∝ changed
-    # buckets, the CDC contract).
-    def _sig(doc: dict) -> dict[str, tuple]:
-        return {
-            p: tuple(d["path"] for d in _applicable_dvs(doc, p))
-            for p in doc["files"]
-        }
-
-    so, sn = _sig(old_doc), _sig(new_doc)
-    only_old = sorted(p for p, s in so.items() if sn.get(p) != s)
-    only_new = sorted(p for p, s in sn.items() if so.get(p) != s)
-
-    old_rows = _read_snapshot_files(spark, old_doc, only_old)
-    new_rows = _read_snapshot_files(spark, new_doc, only_new)
-    # compare on the OLD snapshot's non-key columns: additive evolution
-    # may have widened v_to, and a column absent at v_from can't make a
-    # row "changed" retroactively.
-    val_cols = [c for c in old_rows.columns if c != key]
-    o = old_rows.select(
-        F.col(key).alias("_ko"),
-        *[F.col(c).alias(f"_o_{c}") for c in val_cols],
-    )
-    n = new_rows.select(
-        F.col(key).alias("_kn"),
-        *[F.col(c).alias(f"_n_{c}") for c in val_cols],
-    )
-    j = o.join(n, o["_ko"] == n["_kn"], "full_outer")
-    # lit(True) seed: a KEY-ONLY table (val_cols == []) degrades to pure
-    # insert/delete classification — a rewritten key present on both
-    # sides is vacuously "unchanged" (r9 ADVICE: a None seed made
-    # F.when(None, …) raise).
-    same = F.lit(True)
-    for c in val_cols:
-        same = same & F.col(f"_o_{c}").eqNullSafe(F.col(f"_n_{c}"))
-    change = (
-        F.when(F.col("_ko").isNull(), F.lit("insert"))
-        .when(F.col("_kn").isNull(), F.lit("delete"))
-        .when(same, F.lit(None).cast("string"))  # rewritten, unchanged
-        .otherwise(F.lit("update_postimage"))
-    )
-    out_key = F.coalesce(F.col("_kn"), F.col("_ko")).alias(key)
-    out_vals = [
-        F.when(F.col("_kn").isNull(), F.col(f"_o_{c}"))
-        .otherwise(F.col(f"_n_{c}"))
-        .alias(c)
-        for c in val_cols
-    ]
-    out = (
-        j.withColumn("_change_type", change)
-        .filter(F.col("_change_type").isNotNull())
-        .select(out_key, *out_vals, "_change_type")
-    )
-    if preimages:
-        # Delta-CDF ``update_preimage`` rows (opt-in; default output is
-        # unchanged for every existing consumer): the OLD values of each
-        # updated key — what retraction-capable consumers (incremental
-        # aggregate/MV maintenance) subtract before adding the
-        # postimage. Deletes already carry old values; inserts have no
-        # preimage by definition.
-        pre = (
-            j.filter(
-                F.col("_ko").isNotNull() & F.col("_kn").isNotNull() & ~same
-            )
-            .select(
-                F.col("_ko").alias(key),
-                *[F.col(f"_o_{c}").alias(c) for c in val_cols],
-                F.lit("update_preimage").alias("_change_type"),
-            )
+    # the batch read resolves names and types as of v_to: declare the
+    # old snapshot's columns with v_to's types (a widen only widens)
+    typ = _read_snapshot_files(spark, new_doc, []).schema
+    declared = T.StructType(
+        [
+            T.StructField(c, typ[c].dataType)
+            for c in _read_snapshot_files(spark, old_doc, []).columns
+        ]
+    ).add("_change_type", "string").add("_commit_version", "long")
+    ensure_registered(spark)
+    # one trigger over (v_from, v_to], coalesced into one endpoint diff
+    return (
+        spark.read.format("lakefeed")
+        .schema(declared)
+        .options(
+            table_dir=table_dir,
+            key=key,
+            startingVersion=v_from + 1,
+            maxVersionsPerTrigger=v_to - v_from,
+            coalesceCatchup=True,
+            preimages=preimages,
         )
-        out = out.unionByName(pre)
-    return out
+        .load()
+        .drop("_commit_version")
+    )
 
 
 @register(

@@ -16,19 +16,20 @@ micro-batched change feed:
   one-commit-per-batch CDC slices). The initial load is the v1 snapshot
   as inserts (Delta's ``startingVersion=0``). ``coalesceCatchup=true``
   adds the cold-start fast path: a batch spanning k versions is
-  computed as ONE signature diff v_start→v_end (net changes,
+  computed as ONE diff v_start→v_end (net changes,
   ``_commit_version`` = v_end) instead of k per-version diffs —
   intermediate states cancel, which is exactly what a consumer 10,000
   commits behind wants.
-- **partitions = changed buckets of (v−1, v].** The table is
-  hash-bucketed by key, so a bucket's old and new files cover the same
-  key space — the row-level diff is PARTITION-LOCAL: one InputPartition
-  per changed bucket carries both sides' (file, applicable-DVs) lists.
-  A DV-ONLY commit (merge-on-read delete) changes a file's
-  applicable-DV set while the file list stays identical — the signature
-  diff still surfaces exactly those buckets. Per-trigger work is
-  O(changed buckets), never O(table): the Delta-CDF /
-  Iceberg-incremental-scan contract at 100 TB.
+- **partitions = changed bucket groups of (v−1, v]** (``plan_span``):
+  the files whose path or applicable-DV set differs between the span's
+  endpoints (so a DV-ONLY merge-on-read delete surfaces too), grouped
+  by ``bucket % g`` so that a key's old and new rows meet in one
+  InputPartition. ``g`` is the gcd of the endpoints' bucket counts
+  under the default key-hash layout, and 1 when either endpoint places
+  rows by a partition spec or a ``bucket_expr`` (a row can change
+  bucket there without changing key). Per-trigger work is O(changed
+  buckets), never O(table): the Delta-CDF / Iceberg-incremental-scan
+  contract at 100 TB.
 - **the per-bucket diff is pyarrow-NATIVE end to end** (r13 verdict
   wrong #1): each side is decoded as an Arrow table (DV keys subtracted
   with a vectorized ``is_in`` filter — never ``to_pylist``), the keyed
@@ -47,10 +48,13 @@ micro-batched change feed:
   durable cursor (replayed on restart); ``commit`` is the hook where a
   connector to a remote log would release upstream retention.
 
-Change classification matches ``operators.lakehouse.incremental_diff``
-row for row: ``insert`` (key only in new), ``delete`` (key only in old,
-OLD values carried), ``update_postimage`` (both sides, values differ,
-NEW values carried); rewritten-but-unchanged rows are cancelled.
+ONE CLASSIFIER: ``insert`` (key only in new), ``delete`` (key only in
+old, OLD values carried), ``update_postimage`` (both sides, values
+differ, NEW values carried); rewritten-but-unchanged rows are
+cancelled. ``spark.read.format("lakefeed")`` is the stream's first
+trigger as a batch, and ``operators.lakehouse.incremental_diff`` is
+that batch read coalesced over its two endpoints, so the stream and the
+batch verb cannot drift apart.
 
 WRITE — ``df.writeStream.format("lakefeed").option("table_dir", d)
 .option("key", k)`` is a native APPEND streaming sink (r13 verdict
@@ -89,12 +93,14 @@ pickle-by-value, so they travel inside the pickled objects.
 from __future__ import annotations
 
 import json
+import math
 import os
 import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceReader,
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     InputPartition,
@@ -140,6 +146,34 @@ def _file_sigs(doc: dict) -> dict[str, tuple]:
     }
 
 
+def _key_modulus(doc: dict) -> int:
+    """The modulus under which a snapshot's ``_b=N`` bucket is a
+    function of the key alone: ``n_buckets`` under the default key-hash
+    layout, 1 when a partition spec or ``bucket_expr`` places rows."""
+    props = doc.get("props") or {}
+    if props.get("partition_spec") or props.get("bucket_expr"):
+        return 1
+    return int(props.get("n_buckets", 16))
+
+
+def plan_span(table_dir: str, lo: int, hi: int) -> list[tuple[list, list]]:
+    """The changed ``(file, applicable DVs)`` pairs of the span
+    ``(lo, hi]`` as ``(old, new)`` partitions: grouped by ``bucket % g``
+    with ``g`` the gcd of both endpoints' ``_key_modulus``, so that a
+    key's old and new rows meet in one partition (module docstring).
+    ``lo`` = 0 is the empty table."""
+    new_doc = _resolve(table_dir, hi)
+    old_doc = _resolve(table_dir, lo) if lo else {"files": []}
+    so, sn = _file_sigs(old_doc), _file_sigs(new_doc)
+    g = math.gcd(_key_modulus(old_doc) if lo else 0, _key_modulus(new_doc))
+    groups: dict[int, tuple[list, list]] = {}
+    for side, (mine, other) in enumerate(((so, sn), (sn, so))):
+        for p in sorted(p for p, s in mine.items() if other.get(p) != s):
+            group = groups.setdefault(bucket_of_path(p) % g, ([], []))
+            group[side].append((p, mine[p]))
+    return [groups[b] for b in sorted(groups)]
+
+
 def _colmap_of(doc: dict) -> dict:
     """{logical: physical} column mapping of a snapshot (empty when the
     table was never renamed)."""
@@ -166,7 +200,7 @@ def _schema_struct(doc: dict):
 
 
 def _load_side(pairs, target, key: str):
-    """One bucket side as a pyarrow Table in the ``target`` schema:
+    """One partition side as a pyarrow Table in the ``target`` schema:
     parquet decode, per-file DV keys subtracted with a vectorized
     ``is_in`` filter. Schema evolution: a file written before an
     additive widen lacks the newer columns — read the intersection and
@@ -206,9 +240,9 @@ def _load_side(pairs, target, key: str):
 
 def _changed_mask(both, val_cols: list[str]):
     """Null-safe row-changed mask over the inner-joined (new, old) pair:
-    changed ⇔ any column differs, where NULL≡NULL is unchanged and
-    NULL vs value is changed — the eqNullSafe contract of
-    ``incremental_diff``. Scalar column types only (the bucketed layout
+    changed ⇔ any column differs, where NULL≡NULL and NaN≡NaN are
+    unchanged and NULL vs value is changed (Spark SQL's ``<=>``).
+    Scalar column types only (the bucketed layout
     law already requires scalar keys; lakehouse tables are flat)."""
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -216,9 +250,12 @@ def _changed_mask(both, val_cols: list[str]):
     mask = None
     for c in val_cols:
         a, b = both.column(c), both.column(c + "__o")
+        ne = pc.not_equal(a, b)
+        if pa.types.is_floating(a.type):
+            ne = pc.and_(ne, pc.invert(pc.and_(pc.is_nan(a), pc.is_nan(b))))
         m = pc.or_(
             pc.xor(pc.is_null(a), pc.is_null(b)),
-            pc.coalesce(pc.not_equal(a, b), pa.scalar(False)),
+            pc.coalesce(ne, pa.scalar(False)),
         )
         mask = m if mask is None else pc.or_(mask, m)
     return mask
@@ -261,12 +298,11 @@ class _LakeFeedStreamReader(DataSourceStreamReader):
         # maxBytesPerTrigger contract): cap a trigger by the WORK it
         # admits, not the commit count. The planner walks candidate
         # versions and sums the byte sizes of each version's CHANGED
-        # data files (the same signature diff partitions() plans from);
+        # data files (the ``plan_span`` that partitions() plans from);
         # a version that would push the running total over B starts the
         # NEXT batch — but at least one version is always admitted, so
         # a single fat commit larger than B lands alone instead of
         # stalling the stream (Delta/Kafka admission semantics).
-        # DV-only commits count 0 bytes (KB sidecars) and group freely.
         self.max_bytes = int(_opt(options, "maxBytesPerTrigger", 0) or 0)
         self.coalesce = (
             str(_opt(options, "coalesceCatchup", "false")).lower() == "true"
@@ -320,25 +356,17 @@ class _LakeFeedStreamReader(DataSourceStreamReader):
 
     def _admit_by_bytes(self, base: int, head: int) -> int:
         """Advance the cursor from ``base`` admitting whole versions
-        until the cumulative CHANGED-file bytes would exceed the
-        budget (first version always admitted; the maxVersions cap
-        composes when both are set). Cost: O(admitted versions + 1)
-        manifest reads + one getsize per changed file — the same
-        metadata partitions() is about to read anyway."""
+        until the cumulative bytes of the new side of each version's
+        ``plan_span`` would exceed the budget (first version always
+        admitted; the maxVersions cap composes when both are set) —
+        the same metadata partitions() is about to read anyway."""
         nxt, total = base, 0
-        prev_sigs = None
         while nxt < head:
             if self.max_versions > 0 and nxt - base >= self.max_versions:
                 break
-            v = nxt + 1
-            if prev_sigs is None:
-                prev_sigs = (
-                    _file_sigs(_resolve(self.table_dir, nxt)) if nxt else {}
-                )
-            new_sigs = _file_sigs(_resolve(self.table_dir, v))
             vbytes = 0
-            for p, s in new_sigs.items():
-                if prev_sigs.get(p) != s:
+            for _, new in plan_span(self.table_dir, nxt, nxt + 1):
+                for p, _ in new:
                     try:
                         vbytes += os.path.getsize(p)
                     except OSError:
@@ -346,20 +374,22 @@ class _LakeFeedStreamReader(DataSourceStreamReader):
             if nxt > base and total + vbytes > self.max_bytes:
                 break
             total += vbytes
-            nxt, prev_sigs = v, new_sigs
+            nxt += 1
         return nxt
 
-    def _ensure_resolved(self) -> None:
+    def _ensure_resolved(self, version: int | None = None) -> None:
         """Pin logical→physical resolution and arrow types ONCE per
-        reader from the head snapshot: physical parquet names never
-        change after a rename, so this stays valid for every version the
-        stream will plan — and pinning prevents a mid-stream re-rename
-        from flipping resolution between batches."""
+        reader from snapshot ``version`` (default: HEAD): physical
+        parquet names never change after a rename, so this stays valid
+        for every version the stream will plan — and pinning prevents a
+        mid-stream re-rename from flipping resolution between batches."""
         if self._phys is not None:
             return
         from pyspark.sql.pandas.types import to_arrow_type
 
-        doc = _resolve(self.table_dir, _latest_version(self.table_dir))
+        doc = _resolve(
+            self.table_dir, version or _latest_version(self.table_dir)
+        )
         cm = _colmap_of(doc)
         phys = [cm.get(c, c) for c in self.cols]
         by_phys = {
@@ -398,39 +428,18 @@ class _LakeFeedStreamReader(DataSourceStreamReader):
             self._ensure_resolved()
             # per-version diffs by default (one CDC slice per commit);
             # the coalesced catch-up fast path diffs the endpoints
-            # directly — the signature machinery handles any (lo, hi).
+            # directly — plan_span handles any (lo, hi).
             spans = [(v - 1, v) for v in range(lo_base + 1, ve + 1)]
             if self.coalesce and ve - lo_base > 1:
                 spans = [(lo_base, ve)]
-            for lo, hi in spans:
-                new_doc = _resolve(self.table_dir, hi)
-                sn = _file_sigs(new_doc)
-                so = _file_sigs(_resolve(self.table_dir, lo)) if lo else {}
-                only_old = {p: s for p, s in so.items() if sn.get(p) != s}
-                only_new = {p: s for p, s in sn.items() if so.get(p) != s}
-                buckets: dict[int, tuple[list, list]] = {}
-                for p, s in only_old.items():
-                    buckets.setdefault(bucket_of_path(p), ([], []))[0].append(
-                        (p, s)
-                    )
-                for p, s in only_new.items():
-                    buckets.setdefault(bucket_of_path(p), ([], []))[1].append(
-                        (p, s)
-                    )
-                for b in sorted(buckets):
-                    old, new = buckets[b]
-                    parts.append(
-                        _FeedPartition(
-                            hi,
-                            self._key_phys,
-                            self._phys,
-                            self.cols,
-                            self._types,
-                            sorted(old),
-                            sorted(new),
-                            preimages=self.preimages,
-                        )
-                    )
+            parts = [
+                _FeedPartition(
+                    hi, self._key_phys, self._phys, self.cols, self._types,
+                    old, new, preimages=self.preimages,
+                )
+                for lo, hi in spans
+                for old, new in plan_span(self.table_dir, lo, hi)
+            ]
         if not parts:  # Spark requires ≥1 partition per planned batch
             parts.append(
                 _FeedPartition(ve, self.key, [], list(self.cols), [], [], [])
@@ -438,7 +447,7 @@ class _LakeFeedStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition: _FeedPartition):
-        """Arrow-native keyed diff of one bucket: anti-joins for
+        """Arrow-native keyed diff of one partition: anti-joins for
         inserts/deletes, inner join + null-safe compare for updates;
         yields bounded RecordBatches (never Python row tuples)."""
         import pyarrow as pa
@@ -493,6 +502,23 @@ class _LakeFeedStreamReader(DataSourceStreamReader):
 
     def stop(self):
         pass
+
+
+class _LakeFeedBatchReader(DataSourceReader):
+    """``spark.read.format("lakefeed")``: the stream's first trigger as
+    one batch — the same options, offsets, partitions and rows — with
+    names and types resolved as of the batch's last version."""
+
+    def __init__(self, options, cols):
+        self.feed = _LakeFeedStreamReader(options, cols)
+
+    def partitions(self):
+        start, end = self.feed.initialOffset(), self.feed.latestOffset()
+        self.feed._ensure_resolved(end["version"])
+        return self.feed.partitions(start, end)
+
+    def read(self, partition: _FeedPartition):
+        return self.feed.read(partition)
 
 
 def _emit(tbl, p: _FeedPartition, ctype: str):
@@ -949,12 +975,18 @@ class _LakeFeedStreamWriter(DataSourceStreamArrowWriter):
 
 
 class LakeFeedDataSource(DataSource):
-    """``readStream.format("lakefeed")`` / ``writeStream.format(
-    "lakefeed")`` — options: table_dir, key; read side adds
-    maxVersionsPerTrigger, maxBytesPerTrigger, coalesceCatchup,
-    preimages, startingVersion; write side adds mode (append/upsert),
-    cdcApply, sinkId (default: derived from checkpointLocation — set
-    explicitly to survive intentional checkpoint loss) and nBuckets."""
+    """``readStream.format("lakefeed")`` / ``read.format("lakefeed")`` /
+    ``writeStream.format("lakefeed")`` — options: table_dir, key; read
+    side adds maxVersionsPerTrigger, maxBytesPerTrigger,
+    coalesceCatchup, preimages, startingVersion; write side adds mode
+    (append/upsert), cdcApply, sinkId (default: derived from
+    checkpointLocation — set explicitly to survive intentional
+    checkpoint loss) and nBuckets. The batch read returns what the
+    stream's first trigger would: from ``startingVersion`` to HEAD, or
+    to the maxVersions/maxBytes cap. It resolves columns as of its last
+    version, so a capped read of a table renamed, widened or dropped
+    after that version declares that version's schema
+    (``incremental_diff`` does)."""
 
     @classmethod
     def name(cls) -> str:
@@ -983,9 +1015,11 @@ class LakeFeedDataSource(DataSource):
             ]
         )
 
+    def reader(self, schema) -> _LakeFeedBatchReader:
+        return _LakeFeedBatchReader(self.options, schema.names[:-2])
+
     def streamReader(self, schema) -> _LakeFeedStreamReader:
-        cols = [f.name for f in schema.fields[:-2]]
-        return _LakeFeedStreamReader(self.options, cols)
+        return _LakeFeedStreamReader(self.options, schema.names[:-2])
 
     def streamWriter(self, schema, overwrite) -> _LakeFeedStreamWriter:
         if overwrite:

@@ -125,3 +125,22 @@ def test_write_batch_checks_live_only_in_admit_batch():
         ("operators/lakehouse.py", "_admit_batch", "_refuse_dropped"),
         ("operators/lakehouse.py", "_write_layout", "_write_buckets"),
     }, sorted(callers)
+
+
+def test_change_classifier_lives_only_in_lakefeed():
+    """Keyed change classification has one implementation, the Arrow
+    bucket diff of ``sources/lakefeed.py``: ``incremental_diff`` is a
+    batch read of that source and joins nothing itself, and no other
+    file defines ``_changed_mask``. A Spark-side key join in
+    ``incremental_diff`` is a second classifier that can drift from the
+    stream's."""
+    diff_calls, definers = set(), set()
+    for path, text, calls in _package_calls():
+        if "def _changed_mask(" in text:
+            definers.add(path)
+        diff_calls.update(
+            name for fn, name in calls if fn == "incremental_diff"
+        )
+    assert definers == {"sources/lakefeed.py"}, definers
+    assert not diff_calls & {"join", "eqNullSafe"}, sorted(diff_calls)
+    assert "load" in diff_calls, sorted(diff_calls)

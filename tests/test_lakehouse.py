@@ -3239,3 +3239,140 @@ def test_cdc_empty_side_reads_logical_names_after_rename(spark, tmp_path):
     assert sorted(tuple(r) for r in got) == [
         (100, 7, "insert"), (101, 8, "insert")
     ]
+
+
+def _rebucket_history(spark, table_dir):
+    """16 → 8 → 12 buckets around a CoW merge and a DV-only delete."""
+    rows = [(k, k * 3) for k in range(200)]
+    lh.snapshot_write(
+        spark.createDataFrame(rows, "k long, v long"), table_dir, key="k"
+    )
+    lh.merge_upsert(
+        spark, table_dir, 1,
+        spark.createDataFrame(
+            [(3, 1, False), (500, 2, False), (40, None, True)],
+            "k long, v long, _del boolean",
+        ),
+        key="k", delete_col="_del",
+    )  # v2
+    lh.rebucket(spark, table_dir, 2, key="k", n_buckets=8)  # v3
+    lh.merge_upsert(
+        spark, table_dir, 3,
+        spark.createDataFrame([(5, 50), (501, 7)], "k long, v long"),
+        key="k",
+    )  # v4
+    lh.delete_merge_on_read(
+        spark, table_dir, 4,
+        spark.createDataFrame([(6,), (77,)], "k long"), key="k",
+    )  # v5
+    lh.rebucket(spark, table_dir, 5, key="k", n_buckets=12)  # v6
+
+
+def _partition_move_history(spark, table_dir):
+    """A month-partitioned table whose full syncs move k=4 from January
+    to February and k=50 from February to March."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    rows = _month_table(spark, table_dir)
+    jan1 = datetime.date(2002, 1, 1)
+    feb1, mar1 = datetime.date(2002, 2, 1), datetime.date(2002, 3, 1)
+    jan = [r for r in rows if r[1] < feb1 and r[0] != 7]
+    jan = [(4, datetime.date(2002, 2, 10)) if k == 4 else (k, d)
+           for k, d in jan] + [(100, jan1)]
+    lh.merge_full_sync(
+        spark, table_dir, 1, spark.createDataFrame(jan, "k long, d date"),
+        key="k", scope=(F.col("d") >= F.lit(jan1)) & (F.col("d") < F.lit(feb1)),
+    )  # v2
+    lh.merge_full_sync(
+        spark, table_dir, 2,
+        spark.createDataFrame([(50, mar1)], "k long, d date"), key="k",
+        scope=F.col("k") == 50,
+    )  # v3
+
+
+@pytest.mark.parametrize("history", ["rebucket", "partition_move"])
+def test_change_feed_matches_snapshot_diff(spark, tmp_path, history):
+    """Every change-feed read equals a dict diff of the two full
+    snapshots — the stream reader per commit, the stream reader's
+    coalesced catch-up over the whole history, and ``incremental_diff``
+    — across commits that move keys between buckets: a rebucket moves
+    every key, and a partition-spec row follows its date, not its key."""
+    from cuny_courses_spark.sources import lakefeed as lf
+
+    table_dir = str(tmp_path / history)
+    {"rebucket": _rebucket_history,
+     "partition_move": _partition_move_history}[history](spark, table_dir)
+    head = lh.latest_version(table_dir)
+    snaps = {
+        v: {tuple(r)[0]: tuple(r) for r in
+            lh.snapshot_read(spark, table_dir, v).collect()}
+        for v in range(1, head + 1)
+    }
+
+    def want(lo, hi):
+        old, new = snaps[lo], snaps[hi]
+        out = set()
+        for k in old.keys() | new.keys():
+            o, n = old.get(k), new.get(k)
+            if o is None:
+                out.add(n + ("insert",))
+            elif n is None:
+                out.add(o + ("delete",))
+            elif o != n:
+                out |= {n + ("update_postimage",), o + ("update_preimage",)}
+        return out
+
+    cols = lh.snapshot_read(spark, table_dir, 1).columns
+    opts = {"table_dir": table_dir, "key": "k", "preimages": "true"}
+
+    def feed(rdr, lo, hi):
+        parts = rdr.partitions({"version": lo}, {"version": hi})
+        return {r[:-1] for r in lf.feed_rows(rdr, parts)}
+
+    rdr = lf._LakeFeedStreamReader(opts, cols)
+    for v in range(2, head + 1):
+        assert feed(rdr, v - 1, v) == want(v - 1, v), f"stream v{v}"
+        got = lh.incremental_diff(
+            spark, table_dir, v - 1, v, key="k", preimages=True
+        ).collect()
+        assert {tuple(r) for r in got} == want(v - 1, v), f"diff v{v}"
+    coalesced = lf._LakeFeedStreamReader(
+        {**opts, "coalesceCatchup": "true"}, cols
+    )
+    assert feed(coalesced, 1, head) == want(1, head)
+    got = lh.incremental_diff(
+        spark, table_dir, 1, head, key="k", preimages=True
+    ).collect()
+    assert {tuple(r) for r in got} == want(1, head)
+
+
+def test_change_feed_keeps_nan_rows_unchanged(spark, tmp_path):
+    """A rewritten row whose float column holds NaN is unchanged (NaN
+    equals NaN, as in Spark SQL): a merge into its bucket emits only
+    the merged keys, through the stream reader and ``incremental_diff``
+    alike."""
+    from cuny_courses_spark.sources import lakefeed as lf
+
+    table_dir = str(tmp_path / "lake_nan")
+    lh.snapshot_write(
+        spark.createDataFrame(
+            [(k, float("nan") if k % 2 else k / 2) for k in range(32)],
+            "k long, x double",
+        ),
+        table_dir, key="k",
+    )
+    lh.merge_upsert(
+        spark, table_dir, 1,
+        spark.createDataFrame([(1, 1.5), (33, 2.5)], "k long, x double"),
+        key="k",
+    )  # bucket 1 is rewritten; its k=17 stays NaN
+    want = {(1, 1.5, "update_postimage"), (33, 2.5, "insert")}
+    rdr = lf._LakeFeedStreamReader(
+        {"table_dir": table_dir, "key": "k"}, ["k", "x"]
+    )
+    parts = rdr.partitions({"version": 1}, {"version": 2})
+    assert {r[:-1] for r in lf.feed_rows(rdr, parts)} == want
+    got = lh.incremental_diff(spark, table_dir, 1, 2, key="k").collect()
+    assert {tuple(r) for r in got} == want
