@@ -32,9 +32,10 @@ from cuny_courses_spark.sql import register_views, run_sql
 # modules whose functions execute on workers (r12 adds the Python data
 # source — its stream reader runs in a worker-side python process; the
 # lakefeed connector carries the pyspark-free lakeformat protocol
-# module's functions with it); relational operators
-# never ship Python. Guarded: pickle-by-value is a portability
-# improvement, not a correctness dependency.
+# module's functions with it; the vector-index assignment map carries
+# its numpy ranking kernel); relational operators never ship Python.
+# Guarded: pickle-by-value is a portability improvement, not a
+# correctness dependency.
 try:  # pragma: no cover - trivially absent only on exotic pyspark builds
     from pyspark import cloudpickle as _cp
 
@@ -42,11 +43,12 @@ try:  # pragma: no cover - trivially absent only on exotic pyspark builds
     from cuny_courses_spark.functions import multimodal as _mm
     from cuny_courses_spark.functions import udfs as _udfs
     from cuny_courses_spark.operators import similarity as _sim
+    from cuny_courses_spark.operators import vector_index as _vi
     from cuny_courses_spark.sources import lakefeed as _lakefeed
     from cuny_courses_spark.sources import pyds as _pyds
     from cuny_courses_spark.streaming import batch_twins as _bt
 
-    for _m in (_sim, _udfs, _mm, _bt, _pyds, _lakefeed, _lakeformat):
+    for _m in (_sim, _vi, _udfs, _mm, _bt, _pyds, _lakefeed, _lakeformat):
         _cp.register_pickle_by_value(_m)
 except Exception:
     pass

@@ -1190,18 +1190,19 @@ def _colmap(doc_or_props: dict | None) -> dict:
     return dict(props.get("colmap", {}))
 
 
+def _rename_all(df: DataFrame, names: dict) -> DataFrame:
+    """``df`` with every column renamed through ``names`` at once, so a
+    chain (v → w while s → v) cannot collide half-way."""
+    cols = [names.get(c, c) for c in df.columns]
+    return df if cols == df.columns else df.toDF(*cols)
+
+
 def _to_logical(df: DataFrame, cm: dict) -> DataFrame:
-    for logical, physical in cm.items():
-        if physical in df.columns:
-            df = df.withColumnRenamed(physical, logical)
-    return df
+    return _rename_all(df, {p: l for l, p in cm.items()})
 
 
 def _to_physical(df: DataFrame, cm: dict) -> DataFrame:
-    for logical, physical in cm.items():
-        if logical in df.columns:
-            df = df.withColumnRenamed(logical, physical)
-    return df
+    return _rename_all(df, cm)
 
 
 def _physical_key(key: str, cm: dict) -> str:
@@ -4785,7 +4786,11 @@ def q_lake_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from cuny_courses_spark.operators.scans import _io_dir
-    from cuny_courses_spark.operators.similarity import _dot, _np_kmeans
+    from cuny_courses_spark.operators.similarity import _np_kmeans
+    from cuny_courses_spark.operators.vector_index import (
+        assign,
+        centroid_table,
+    )
 
     base = _io_dir(sf_dir, "lake_txn")
     cent_dir = os.path.join(base, "centroids")
@@ -4815,32 +4820,14 @@ def q_lake_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def generation(qid: int, k: int, version: int, publish_lists: bool):
         C = _np_kmeans(sample, min(k, len(sample)), seed=42 + qid)
-        cent = spark.createDataFrame(
-            [
-                (ci, [float(x) for x in c], float((c * c).sum()) / 2.0, qid)
-                for ci, c in enumerate(C)
-            ],
-            "cluster long, centroid array<double>, half_sq double,"
-            " quantizer_id long",
+        cent = centroid_table(spark, C).withColumn(
+            "quantizer_id", F.lit(qid).cast("long")
         )
         snapshot_write(cent, cent_dir, key="cluster", version=version)
         if not publish_lists:
             return  # CRASH: died after table 1 of 2, before the txn
-        wa = Window.partitionBy("vec_id").orderBy(
-            F.col("affinity").desc(), F.col("cluster").asc()
-        )
-        assigned = (
-            corpus.crossJoin(F.broadcast(cent.drop("quantizer_id")))
-            .withColumn(
-                "affinity", _dot("embedding", "centroid") - F.col("half_sq")
-            )
-            .withColumn("arn", F.row_number().over(wa))
-            .filter(F.col("arn") == 1)
-            .select(
-                "cluster", "vec_id", F.lit(qid).cast("long").alias(
-                    "quantizer_id"
-                )
-            )
+        assigned = assign(corpus, cent, "embedding").select(
+            "cluster", "vec_id", F.lit(qid).cast("long").alias("quantizer_id")
         )
         snapshot_write(assigned, lists_dir, key="cluster", version=version)
         txn_commit(
@@ -4848,8 +4835,6 @@ def q_lake_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"centroids": version, "lists": version},
             parent_txn=version - 1,
         )
-
-    from pyspark.sql import Window
 
     generation(1, k=4, version=1, publish_lists=True)
     generation(2, k=8, version=2, publish_lists=True)

@@ -347,7 +347,8 @@ def q_pipeline_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental path — and appended to the lists exactly-once
     (batch-id-tagged commit). Queries (mod 10 = 0) probe the stored
     index: the nprobe = k − max(1, k/8) nearest stored centroids per
-    query (the quantizer's Euclidean affinity q·c − ‖c‖²/2), one
+    query (the quantizer's Euclidean affinity q·c − ‖c‖²/2; build, late
+    batch and probe all go through ``vector_index.assign``), one
     equi-join against the lists' HEAD snapshot, exact dot on probed
     candidates only, top-5 per query. At 100 TB the index build is the
     one expensive pass; every arriving batch and every query works
@@ -375,6 +376,7 @@ def q_pipeline_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_adaptive_k,
         ivf_train_centroids,
     )
+    from cuny_courses_spark.operators.vector_index import assign
 
     import os
     import shutil
@@ -400,8 +402,8 @@ def q_pipeline_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ---- build phase: train once (adaptive k, bounded id-ordered
     # sample), persist quantizer + inverted lists. Assignment of the
-    # initial corpus is the SAME broadcast argmax-affinity pass the late
-    # batch uses — one distributed rule everywhere.
+    # initial corpus is the SAME ``vector_index.assign`` map the late
+    # batch and the probe use — one rule everywhere.
     n_init = init.count()
     if n_init == 0:
         # non-empty corpus with no initial-batch rows: nothing to train
@@ -414,55 +416,24 @@ def q_pipeline_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     k = ivf_adaptive_k(n_init)
     nprobe = k - max(1, k // 8)
-    cent_df = ivf_train_centroids(init, k, spark).select(
-        F.col("cluster").cast("long").alias("cluster"),
-        "centroid",
-        "half_sq",
-    )
+    cent_df = ivf_train_centroids(init, k, spark)
     snapshot_write(cent_df, cent_dir, key="cluster", version=1)
-    wc0 = Window.partitionBy("vec_id").orderBy(
-        F.col("affinity").desc(), F.col("cluster").asc()
-    )
-    assigned = (
-        init.crossJoin(F.broadcast(cent_df))
-        .withColumn(
-            "affinity", _dot("embedding", "centroid") - F.col("half_sq")
-        )
-        .withColumn("arn", F.row_number().over(wc0))
-        .filter(F.col("arn") == 1)
-        .select("vec_id", "cluster", "embedding")
+    assigned = assign(init, cent_df, "embedding").select(
+        "vec_id", "cluster", "embedding"
     )
     snapshot_write(assigned, lists_dir, key="cluster", version=1)
 
     # ---- incremental phase: assign the late batch with the STORED
-    # centroids (argmax affinity — exactly KMeans' assignment rule),
+    # centroids (nearest centroid — exactly KMeans' assignment rule),
     # append exactly-once. No re-clustering happens anywhere below.
     stored_cent = snapshot_read(spark, cent_dir)  # HEAD, k rows
-    wc = Window.partitionBy("vec_id").orderBy(
-        F.col("affinity").desc(), F.col("cluster").asc()
-    )
-    late_assigned = (
-        late.crossJoin(F.broadcast(stored_cent))
-        .withColumn(
-            "affinity", _dot("embedding", "centroid") - F.col("half_sq")
-        )
-        .withColumn("arn", F.row_number().over(wc))
-        .filter(F.col("arn") == 1)
-        .select("vec_id", "cluster", "embedding")
+    late_assigned = assign(late, stored_cent, "embedding").select(
+        "vec_id", "cluster", "embedding"
     )
     append_snapshot(lists_dir, 1, late_assigned, key="cluster", batch_id=1)
 
     # ---- probe phase: queries against the stored index only
-    wq = Window.partitionBy("q_id").orderBy(
-        F.col("affinity").desc(), F.col("cluster").asc()
-    )
-    probe_clusters = (
-        queries.crossJoin(F.broadcast(stored_cent))
-        .withColumn("affinity", _dot("eq", "centroid") - F.col("half_sq"))
-        .withColumn("crn", F.row_number().over(wq))
-        .filter(F.col("crn") <= nprobe)
-        .select("q_id", "eq", "cluster")
-    )
+    probe_clusters = assign(queries, stored_cent, "eq", nprobe)
     # HEAD = v2, init + late; DV-aware seam (immutable corpus here —
     # q_pipeline_index_delete drives it with real tombstones). The
     # probed-cluster set is tiny (queries × nprobe rows), so collecting
@@ -644,13 +615,13 @@ def q_pipeline_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-dependent via k-means|| init; the fixed-RandomState
     sample-trained quantizer is machine-independent, which the hashed
     kept-id checksum needs), and committed to a lakehouse `centroids`
-    table; every document is assigned by argmax affinity against the
-    STORED centroids (the q_pipeline_ann_index assignment rule — at
-    100 TB assignment is the only per-document work and is a linear
-    scan against a k-row broadcast); within-cluster pairs ≥ 0.95 come
-    from a block-partitioned exact pair grid GROUPED BY CLUSTER; the
-    dedup rule keeps the smallest vec_id of every pair relation
-    (deterministic canonical winner).
+    table; every document is assigned to its nearest STORED centroid
+    (``vector_index.assign``, the q_pipeline_ann_index rule — at 100 TB
+    assignment is the only per-document work and is one narrow Arrow
+    map with the k-row quantizer in its closure); within-cluster pairs
+    ≥ 0.95 come from a block-partitioned exact pair grid GROUPED BY
+    CLUSTER; the dedup rule keeps the smallest vec_id of every pair
+    relation (deterministic canonical winner).
 
     Non-vacuous by construction: the corpus has no pairs above ≈0.6, so
     the query injects SQL-expressible semantic replicas — vec_id%50==7
@@ -675,9 +646,12 @@ def q_pipeline_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from cuny_courses_spark.operators.scans import _io_dir
     from cuny_courses_spark.operators.similarity import (
-        _dot,
         _np_kmeans,
         neardup_cosine_pairs,
+    )
+    from cuny_courses_spark.operators.vector_index import (
+        assign,
+        centroid_table,
     )
 
     tau = 0.95
@@ -715,29 +689,13 @@ def q_pipeline_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dtype=np.float64,
     )
     C = _np_kmeans(sample, min(k, len(sample)), seed=42)
-    cent_rows = [
-        (ci, [float(x) for x in c], float((c * c).sum()) / 2.0)
-        for ci, c in enumerate(C)
-    ]
-    cent_df = spark.createDataFrame(
-        cent_rows, "cluster long, centroid array<double>, half_sq double"
+    snapshot_write(
+        centroid_table(spark, C), cent_dir, key="cluster", version=1
     )
-    snapshot_write(cent_df, cent_dir, key="cluster", version=1)
     stored = snapshot_read(spark, cent_dir)  # HEAD — the persisted index
 
-    # ---- assign EVERY doc with the stored centroids (argmax affinity)
-    wc = Window.partitionBy("vec_id").orderBy(
-        F.col("affinity").desc(), F.col("cluster").asc()
-    )
-    assigned = (
-        work.crossJoin(F.broadcast(stored))
-        .withColumn(
-            "affinity", _dot("embedding", "centroid") - F.col("half_sq")
-        )
-        .withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cluster", "embedding")
-    )
+    # ---- assign EVERY doc to its nearest stored centroid
+    assigned = assign(work, stored, "embedding")
 
     # ---- within-cluster exact dedup + cross-corpus exact referee
     within = _within_cluster_pairs(assigned, tau)
@@ -829,8 +787,8 @@ def q_pipeline_incremental_semantic(
       to a `reps` table. These two tables ARE the dedup state.
     · A MICRO-BATCH arrives (semantic replicas of corpus docs at 0.97×
       scale — dups the surface-lexical legs cannot see — plus negated
-      novel vectors): each row is assigned by argmax affinity against
-      the STORED centroids (O(batch) against a k-row broadcast — no
+      novel vectors): each row is assigned to its nearest STORED
+      centroid (``vector_index.assign``: O(batch), one narrow map — no
       re-clustering), and probes ONLY its touched clusters' buckets of
       the reps table (``snapshot_read(buckets=…)`` — O(probed buckets),
       never O(index)). A batch row matching a stored representative at
@@ -844,7 +802,7 @@ def q_pipeline_incremental_semantic(
       read back from the reps HEAD) is the lost-nothing proof that the
       incremental path converges to the batch recompute.
 
-    At 100 TB: per-batch work is assignment (k-row broadcast) + probes
+    At 100 TB: per-batch work is assignment (one narrow map) + probes
     of the touched clusters' buckets + one append commit — the corpus
     is never rescanned; a nightly full SemDeDup at that scale is
     exactly what this replaces."""
@@ -861,6 +819,10 @@ def q_pipeline_incremental_semantic(
     )
     from cuny_courses_spark.operators.scans import _io_dir
     from cuny_courses_spark.operators.similarity import _dot, _np_kmeans
+    from cuny_courses_spark.operators.vector_index import (
+        assign,
+        centroid_table,
+    )
 
     tau = 0.95
     out_schema = (
@@ -904,35 +866,17 @@ def q_pipeline_incremental_semantic(
         dtype=np.float64,
     )
     C = _np_kmeans(sample, min(k, len(sample)), seed=42)
-    cent_df = spark.createDataFrame(
-        [
-            (ci, [float(x) for x in c], float((c * c).sum()) / 2.0)
-            for ci, c in enumerate(C)
-        ],
-        "cluster long, centroid array<double>, half_sq double",
+    snapshot_write(
+        centroid_table(spark, C), cent_dir, key="cluster", version=1
     )
-    snapshot_write(cent_df, cent_dir, key="cluster", version=1)
     stored = snapshot_read(spark, cent_dir)
-
-    def _assign(rows: DataFrame) -> DataFrame:
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("affinity").desc(), F.col("cluster").asc()
-        )
-        return (
-            rows.crossJoin(F.broadcast(stored))
-            .withColumn(
-                "affinity", _dot("embedding", "centroid") - F.col("half_sq")
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "cluster", "embedding")
-        )
-
-    snapshot_write(_assign(e), reps_dir, key="cluster", version=1)
+    snapshot_write(
+        assign(e, stored, "embedding"), reps_dir, key="cluster", version=1
+    )
 
     # ---- the arriving batch: assign with STORED centroids, probe only
     # the touched clusters' buckets of the stored reps
-    bassigned = _assign(batch)
+    bassigned = assign(batch, stored, "embedding")
     bassigned = bassigned.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         touched = sorted(
@@ -1049,12 +993,13 @@ def q_pipeline_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Hash-exact oracle (no certificate needed): the probe deliberately
     uses nprobe = ALL clusters, so the IVF machinery (stored-centroid
-    probe → cluster equi-join → per-query top-3) returns exactly the
-    brute-force top-3 over the SURVIVING corpus, which DuckDB
-    recomputes quadratically. A deleted id surviving anywhere, a missed
-    fold, or a torn version shifts a hashed value. The DELETE-recall
-    story this query pins is binary — tombstoned ids must be GONE —
-    which is why exactness (not recall flags) is the right contract."""
+    probe, ``vector_index.assign`` with nprobe = k → cluster
+    equi-join → per-query top-3) returns exactly the brute-force top-3
+    over the SURVIVING corpus, which DuckDB recomputes quadratically. A
+    deleted id surviving anywhere, a missed fold, or a torn version
+    shifts a hashed value. The DELETE-recall story this query pins is
+    binary — tombstoned ids must be GONE — which is why exactness (not
+    recall flags) is the right contract."""
     import os
     import shutil
 
@@ -1070,6 +1015,10 @@ def q_pipeline_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from cuny_courses_spark.operators.scans import _io_dir
     from cuny_courses_spark.operators.similarity import _dot, _np_kmeans
+    from cuny_courses_spark.operators.vector_index import (
+        assign,
+        centroid_table,
+    )
 
     out_schema = (
         "q_id long, rnk long, n_id long, cos double,"
@@ -1103,26 +1052,12 @@ def q_pipeline_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     k = min(8, len(sample))
     C = _np_kmeans(sample, k, seed=42)
-    cent_df = spark.createDataFrame(
-        [
-            (ci, [float(x) for x in c], float((c * c).sum()) / 2.0)
-            for ci, c in enumerate(C)
-        ],
-        "cluster long, centroid array<double>, half_sq double",
+    snapshot_write(
+        centroid_table(spark, C), cent_dir, key="cluster", version=1
     )
-    snapshot_write(cent_df, cent_dir, key="cluster", version=1)
     stored_cent = snapshot_read(spark, cent_dir)
-    wa = Window.partitionBy("vec_id").orderBy(
-        F.col("affinity").desc(), F.col("cluster").asc()
-    )
-    assigned = (
-        corpus.crossJoin(F.broadcast(stored_cent))
-        .withColumn(
-            "affinity", _dot("embedding", "centroid") - F.col("half_sq")
-        )
-        .withColumn("arn", F.row_number().over(wa))
-        .filter(F.col("arn") == 1)
-        .select("cluster", "vec_id", "embedding")
+    assigned = assign(corpus, stored_cent, "embedding").select(
+        "cluster", "vec_id", "embedding"
     )
     snapshot_write(assigned, lists_dir, key="cluster", version=1)
 
@@ -1132,19 +1067,9 @@ def q_pipeline_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete_merge_on_read(spark, corpus_dir, 1, dels, key="vec_id")
 
     # ---- probe with pending tombstones applied (nprobe = ALL → exact)
+    probe = assign(queries, stored_cent, "eq", nprobe=k)
+
     def top3(lists_df: DataFrame) -> DataFrame:
-        wq = Window.partitionBy("q_id").orderBy(
-            F.col("affinity").desc(), F.col("cluster").asc()
-        )
-        probe = (
-            queries.crossJoin(F.broadcast(stored_cent))
-            .withColumn(
-                "affinity", _dot("eq", "centroid") - F.col("half_sq")
-            )
-            .withColumn("crn", F.row_number().over(wq))
-            .filter(F.col("crn") <= k)  # all clusters: exactness contract
-            .select("q_id", "eq", "cluster")
-        )
         wd = Window.partitionBy("q_id").orderBy(
             F.col("dot").desc(), F.col("vec_id").asc()
         )

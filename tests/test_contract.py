@@ -144,3 +144,15 @@ def test_change_classifier_lives_only_in_lakefeed():
     assert definers == {"sources/lakefeed.py"}, definers
     assert not diff_calls & {"join", "eqNullSafe"}, sorted(diff_calls)
     assert "load" in diff_calls, sorted(diff_calls)
+
+
+def test_centroid_affinity_lives_only_in_vector_index():
+    """Nearest-centroid assignment and probe ranking have one
+    implementation, ``operators/vector_index.py``. Every copy of that
+    rule reads the quantizer's ``half_sq`` column, so another package
+    file naming ``half_sq`` is a second assigner (a centroid crossJoin
+    ranked by a window, or a numpy ranking) that can drift from it."""
+    hits = sorted(
+        path for path, text, _ in _package_calls() if "half_sq" in text
+    )
+    assert hits == ["operators/vector_index.py"], hits

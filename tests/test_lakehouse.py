@@ -3241,6 +3241,42 @@ def test_cdc_empty_side_reads_logical_names_after_rename(spark, tmp_path):
     ]
 
 
+
+def test_rename_chain_reads_logical_names(spark, tmp_path):
+    """A rename chain whose new logical name is another column's physical
+    name (v → w, then s → v: colmap {w: v, v: s}) reads and writes under
+    the logical names, each column with its own values: in
+    ``snapshot_read``, in an append, and in ``incremental_diff`` over
+    that later commit."""
+    table_dir = str(tmp_path / "lake_rename_chain")
+    lh.snapshot_write(
+        spark.createDataFrame(
+            [(k, k * 10, f"s{k}") for k in range(5)],
+            "k long, v long, s string",
+        ),
+        table_dir, key="k",
+    )
+    lh.rename_column(table_dir, 1, "v", "w")  # v2
+    lh.rename_column(table_dir, 2, "s", "v")  # v3
+    got = lh.snapshot_read(spark, table_dir)
+    assert got.columns == ["k", "w", "v"]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (k, k * 10, f"s{k}") for k in range(5)
+    ]
+    lh.append_snapshot(
+        table_dir, 3,
+        spark.createDataFrame([(9, 90, "s9")], "k long, w long, v string"),
+        key="k",
+    )  # v4
+    head = lh.snapshot_read(spark, table_dir)
+    assert head.columns == ["k", "w", "v"]
+    assert sorted(tuple(r) for r in head.collect()) == [
+        (k, k * 10, f"s{k}") for k in (0, 1, 2, 3, 4, 9)
+    ]
+    diff = lh.incremental_diff(spark, table_dir, 3, 4, key="k")
+    assert diff.columns == ["k", "w", "v", "_change_type"]
+    assert [tuple(r) for r in diff.collect()] == [(9, 90, "s9", "insert")]
+
 def _rebucket_history(spark, table_dir):
     """16 → 8 → 12 buckets around a CoW merge and a DV-only delete."""
     rows = [(k, k * 3) for k in range(200)]

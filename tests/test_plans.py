@@ -334,15 +334,13 @@ def test_plan_hygiene_no_unbounded_pair_scans(spark):
         "q_text_idf_top_terms",    # 1-row corpus-size N broadcast (scalar)
         "q_sample_balance_classes",  # 1-row global min-class-count (scalar)
         "q_sim_topk_per_query",    # bounded query set (vec_id < 10) non-equi
-        "q_sim_ivf_topk",          # queries × centroids (bounded) + 1-row cert flags
-        "q_pipeline_ann_index",    # bounded query batch × 8 stored centroids + exact-referee brute force over the broadcast query batch (the q_sim_topk_per_query shape)
-        "q_pipeline_semantic_dedup",  # corpus × 8-row stored-centroid broadcast (linear assignment scan) + 1-row cert flags
+        "q_sim_ivf_topk",          # bounded query set exact referee (the q_sim_topk_per_query shape) + 1-row cert flags
+        "q_pipeline_ann_index",    # exact-referee brute force over the broadcast query batch (the q_sim_topk_per_query shape)
         "q_sim_ann_lsh",           # exact-twin bounded query set + 1-row cert flags
         "q_sim_pq_adc",            # bounded query LUTs (10 rows, KB each) × coded corpus — the ADC scan is the linear pass + exact-twin cert flags
-        "q_sim_ivfpq_topk",        # corpus × broadcast k-row quantizer (linear assignment) + bounded query LUTs × probed lists + 1-row cert flags
-        "q_pipeline_incremental_semantic",  # corpus/batch × broadcast k-row stored centroids (linear assignment scans)
-        "q_pipeline_ivfpq_increment",  # corpus/batch × broadcast k-row STORED quantizer (linear assignment) + bounded query LUTs × probed lists + 1-row cert flags (the q_sim_ivfpq_topk shape on the maintenance path)
-        "q_sim_ivfpq_residual",  # fixture × 8-row broadcast centers + corpus × broadcast k-row quantizer (linear) + bounded query set brute-force referee (the q_sim_topk_per_query shape)
+        "q_sim_ivfpq_topk",        # bounded query LUTs × probed lists + bounded query set exact referee + 1-row cert flags
+        "q_pipeline_ivfpq_increment",  # bounded query LUTs × probed lists + bounded query set exact referee + 1-row cert flags (the q_sim_ivfpq_topk shape on the maintenance path)
+        "q_sim_ivfpq_residual",  # bounded query set brute-force referee (the q_sim_topk_per_query shape)
         "q_sim_neardup_lsh",       # 1-row certificate-flag crossJoins (scalar)
         "q_dedup_minhash_lsh",     # 1-row certificate-flag crossJoins (scalar)
         "q_graph_triangles",       # 1-row scalar total broadcast

@@ -9,7 +9,7 @@ hypothesis-generated inputs.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -703,3 +703,110 @@ def test_identity_allocation_partition_independent(spark, tmp_path):
             )
         )
     assert assignments[0] == assignments[1] == assignments[2]
+
+
+def _reference_assign(df, cent, col, nprobe):
+    """The crossJoin + ``_dot`` + ``row_number`` form every IVF index used
+    before ``vector_index.assign``: the reference the map must match."""
+    from pyspark.sql import Window
+
+    from cuny_courses_spark.operators.similarity import _dot
+
+    w = Window.partitionBy("rid").orderBy(
+        F.col("affinity").desc(), F.col("cluster").asc()
+    )
+    return (
+        df.crossJoin(F.broadcast(cent))
+        .withColumn("affinity", _dot(col, "centroid") - F.col("half_sq"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= nprobe)
+        .select("rid", "cluster")
+    )
+
+
+# few distinct values, so exact affinity ties are common
+_VEC_VALUE = st.sampled_from(
+    [0.0, -0.0, 1.0, -1.0, 0.5, -2.0, 0.1, float("nan"), float("inf")]
+)
+
+
+@st.composite
+def _assign_case(draw):
+    d = draw(st.integers(1, 4))
+    pool = draw(
+        st.lists(
+            st.lists(st.sampled_from([0.0, -0.0, 1.0, -1.0, 0.5, 0.25]),
+                     min_size=d, max_size=d),
+            min_size=1, max_size=3,
+        )
+    )
+    k = draw(st.integers(1, 6))
+    cents = [pool[draw(st.integers(0, len(pool) - 1))] for _ in range(k)]
+    vecs = draw(
+        st.lists(
+            st.one_of(
+                st.none(), st.lists(_VEC_VALUE, min_size=d, max_size=d)
+            ),
+            min_size=1, max_size=14,
+        )
+    )
+    return cents, vecs, draw(st.sampled_from([1, 2, k]))
+
+
+# inf·0 makes a NaN affinity next to ±inf ones; centroids 1 and 2 tie
+_EDGE_CENTS = [[0.0, 1.0], [1.0, 0.0], [1.0, 0.0], [-1.0, -0.0]]
+_EDGE_VECS = [
+    [float("inf"), 0.5], [float("nan"), 1.0], None, [1.0, 0.0],
+    [-0.0, 0.0], [0.5, -1.0], [float("inf"), 0.0], [-1.0, 1.0],
+    [0.25, 0.25],
+]
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(case=_assign_case())
+@example(case=(_EDGE_CENTS, _EDGE_VECS, 1))
+@example(case=(_EDGE_CENTS, _EDGE_VECS, 2))
+def test_assign_matches_crossjoin_window_reference(spark, case):
+    # vector_index.assign must pick, for every row, the same clusters as
+    # the Spark crossJoin + row_number form: duplicate centroids (exact
+    # ties), NaN, inf and -0.0 components, null vectors, and nprobe of
+    # 1, 2 and k. Four-row Arrow batches split each partition into
+    # several batches. Spark hands the map whole batches, so the Arrow
+    # reader is also checked on every slice of the vectors directly.
+    import numpy as np
+    import pyarrow as pa
+
+    from cuny_courses_spark.operators.vector_index import (
+        _vectors,
+        assign,
+        centroid_table,
+    )
+
+    cents, vecs, nprobe = case
+    d = len(cents[0])
+    arr = pa.array(vecs, pa.list_(pa.float32()))
+    whole = _vectors(arr, d)
+    for lo in range(1, len(vecs)):
+        np.testing.assert_array_equal(_vectors(arr.slice(lo), d), whole[lo:])
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "rid long, v array<float>"
+    ).repartition(2)
+    cent = centroid_table(spark, np.array(cents))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        got = sorted(
+            (r["rid"], r["cluster"])
+            for r in assign(df, cent, "v", nprobe).collect()
+        )
+    finally:
+        spark.conf.set(key, old)
+    ref = sorted(
+        tuple(r) for r in _reference_assign(df, cent, "v", nprobe).collect()
+    )
+    assert got == ref, (cents, vecs, nprobe)
