@@ -1,87 +1,30 @@
-"""Benchmark harness — headline queries at sf0.1 vs BASELINE.md.
+"""Benchmark harness: the sf0.1 headline suite, a Spark-vs-DuckDB
+amortization sweep and an amplified extended sweep, in one warm session.
 
-Prints ONE COMPACT JSON line as the very last line of output (r3 verdict
-#1: the previous full-detail line outgrew the driver's tail-capture window
-and the artifact lost its headline metric):
-  {"metric": "suite_wall_sec", "value": N, "unit": "sec",
-   "queries": {...per-query warm sec...}, "sf": 0.1,
-   "duckdb_suite_sec": X, "ratio_vs_duckdb": R,
-   "jobs_per_query": {...}, "empty_job_sec": E,
-   "sweep_ratios": {"sf0.001": r, ..., "sf0.1x100": r},
-   "detail": "BENCH_DETAIL.json"}
-Full per-point per-query detail (sweep spark/duckdb seconds, extended
-operator timings, layout/plan-cache provenance) goes to the sidecar file
-``BENCH_DETAIL.json`` next to this script.
+Method contract:
 
-Method (BASELINE.md "Targets"): one long-lived warm SparkSession for the
-whole suite; a full warm-up lap over every headline query first (JIT/C2
-compilation, codegen cache, page cache — the DuckDB baseline was measured
-warm too), then per query best-of-5 timed runs (steady-state — Spark
-local-mode job-scheduling overhead is the floor on the smallest queries,
-SURVEY §6 risk flag). Each engine materializes results through its
-CHEAPEST full-materialization API — since r15 that is ARROW on both
-sides: Spark ``toArrow()`` (Spark 4's native Arrow collection) and
-DuckDB ``fetch_arrow_table()``. Both fully deliver every result row to
-the driver process in the same columnar format; neither engine is
-handed a serialization handicap the other doesn't pay.
-
-r15 methodology note (declared in OPTIMIZATION_r15.md, old numbers
-kept in BENCH_r14.json/BENCH_DETAIL history): through r14 the actions
-were ``toPandas()`` vs ``fetchall()``. On the round-15 host those
-conversion taxes DOMINATED the big-output laps and measured the driver,
-not the engine — ×100 q_ts_sessionize (5.7 M result rows): compute
-(noop sink) 2.45 s, ``toArrow()`` 2.9 s, ``toPandas()`` 27.9 s — i.e.
-~25 s of pandas object conversion billed to a 2.9 s query; its DuckDB
-twin: ``fetch_arrow_table()`` 10.1 s vs ``fetchall()`` 15.2 s. The
-pandas/tuple taxes are driver-side, single-threaded, and unrelated to
-either engine's plan quality; Arrow-vs-Arrow removes both fairly.
-(The r4-era comparison that picked fetchall over .df() is superseded
-by the same logic — .df() pays the pandas tax, fetch_arrow does not.)
-
-Warm runs go through the engine's prepared-plan cache
-(cuny_courses_spark/plans/plan_cache.py): driver-side plan construction +
-Catalyst ANALYSIS are reused across laps (prepared-statement semantics;
-DuckDB's ~ms re-plan never paid that cost), but each lap gets a fresh
-``select("*")`` wrapper — fresh physical plan, fresh RDDs — so
-optimization, scans, shuffles and aggregation ALL re-execute per lap.
-(Re-collecting the same Dataset object would silently reuse its shuffle
-map outputs and skip whole stages — explicitly NOT what's measured here.)
-The JSON reports plan_cache for transparency.
-
-Beyond the headline numbers the JSON carries the scale evidence
-(r2 verdict #1):
-- ``jobs_per_query`` + ``empty_job_sec`` — each Spark job pays a fixed
-  local-mode dispatch cost (measured in-run via an empty 1-task job);
-  jobs/query is the denominator of that fixed cost.
-- ``sweep`` — the same warm best-of-N Spark-vs-DuckDB suite (``SWEEP``
-  subset; q_sim_pairs_threshold excluded because its DuckDB oracle is
-  quadratic per label block — recorded, not silent) at sf0.001 / 0.01 /
-  the target sf, plus synthetic 10×/20×/50×/100× points
-  (``scaled_layout``: replicas with shifted keys, join-consistent;
-  ×100 ≈ 10 GB — r3 verdict #2 asked the curve extended until it shows
-  where the ratio actually crosses 2×, rather than prose claiming it).
-  The 50×/100× points exceed the engine's small-input threshold, so they
-  run the PRODUCTION profile (AQE on, decimal fixed-point accumulation) —
-  the curve's top decade measures the plan you'd ship, not the
-  local-mode tuning. A wall-clock budget (SPARK_GRAFT_BENCH_BUDGET_SEC,
-  default 1500 s) skips remaining amplified points rather than letting
-  the artifact time out; skipped points are recorded as such.
-- ``extended`` values are seconds, or an ``"error: <type>"`` marker when
-  an operator crashed (never silently absent).
-
-r16 (methodology FROZEN otherwise — r15 VERDICT #2/#8): the timed action
-stays toArrow()/fetch_arrow_table() everywhere. Three declared additions:
-(a) `queries` gains `<name>_x100` entries — the ×100 sweep point's
-per-query seconds surfaced under stable names so the driver's low-core
-re-run can measure core-count scaling where compute dominates the
-dispatch floor (at sf0.1 every headline query IS the ~0.13 s floor);
-(b) `cpus` + `master` ride in the JSON so the scaling probe is
-self-evidencing; (c) the heavy extended-sweep entries (DOC/GRAPH ×100 +
-q_sim_neardup_lsh_prod) switch from per-query converge-until-stable
-rules to ONE uniform trimmed-median lap statistic (_trimmed_median) —
-the converge rule accepted two adjacent slow laps on a descending JIT
-curve (driver r15 artifact: 19.28 s recorded from laps [26.2, 21.0,
-19.3] for a ~2-3.5 s steady state). Lap lists stay in the sidecar.
+- Timed action: Spark ``toArrow()`` against DuckDB ``fetch_arrow_table()``;
+  both deliver every result row to this process in the same columnar form.
+  Warm runs go through the engine's prepared-plan cache, but each lap gets
+  a fresh physical plan, so optimization, scans and shuffles re-execute.
+- Entries: ``table()`` is the ordered list of everything measured; each
+  entry names its query, corpus, DuckDB twin, lap rule and quiesce needs,
+  and ``measure()`` runs it.
+- Lap rules: after ``warm`` untimed laps, "best" records the fastest of
+  ``n`` timed laps; "trimmed" runs ``n`` laps plus up to ``extra`` more
+  while the budget lasts and records ``_trimmed_median``. The headline
+  suite warms up with two rounds over all six queries, then best-of-5.
+- Budget: ``SPARK_GRAFT_BENCH_BUDGET_SEC`` (default 2700 s) caps the
+  amplified entries, counted from the first sweep point. An entry past it
+  reads ``"skipped: budget"`` and builds no corpus; a crash reads
+  ``"error: <Type>"``. A value is never silently absent.
+- Compact line: the last line printed is one JSON object (``compact()``)
+  of at most 1,900 chars; if longer it drops, in order,
+  ``sweep_query_ratios_top_point``, ``jobs_per_query`` and
+  ``ext_ratios_top_point``, names them in ``trimmed_to_sidecar``, and
+  falls back to the headline fields alone.
+- Sidecar: every point, lap list, twin time and pair count goes to
+  ``BENCH_DETAIL.json`` beside this script.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default all cores).
@@ -89,19 +32,40 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 
 from __future__ import annotations
 
-import hashlib
+import gc
+import itertools
 import json
+import math
 import os
 import re
 import sys
 import time
+import traceback
+from dataclasses import dataclass, field
 from pathlib import Path
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from amplify import (  # noqa: E402
+    N_ROW_GROUPS,
+    SWEEP,
+    prepare_layout,
+    scaled_docs_layout,
+    scaled_layout,
+)
+from cuny_courses_spark.operators.dedup import (  # noqa: E402
+    _MERSENNE,
+    _O_SHINGLES,
+    _minhash_coeffs,
+    minhash_lsh_pairs,
+)
 from cuny_courses_spark.plans.plan_cache import enabled as plan_cache_enabled  # noqa: E402
 from cuny_courses_spark.registry import oracles, queries  # noqa: E402
 from cuny_courses_spark.session import get_session  # noqa: E402
+
+SIDECAR = "BENCH_DETAIL.json"
+BUDGET = "skipped: budget"
 
 # The six BASELINE.md headline queries (SURVEY §6).
 HEADLINE = [
@@ -113,11 +77,8 @@ HEADLINE = [
     "q_sim_pairs_threshold",
 ]
 
-# Heavy data-pipeline operators, reported Spark-only ("extended" in the
-# JSON): their DuckDB oracles are deliberately quadratic (all-pairs
-# list_intersect, etc. — BASELINE.md "scale divergence") and take minutes
-# at sf0.1, so the per-round bench records only the engine side; the
-# oracle correctness runs at sf0.01 in the driver's own gate.
+# Heavy data-pipeline operators timed at the headline sf, engine-only:
+# their DuckDB oracles are deliberately quadratic (minutes at sf0.1).
 EXTENDED = [
     "q_dedup_near_jaccard",
     "q_dedup_minhash_lsh",
@@ -127,14 +88,37 @@ EXTENDED = [
     "q_graph_common_neighbors",
 ]
 
-N_ROW_GROUPS = 32
+# Extended-sweep families; the order is precise-before-heavy (a stateful
+# operator's leftover blocks can squeeze the next short lap, never the
+# reverse).
+TPCH_EXT = [
+    "q_sql_q5_local_volume",
+    "q_sql_q18_volume_customer",
+    "q_sql_q21_waiting_supplier",
+    "q_sql_q3_shipping_priority",
+    "q_sql_q10_returned_topk",
+    "q_sql_q13_cust_distribution",
+    "q_sql_q7_nation_volume",
+    "q_sql_q16_supplier_cnt",
+    "q_sql_q8_mkt_share",
+]
+WIN_EXT = ["q_ts_sessionize", "q_win_median_sliding", "q_ts_ewma", "q_stream_session"]
+TEXT_EXT = [
+    "q_text_contamination",
+    "q_text_rarity_score",
+    "q_text_idf_top_terms",
+    "q_text_pack_sequences",
+    "q_sample_importance_weighted",
+    "q_text_perplexity",
+    "q_text_bpe_tokens",
+    "q_text_bpe_merges",
+]
 
-# q_dedup_containment as an inverted-index join (see the ext_sweep block
-# for why): same output as the registered all-pairs oracle — per-pair
-# shingle-intersection counts come from a postings self-join instead of
-# len(list_intersect) over every doc pair.
-from cuny_courses_spark.operators.dedup import _O_SHINGLES  # noqa: E402
+# DuckDB timing twins for the dedup/similarity entries: the algorithm the
+# engine runs, in SQL, where the registered oracle is quadratic.
 
+# q_dedup_containment as an inverted-index join: per-pair shingle
+# intersections from a postings self-join; same rows as the oracle.
 _DUCK_CONTAINMENT_INDEXED = f"""
 WITH toks AS (
     SELECT doc_id, {_O_SHINGLES} AS t FROM documents
@@ -156,13 +140,8 @@ FROM pair
 WHERE 5 * i >= 4 * least(na, nb)
 """
 
-
-# q_dedup_near_jaccard as the SAME inverted-index join the engine runs
-# (r10 — the r9 verdict flagged near_jaccard as 'no scale comparator'):
-# postings self-join on the shingle, per-pair intersection counts with
-# sizes carried on the postings, exact Jaccard cut. Identical output to
-# the registered quadratic oracle (exact algorithm, no hashing), so pair
-# counts must agree EXACTLY — recorded next to the timing in the sidecar.
+# q_dedup_near_jaccard as the engine's postings join with an exact Jaccard
+# cut: no hashing, so its pair count must equal the engine's exactly.
 _DUCK_NEAR_JACCARD_INDEXED = f"""
 WITH toks AS (
     SELECT doc_id, {_O_SHINGLES} AS t FROM documents
@@ -184,25 +163,16 @@ WHERE 5 * i >= 3 * (na + nb - i)
 
 
 def _duck_neardup_lsh_banded(n_vectors: int) -> str:
-    """DuckDB TIMING twin for the PRODUCTION sign-projection LSH path
-    (r10 — the r9 verdict flagged q_sim_neardup_lsh_prod as 'engine-only,
-    no comparator'): the SAME banded algorithm neardup_lsh_pairs runs —
-    seed-42 random hyperplanes, size-adaptive band geometry (8×8 below
-    10 k vectors, 16×16 above), per-band bit-packed bucket hash →
-    band-bucket self-join → exact-dot verification of candidates only —
-    expressed relationally with ``list_dot_product`` against the same
-    numpy plane constants. Sign bits are computed in float64 both sides;
-    a dot landing exactly at 0.0 could flip a bit across engines, so
-    candidate SETS may differ microscopically pre-verification (the
-    minhash-twin caveat); the verify cut (round(dot,4) ≥ 0.95) is
-    identical, and pair counts are recorded next to the timings."""
+    """The production sign-projection LSH path (neardup_lsh_pairs) in
+    DuckDB SQL: seed-42 hyperplanes, 8×8 bands up to 10 k vectors and
+    16×16 above, band-bucket self-join, exact-dot verification. A dot of
+    exactly 0.0 can flip a sign bit across engines, so candidate sets may
+    differ slightly; the verify cut is identical and both pair counts go
+    to the sidecar."""
     import numpy as np
 
     dim = 64
-    if n_vectors > 10_000:
-        n_bands, bits = 16, 16
-    else:
-        n_bands, bits = 8, 8
+    n_bands, bits = (16, 16) if n_vectors > 10_000 else (8, 8)
     planes = np.random.RandomState(42).standard_normal((dim, n_bands * bits))
     band_exprs = []
     for bidx in range(n_bands):
@@ -236,25 +206,13 @@ SELECT id_a, id_b, cos FROM ver WHERE cos >= 0.95
 
 
 def _duck_minhash_banded() -> str:
-    """DuckDB TIMING twin for the PRODUCTION banded MinHash-LSH path
-    (r9 — the r8 verdict flagged q_dedup_minhash_lsh as 'engine-only, no
-    comparator'): the SAME workload shape minhash_lsh_pairs runs —
-    shingle → 64-bit hash mod 2³¹−1 → 32 universal min-hashes (identical
-    coefficients, seed 42) → 16×2 band hashes → band-bucket self-join →
-    exact-Jaccard verification of candidates only. DuckDB's hash() is a
-    different 64-bit function than Spark's xxhash64, so the candidate
-    SETS differ microscopically pre-verification (both ~0.999 recall at
-    j≥0.6); post-verification outputs agree on the scaled corpora up to
-    that recall difference (×10: 2 560 pairs from both; ×100: 25 600
-    duck vs 25 599 engine — one borderline candidate). A timing twin
-    like the containment/pagerank ones — value correctness is
-    certificate-checked at the driver's SFs by the registered query."""
-    from cuny_courses_spark.operators.dedup import _MERSENNE, _minhash_coeffs
-
+    """The production banded MinHash-LSH path (minhash_lsh_pairs) in
+    DuckDB SQL: the same 32 min-hash coefficients, 16×2 bands, band-bucket
+    self-join and exact-Jaccard verification. DuckDB's hash() is not
+    xxhash64, so candidate sets differ slightly (both ~0.999 recall)."""
     coeffs = _minhash_coeffs(32)
     mins = ", ".join(
-        f"min(({a} * h + {b}) % {_MERSENNE}) AS m{i}"
-        for i, (a, b) in enumerate(coeffs)
+        f"min(({a} * h + {b}) % {_MERSENNE}) AS m{i}" for i, (a, b) in enumerate(coeffs)
     )
     bands = ", ".join(f"hash(m{2 * k}, m{2 * k + 1})" for k in range(16))
     return f"""
@@ -288,224 +246,178 @@ SELECT doc_id_a, doc_id_b,
 FROM ver WHERE 5 * i >= 3 * (na + nb - i)
 """
 
-# Sweep subset: the headline queries whose DuckDB oracles stay linear-ish
-# in data size. q_sim_pairs_threshold is excluded from the SWEEP ONLY —
-# its oracle is quadratic per label block, minutes at the 10× point —
-# and that exclusion is recorded in the JSON (sweep_queries), not silent.
-SWEEP = [
-    "q_agg_groupby",
-    "q_limit_topk",
-    "q_join_star_multiway",
-    "q_win_latest_per_key",
-    "q_stream_tumbling",
-]
 
-# Key columns shifted per replica when synthesizing the scaled sweep point
-# (joins stay key-consistent: lineitem↔orders↔customer, lineitem↔supplier/
-# part). Bounded dims (region, nation) and the non-sweep tables are copied
-# unchanged.
-_SCALE_KEYS = {
-    "lineitem": ["l_orderkey", "l_suppkey", "l_partkey"],
-    "orders": ["o_orderkey", "o_custkey"],
-    "customer": ["c_custkey"],
-    "supplier": ["s_suppkey"],
-    "part": ["p_partkey"],
-    "events": ["event_id", "user_id"],
-}
-_SCALE_BASE = 1 << 33  # >> any sf0.1 key; 100 replicas stay far inside int64
-
-
-def scaled_layout(sf_dir: str, factor: int = 10) -> str:
-    """Synthesize a ``factor``× copy of ``sf_dir`` for the amortization
-    sweep: each fact/dim table is replicated ``factor`` times with key
-    columns shifted per replica (join cardinalities scale linearly, window
-    groups multiply, values untouched), bounded dims copied once. This is
-    a TIMING corpus — it extends the measured ratio curve two decades past
-    the provided testdata to show the fixed per-job dispatch cost
-    amortizing, exactly the claim BENCH graded rounds need machine-
-    readable. Values are not oracle-checked here (correctness runs at the
-    driver's own SFs); DuckDB runs the SAME files.
-
-    Memory/layout: replicas are written INCREMENTALLY through one
-    ParquetWriter (peak memory is one replica, not the whole ×100 table),
-    with ⌈N_ROW_GROUPS/factor⌉ row groups per replica — ~N_ROW_GROUPS
-    splits below ×32, one row group per replica above it, so scans (and
-    DuckDB's row-group parallelism) keep ~32-100 work units at every
-    factor. Idempotent per content signature (which covers the layout
-    scheme version); falls back to the original dir on any failure.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def _n_vectors(d: str) -> int:
     import pyarrow.parquet as pq
 
-    sig = hashlib.md5(f"scale{factor}:v2:{sf_dir}".encode())
-    for f in sorted(Path(sf_dir).glob("*.parquet")):
-        st = f.stat()
-        sig.update(f"{f.name}:{st.st_size}:{st.st_mtime_ns}".encode())
-    out = Path("/tmp") / "ccs_bench_layout" / f"x{factor}_{sig.hexdigest()[:12]}"
-    done = out / "_DONE"
-    if done.exists():
-        return str(out)
-    # Drop stale same-factor corpora from earlier source signatures: these
-    # are multi-GB and must not accumulate across dataset regenerations.
-    import shutil
-
-    for old in out.parent.glob(f"x{factor}_*"):
-        if old != out:
-            shutil.rmtree(old, ignore_errors=True)
-    out.mkdir(parents=True, exist_ok=True)
-    try:
-        per_replica_groups = max(1, (N_ROW_GROUPS + factor - 1) // factor)
-        for f in sorted(Path(sf_dir).glob("*.parquet")):
-            t = pq.read_table(f)
-            name = f.stem
-            keys = _SCALE_KEYS.get(name)
-            if keys:
-                rg = max(
-                    1,
-                    (t.num_rows + per_replica_groups - 1) // per_replica_groups,
-                )
-                with pq.ParquetWriter(out / f.name, t.schema) as w:
-                    for i in range(factor):
-                        r = t
-                        for k in keys:
-                            idx = r.schema.get_field_index(k)
-                            col = r.column(k)
-                            shifted = pc.add(
-                                pc.cast(col, pa.int64()),
-                                pa.scalar(i * _SCALE_BASE, type=pa.int64()),
-                            )
-                            r = r.set_column(idx, k, pc.cast(shifted, col.type))
-                        w.write_table(r, row_group_size=rg)
-            else:
-                rg = max(1, (t.num_rows + N_ROW_GROUPS - 1) // N_ROW_GROUPS)
-                pq.write_table(t, out / f.name, row_group_size=rg)
-        done.touch()
-        return str(out)
-    except Exception:
-        return sf_dir
+    return pq.ParquetFile(f"{d}/embeddings.parquet").metadata.num_rows
 
 
-def scaled_docs_layout(sf_dir: str, factor: int = 10) -> str:
-    """Synthesize a ``factor``× documents/embeddings corpus for the
-    LLM-pipeline extended sweep (r4 verdict #4: the dedup/similarity plans
-    are the 100 TB argument and had no measured point above sf0.1).
+def _neardup_lsh_prod(spark, d: str):
+    """The production banded LSH path alone; the registered
+    q_sim_neardup_lsh also runs its O(n²) exact twin as a certificate."""
+    from cuny_courses_spark.operators.similarity import neardup_lsh_pairs
+    from cuny_courses_spark.sources.loaders import load
 
-    Plain replication would be WRONG for dedup workloads: every replica of
-    a document is an exact/near duplicate of every other, so candidate
-    pairs would grow quadratically in ``factor`` and the measurement would
-    collapse into the hot-shingle caps. Instead each replica is mutated
-    into its own disjoint corpus:
-      · documents: doc_id shifted per replica; every token gets a
-        replica-id suffix (vectorized RE2 rewrite), so shingle/token sets
-        are disjoint ACROSS replicas while duplicate structure WITHIN a
-        replica is preserved bit-for-bit — workload grows linearly,
-        exactly like ingesting ``factor`` independent shards. The suffix
-        is \\x01-separated (r5 ADVICE: a bare ``q<i>`` suffix could
-        collide with a source token that already ends in ``q<i>``; no
-        text token carries a control byte).
-      · embeddings: vec_id shifted; each replica's vectors are rotated
-        by ``1 + i % (dim−1)`` (never ≡ 0 mod dim) AND multiplied by a
-        per-replica deterministic ±1 sign pattern (seeded on i). The
-        sign flip is the r6-verdict-#5 fix: the roll alone wraps —
-        replicas 63 apart share a rotation, so replica 1 and replica 64
-        were geometrically identical at the documented ×100 point. A
-        uniform sign pattern applied to every vector of a replica
-        preserves norms and intra-replica dot products EXACTLY
-        ((s⊙x)·(s⊙y) = x·y), while same-roll replica pairs see
-        Σ sᵢ_d sⱼ_d x_d² — a random-sign sum that concentrates near 0
-        (property-tested in tests/test_scale_profile.py at factor 66).
-    Timing corpus only (like scaled_layout): values are not oracle-checked
-    at these synthetic points. Idempotent per content signature.
-    """
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
+    return neardup_lsh_pairs(load(spark, d, "embeddings"), n_vectors=_n_vectors(d))
 
-    sig = hashlib.md5(f"docscale{factor}:v3:{sf_dir}".encode())
-    for name in ("documents.parquet", "embeddings.parquet"):
-        f = Path(sf_dir) / name
-        st = f.stat()
-        sig.update(f"{name}:{st.st_size}:{st.st_mtime_ns}".encode())
-    out = Path("/tmp") / "ccs_bench_layout" / f"docs{factor}_{sig.hexdigest()[:12]}"
-    done = out / "_DONE"
-    if done.exists():
-        return str(out)
-    import shutil
 
-    for old in out.parent.glob(f"docs{factor}_*"):
-        if old != out:
-            shutil.rmtree(old, ignore_errors=True)
-    out.mkdir(parents=True, exist_ok=True)
-    try:
-        docs = pq.read_table(f"{sf_dir}/documents.parquet")
-        with pq.ParquetWriter(out / "documents.parquet", docs.schema) as w:
-            for i in range(factor):
-                r = docs
-                ids = pc.add(r.column("doc_id"), pa.scalar(i * _SCALE_BASE))
-                r = r.set_column(r.schema.get_field_index("doc_id"), "doc_id", ids)
-                if i:
-                    txt = pc.replace_substring_regex(
-                        r.column("text"),
-                        pattern=r"(\S+)",
-                        replacement=f"\\1\x01{i}",
-                    )
-                    r = r.set_column(
-                        r.schema.get_field_index("text"), "text", txt
-                    )
-                w.write_table(r, row_group_size=max(1, r.num_rows // 4))
-        emb = pq.read_table(f"{sf_dir}/embeddings.parquet")
-        mat = np.array(emb.column("embedding").to_pylist(), dtype=np.float32)
-        with pq.ParquetWriter(out / "embeddings.parquet", emb.schema) as w:
-            for i in range(factor):
-                r = emb
-                ids = pc.add(r.column("vec_id"), pa.scalar(i * _SCALE_BASE))
-                r = r.set_column(r.schema.get_field_index("vec_id"), "vec_id", ids)
-                if i:
-                    rolled = np.roll(mat, 1 + i % (mat.shape[1] - 1), axis=1)
-                    signs = (
-                        np.random.default_rng(0xE5EED ^ i)
-                        .integers(0, 2, size=mat.shape[1])
-                        .astype(np.float32)
-                        * 2
-                        - 1
-                    )
-                    rolled = rolled * signs
-                    col = pa.array(
-                        list(rolled), type=emb.schema.field("embedding").type
-                    )
-                    r = r.set_column(
-                        r.schema.get_field_index("embedding"), "embedding", col
-                    )
-                w.write_table(r, row_group_size=max(1, r.num_rows // 4))
-        done.touch()
-        return str(out)
-    except Exception:
-        return sf_dir
+def _stream_session_replay(spark, d: str):
+    """The session_window aggregation replayed through 8 micro-batches
+    with watermark-driven state eviction; the run completes inside the
+    call, so the lap times the whole drain."""
+    from cuny_courses_spark.streaming.runner import run_stream_session_scale
+
+    run_stream_session_scale(spark, d, n_files=8)
+    return spark.range(1)
+
+
+class Skip(str):
+    """A twin that does not run at this point; the text is the reason."""
+
+
+@dataclass(frozen=True)
+class Laps:
+    """How an entry is timed: ``warm`` untimed laps, then ``n`` timed
+    laps, then up to ``extra`` more while the budget lasts, reduced by
+    ``rule`` ("best" or "trimmed"). ``keep`` puts the lap list in the
+    sidecar. The twin runs ``twin`` = (warm, n) laps, best-of; by default
+    the engine's (warm, n)."""
+
+    n: int
+    warm: int = 1
+    extra: int = 0
+    rule: str = "best"
+    keep: bool = False
+    twin: tuple[int, int] | None = None
+
+
+@dataclass(frozen=True)
+class Entry:
+    """One measured query. ``corpus`` is "sf" (the headline layout), a
+    sibling testdata dir ("sf0.001"), or "scaled"/"docs" amplified
+    ``factor``×. ``twin`` is DuckDB SQL, a function of the corpus dir
+    returning SQL, a ``Skip`` or None (engine-only by design). ``quiesce``
+    names the session clean-ups the entry needs: "drain" before it, "gc"
+    or "drain_lap" before each lap, "state_store" after each lap,
+    "no_plan_cache" throughout. ``rows`` are the sidecar suffixes under
+    which the engine's and the twin's result row counts are recorded."""
+
+    name: str
+    section: str  # headline | extended | sweep | ext
+    point: str
+    fn: Callable
+    laps: Laps
+    corpus: str = "sf"
+    factor: int = 1
+    twin: object = None
+    quiesce: frozenset = frozenset()
+    rows: tuple = (None, None)
+
+
+@dataclass
+class Result:
+    sec: float | str | None = None
+    laps: list = field(default_factory=list)
+    rows: int | None = None
+    jobs: int | None = None
+    twin: float | str | None = None
+    twin_rows: int | None = None
+
+
+class Budget:
+    """Wall-clock cap on the amplified entries, counted from ``start()``."""
+
+    def __init__(self, sec: float):
+        self.sec = sec
+        self.t0: float | None = None
+
+    def start(self) -> None:
+        if self.t0 is None:
+            self.t0 = time.perf_counter()
+
+    def over(self) -> bool:
+        return self.t0 is not None and time.perf_counter() - self.t0 > self.sec
+
+
+def table(sf: float, small: list[str]) -> list[Entry]:
+    """Every entry, in run order: headline, extended, the sweep points
+    from smallest to ×100, then the extended sweep at ×100 (the top-point
+    evidence, first so a slow host's budget never truncates it) and ×10."""
+    qs, os_ = queries(), oracles()
+    fns = {
+        **qs,
+        # the production LSH path, not the registered recall certificate
+        "q_dedup_minhash_lsh": minhash_lsh_pairs,
+        "q_sim_neardup_lsh_prod": _neardup_lsh_prod,
+        "q_stream_session_replay": _stream_session_replay,
+    }
+    base = f"sf{sf}"
+    t = [
+        Entry(n, "headline", base, fns[n], Laps(5, warm=0, twin=(2, 5)), twin=os_[n])
+        for n in HEADLINE
+    ]
+    t += [Entry(n, "extended", base, fns[n], Laps(3)) for n in EXTENDED]
+    points = [(p, p, 1, 3) for p in small] + [(base, "sf", 1, 3)]
+    points += [(f"{base}x{f}", "scaled", f, n) for f, n in ((10, 5), (20, 5), (50, 3), (100, 2))]
+    for point, corpus, f, n in points:
+        t += [Entry(q, "sweep", point, fns[q], Laps(n), corpus, f, os_[q]) for q in SWEEP]
+
+    quiet = frozenset({"drain", "gc"})
+    for f, k in ((100, 1), (10, 2)):
+        top = f >= 100
+
+        def ext(n, laps, corpus, twin=None, quiesce=quiet, rows=(None, None), f=f):
+            return Entry(n, "ext", f"{base}x{f}", fns[n], laps, corpus, f, twin, quiesce, rows)
+
+        # the warm lap counts toward the reading: timed laps start at once
+        lap = Laps(k + 1, warm=0, twin=(1, k))
+        # the mirror ingest lands in the first lap and the JIT is still descending after it
+        tpch = Laps(k + 3, warm=0, keep=True, twin=(1, k)) if top else lap
+        # GC/JIT-heavy stateful laps: trimmed median over fixed, budget-guarded laps
+        heavy = Laps(k + 2, warm=0, extra=3, rule="trimmed", keep=True, twin=(1, k)) if top else lap
+        lsh = Laps(k + 1, warm=0, extra=3, rule="trimmed", keep=True, twin=(1, k))
+
+        t += [ext(n, tpch, "scaled", os_[n]) for n in TPCH_EXT]
+        t += [ext(n, lap, "scaled", os_[n]) for n in WIN_EXT]
+        t += [ext(n, lap, "docs", os_[n]) for n in TEXT_EXT]
+        if not top:
+            # ×10 only, engine-only: ×100 would spend minutes on micro-batch
+            # drain / quantizer training for no added plan signal
+            t += [
+                ext("q_stream_session_replay", lap, "scaled", quiesce=quiet | {"state_store"}),
+                ext("q_sim_pq_adc", lap, "docs"),
+                ext("q_sim_ivfpq_topk", lap, "docs"),
+            ]
+        t += [
+            ext("q_dedup_near_jaccard", heavy, "docs", _DUCK_NEAR_JACCARD_INDEXED,
+                rows=(None if top else "_engine_pairs", "_duckdb_pairs")),
+            ext("q_dedup_minhash_lsh", heavy, "docs", _duck_minhash_banded()),
+            ext("q_dedup_containment", heavy, "docs", _DUCK_CONTAINMENT_INDEXED),
+            ext("q_graph_common_neighbors", heavy, "scaled", os_["q_graph_common_neighbors"]),
+            # supersteps are localCheckpointed at plan build: rebuild per lap
+            # and drain their blocks before each lap
+            ext("q_graph_pagerank", heavy, "scaled",
+                Skip("duckdb spills >60GB at this factor") if top else os_["q_graph_pagerank"],
+                quiesce=quiet | {"drain_lap", "no_plan_cache"}),
+            ext("q_sim_neardup_lsh_prod", lsh, "docs",
+                lambda d: _duck_neardup_lsh_banded(_n_vectors(d)), rows=("_pairs", "_duckdb_pairs")),
+        ]
+    return t
 
 
 def _drain_storage(spark, timeout_sec: float = 15.0) -> None:
-    """Deterministically release leftover RDD storage blocks (pagerank's
-    per-superstep localCheckpoints above all — r7 verdict #5).
-
-    ``clearCache()`` + ``System.gc()`` alone are NOT enough: checkpoint
-    blocks are freed by the ContextCleaner, which reacts to JVM weak-ref
-    queues ASYNCHRONOUSLY — a query timed right after pagerank once
-    measured 19.7 s vs 2.9-3.5 s isolated because its shuffle-hash build
-    ran under the still-pinned blocks. This helper makes the release a
-    POSTCONDITION instead of a race: drop Python-side refs (py4j
-    finalizers detach the JVM plan objects holding the checkpoint RDDs),
-    trigger JVM GC, then POLL the storage registry until it reports zero
-    persisted RDDs (or the timeout passes — never wedge the bench on a
-    stuck cleaner)."""
-    import gc
-
+    """Release leftover RDD storage blocks (pagerank's checkpoints above
+    all) and shuffle state as a postcondition, not a race with the async
+    ContextCleaner: drop Python refs, JVM gc, then poll until no RDD is
+    persisted and the registered-shuffle count is stable (zero is
+    unreachable: the plan cache pins live plans' shuffles), or until the
+    timeout."""
     try:
         spark.catalog.clearCache()
     except Exception:
         pass
-    deadline = time.perf_counter() + timeout_sec
+    deadline = time.monotonic() + timeout_sec
     while True:
         gc.collect()
         try:
@@ -513,28 +425,13 @@ def _drain_storage(spark, timeout_sec: float = 15.0) -> None:
             n = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
         except Exception:
             return
-        if n == 0 or time.perf_counter() > deadline:
+        if n == 0 or time.monotonic() > deadline:
             break
         time.sleep(0.2)
-    # r10 (r9 verdict weak #1 follow-up): also drain SHUFFLE state. The
-    # ContextCleaner unregisters a shuffle only after its dependency is
-    # GC'd on BOTH sides — python gc above releases the py4j refs, JVM
-    # gc queues the weak refs — then processes the queue asynchronously;
-    # poll the MapOutputTrackerMaster until the registered-shuffle count
-    # is STABLE across two reads (zero is unreachable: the plan cache
-    # legitimately pins live plans' shuffles). Disk effect is real:
-    # shuffle dirs grew 2.5 → 7.5 GB across containment ×100 laps before
-    # the async cleaner caught up (r10 instrumented run).
     prev = -1
-    while time.perf_counter() < deadline:
+    while time.monotonic() < deadline:
         try:
-            cur = (
-                spark.sparkContext._jsc.sc()
-                .env()
-                .mapOutputTracker()
-                .shuffleStatuses()
-                .size()
-            )
+            cur = spark.sparkContext._jsc.sc().env().mapOutputTracker().shuffleStatuses().size()
         except Exception:
             return
         if cur == prev:
@@ -543,65 +440,33 @@ def _drain_storage(spark, timeout_sec: float = 15.0) -> None:
         time.sleep(0.2)
 
 
-def _session_shuffle_dirs(spark) -> list:
-    """THIS session's block-manager local dirs, resolved from the live
-    SparkEnv (r10 advice: a bare /tmp glob also counted leftover dirs
-    from other/previous Spark sessions and could misattribute lap drift
-    to backlog that isn't this JVM's)."""
+def _gc(spark) -> None:
+    # Python first: py4j holds the previous lap's plan (and its shuffle
+    # dependencies) until Python collects, so a JVM-only gc frees nothing.
+    gc.collect()
     try:
-        jdirs = (
-            spark.sparkContext._jvm.org.apache.spark.SparkEnv.get()
-            .blockManager()
-            .diskBlockManager()
-            .localDirs()
-        )
-        return [str(jdirs[i].getAbsolutePath()) for i in range(len(jdirs))]
+        spark.sparkContext._jvm.System.gc()
     except Exception:
-        return []
+        pass
 
 
-def _shuffle_dir_mb(spark) -> int:
-    """Total MB under this JVM's shuffle/block-manager temp dirs — the
-    per-lap accumulation probe for the heavy-sweep sidecar (r10):
-    attributes any future lap drift to disk backlog (or exonerates it)
-    from the artifact alone. Scoped to the dirs the running SparkEnv
-    actually owns, never a /tmp-wide glob."""
-    import subprocess
-
-    tot = 0
-    for d in _session_shuffle_dirs(spark):
-        try:
-            r = subprocess.run(
-                ["du", "-sm", d], capture_output=True, text=True, timeout=20
-            )
-            tot += int(r.stdout.split()[0])
-        except Exception:
-            pass
-    return tot
+def _stop_state_store(spark) -> None:
+    # A finished streaming query leaves every partition's state map loaded
+    # in the JVM (~1 M sessions at ×10), slowing later GC-heavy laps.
+    try:
+        spark.sparkContext._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    except Exception:
+        pass
 
 
-def _time_best(fn, laps: int) -> float:
-    best = float("inf")
-    for _ in range(laps):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
+def _marker(exc: Exception) -> str:
+    traceback.print_exc()
+    return f"error: {type(exc).__name__}"
 
 
 def _trimmed_median(laps: list[float]) -> float:
-    """r16 uniform lap statistic for the HEAVY extended-sweep entries
-    (r15 VERDICT #8 + ADVICE): drop the slowest ⌈n/3⌉ laps (JIT/GC
-    tier-up and shared-host load spikes live there), take the median of
-    the rest. Replaces the per-query converge-until-stable rules, which
-    two adjacent slow laps on a still-descending JIT warm-up curve could
-    satisfy (the driver's r15 artifact recorded 19.28 s for
-    q_sim_neardup_lsh_prod from laps [26.2, 21.0, 19.3] — a curve whose
-    steady state is 1.8-3.5 s). A median over the fast laps cannot be a
-    single lucky lap (best-of's bias) and cannot be dominated by the
-    cold tail; the full lap list still lands in the sidecar."""
-    import math
-
+    """Drop the slowest ⌈n/3⌉ laps (JIT/GC tier-up and load spikes), take
+    the median of the rest: never one lucky lap, never the cold tail."""
     s = sorted(laps)
     keep = s[: max(1, len(s) - math.ceil(len(s) / 3))]
     mid = len(keep) // 2
@@ -609,1654 +474,300 @@ def _trimmed_median(laps: list[float]) -> float:
     return round(m, 4)
 
 
-def _sweep_point(spark, label: str, sf_dir: str, laps: int = 3) -> dict:
-    """Warm best-of-``laps`` Spark vs DuckDB suite seconds over SWEEP at
-    one data size — one point of the fixed-cost amortization curve."""
+def measure(spark, e: Entry, locate: Callable[[Entry], str | None], clock: Budget) -> Result:
+    """Run one entry: budget check, corpus, engine laps, then the twin.
+
+    The job count is taken around the first timed lap, outside its timer.
+    ``locate`` returns the entry's corpus directory, building it on first
+    use, or None when synthesis failed."""
+    res = Result()
+
+    def skip(marker: str) -> Result:
+        res.sec = marker
+        if e.twin is not None:
+            res.twin = f"skipped: {e.twin}" if isinstance(e.twin, Skip) else marker
+        return res
+
+    if e.factor > 1 and clock.over():
+        return skip(BUDGET)
+    d = locate(e)
+    if d is None:
+        return skip("skipped: layout synthesis failed")
+
+    def run(action, warm, n, extra=0, before=None, after=None, jobs=None):
+        times, rows = [], None
+        for i in range(warm + n + extra):
+            if i >= warm + n and clock.over():
+                break
+            if before:
+                before()
+            ids = set(jobs.getJobIdsForGroup()) if jobs and i == warm else None
+            t0 = time.perf_counter()
+            out = action()
+            dt = time.perf_counter() - t0
+            if ids is not None:
+                res.jobs = len(set(jobs.getJobIdsForGroup()) - ids)
+            rows = len(out)
+            del out
+            if i >= warm:
+                times.append(dt)
+            if after:
+                after()
+        return times, rows
+
+    q = e.quiesce
+    prior = os.environ.get("SPARK_GRAFT_NO_PLAN_CACHE")
+    if "no_plan_cache" in q:
+        os.environ["SPARK_GRAFT_NO_PLAN_CACHE"] = "1"
+    try:
+        if "drain" in q:
+            _drain_storage(spark)
+        times, res.rows = run(
+            lambda: e.fn(spark, d).toArrow(),
+            e.laps.warm,
+            e.laps.n,
+            e.laps.extra,
+            before=(lambda: _drain_storage(spark)) if "drain_lap" in q
+            else (lambda: _gc(spark)) if "gc" in q else None,
+            after=(lambda: _stop_state_store(spark)) if "state_store" in q else None,
+            jobs=spark.sparkContext.statusTracker() if spark is not None else None,
+        )
+        res.sec = _trimmed_median(times) if e.laps.rule == "trimmed" else round(min(times), 4)
+        res.laps = times
+    except Exception as exc:
+        res.sec = _marker(exc)
+    finally:
+        if "no_plan_cache" in q:
+            if prior is None:
+                os.environ.pop("SPARK_GRAFT_NO_PLAN_CACHE", None)
+            else:
+                os.environ["SPARK_GRAFT_NO_PLAN_CACHE"] = prior
+
+    if isinstance(e.twin, Skip):
+        res.twin = f"skipped: {e.twin}"
+        return res
+    if e.twin is None:
+        return res
+    if e.factor > 1 and clock.over():
+        res.twin = BUDGET
+        return res
     from cuny_courses_spark.oracle import duck_con
 
-    qs = queries()
-    os_ = oracles()
-    sp: dict[str, float] = {}
-    for name in SWEEP:
-        fn = qs[name]
-        fn(spark, sf_dir).toArrow()  # warm lap
-        sp[name] = _time_best(lambda: fn(spark, sf_dir).toArrow(), laps)
-    du: dict[str, float] = {}
+    warm, n = e.laps.twin or (e.laps.warm, e.laps.n)
     try:
-        con = duck_con(sf_dir)
-        for name in SWEEP:
-            con.execute(os_[name]).fetch_arrow_table()  # warm lap
-            du[name] = _time_best(
-                lambda: con.execute(os_[name]).fetch_arrow_table(), laps
-            )
-    except Exception:
-        du = {}
-    s_tot = round(sum(sp.values()), 4)
-    d_tot = round(sum(du.values()), 4) if du else None
+        sql = e.twin(d) if callable(e.twin) else e.twin
+        con = duck_con(d)
+        try:
+            times, res.twin_rows = run(lambda: con.execute(sql).fetch_arrow_table(), warm, n)
+        finally:
+            con.close()  # release the in-process buffer pool promptly
+        res.twin = round(min(times), 4)
+    except Exception as exc:
+        res.twin = _marker(exc)
+    return res
+
+
+def _empty_job_sec(spark) -> float:
+    """The per-job dispatch floor in this run: an empty 1-task job, best of 5."""
+    rdd = spark.sparkContext.parallelize([0], 1)
+    best = float("inf")
+    for _ in range(5):
+        t0 = time.perf_counter()
+        rdd.count()
+        best = min(best, time.perf_counter() - t0)
+    return round(best, 4)
+
+
+def _num(v) -> bool:
+    return isinstance(v, (int, float))
+
+
+def _sweep_point(point: str, group: list[Entry], results: list[Result]) -> dict:
+    sp = {e.name: r.sec for e, r in zip(group, results)}
+    du = {e.name: r.twin for e, r in zip(group, results) if _num(r.twin)}
+    s_tot = round(sum(sp.values()), 4) if all(_num(v) for v in sp.values()) else None
+    d_tot = round(sum(du.values()), 4) if du and len(du) == len(sp) else None
     return {
-        "point": label,
+        "point": point,
         "spark_sec": s_tot,
         "duckdb_sec": d_tot,
-        "ratio": round(s_tot / d_tot, 3) if d_tot else None,
+        "ratio": round(s_tot / d_tot, 3) if s_tot is not None and d_tot else None,
         "spark_queries": sp,
         "duckdb_queries": du,
     }
+
+
+def _ext_point(group: list[Entry], results: list[Result]) -> dict:
+    entry: dict = {}
+    for e, r in zip(group, results):
+        entry[e.name] = r.sec
+        if e.laps.keep and r.laps:
+            entry[f"{e.name}_laps"] = [round(t, 3) for t in r.laps]
+        if e.twin is not None:
+            entry[f"{e.name}_duckdb"] = r.twin
+        for suffix, n in zip(e.rows, (r.rows, r.twin_rows)):
+            if suffix and n is not None:
+                entry[f"{e.name}{suffix}"] = n
+    return entry
 
 
 def _top_point_query_ratios(sweep: list[dict]) -> dict:
     """Per-query Spark/DuckDB ratios at the largest sweep point that has
     both engines' timings, labeled with the point name."""
     for p in reversed(sweep):
-        if isinstance(p, dict) and p.get("spark_queries") and p.get(
-            "duckdb_queries"
-        ):
-            sp, du = p["spark_queries"], p["duckdb_queries"]
-            ratios = {
-                q: round(sp[q] / du[q], 2)
-                for q in sp
-                if q in du and du[q]
-            }
-            return {"point": p["point"], "ratios": ratios,
-                    "worst": max(ratios.values(), default=None)}
+        sp, du = p.get("spark_queries") or {}, p.get("duckdb_queries") or {}
+        ratios = {q: round(sp[q] / du[q], 2) for q in sp if _num(sp[q]) and du.get(q)}
+        if ratios:
+            return {"point": p["point"], "ratios": ratios, "worst": max(ratios.values())}
     return {}
 
 
-def prepare_layout(sf_dir: str) -> str:
-    """Ingest step: re-chunk each single-row-group testdata file into
-    N_ROW_GROUPS row groups so scans parallelize across cores.
+def _ext_ratios(ext_sweep: dict) -> dict:
+    """At the top extended-sweep point with any number: Spark/DuckDB for a
+    twinned entry when both sides are numbers, else the head of the failed
+    side's marker ("skipped"/"error"); engine seconds for an entry with no
+    twin by design."""
+    for point in sorted(ext_sweep, reverse=True):  # x100 sorts before x10
+        entry = ext_sweep[point]
+        if not any(_num(v) for v in entry.values()):
+            continue
+        out: dict = {}
+        for k, v in entry.items():
+            if k.endswith(("_duckdb", "_laps", "_pairs")) or k.startswith("_"):
+                continue
+            tw = entry.get(f"{k}_duckdb")
+            if not _num(v):
+                out[k] = str(v).split(":")[0]
+            elif f"{k}_duckdb" not in entry:
+                out[k] = v
+            elif not _num(tw):
+                out[k] = str(tw).split(":")[0]
+            else:
+                out[k] = round(v / tw, 2) if tw else None
+        out["point"] = point
+        return out
+    return {}
 
-    A parquet row group is Spark's minimum split unit; the driver-generated
-    files carry ONE row group each, which serializes every scan onto one
-    task no matter the cluster size. Controlling file/row-group layout is
-    exactly what the engine would do at ingest on a real cluster (SURVEY
-    §7: size partitions to maxPartitionBytes) — values are bit-identical,
-    only the layout changes, and the JSON reports it. Idempotent per
-    sf_dir; falls back to the original dir on any mismatch.
-    """
-    import pyarrow.parquet as pq
 
-    # Cache key covers content identity (name/size/mtime per file), not just
-    # the path — a regenerated sf_dir must never serve a stale layout.
-    sig = hashlib.md5(sf_dir.encode())
-    for f in sorted(Path(sf_dir).glob("*.parquet")):
-        st = f.stat()
-        sig.update(f"{f.name}:{st.st_size}:{st.st_mtime_ns}".encode())
-    out = Path("/tmp") / "ccs_bench_layout" / sig.hexdigest()[:12]
-    done = out / "_DONE"
-    if done.exists():
-        return str(out)
-    out.mkdir(parents=True, exist_ok=True)
-    try:
-        for f in sorted(Path(sf_dir).glob("*.parquet")):
-            t = pq.read_table(f)
-            rg = max(1, (t.num_rows + N_ROW_GROUPS - 1) // N_ROW_GROUPS)
-            pq.write_table(t, out / f.name, row_group_size=rg)
-            if pq.read_table(out / f.name).schema != t.schema:
-                raise RuntimeError(f"schema drift re-chunking {f.name}")
-        done.touch()
-        return str(out)
-    except Exception:
-        return sf_dir
+def compact(detail: dict) -> str:
+    """The compact line: headline and ratio summaries of ``detail``, at
+    most 1,900 chars so it fits a 2,000-char tail capture."""
+    c = {
+        k: detail[k]
+        for k in (
+            "metric", "value", "unit", "queries", "cpus", "master", "sf",
+            "duckdb_suite_sec", "ratio_vs_duckdb", "jobs_per_query", "empty_job_sec",
+        )
+    }
+    c["sweep_ratios"] = {p["point"]: p.get("ratio") for p in detail["sweep"] if "point" in p}
+    c["sweep_query_ratios_top_point"] = _top_point_query_ratios(detail["sweep"])
+    c["ext_ratios_top_point"] = _ext_ratios(detail["extended_sweep"])
+    c["detail"] = SIDECAR
+    drop_order = ["sweep_query_ratios_top_point", "jobs_per_query", "ext_ratios_top_point"]
+    trimmed: list[str] = []
+    while len(json.dumps(c)) > 1900 and drop_order:
+        key = drop_order.pop(0)
+        if c.pop(key, None) is not None:
+            trimmed.append(key)
+            c["trimmed_to_sidecar"] = trimmed
+    if len(json.dumps(c)) > 1900:
+        c = {k: detail[k] for k in ("metric", "value", "unit", "sf", "duckdb_suite_sec", "ratio_vs_duckdb")}
+        c.update(trimmed_to_sidecar=["all_detail_fields"], detail=SIDECAR)
+    return json.dumps(c)
 
 
 def main() -> None:
-    orig_sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", orig_sf_dir)
+    orig = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", orig)
     sf = float(m.group(1)) if m else -1.0
-    sf_dir = prepare_layout(orig_sf_dir)
+    base = prepare_layout(orig)
+    data_root = os.path.dirname(orig.rstrip("/"))
+    small = [
+        p
+        for p in ("sf0.001", "sf0.01")
+        if os.path.isdir(os.path.join(data_root, p))
+        and os.path.abspath(os.path.join(data_root, p)) != os.path.abspath(orig)
+    ]
     spark = get_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    clock = Budget(float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "2700")))
 
-    qs = queries()
-    for _ in range(2):  # warm-up laps: plan + code-gen + JIT + page cache
-        for name in HEADLINE:
-            qs[name](spark, sf_dir).toArrow()
-    per_query: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = qs[name]
-        best = float("inf")
-        for _ in range(5):
-            t0 = time.perf_counter()
-            rows = fn(spark, sf_dir).toArrow()
-            best = min(best, time.perf_counter() - t0)
-            del rows
-        per_query[name] = round(best, 4)
+    def locate(e: Entry) -> str | None:
+        if e.corpus == "sf":
+            return base
+        if e.factor == 1:
+            return prepare_layout(os.path.join(data_root, e.corpus))
+        d = (scaled_layout if e.corpus == "scaled" else scaled_docs_layout)(base, e.factor)
+        return None if d == base else d
 
-    total = round(sum(per_query.values()), 4)
-
-    # The registered q_dedup_minhash_lsh is the r3-verdict-#4 recall
-    # CERTIFICATE (LSH + exact twin in one query); the number the bench
-    # tracks round-over-round is the PRODUCTION LSH path, so time that.
-    from cuny_courses_spark.operators.dedup import minhash_lsh_pairs
-
-    ext_fns = dict(qs)
-    ext_fns["q_dedup_minhash_lsh"] = minhash_lsh_pairs
-
-    # Real stateful-streaming lap (r7 verdict #6): the session_window
-    # aggregation replayed through 8 micro-batches with watermark-driven
-    # state admission/merge/eviction (streaming/runner.py). Wrapped to
-    # return a 1-row frame so the sweep's fn(spark, d).toArrow() timing
-    # harness applies unchanged — the streaming run completes eagerly
-    # inside the call, so the lap time is the full drain.
-    def _stream_session_replay(sp, d):
-        from cuny_courses_spark.streaming.runner import (
-            run_stream_session_scale,
-        )
-
-        run_stream_session_scale(sp, d, n_files=8)
-        # Unload state-store providers after each lap: a finished
-        # streaming query leaves every partition's HDFSBackedStateStore
-        # (the final version's whole session map) cached in the JVM's
-        # loadedProviders registry — ~1 M sessions of heap at the ×10
-        # point — and the GC-heavy dedup laps later in the sweep measured
-        # 24-29 s (and climbing) with the maps resident vs 16-17 s after
-        # an explicit unload (r8 A/B). Fresh-checkpoint laps never reuse
-        # providers, so this costs the next lap nothing.
-        try:
-            sp.sparkContext._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-        except Exception:
-            pass
-        return sp.range(1)
-
-    ext_fns["q_stream_session_replay"] = _stream_session_replay
-    extended: dict[str, float | str] = {}
-    for name in EXTENDED:
-        try:
-            fn = ext_fns[name]
-            fn(spark, sf_dir).toArrow()  # warm
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).toArrow()
-                best = min(best, time.perf_counter() - t0)
-            extended[name] = round(best, 4)
-        except Exception as exc:  # headline metric must survive this, but
-            # a crashing operator must be VISIBLE in the artifact, not
-            # silently absent (r2 advice) — round-over-round comparison
-            # needs to distinguish 'not run' from 'broken'.
-            extended[name] = f"error: {type(exc).__name__}"
-
-    # Same-conditions baseline: run each headline query's DuckDB oracle
-    # back-to-back in this process, same files, same machine load, same
-    # warm-up + best-of-5 method. Absolute seconds fluctuate ±30-50 % with
-    # background load on this host (BASELINE.md), inflating BOTH engines
-    # alike — the per-round ratio below is the load-fair signal the
-    # idle-machine BASELINE.md table can't give a loaded run.
-    # Per-query Spark job counts (one extra lap): in local mode every job
-    # carries a fixed dispatch cost — BASELINE.md measures an EMPTY
-    # one-task job at 53-70 ms on the idle host — so jobs/query is the
-    # denominator of the fixed-cost story the sweep below quantifies.
-    tracker = spark.sparkContext.statusTracker()
-    jobs_per_query: dict[str, int] = {}
-    for name in HEADLINE:
-        before = set(tracker.getJobIdsForGroup())
-        qs[name](spark, sf_dir).toArrow()
-        jobs_per_query[name] = len(set(tracker.getJobIdsForGroup()) - before)
-    # The measured dispatch floor in THIS run (empty 1-task job, best of 5).
-    empty_rdd = spark.sparkContext.parallelize([0], 1)
-    empty_job_sec = _time_best(lambda: empty_rdd.count(), 5)
-
-    duck_query: dict[str, float] = {}
-    try:
-        from cuny_courses_spark.oracle import duck_con
-
-        con = duck_con(sf_dir)
-        os_ = oracles()
-        for _ in range(2):  # warm-up laps (page cache, plan cache)
-            for name in HEADLINE:
-                con.execute(os_[name]).fetch_arrow_table()
-        for name in HEADLINE:
-            best = float("inf")
-            for _ in range(5):
-                t0 = time.perf_counter()
-                con.execute(os_[name]).fetch_arrow_table()
-                best = min(best, time.perf_counter() - t0)
-            duck_query[name] = round(best, 4)
-    except Exception:
-        duck_query = {}  # Spark side still reports; ratio just absent
-    duck_total = round(sum(duck_query.values()), 4) if duck_query else None
-
-    # Fixed-cost amortization sweep (r2 verdict #1, extended per r3 verdict
-    # #2): the same warm best-of-N Spark-vs-DuckDB suite at every available
-    # data size, plus synthetic 10×/20×/50×/100× points (scaled_layout),
-    # all inside THIS run — the machine-readable form of the fixed-cost
-    # amortization claim, carried to the decade where the curve actually
-    # crosses (or doesn't cross) the 2× bar. Laps shrink as points grow
-    # (best-of-5 → 2): the big points are seconds-long, so scheduler noise
-    # is proportionally small there, and the wall budget guards the
-    # artifact against a timeout-truncated run.
-    t_start = time.perf_counter()
-    # r15: 1500 → 2700 default. The round-15 host runs both engines 3-5×
-    # slower than the r14 box (empty 1-task job ~0.2 s vs ~0.06 s; the
-    # ×100 DuckDB window lap alone is ~50 s); at 1500 s the baseline run
-    # exhausted the budget before ANY ×100 extended-sweep entry and the
-    # artifact lost the whole per-query scale record. 2700 s fits the
-    # full suite on the slow host; on a fast host the run simply
-    # finishes early (the budget is a cap, not a target).
-    budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "2700"))
+    head: list[tuple[Entry, Result]] = []
+    extended: dict = {}
     sweep: list[dict] = []
-    try:
-        data_root = os.path.dirname(orig_sf_dir.rstrip("/"))
-        for small in ("sf0.001", "sf0.01"):
-            d = os.path.join(data_root, small)
-            if os.path.isdir(d) and os.path.abspath(d) != os.path.abspath(
-                orig_sf_dir
-            ):
-                sweep.append(_sweep_point(spark, small, prepare_layout(d)))
-        sweep.append(_sweep_point(spark, f"sf{sf}", sf_dir))
-        for factor, laps in ((10, 5), (20, 5), (50, 3), (100, 2)):
-            if time.perf_counter() - t_start > budget:
-                sweep.append({"point": f"sf{sf}x{factor}", "skipped":
-                              "wall budget exhausted"})
-                continue
-            scaled = scaled_layout(sf_dir, factor=factor)
-            if scaled != sf_dir:
-                pt = _sweep_point(spark, f"sf{sf}x{factor}", scaled, laps=laps)
-                # Transient-spike guard (r9): the amortization curve is
-                # monotone-decreasing by construction (same suite, more
-                # data to amortize fixed cost over), so a point whose
-                # ratio JUMPS >2× above its predecessor is a host-load
-                # artifact, not a measurement — an r9 in-run x100 read
-                # 3.44 (all four non-trivial queries AND their DuckDB
-                # twins slowed together) while the same point isolated
-                # minutes later read 0.945. Retry once and keep the
-                # better reading; the discarded one stays in the record.
-                prev = next(
-                    (
-                        p["ratio"]
-                        for p in reversed(sweep)
-                        if isinstance(p, dict)
-                        and isinstance(p.get("ratio"), (int, float))
-                    ),
-                    None,
-                )
-                if (
-                    isinstance(pt.get("ratio"), (int, float))
-                    and prev is not None
-                    and pt["ratio"] > 2 * prev
-                    and time.perf_counter() - t_start <= budget
-                ):
-                    retry = _sweep_point(
-                        spark, f"sf{sf}x{factor}", scaled, laps=laps
-                    )
-                    if (
-                        isinstance(retry.get("ratio"), (int, float))
-                        and retry["ratio"] < pt["ratio"]
-                    ):
-                        retry["discarded_transient_ratio"] = pt["ratio"]
-                        pt = retry
-                sweep.append(pt)
-    except Exception as exc:
-        sweep.append({"point": f"error: {type(exc).__name__}"})
+    ext_sweep: dict = {}
+    empty_job_sec = None
+    for (section, point), group in itertools.groupby(
+        table(sf, small), key=lambda e: (e.section, e.point)
+    ):
+        group = list(group)
+        if section == "headline":
+            for _ in range(2):  # suite warm-up: plans, codegen, JIT, page cache
+                for e in group:
+                    e.fn(spark, base).toArrow()
+        elif section == "sweep":
+            clock.start()
+        results = [measure(spark, e, locate, clock) for e in group]
+        if section == "headline":
+            head = list(zip(group, results))
+            empty_job_sec = _empty_job_sec(spark)
+        elif section == "extended":
+            extended = {e.name: r.sec for e, r in zip(group, results)}
+        elif section == "ext":
+            ext_sweep[point] = _ext_point(group, results)
+        else:
+            pt = _sweep_point(point, group, results)
+            prev = next((p["ratio"] for p in reversed(sweep) if _num(p["ratio"])), None)
+            # The ratio curve only falls with size, so a >2× jump is host
+            # load: retry once and keep the better reading.
+            if _num(pt["ratio"]) and prev is not None and pt["ratio"] > 2 * prev and not clock.over():
+                retry = _sweep_point(point, group, [measure(spark, e, locate, clock) for e in group])
+                if _num(retry["ratio"]) and retry["ratio"] < pt["ratio"]:
+                    retry["discarded_transient_ratio"] = pt["ratio"]
+                    pt = retry
+            sweep.append(pt)
 
-
-    # Extended amplified sweep (r4 verdict #4): the shuffle-heavy
-    # LLM-pipeline and graph operators — the plans that ARE the 100 TB
-    # argument — measured above sf0.1. Dedup/similarity run on the
-    # replica-disjoint scaled_docs_layout corpus (plain replication would
-    # make every replica a near-duplicate of every other and the workload
-    # quadratic in the factor); graph reuses scaled_layout (shifted
-    # part/supplier keys ⇒ factor disjoint co-purchase graphs). Quadratic
-    # DuckDB oracles are engine-only (recorded as absent, not silent);
-    # q_graph_pagerank's oracle is linear (bounded per-order fan-out) and
-    # gets a DuckDB twin. Budget-guarded per query.
-    DOC_EXT = ["q_dedup_near_jaccard", "q_dedup_minhash_lsh",
-               "q_dedup_containment"]
-    GRAPH_EXT = ["q_graph_common_neighbors", "q_graph_pagerank"]
-    # Shuffle-heaviest TPC-H composites (r5 verdict #4: this family had
-    # zero measured points above sf0.1): two fact shuffles (q5), HAVING
-    # semi-join (q18), semi+anti on lineitem (q21); r6 verdict #6 adds
-    # the join + grouped-top-k family (q3/q10/q13). Their oracles are
-    # linear, so each gets a DuckDB twin at both factors.
-    TPCH_EXT = ["q_sql_q5_local_volume", "q_sql_q18_volume_customer",
-                "q_sql_q21_waiting_supplier", "q_sql_q3_shipping_priority",
-                "q_sql_q10_returned_topk", "q_sql_q13_cust_distribution",
-                "q_sql_q7_nation_volume",
-                # r8 rewrites (dedup-first Q16, staged Q8) — in the sweep
-                # so their x100 behavior is re-recorded per round.
-                "q_sql_q16_supplier_cnt", "q_sql_q8_mkt_share"]
-    # Window/timeseries at amplified scale (r7): parallel per-key window
-    # evaluation is a measured Spark STRENGTH — at ×100 the engine runs
-    # sessionize/sliding-median/EWMA at 0.44-0.59× of DuckDB's
-    # single-sort window path (builder r7 session). Linear oracles →
-    # DuckDB twins at both factors, same loop as TPCH_EXT.
-    WIN_EXT = ["q_ts_sessionize", "q_win_median_sliding", "q_ts_ewma",
-               "q_stream_session"]
-    # LLM text + sampling families at amplified scale (r7 verdict #1: the
-    # north-star training-data workload had zero scale evidence). All run
-    # on the replica-disjoint docs corpus; every oracle is linear →
-    # DuckDB twins at both factors. r8 findings now pinned per-round:
-    # contamination is a measured Spark WIN at ×100 (0.89× — DuckDB's
-    # gram self-join degrades superlinearly, 0.23 → 7.8 s, while Spark
-    # grows 3.5× on 10× data), rarity 1.6×, idf 4.0×, pack 3.0×,
-    # importance-sampling flat/dispatch-bound.
-    # r12 adds q_text_perplexity (bigram-LM scoring, the newest family
-    # member) — measured 1.3-1.6× vs its DuckDB twin at ×100 on arrival.
-    TEXT_EXT = ["q_text_contamination", "q_text_rarity_score",
-                "q_text_idf_top_terms", "q_text_pack_sequences",
-                "q_sample_importance_weighted", "q_text_perplexity",
-                # r13: the mapInArrow tokenizer — the round's new
-                # Python-path operator gets a measured point on arrival
-                "q_text_bpe_tokens",
-                # r14: the ranked-merge BPE sibling, same harness
-                "q_text_bpe_merges"]
-    ext_sweep: dict[str, dict] = {}
-    # r15: ×100 FIRST — it is the top-point evidence every verdict reads;
-    # on a slow host the budget must never truncate it in favor of ×10.
-    # (The suite amortization sweep above already ran the ×100 layout, so
-    # the JVM/page cache are warm for this point either way; each entry
-    # additionally takes a warm lap + best-of-N.)
-    for factor, laps in ((100, 1), (10, 2)):
-        point = f"sf{sf}x{factor}"
-        entry: dict[str, float | str] = {}
-        ext_sweep[point] = entry
-        try:
-            ddir = scaled_docs_layout(sf_dir, factor)
-            gdir = scaled_layout(sf_dir, factor)
-            # Order: cheap, latency-precise queries FIRST; the heavy
-            # stateful operators (dedup postings joins, pagerank's
-            # localCheckpoint blocks) LAST. r7: a Q21 lap measured 19.7 s
-            # (vs 2.9-3.5 s in every isolated run) when it followed
-            # pagerank — checkpoint blocks are released by the async
-            # ContextCleaner, so the ms-to-s-scale SHUFFLE_HASH builds
-            # right after it occasionally ran under squeezed executor
-            # memory. Heavy queries are insensitive to leftovers (their
-            # laps are dominated by real work); precise ones are not.
-            for name, d in (
-                [(n, gdir) for n in TPCH_EXT]
-                + [(n, gdir) for n in WIN_EXT]
-                + [(n, ddir) for n in TEXT_EXT]
-                # state-store scale lap at ×10 only (×100 would be ~8
-                # minutes of micro-batch drain for no added signal —
-                # per-batch overhead is the finding, and it's factor-
-                # independent); placed before the heavy dedup/graph
-                # set per the precise-before-stateful ordering.
-                + ([("q_stream_session_replay", gdir)] if factor == 10
-                   else [])
-                # PQ/ADC ANN at x10 only (r11): 8 KMeans fits + encode
-                # + ADC scan + exact-referee certificate over the 50 k-
-                # vector corpus — the new similarity leg's scale lap.
-                # x100 would spend its budget on quantizer training
-                # (8 fits over 500 k rows) for no added plan signal.
-                + ([("q_sim_pq_adc", ddir)] if factor == 10 else [])
-                # IVFxPQ composed index at x10 only (r14): same budget
-                # reasoning as pq_adc — the x100 point would spend its
-                # wall on quantizer training for no added plan signal.
-                + ([("q_sim_ivfpq_topk", ddir)] if factor == 10 else [])
-                + [(n, ddir) for n in DOC_EXT]
-                + [(n, gdir) for n in GRAPH_EXT]
-            ):
-                if time.perf_counter() - t_start > budget:
-                    entry[name] = "skipped: wall budget exhausted"
-                    continue
-                if d == sf_dir:
-                    entry[name] = "skipped: layout synthesis failed"
-                    continue
-                try:
-                    fn = ext_fns[name]
-                    # Quiesce between operators: the preceding operator's
-                    # cached blocks / garbage otherwise bleed into this
-                    # one's laps (r5: pagerank's cold build measured 64 s
-                    # after the dedup set vs ~30 s from a quiesced
-                    # session — same query, same data). r8: the quiesce
-                    # is now a polled DRAIN (postcondition: zero persisted
-                    # RDDs), so timings no longer depend on whether the
-                    # async ContextCleaner happened to run — the r7
-                    # squeezed-build incident class (verdict #5).
-                    _drain_storage(spark)
-                    # q_graph_pagerank localCheckpoints its supersteps at
-                    # BUILD time, so a plan-cached re-collect would reuse
-                    # the materialized iterations and time ~nothing; force
-                    # rebuild-per-lap so every lap re-runs the loop.
-                    ckpt = name == "q_graph_pagerank"
-                    prior = os.environ.get("SPARK_GRAFT_NO_PLAN_CACHE")
-                    if ckpt:
-                        os.environ["SPARK_GRAFT_NO_PLAN_CACHE"] = "1"
-                    # GC/string-heavy stateful laps need one extra ×100
-                    # lap to reach steady state (r8, measured in a fresh
-                    # quiesced session: near_jaccard ×100 ran 33.6 / 33.0
-                    # / 15.2 s across three back-to-back executions with
-                    # the corpus fully page-cached — the first two laps
-                    # time JIT tier-up + GC adaptation, not the plan;
-                    # r7-vs-r8 artifacts differed ~2× on these entries
-                    # from lap-count luck alone). Best-of over 3
-                    # executions records the converged number.
-                    # r9 (judge #4): TPCH_EXT gets the same treatment at
-                    # ×100 — Q18/Q10 drifted +13-14 % in the r8 driver
-                    # artifact on unchanged plans; these laps are 2-3 s,
-                    # so one more execution is cheap insurance against
-                    # lap-position luck becoming the recorded number.
-                    # r16: TPCH gets laps+2 at ×100 (was +1) — the warm
-                    # lap now absorbs the one-time bucketed-mirror
-                    # ingest for q21/q16/q10/q13, and the first timed
-                    # lap after it is still on the descending JIT curve
-                    # (observed [31.0, 4.7, 3.6] with a ~2.8 s steady
-                    # state); one more ~3 s lap per entry buys the
-                    # best-of a converged reading.
-                    op_laps = (
-                        laps + (2 if name in TPCH_EXT else 1)
-                        if factor >= 100
-                        and name in DOC_EXT + GRAPH_EXT + TPCH_EXT
-                        else laps
-                    )
-                    try:
-                        # The warm lap counts toward best-of: the big
-                        # points run few laps, and one load-spiked lap
-                        # otherwise becomes the recorded number.
-                        t0 = time.perf_counter()
-                        fn(spark, d).toArrow()  # warm
-                        warm_sec = time.perf_counter() - t0
-
-                        # Quiesce per LAP too, not just per operator:
-                        # these laps run 10-60 s each and leave tens of
-                        # GB of shuffle garbage behind — measured on the
-                        # ×100 near-jaccard point, back-to-back laps with
-                        # no gc ran 18↔87 s while gc-separated laps held
-                        # 17-26 s with 0.6 s of in-lap GC. The gc runs
-                        # OUTSIDE the timed region (extended-sweep-only;
-                        # the ms-scale headline laps are untouched).
-                        lap_times = [warm_sec]
-                        lap_disk = [_shuffle_dir_mb(spark)]
-                        # r16 (r15 VERDICT #8 + ADVICE): ONE uniform lap
-                        # rule for the heavy GC/JIT-lottery set — a FIXED
-                        # number of extra laps (budget-guarded), recorded
-                        # value = trimmed median (_trimmed_median above).
-                        # Replaces the converge-until-stable rules (15 %
-                        # generally / 5 % pagerank), which a descending
-                        # JIT tier-up curve satisfied with two adjacent
-                        # SLOW laps; no per-query special cases remain.
-                        # Lap lists stay in the sidecar, so best-of is
-                        # still derivable for cross-round reading.
-                        heavy = factor >= 100 and name in (
-                            DOC_EXT + GRAPH_EXT
-                        )
-                        max_laps = op_laps + (3 if heavy else 0)
-                        done_laps = 0
-                        while done_laps < max_laps:
-                            # python gc FIRST (r10, r9 weak #1): py4j
-                            # strong-refs the previous lap's plan (and
-                            # its ShuffleDependencies) until python GC
-                            # runs, so a JVM-only gc between laps leaves
-                            # the ContextCleaner nothing to clean — the
-                            # shuffle-file backlog then grows across
-                            # laps (measured 2.5 → 7.5 GB) and drains
-                            # only at the NEXT operator's _drain_storage,
-                            # which is the rising-then-snap-back lap
-                            # shape the r9 artifact recorded.
-                            try:
-                                import gc as _gc
-
-                                _gc.collect()
-                                spark.sparkContext._jvm.System.gc()
-                            except Exception:
-                                pass
-                            # checkpoint-heavy ops (pagerank) also need
-                            # their superstep RDD blocks DRAINED per lap
-                            # (r10 verdict wrong #2: laps [28.8, 24.2,
-                            # 47.9, 27.7] — lap 3 doubled because the
-                            # prior lap's localCheckpoint blocks were
-                            # still queued for async release and squeezed
-                            # execution memory; the polled drain is the
-                            # reliable variant of the System.gc nudge).
-                            if ckpt:
-                                _drain_storage(spark)
-                            t0 = time.perf_counter()
-                            fn(spark, d).toArrow()
-                            lap_times.append(time.perf_counter() - t0)
-                            lap_disk.append(_shuffle_dir_mb(spark))
-                            done_laps += 1
-                            if (
-                                heavy
-                                and done_laps >= op_laps
-                                and time.perf_counter() - t_start > budget
-                            ):
-                                break
-                        entry[name] = (
-                            _trimmed_median(lap_times)
-                            if heavy
-                            else round(min(lap_times), 4)
-                        )
-                        # r9 (judge #3): per-lap times for the heavy set
-                        # land in the sidecar so the ARTIFACT ITSELF
-                        # shows run-to-run variance (near_jaccard swung
-                        # +41 % across driver rounds on an unchanged
-                        # plan; best-of hides whether that was lap luck).
-                        if factor >= 100 and name in (
-                            DOC_EXT + GRAPH_EXT + TPCH_EXT
-                        ):
-                            entry[f"{name}_laps"] = [
-                                round(t, 3) for t in lap_times
-                            ]
-                        # shuffle-dir footprint per lap (r10): if laps
-                        # ever drift again, the artifact itself shows
-                        # whether disk backlog is the accumulator.
-                        # r11 extends it to the graph set — pagerank's
-                        # checkpoint blocks were the r10 lap-variance
-                        # suspect, so its disk trace belongs in-artifact.
-                        if factor >= 100 and name in DOC_EXT + GRAPH_EXT:
-                            entry[f"{name}_shuffle_mb"] = lap_disk
-                        # Floor attribution (r10 importance_weighted; r11
-                        # extends to the text stragglers per the r10
-                        # verdict wrong #3; r12 adds rarity_score per the
-                        # r11 verdict #8 — its 2.05× weak tag had no
-                        # sidecar): these sub-second entries are
-                        # dominated by per-job dispatch — record jobs ×
-                        # empty_job_sec NEXT TO the timing so the ratio
-                        # reads as (dispatch floor + real work), not as
-                        # a plan defect. idf_top_terms 4.66× at ×100 is
-                        # 0.72 s wall of which ~0.4-0.6 s is dispatch.
-                        # r13 (r12 verdict #6): the TPC-H band gets the
-                        # same attribution — q5/q18/q21 swung 20-45%
-                        # round-over-round on unchanged plans; jobs ×
-                        # empty_job_sec separates the dispatch floor
-                        # from real work so a regression is attributable
-                        # in-artifact instead of by box-noise appeal.
-                        if (
-                            name
-                            in (
-                                "q_sample_importance_weighted",
-                                "q_text_idf_top_terms",
-                                "q_text_pack_sequences",
-                                "q_text_contamination",
-                                "q_text_rarity_score",
-                            )
-                            or name in TPCH_EXT
-                        ) and factor >= 100:
-                            before_j = set(tracker.getJobIdsForGroup())
-                            fn(spark, d).toArrow()
-                            njobs = len(
-                                set(tracker.getJobIdsForGroup()) - before_j
-                            )
-                            entry[f"{name}_floor_attr"] = {
-                                "jobs": njobs,
-                                "empty_job_sec": empty_job_sec,
-                                "dispatch_sec": round(
-                                    njobs * empty_job_sec, 4
-                                ),
-                            }
-                    finally:
-                        if ckpt:
-                            if prior is None:
-                                os.environ.pop(
-                                    "SPARK_GRAFT_NO_PLAN_CACHE", None
-                                )
-                            else:
-                                os.environ["SPARK_GRAFT_NO_PLAN_CACHE"] = prior
-                except Exception as exc:
-                    entry[name] = f"error: {type(exc).__name__}"
-            # Similarity-family amplified point (r6 verdict #5, unblocked
-            # by the sign-flip corpus fix above): the PRODUCTION banded
-            # LSH path only — the registered q_sim_neardup_lsh is a
-            # recall CERTIFICATE that deliberately also runs the O(n²)
-            # exact twin, which is the wrong thing to time at ×10/×100
-            # (200 M exact pairs at ×10). Engine-only: the exact DuckDB
-            # pair join is quadratic-infeasible here by design, like the
-            # near_jaccard/minhash twins; value-correctness runs at the
-            # driver's SFs via the certificate.
-            # Snapshot elapsed ONCE (r7 ADVICE): two separate clock reads
-            # could straddle the budget boundary, firing neither branch
-            # and leaving the key silently absent — which the bench's own
-            # convention reads as "removed", not "skipped".
-            _sim_over_budget = time.perf_counter() - t_start > budget
-            if ddir != sf_dir and _sim_over_budget:
-                # record the omission, don't drop the keys (the bench's
-                # own convention — a missing key reads as "removed")
-                entry["q_sim_neardup_lsh_prod"] = (
-                    "skipped: wall budget exhausted"
-                )
-            if ddir != sf_dir and not _sim_over_budget:
-                try:
-                    from cuny_courses_spark.operators.similarity import (
-                        neardup_lsh_pairs,
-                    )
-                    from cuny_courses_spark.sources.loaders import load as _ld
-
-                    # Count once per point, not per lap (r7 ADVICE: the
-                    # geometry probe inside neardup_lsh_pairs re-counts
-                    # its input per invocation).
-                    _n_vec = _ld(spark, ddir, "embeddings").count()
-                    _sim_pairs: dict[str, int] = {}
-
-                    def _sim_lap():
-                        pdf = neardup_lsh_pairs(
-                            _ld(spark, ddir, "embeddings"), n_vectors=_n_vec
-                        ).toArrow()
-                        _sim_pairs["engine"] = len(pdf)
-
-                    try:
-                        spark.catalog.clearCache()
-                        spark.sparkContext._jvm.System.gc()
-                    except Exception:
-                        pass
-                    t0 = time.perf_counter()
-                    _sim_lap()  # warm
-                    _sim_laps = [time.perf_counter() - t0]
-                    # r16: the same UNIFORM heavy-entry lap rule as the
-                    # DOC/GRAPH set — fixed lap count (warm + laps + 3,
-                    # budget-guarded past the mandatory laps), recorded
-                    # value = trimmed median. The r15 converge rule's
-                    # failure mode (two adjacent slow laps on a
-                    # descending JIT curve pass the 15 % check) was hit
-                    # by the driver's own artifact: laps [26.2, 21.0,
-                    # 19.3] recorded 19.28 s for a 1.8-3.5 s steady
-                    # state. Lap list stays in the sidecar.
-                    _sim_done = 0
-                    while _sim_done < laps + 3:
-                        try:
-                            import gc as _gc
-
-                            _gc.collect()
-                            spark.sparkContext._jvm.System.gc()
-                        except Exception:
-                            pass
-                        t0 = time.perf_counter()
-                        _sim_lap()
-                        _sim_laps.append(time.perf_counter() - t0)
-                        _sim_done += 1
-                        if _sim_done >= laps and (
-                            time.perf_counter() - t_start > budget
-                        ):
-                            break
-                    entry["q_sim_neardup_lsh_prod"] = _trimmed_median(
-                        _sim_laps
-                    )
-                    entry["q_sim_neardup_lsh_prod_laps"] = [
-                        round(t, 3) for t in _sim_laps
-                    ]
-                    entry["q_sim_neardup_lsh_prod_pairs"] = _sim_pairs.get(
-                        "engine"
-                    )
-                except Exception as exc:
-                    entry["q_sim_neardup_lsh_prod"] = (
-                        f"error: {type(exc).__name__}"
-                    )
-                # Banded sign-projection twin (r10, r9 verdict weak #2):
-                # the SAME size-adaptive banded algorithm in DuckDB SQL
-                # (seed-42 planes via list_dot_product) — replaces the
-                # old 'quadratic twin skipped' placeholder with a real
-                # scale comparator; pair counts recorded beside timings.
-                try:
-                    from cuny_courses_spark.oracle import duck_con
-
-                    con = duck_con(ddir)
-                    sql_lsh = _duck_neardup_lsh_banded(_n_vec)
-                    rows = con.execute(sql_lsh).fetch_arrow_table()  # warm
-                    entry["q_sim_neardup_lsh_prod_duckdb"] = _time_best(
-                        lambda: con.execute(sql_lsh).fetch_arrow_table(), laps
-                    )
-                    entry["q_sim_neardup_lsh_prod_duckdb_pairs"] = len(
-                        rows
-                    )
-                    try:  # release the in-process buffer pool promptly
-                        con.close()
-                    except Exception:
-                        pass
-
-                except Exception as exc:
-                    entry["q_sim_neardup_lsh_prod_duckdb"] = (
-                        f"error: {type(exc).__name__}"
-                    )
-            # TPC-H composite twins — linear oracles, feasible at both
-            # factors (unlike the quadratic dedup ones).
-            if gdir != sf_dir:
-                try:
-                    from cuny_courses_spark.oracle import duck_con
-
-                    con = duck_con(gdir)
-                    os_all = oracles()
-                    for name in TPCH_EXT + WIN_EXT:
-                        if time.perf_counter() - t_start > budget:
-                            entry[f"{name}_duckdb"] = (
-                                "skipped: wall budget exhausted"
-                            )
-                            continue
-                        sql = os_all[name]
-                        con.execute(sql).fetch_arrow_table()  # warm
-                        entry[f"{name}_duckdb"] = _time_best(
-                            lambda: con.execute(sql).fetch_arrow_table(), laps
-                        )
-                except Exception as exc:
-                    entry["_tpch_duckdb"] = f"error: {type(exc).__name__}"
-            # Bucketed-layout A/B for the worst TPC-H fact-join ratio
-            # (r10 verdict next-round #4): customer/orders rewritten once
-            # as 32-bucket managed tables on their join key, Q13 re-run
-            # against them — the bucketed scan's hash partitioning feeds
-            # the per-custkey aggregate AND the left join with ZERO fact
-            # exchanges (only the tiny post-agg distribution groupBy and
-            # the ORDER BY remain). Recorded finding (this host, ×100):
-            # 1.11 s plain → 0.87 s bucketed while DuckDB runs ~0.1 s —
-            # the shuffle is ~20 % of the gap, the orders-scan floor is
-            # the rest, so the family's ratio band is an architecture
-            # constant, not a missing co-location optimization. The
-            # layout write cost is recorded beside the lap (it amortizes
-            # across every custkey query in a real deployment).
-            if gdir != sf_dir and (
-                time.perf_counter() - t_start <= budget
-            ):
-                try:
-                    from cuny_courses_spark.operators.tpch_sql import _Q13
-                    from cuny_courses_spark.sources.loaders import (
-                        load as _ldb,
-                    )
-
-                    t0 = time.perf_counter()
-                    # a fresh in-memory catalog doesn't know about a
-                    # previous session's managed-table dirs — DROP is a
-                    # no-op then, and saveAsTable refuses the existing
-                    # path; clear both.
-                    import shutil as _sh
-                    from urllib.parse import urlparse as _up
-
-                    wh = _up(
-                        spark.conf.get("spark.sql.warehouse.dir", "")
-                    ).path
-                    for tname in ("bkt_customer", "bkt_orders"):
-                        spark.sql(f"DROP TABLE IF EXISTS {tname}")
-                        if wh:
-                            _sh.rmtree(
-                                os.path.join(wh, tname), ignore_errors=True
-                            )
-                    _ldb(spark, gdir, "customer").write.bucketBy(
-                        32, "c_custkey"
-                    ).sortBy("c_custkey").mode("overwrite").saveAsTable(
-                        "bkt_customer"
-                    )
-                    _ldb(spark, gdir, "orders").write.bucketBy(
-                        32, "o_custkey"
-                    ).sortBy("o_custkey").mode("overwrite").saveAsTable(
-                        "bkt_orders"
-                    )
-                    entry["q_sql_q13_bucketed_layout_sec"] = round(
-                        time.perf_counter() - t0, 4
-                    )
-                    q13b = _Q13.replace(
-                        "FROM customer", "FROM bkt_customer"
-                    ).replace("FROM orders", "FROM bkt_orders")
-                    spark.sql(q13b).toArrow()  # warm
-                    entry["q_sql_q13_bucketed"] = _time_best(
-                        lambda: spark.sql(q13b).toArrow(),
-                        laps + 1 if factor >= 100 else laps,
-                    )
-                except Exception as exc:
-                    entry["q_sql_q13_bucketed"] = (
-                        f"error: {type(exc).__name__}"
-                    )
-            # r13 (r12 verdict #6 follow-through): the same physical
-            # A/B for Q18 — the round's worst TPC-H ratio (6.64× at
-            # ×100). lineitem+orders co-bucketed on the ORDER key turn
-            # the per-order quantity aggregate AND the big⋈orders join
-            # exchange-free (the 20-row customer probe was already a
-            # broadcast); what remains vs DuckDB is the scan-decode
-            # floor, and this sidecar quantifies exactly how much of
-            # the 6.64× the shuffle accounted for.
-            if gdir != sf_dir and (
-                time.perf_counter() - t_start <= budget
-            ):
-                try:
-                    from cuny_courses_spark.operators.tpch_sql import _Q18
-                    from cuny_courses_spark.sources.loaders import (
-                        load as _ldb,
-                    )
-
-                    import shutil as _sh
-                    from urllib.parse import urlparse as _up
-
-                    t0 = time.perf_counter()
-                    wh = _up(
-                        spark.conf.get("spark.sql.warehouse.dir", "")
-                    ).path
-                    for tname in ("bkt_lineitem", "bkt_orders_ok"):
-                        spark.sql(f"DROP TABLE IF EXISTS {tname}")
-                        if wh:
-                            _sh.rmtree(
-                                os.path.join(wh, tname), ignore_errors=True
-                            )
-                    _ldb(spark, gdir, "lineitem").select(
-                        "l_orderkey", "l_quantity"
-                    ).write.bucketBy(32, "l_orderkey").sortBy(
-                        "l_orderkey"
-                    ).mode("overwrite").saveAsTable("bkt_lineitem")
-                    _ldb(spark, gdir, "orders").write.bucketBy(
-                        32, "o_orderkey"
-                    ).sortBy("o_orderkey").mode("overwrite").saveAsTable(
-                        "bkt_orders_ok"
-                    )
-                    entry["q_sql_q18_bucketed_layout_sec"] = round(
-                        time.perf_counter() - t0, 4
-                    )
-                    q18b = _Q18.replace(
-                        "FROM lineitem", "FROM bkt_lineitem"
-                    ).replace(
-                        "JOIN orders ON", "JOIN bkt_orders_ok ON"
-                    )
-                    spark.sql(q18b).toArrow()  # warm
-                    entry["q_sql_q18_bucketed"] = _time_best(
-                        lambda: spark.sql(q18b).toArrow(),
-                        laps + 1 if factor >= 100 else laps,
-                    )
-                except Exception as exc:
-                    entry["q_sql_q18_bucketed"] = (
-                        f"error: {type(exc).__name__}"
-                    )
-            # r15 (r14 verdict #4): the same physical A/B for Q21 — with
-            # q3 re-measured under 2× real and q18's layout pin above,
-            # Q21 is the last TPC-H shape >2× after dispatch attribution.
-            # lineitem+orders co-bucketed on the ORDER key make the
-            # ord⋈lineitem join AND both per-(order[,supp]) rollups
-            # exchange-free (groupBy(ok, sk) is satisfied by hash(ok) —
-            # clustering on a key subset still co-locates; sortBy gives
-            # the SMJ pre-sorted runs, so the hint is stripped). What
-            # remains vs DuckDB is scan decode + the hash rollups —
-            # the sidecar shows how much of Q21's ratio was the one
-            # fact exchange.
-            if gdir != sf_dir and (
-                time.perf_counter() - t_start <= budget
-            ):
-                try:
-                    from cuny_courses_spark.operators.tpch_sql import _Q21
-                    from cuny_courses_spark.sources.loaders import (
-                        load as _ldb,
-                    )
-
-                    import shutil as _sh
-                    from urllib.parse import urlparse as _up
-
-                    t0 = time.perf_counter()
-                    wh = _up(
-                        spark.conf.get("spark.sql.warehouse.dir", "")
-                    ).path
-                    for tname in ("bkt_lineitem21",):
-                        spark.sql(f"DROP TABLE IF EXISTS {tname}")
-                        if wh:
-                            _sh.rmtree(
-                                os.path.join(wh, tname), ignore_errors=True
-                            )
-                    _ldb(spark, gdir, "lineitem").select(
-                        "l_orderkey", "l_suppkey", "l_shipdate"
-                    ).write.bucketBy(32, "l_orderkey").sortBy(
-                        "l_orderkey"
-                    ).mode("overwrite").saveAsTable("bkt_lineitem21")
-                    # bkt_orders_ok is reused from the Q18 block when it
-                    # exists (same 32-bucket o_orderkey layout).
-                    if not spark.catalog.tableExists("bkt_orders_ok"):
-                        _ldb(spark, gdir, "orders").write.bucketBy(
-                            32, "o_orderkey"
-                        ).sortBy("o_orderkey").mode(
-                            "overwrite"
-                        ).saveAsTable("bkt_orders_ok")
-                    entry["q_sql_q21_bucketed_layout_sec"] = round(
-                        time.perf_counter() - t0, 4
-                    )
-                    q21b = (
-                        _Q21.replace("/*+ SHUFFLE_HASH(ord) */ ", "")
-                        .replace("FROM orders", "FROM bkt_orders_ok")
-                        .replace(
-                            "FROM lineitem JOIN ord",
-                            "FROM bkt_lineitem21 JOIN ord",
-                        )
-                    )
-                    spark.sql(q21b).toArrow()  # warm
-                    entry["q_sql_q21_bucketed"] = _time_best(
-                        lambda: spark.sql(q21b).toArrow(),
-                        laps + 1 if factor >= 100 else laps,
-                    )
-                except Exception as exc:
-                    entry["q_sql_q21_bucketed"] = (
-                        f"error: {type(exc).__name__}"
-                    )
-            # r15: the same physical A/B for Q3 — completing the layout
-            # pin for the full {q3, q18, q21} real-work weak set (r14
-            # verdict #4). lineitem bucketed on l_orderkey makes the
-            # grouped rollup after the broadcast co join exchange-free
-            # (grouping keys ⊇ the bucket key), so the only fact cost
-            # left is scan decode + the broadcast probe — the sidecar
-            # shows how much of Q3's ratio was that one grouped-agg
-            # exchange vs the scan floor.
-            if gdir != sf_dir and (
-                time.perf_counter() - t_start <= budget
-            ):
-                try:
-                    from cuny_courses_spark.operators.tpch_sql import _Q3
-                    from cuny_courses_spark.sources.loaders import (
-                        load as _ldb,
-                    )
-
-                    import shutil as _sh
-                    from urllib.parse import urlparse as _up
-
-                    t0 = time.perf_counter()
-                    wh = _up(
-                        spark.conf.get("spark.sql.warehouse.dir", "")
-                    ).path
-                    spark.sql("DROP TABLE IF EXISTS bkt_lineitem3")
-                    if wh:
-                        _sh.rmtree(
-                            os.path.join(wh, "bkt_lineitem3"),
-                            ignore_errors=True,
-                        )
-                    _ldb(spark, gdir, "lineitem").select(
-                        "l_orderkey",
-                        "l_shipdate",
-                        "l_extendedprice",
-                        "l_discount",
-                    ).write.bucketBy(32, "l_orderkey").sortBy(
-                        "l_orderkey"
-                    ).mode("overwrite").saveAsTable("bkt_lineitem3")
-                    entry["q_sql_q3_bucketed_layout_sec"] = round(
-                        time.perf_counter() - t0, 4
-                    )
-                    q3b = _Q3.replace(
-                        "JOIN lineitem ON", "JOIN bkt_lineitem3 ON"
-                    )
-                    spark.sql(q3b).toArrow()  # warm
-                    entry["q_sql_q3_bucketed"] = _time_best(
-                        lambda: spark.sql(q3b).toArrow(),
-                        laps + 1 if factor >= 100 else laps,
-                    )
-                except Exception as exc:
-                    entry["q_sql_q3_bucketed"] = (
-                        f"error: {type(exc).__name__}"
-                    )
-            # Text/sampling twins run on the DOCS corpus connection (the
-            # gdir twin loop above can't serve them — different files).
-            if ddir != sf_dir:
-                try:
-                    from cuny_courses_spark.oracle import duck_con
-
-                    con = duck_con(ddir)
-                    os_all = oracles()
-                    for name in TEXT_EXT:
-                        if time.perf_counter() - t_start > budget:
-                            entry[f"{name}_duckdb"] = (
-                                "skipped: wall budget exhausted"
-                            )
-                            continue
-                        sql = os_all[name]
-                        con.execute(sql).fetch_arrow_table()  # warm
-                        entry[f"{name}_duckdb"] = _time_best(
-                            lambda: con.execute(sql).fetch_arrow_table(), laps
-                        )
-                except Exception as exc:
-                    entry["_text_duckdb"] = f"error: {type(exc).__name__}"
-            # One DuckDB-feasible dedup ratio (r5 verdict #6): the
-            # containment workload written as the INVERTED-INDEX join
-            # (unnest shingles → equi-join on shingle → per-pair count),
-            # the linear-ish formulation a tuned engine would run — NOT
-            # the registered all-pairs list_intersect oracle (quadratic,
-            # minutes at ×10). Same output rows; timing twin only (the
-            # value oracle runs at sf0.01 in the driver's gate). r7:
-            # runs at BOTH factors (r6 verdict missing-#4) — the indexed
-            # form stays linear-ish (~13 s at ×100, no spill), and the
-            # top decade is where the engine's sizes-on-postings plan
-            # crosses under DuckDB (11.9 vs 13 s, builder r7 session).
-            if ddir != sf_dir and (
-                time.perf_counter() - t_start <= budget
-            ):
-                try:
-                    from cuny_courses_spark.oracle import duck_con
-
-                    con = duck_con(ddir)
-                    con.execute(_DUCK_CONTAINMENT_INDEXED).fetch_arrow_table()  # warm
-                    entry["q_dedup_containment_duckdb"] = _time_best(
-                        lambda: con.execute(
-                            _DUCK_CONTAINMENT_INDEXED
-                        ).fetch_arrow_table(),
-                        laps,
-                    )
-                    try:  # release the in-process buffer pool promptly
-                        con.close()
-                    except Exception:
-                        pass
-
-                except Exception as exc:
-                    entry["q_dedup_containment_duckdb"] = (
-                        f"error: {type(exc).__name__}"
-                    )
-            # near_jaccard inverted-index twin (r10, r9 verdict weak #2):
-            # the SAME postings-join algorithm the engine runs, in DuckDB
-            # SQL — exact (no hashing), so pair counts must agree
-            # EXACTLY; both engines' counts recorded at ×10 (engine
-            # re-run is cheap there), duck's at both factors.
-            if ddir != sf_dir and (
-                time.perf_counter() - t_start <= budget
-            ):
-                try:
-                    from cuny_courses_spark.oracle import duck_con
-
-                    con = duck_con(ddir)
-                    rows = con.execute(
-                        _DUCK_NEAR_JACCARD_INDEXED
-                    ).fetch_arrow_table()  # warm
-                    entry["q_dedup_near_jaccard_duckdb"] = _time_best(
-                        lambda: con.execute(
-                            _DUCK_NEAR_JACCARD_INDEXED
-                        ).fetch_arrow_table(),
-                        laps,
-                    )
-                    entry["q_dedup_near_jaccard_duckdb_pairs"] = len(rows)
-                    try:  # release the in-process buffer pool promptly
-                        con.close()
-                    except Exception:
-                        pass
-
-                    if factor <= 10:
-                        entry["q_dedup_near_jaccard_engine_pairs"] = (
-                            ext_fns["q_dedup_near_jaccard"](spark, ddir)
-                            .count()
-                        )
-                except Exception as exc:
-                    entry["q_dedup_near_jaccard_duckdb"] = (
-                        f"error: {type(exc).__name__}"
-                    )
-            # Banded-LSH minhash twin (r9): same candidate-generation +
-            # verify shape as the engine's production path — closes the
-            # 'minhash is engine-only, no comparator' gap. Linear-ish
-            # (3 s ×10 / 25 s ×100 isolated), feasible at both factors.
-            if ddir != sf_dir and (
-                time.perf_counter() - t_start <= budget
-            ):
-                try:
-                    from cuny_courses_spark.oracle import duck_con
-
-                    con = duck_con(ddir)
-                    sql_mh = _duck_minhash_banded()
-                    con.execute(sql_mh).fetch_arrow_table()  # warm
-                    entry["q_dedup_minhash_lsh_duckdb"] = _time_best(
-                        lambda: con.execute(sql_mh).fetch_arrow_table(), laps
-                    )
-                    try:  # release the in-process buffer pool promptly
-                        con.close()
-                    except Exception:
-                        pass
-
-                except Exception as exc:
-                    entry["q_dedup_minhash_lsh_duckdb"] = (
-                        f"error: {type(exc).__name__}"
-                    )
-            # Graph twins LAST among the DuckDB comparators (r11):
-            # the common_neighbors wedge join holds GBs of buffer
-            # in its in-process connection, and an un-GC'd heavy
-            # connection squeezes every later duck twin on the same
-            # point (measured: q13's duck lap 0.13 s -> 0.97 s at
-            # x100 when it ran right after this block). Same
-            # precise-before-heavy rule the Spark side uses.
-            # DuckDB pagerank twin only at ×10: at ×100 its 5 unrolled
-            # CTE rounds spilled >60 GB of temp to disk (r5: filled the
-            # device and wedged the run) — record the omission, don't
-            # risk the artifact.
-            if factor > 10:
-                entry["q_graph_pagerank_duckdb"] = (
-                    "skipped: duckdb spills >60GB at this factor"
-                )
-            elif (
-                gdir != sf_dir
-                and time.perf_counter() - t_start <= budget
-            ):
-                try:
-                    from cuny_courses_spark.oracle import duck_con
-
-                    con = duck_con(gdir)
-                    sql_pr = oracles()["q_graph_pagerank"]
-                    con.execute(sql_pr).fetch_arrow_table()  # warm
-                    entry["q_graph_pagerank_duckdb"] = _time_best(
-                        lambda: con.execute(sql_pr).fetch_arrow_table(), laps
-                    )
-                    try:  # release the in-process buffer pool promptly
-                        con.close()
-                    except Exception:
-                        pass
-
-                except Exception as exc:
-                    entry["q_graph_pagerank_duckdb"] = (
-                        f"error: {type(exc).__name__}"
-                    )
-            # common_neighbors DuckDB twin (r10 verdict missing #5: the
-            # graph family's top bench point stood unbenchmarked). The
-            # registered oracle IS the wedge join in plain SQL — linear
-            # in Σdeg² like the engine's plan, measured feasible at both
-            # factors (1.4 s ×10 / 19.5 s ×100 on this host), so unlike
-            # pagerank no factor gate is needed.
-            if gdir != sf_dir and (
-                time.perf_counter() - t_start <= budget
-            ):
-                try:
-                    from cuny_courses_spark.oracle import duck_con
-
-                    con = duck_con(gdir)
-                    sql_cn = oracles()["q_graph_common_neighbors"]
-                    con.execute(sql_cn).fetch_arrow_table()  # warm
-                    entry["q_graph_common_neighbors_duckdb"] = _time_best(
-                        lambda: con.execute(sql_cn).fetch_arrow_table(), laps
-                    )
-                    try:  # release the in-process buffer pool promptly
-                        con.close()
-                    except Exception:
-                        pass
-
-                except Exception as exc:
-                    entry["q_graph_common_neighbors_duckdb"] = (
-                        f"error: {type(exc).__name__}"
-                    )
-        except Exception as exc:
-            entry["_point"] = f"error: {type(exc).__name__}"
-        finally:
-            # Drain storage between factors (polled, not fire-and-forget)
-            # so one point's checkpoint/cache blocks can't squeeze the
-            # next point's execution memory.
-            _drain_storage(spark)
-
-    # (r15 reorder) The scan-floor probe block now runs AFTER the extended
-    # sweep: on a slow/noisy host the wall budget must buy the per-query
-    # scale evidence (ext_sweep) before the secondary floor-attribution
-    # probes — the round-15 baseline run on this host exhausted the old
-    # ordering's budget inside scan_floor and recorded ZERO ext entries.
-    # Scan-decode floor at the top amplified point (r5 verdict #1/#2): the
-    # SAME full-decode aggregate probe on both engines — every contract
-    # column of the two flat-ratio queries' inputs is forced through
-    # decode by overflow-safe sums (no groups, so agg cost ~0; Spark does
-    # not answer max/sum from parquet stats with aggregate pushdown off,
-    # and neither probe can be stats-answered). This is the denominator
-    # that tells plan defects apart from the engine's columnar→row floor:
-    # when a query's DuckDB twin finishes UNDER Spark's bare scan of the
-    # same columns, the remaining ratio is scan architecture, not the
-    # query plan.
-    scan_floor: dict = {}
-    try:
-        sdir = scaled_layout(sf_dir, factor=100)
-        if sdir != sf_dir and time.perf_counter() - t_start <= budget:
-            from pyspark.sql import functions as F
-
-            from cuny_courses_spark.oracle import duck_con
-            from cuny_courses_spark.sources.loaders import load
-
-            probes = {
-                "events_3col": (
-                    lambda d: load(spark, d, "events").agg(
-                        F.sum(F.unix_micros("ts") % 1000000).alias("a"),
-                        F.sum(F.length("event_type")).alias("b"),
-                        F.sum("value").alias("c"),
-                    ),
-                    "SELECT sum(epoch_us(ts) % 1000000),"
-                    " sum(length(event_type)), sum(value) FROM events",
-                ),
-                "lineitem_7col": (
-                    lambda d: load(spark, d, "lineitem").agg(
-                        F.sum(F.length("l_returnflag")
-                              + F.length("l_linestatus")).alias("a"),
-                        F.sum(F.col("l_quantity") + F.col("l_extendedprice")
-                              + F.col("l_discount") + F.col("l_tax")).alias("b"),
-                        F.sum(F.unix_micros("l_shipdate") % 1000000).alias("c"),
-                    ),
-                    "SELECT sum(length(l_returnflag) + length(l_linestatus)),"
-                    " sum(l_quantity + l_extendedprice + l_discount + l_tax),"
-                    " sum(epoch_us(l_shipdate) % 1000000) FROM lineitem",
-                ),
-                # r7 (r6 verdict #4): decomposition floors for the two
-                # flat-ratio headliners. Each probe is one PIECE of the
-                # query (fact read / dim-build join / bare agg shape) on
-                # both engines; the full-query ratio sitting at or below
-                # the weighted piece ratios is the floor proof (the star/
-                # topk A/B history is in BASELINE.md round-7 — every
-                # alternative plan measured slower).
-                # +0.5-truncate on the Spark side / round() on the DuckDB
-                # side: value-identical for these non-negative contract
-                # columns (a bare .cast("long") truncates while DuckDB's
-                # CAST rounds — the probes would disagree on inexact
-                # double images; r7 review finding).
-                "star_fact_4col": (
-                    lambda d: load(spark, d, "lineitem").agg(
-                        F.sum(F.col("l_orderkey") % 1000000).alias("a"),
-                        F.sum(F.col("l_suppkey") % 1000000).alias("b"),
-                        F.sum((F.col("l_extendedprice") * 100 + F.lit(0.5))
-                              .cast("long") % 1000000).alias("c"),
-                        F.sum((F.col("l_discount") * 100 + F.lit(0.5))
-                              .cast("long")).alias("d"),
-                    ),
-                    "SELECT sum(l_orderkey % 1000000),"
-                    " sum(l_suppkey % 1000000),"
-                    " sum(CAST(round(l_extendedprice*100) AS BIGINT)"
-                    " % 1000000),"
-                    " sum(CAST(round(l_discount*100) AS BIGINT))"
-                    " FROM lineitem",
-                ),
-                "star_build_oc": (
-                    lambda d: load(spark, d, "orders")
-                    .filter(
-                        (F.col("o_orderdate")
-                         >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-                        & (F.col("o_orderdate")
-                           < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-                    )
-                    .join(
-                        F.broadcast(
-                            load(spark, d, "customer")
-                            .filter(F.col("c_nationkey").isin([1, 6, 11, 16, 21]))
-                            .select("c_custkey", "c_nationkey")
-                        ),
-                        F.col("o_custkey") == F.col("c_custkey"),
-                    )
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(F.col("o_orderkey") % 1000000).alias("x"),
-                    ),
-                    "SELECT count(*), sum(o_orderkey % 1000000)"
-                    " FROM orders JOIN customer ON c_custkey = o_custkey"
-                    " WHERE o_orderdate >= TIMESTAMP '1996-01-01'"
-                    " AND o_orderdate < TIMESTAMP '1998-01-01'"
-                    " AND c_nationkey IN (1, 6, 11, 16, 21)",
-                ),
-                # r8 (r7 verdict #4/#7): component floors for the weak-set
-                # TPC-H queries. Q13 — forced decode of the two orders
-                # columns its twin reads (proves the 0.09 s DuckDB twin is
-                # NOT answered from row-group stats) plus the per-custkey
-                # agg shape (the query's one exchange). Q16 — the fact
-                # 2-col decode. Q7 — the 5-col fact decode its star join
-                # carries through two exchanges.
-                "orders_2col": (
-                    lambda d: load(spark, d, "orders").agg(
-                        F.sum(F.col("o_custkey") % 1000000).alias("a"),
-                        F.sum(F.length("o_orderpriority")).alias("b"),
-                    ),
-                    "SELECT sum(o_custkey % 1000000),"
-                    " sum(length(o_orderpriority)) FROM orders",
-                ),
-                "q13_agg_shape": (
-                    lambda d: load(spark, d, "orders")
-                    .filter(F.col("o_orderpriority") != "1-URGENT")
-                    .groupBy("o_custkey")
-                    .agg(F.count(F.lit(1)).alias("c"))
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(F.col("c") % 97).alias("x"),
-                    ),
-                    "SELECT count(*), sum(c % 97) FROM"
-                    " (SELECT o_custkey, count(*) AS c FROM orders"
-                    " WHERE o_orderpriority <> '1-URGENT'"
-                    " GROUP BY o_custkey)",
-                ),
-                "q16_fact_2col": (
-                    lambda d: load(spark, d, "lineitem").agg(
-                        F.sum(F.col("l_partkey") % 1000000).alias("a"),
-                        F.sum(F.col("l_suppkey") % 1000000).alias("b"),
-                    ),
-                    "SELECT sum(l_partkey % 1000000),"
-                    " sum(l_suppkey % 1000000) FROM lineitem",
-                ),
-                "q7_fact_5col": (
-                    lambda d: load(spark, d, "lineitem").agg(
-                        F.sum(F.col("l_suppkey") % 1000000).alias("a"),
-                        F.sum(F.col("l_orderkey") % 1000000).alias("b"),
-                        F.sum(F.unix_micros("l_shipdate") % 1000000).alias(
-                            "c"
-                        ),
-                        F.sum(
-                            (F.col("l_extendedprice") * 100 + F.lit(0.5))
-                            .cast("long") % 1000000
-                        ).alias("d"),
-                        F.sum(
-                            (F.col("l_discount") * 100 + F.lit(0.5))
-                            .cast("long")
-                        ).alias("e"),
-                    ),
-                    "SELECT sum(l_suppkey % 1000000),"
-                    " sum(l_orderkey % 1000000),"
-                    " sum(epoch_us(l_shipdate) % 1000000),"
-                    " sum(CAST(round(l_extendedprice*100) AS BIGINT)"
-                    " % 1000000),"
-                    " sum(CAST(round(l_discount*100) AS BIGINT))"
-                    " FROM lineitem",
-                ),
-                "topk_agg_shape": (
-                    lambda d: load(spark, d, "lineitem")
-                    .filter(
-                        F.col("l_shipdate")
-                        > F.lit("1996-03-15 00:00:00").cast("timestamp")
-                    )
-                    .groupBy("l_orderkey")
-                    .agg(
-                        F.sum(
-                            ((F.col("l_extendedprice") * 100 + F.lit(0.5))
-                             .cast("long"))
-                            * (100 - (F.col("l_discount") * 100 + F.lit(0.5))
-                               .cast("long"))
-                        ).alias("r")
-                    )
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(F.col("r") % 1000000).alias("x"),
-                    ),
-                    "SELECT count(*), sum(r % 1000000) FROM ("
-                    "SELECT l_orderkey,"
-                    " sum(CAST(round(l_extendedprice*100) AS BIGINT)"
-                    " * (100 - CAST(round(l_discount*100) AS BIGINT))) AS r"
-                    " FROM lineitem WHERE l_shipdate > TIMESTAMP '1996-03-15'"
-                    " GROUP BY l_orderkey)",
-                ),
-            }
-            # SQL-shape probes (r8): the Q4/Q12 join shape and Q16's
-            # filtered pair-dedup stage, run through run_sql so Spark
-            # gets the same hint machinery as the registered queries and
-            # DuckDB executes the identical text.
-            from cuny_courses_spark.sql import run_sql as _rs
-
-            _Q4_SHAPE = """
-WITH fo AS (
-    SELECT o_orderkey FROM orders
-    WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-)
-SELECT /*+ SHUFFLE_HASH(fo) */ count(*) AS n,
-       CAST(sum(l_orderkey % 97) AS BIGINT) AS x
-FROM fo JOIN lineitem ON l_orderkey = o_orderkey
-WHERE l_shipdate > TIMESTAMP '1996-03-01 00:00:00'
-"""
-            _Q16_DEDUP_SHAPE = """
-WITH fp AS (
-    SELECT p_partkey FROM part
-    WHERE p_brand <> 'Brand#45'
-      AND p_type NOT LIKE 'MEDIUM%'
-      AND p_size IN (1, 3, 9, 14, 19, 23, 36, 45)
-)
-SELECT /*+ BROADCAST(fp) */ count(*) AS n,
-       CAST(sum(l_suppkey % 97) AS BIGINT) AS x
-FROM (SELECT DISTINCT l_partkey, l_suppkey
-      FROM lineitem JOIN fp ON l_partkey = p_partkey)
-"""
-            probes["q4_ol_join"] = (
-                lambda d: _rs(spark, d, _Q4_SHAPE),
-                _Q4_SHAPE,
-            )
-            probes["q16_pair_dedup_f"] = (
-                lambda d: _rs(spark, d, _Q16_DEDUP_SHAPE),
-                _Q16_DEDUP_SHAPE,
-            )
-            con = duck_con(sdir)
-            for t, (sfn, dsql) in probes.items():
-                sfn(sdir).toArrow()  # warm
-                scan_floor[f"{t}_spark"] = _time_best(
-                    lambda: sfn(sdir).toArrow(), 3
-                )
-                con.execute(dsql).fetch_arrow_table()  # warm
-                scan_floor[f"{t}_duckdb"] = _time_best(
-                    lambda: con.execute(dsql).fetch_arrow_table(), 3
-                )
-            # Portable-hash floor (r8): q_sample_importance_weighted's
-            # whole cost is the md5-prefix bucket (the engine-wide
-            # deterministic-split contract) evaluated per row — this
-            # probe isolates that hash throughput on both engines over
-            # the same ×100 docs corpus, the denominator of the family's
-            # ~15× dispatch+hash ratio (absolute ~0.5 s).
-            try:
-                dd100 = scaled_docs_layout(sf_dir, factor=100)
-                if dd100 != sf_dir:
-                    md5_sql = (
-                        "SELECT sum(('0x' || substring(md5(CAST(doc_id AS"
-                        " VARCHAR) || '|imp42'), 1, 8))::BIGINT % 10000)"
-                        " FROM documents"
-                    )
-
-                    def _md5_probe(d):
-                        return load(spark, d, "documents").agg(
-                            F.sum(
-                                F.conv(
-                                    F.substring(
-                                        F.md5(
-                                            F.concat(
-                                                F.col("doc_id").cast(
-                                                    "string"
-                                                ),
-                                                F.lit("|imp42"),
-                                            )
-                                        ),
-                                        1,
-                                        8,
-                                    ),
-                                    16,
-                                    10,
-                                ).cast("long")
-                                % 10000
-                            ).alias("a")
-                        )
-
-                    con_d = duck_con(dd100)
-                    _md5_probe(dd100).toArrow()  # warm
-                    scan_floor["md5_bucket_docs_spark"] = _time_best(
-                        lambda: _md5_probe(dd100).toArrow(), 3
-                    )
-                    con_d.execute(md5_sql).fetch_arrow_table()  # warm
-                    scan_floor["md5_bucket_docs_duckdb"] = _time_best(
-                        lambda: con_d.execute(md5_sql).fetch_arrow_table(), 3
-                    )
-                    # Gram-explode floor (r9): the contamination family's
-                    # denominator — build 3-token shingles, explode them,
-                    # hash every gram string — i.e. the probe side of
-                    # q_text_contamination minus the (tiny broadcast)
-                    # join and doc agg. Both engines touch every gram
-                    # string once; the remaining contamination ratio
-                    # above this pair is plan, below it is the string-
-                    # explode architecture floor.
-                    from cuny_courses_spark.operators.dedup import (
-                        _O_SHINGLES,
-                        _shingles,
-                    )
-
-                    gram_sql = (
-                        "SELECT sum(hash(g) % 1000000) FROM (SELECT "
-                        f"unnest({_O_SHINGLES}) AS g FROM documents)"
-                    )
-
-                    def _gram_probe(d):
-                        return (
-                            load(spark, d, "documents")
-                            .select(F.explode(_shingles()).alias("g"))
-                            .agg(
-                                F.sum(F.xxhash64("g") % 1000000).alias("a")
-                            )
-                        )
-
-                    _gram_probe(dd100).toArrow()  # warm
-                    scan_floor["contam_gram_hash_spark"] = _time_best(
-                        lambda: _gram_probe(dd100).toArrow(), 3
-                    )
-                    con_d.execute(gram_sql).fetch_arrow_table()  # warm
-                    scan_floor["contam_gram_hash_duckdb"] = _time_best(
-                        lambda: con_d.execute(gram_sql).fetch_arrow_table(), 3
-                    )
-            except Exception as exc:
-                scan_floor["md5_bucket_docs"] = f"error: {type(exc).__name__}"
-
-            # Spark-only exchange floor (no DuckDB analog BY DESIGN — an
-            # in-process engine never pays an exchange; the delta between
-            # this and q7_fact_5col is the per-exchange cost Q7's two
-            # fact shuffles each add on top of the shared scan floor).
-            def _q7_ex(d):
-                return (
-                    load(spark, d, "lineitem")
-                    .select("l_suppkey", "l_orderkey", "l_shipdate",
-                            "l_extendedprice", "l_discount")
-                    .repartition(32, "l_orderkey")
-                    .agg(
-                        F.sum(F.col("l_suppkey") % 1000000).alias("a"),
-                        F.sum(F.col("l_orderkey") % 1000000).alias("b"),
-                        F.sum(F.unix_micros("l_shipdate") % 1000000).alias(
-                            "c"
-                        ),
-                    )
-                )
-
-            _q7_ex(sdir).toArrow()  # warm
-            scan_floor["q7_fact_exchange_spark"] = _time_best(
-                lambda: _q7_ex(sdir).toArrow(), 3
-            )
-            scan_floor["point"] = f"sf{sf}x100"
-    except Exception as exc:
-        scan_floor = {"error": type(exc).__name__}
-
-    # r16 (r15 VERDICT #2 — "the headline suite cannot demonstrate
-    # parallelism at this data size"): surface the ×100 sweep point's
-    # per-query seconds as FIRST-CLASS `queries` entries (suffix _x100).
-    # At sf0.1 every headline query sits on the ~0.13 s/job dispatch
-    # floor, so the driver's 8-vs-32-core probe reads ≈1 no matter what
-    # the engine does; the ×100 point is compute-dominated (1-3 s/query)
-    # and scales with cores. These are the SAME toArrow best-of-N laps
-    # the sweep already runs — no new timed action, no methodology
-    # change; `value` stays the sf0.1 headline sum, and existing query
-    # names are untouched (entries are only ADDED, per the contract).
-    amp_queries: dict[str, float] = {}
-    amp_point = next(
-        (
-            p
-            for p in sweep
-            if isinstance(p, dict)
-            and p.get("point") == f"sf{sf}x100"
-            and p.get("spark_queries")
-        ),
-        None,
-    )
-    if amp_point:
-        for q, s in amp_point["spark_queries"].items():
-            amp_queries[f"{q}_x100"] = round(s, 3)
-
-    cpus_echo = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    master_echo = spark.sparkContext.master
-
+    per_query = {e.name: r.sec for e, r in head}
+    duck_query = {e.name: r.twin for e, r in head if _num(r.twin)}
+    total = round(sum(per_query.values()), 4) if all(map(_num, per_query.values())) else None
+    duck_total = round(sum(duck_query.values()), 4) if len(duck_query) == len(head) else None
+    # The ×100 sweep point's seconds under stable names: compute-dominated,
+    # so a low-core re-run of the bench shows core-count scaling.
+    x100 = next((p for p in sweep if p["point"] == f"sf{sf}x100"), {})
+    amp = {f"{q}_x100": round(s, 3) for q, s in x100.get("spark_queries", {}).items() if _num(s)}
     detail = {
         "metric": "suite_wall_sec",
         "value": total,
         "unit": "sec",
-        "queries": {**per_query, **amp_queries},
-        "cpus": cpus_echo,
-        "master": master_echo,
+        "queries": {**per_query, **amp},
+        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
+        "master": spark.sparkContext.master,
         "sf": sf,
-        "layout": (
-            f"rechunked_{N_ROW_GROUPS}_row_groups"
-            if sf_dir != orig_sf_dir
-            else "original"
-        ),
+        "layout": f"rechunked_{N_ROW_GROUPS}_row_groups" if base != orig else "original",
         "plan_cache": plan_cache_enabled(),
         "extended": extended,
         "duckdb_queries": duck_query,
         "duckdb_suite_sec": duck_total,
-        "ratio_vs_duckdb": (
-            round(total / duck_total, 3) if duck_total else None
-        ),
-        "jobs_per_query": jobs_per_query,
+        "ratio_vs_duckdb": round(total / duck_total, 3) if total and duck_total else None,
+        "jobs_per_query": {e.name: r.jobs for e, r in head},
         "empty_job_sec": empty_job_sec,
         "sweep_queries": SWEEP,
         "sweep": sweep,
-        "scan_floor": scan_floor,
         "extended_sweep": ext_sweep,
     }
-    sidecar = Path(__file__).resolve().parent / "BENCH_DETAIL.json"
     try:
-        sidecar.write_text(json.dumps(detail, indent=1))
+        (Path(__file__).resolve().parent / SIDECAR).write_text(json.dumps(detail, indent=1))
     except OSError:
         pass
-    # The compact line is the LAST line printed and MUST stay inside the
-    # driver's 2000-char tail-capture window (r3 verdict #1) — rounds 6-7
-    # regressed this by inlining scan_floor + the full extended_sweep and
-    # the driver recorded "parsed": null both rounds (BENCH_r06/r07). The
-    # compact line now carries the headline + RATIO summaries only; full
-    # per-point seconds, scan floors and twins live in the sidecar
-    # (committed alongside, so the judge still gets every number).
-    # ext100: at the top extended-sweep point, the Spark/DuckDB ratio for
-    # every twinned entry, bare Spark seconds for untwinned ones.
-    ext100: dict[str, float | str] = {}
-    for point in sorted(ext_sweep, reverse=True):  # x100 sorts before x10
-        entry = ext_sweep[point]
-        if not any(isinstance(v, (int, float)) for v in entry.values()):
-            continue
-        for k, v in entry.items():
-            # sidecar-only families (per-lap lists, pair counts, disk
-            # footprints, floor attributions) never enter the compact
-            # line — they'd stringify large and trip the size guard.
-            if k.endswith(
-                (
-                    "_duckdb",
-                    "_laps",
-                    "_pairs",
-                    "_shuffle_mb",
-                    "_floor_attr",
-                    "_layout_sec",
-                    # r16: the bucketed sidecar A/Bs are secondary
-                    # evidence (the declared q21/q16/q10/q13 paths now
-                    # carry the layout themselves) — sidecar-only, so
-                    # the size guard keeps jobs_per_query instead.
-                    "_bucketed",
-                )
-            ) or k.startswith("_"):
-                continue
-            tw = entry.get(f"{k}_duckdb")
-            if isinstance(v, (int, float)) and isinstance(tw, (int, float)):
-                ext100[k] = round(v / tw, 2) if tw else None
-            elif isinstance(v, (int, float)):
-                ext100[k] = v  # untwinned: engine seconds
-            else:  # "skipped:"/"error:" markers stay visible, abbreviated
-                ext100[k] = str(v).split(":")[0]
-        ext100["point"] = point
-        break
-    compact = {
-        "metric": "suite_wall_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": {**per_query, **amp_queries},
-        # r16: the scaling probe is self-evidencing — the honored core
-        # count and the actual master string ride in the artifact (r15's
-        # `suspect_cpus_ignored` was a misdiagnosis the artifact itself
-        # could not refute).
-        "cpus": cpus_echo,
-        "master": master_echo,
-        "sf": sf,
-        "duckdb_suite_sec": duck_total,
-        "ratio_vs_duckdb": detail["ratio_vs_duckdb"],
-        "jobs_per_query": jobs_per_query,
-        "empty_job_sec": empty_job_sec,
-        "sweep_ratios": {
-            p["point"]: p.get("ratio")
-            for p in sweep
-            if isinstance(p, dict) and "point" in p
-        },
-        # Per-query ratios at the LARGEST completed sweep point (r4
-        # verdict #3: the suite ratio alone hid a 0.2×–7.6× per-query
-        # spread behind a 1.19× headline; the compact artifact must show
-        # the spread without a sidecar read).
-        "sweep_query_ratios_top_point": _top_point_query_ratios(sweep),
-        "ext_ratios_top_point": ext100,
-        "detail": sidecar.name,
-    }
-    # Hard size guard: drop lowest-priority fields until the line fits the
-    # tail window with headroom; record what was trimmed (never silent).
-    # r16 reorder: the per-query top-point ratio block drops FIRST — its
-    # content is recomputable from the sidecar's sweep section (and the
-    # new _x100 queries entries carry the Spark side), while the ext
-    # ratio table is the judge's primary cross-family evidence.
-    drop_order = [
-        "sweep_query_ratios_top_point",
-        "jobs_per_query",
-        "ext_ratios_top_point",
-    ]
-    trimmed: list[str] = []
-    while len(json.dumps(compact)) > 1900 and drop_order:
-        field = drop_order.pop(0)
-        if compact.pop(field, None) is not None:
-            trimmed.append(field)
-            compact["trimmed_to_sidecar"] = trimmed
-    # The trimmed marker is appended AFTER the length check above, and
-    # drop_order can run dry — re-check and fall back to a minimal object
-    # rather than ever re-triggering the parsed:null tail-capture
-    # regression (r8 ADVICE: e.g. many error-string query entries).
-    if len(json.dumps(compact)) > 1900:
-        compact = {
-            "metric": "suite_wall_sec",
-            "value": total,
-            "unit": "sec",
-            "sf": sf,
-            "duckdb_suite_sec": duck_total,
-            "ratio_vs_duckdb": detail["ratio_vs_duckdb"],
-            "trimmed_to_sidecar": ["all_detail_fields"],
-            "detail": sidecar.name,
-        }
-    print(json.dumps(compact))
+    print(compact(detail))
 
 
 if __name__ == "__main__":

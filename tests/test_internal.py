@@ -442,7 +442,7 @@ def test_scaled_docs_layout_replicas_disjoint(tmp_path):
     import pyarrow.parquet as pq
 
     sys.path.insert(0, str(__import__("pathlib").Path(__file__).parent.parent))
-    from bench import scaled_docs_layout
+    from amplify import scaled_docs_layout
 
     src = "/root/testdata/sf0.001"
     out = scaled_docs_layout(src, 2)

@@ -327,11 +327,12 @@ def test_plan_hygiene_no_unbounded_pair_scans(spark):
     BroadcastNestedLoopJoin (acceptable ONLY when the build side is a
     scalar/1-row aggregate or a deliberately bounded set, allowlisted
     below with the justification). A new query that ships an unbounded
-    pair scan fails here before it ever meets real data."""
+    pair scan fails here before it ever meets real data. An allowlisted
+    query whose plan has no BroadcastNestedLoopJoin fails too, so a stale
+    entry cannot hide a nested-loop join added to that query later."""
     bnlj_allowed = {
         "q_join_cross",            # deliberate 5×25 cartesian demo, tiny side
         "q_etl_csv_validation",    # 1-row global count broadcast (scalar)
-        "q_text_idf_top_terms",    # 1-row corpus-size N broadcast (scalar)
         "q_sample_balance_classes",  # 1-row global min-class-count (scalar)
         "q_sim_topk_per_query",    # bounded query set (vec_id < 10) non-equi
         "q_sim_ivf_topk",          # bounded query set exact referee (the q_sim_topk_per_query shape) + 1-row cert flags
@@ -361,6 +362,9 @@ def test_plan_hygiene_no_unbounded_pair_scans(spark):
             offenders[name] = "CartesianProduct"
         elif "BroadcastNestedLoopJoin" in plan and name not in bnlj_allowed:
             offenders[name] = "BroadcastNestedLoopJoin (not allowlisted)"
+        elif "BroadcastNestedLoopJoin" not in plan and name in bnlj_allowed:
+            offenders[name] = "allowlisted, but the plan has no BroadcastNestedLoopJoin"
+    assert set(bnlj_allowed) <= set(_QS), set(bnlj_allowed) - set(_QS)
     assert not offenders, offenders
 
 

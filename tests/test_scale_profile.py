@@ -154,14 +154,14 @@ def test_scaled_docs_embeddings_decorrelate(spark):
     import numpy as np
     import pyarrow.parquet as pq
 
-    import bench
+    import amplify
 
-    out = bench.scaled_docs_layout("/root/testdata/sf0.001", 66)
+    out = amplify.scaled_docs_layout("/root/testdata/sf0.001", 66)
     assert out != "/root/testdata/sf0.001", "layout synthesis failed"
     t = pq.read_table(f"{out}/embeddings.parquet")
     ids = np.array(t.column("vec_id").to_pylist())
     mat = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
-    base_n = (ids < bench._SCALE_BASE).sum()
+    base_n = (ids < amplify.KEY_SHIFT).sum()
     reps = {i: mat[i * base_n : (i + 1) * base_n] for i in (0, 1, 64)}
     # replica boundaries really are replicas of the same base corpus
     assert len(ids) == 66 * base_n

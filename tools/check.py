@@ -6,12 +6,13 @@ needs), CLOSE (≤1e-9 but hash would FAIL), ROWS (no oracle), or FAIL.
 
 Usage: python tools/check.py [--sf /root/testdata/sf0.01] [name ...]
 
-``--amplify N`` first synthesizes bench.scaled_layout's N× key-shifted
-copy of --sf and checks against THAT (default names then = the bench
-sweep subset, whose oracles stay tractable at GB scale) — the
-reproducible form of the amplified-corpus bit-exactness claim in SURVEY
-§8 (large profile on natural data: AQE, shuffle-hash star, split
-accumulator). Avoid quadratic-oracle queries with --amplify.
+``--amplify N`` first builds ``amplify.scaled_layout``'s N× key-shifted
+copy of --sf (the same corpus ``bench.py`` times) and checks against it;
+the default names are then ``amplify.SWEEP``, whose oracles stay
+tractable at GB scale. Amplified inputs switch on the large profile
+(AQE, shuffle-hash star, split accumulator) and, from 1 M source rows,
+the bucketed mirrors, so this checks bit-exactness on plans the driver's
+small SFs never reach. Avoid quadratic-oracle queries with --amplify.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ def main() -> int:
     args = ap.parse_args()
 
     if args.amplify:
-        from bench import SWEEP, prepare_layout, scaled_layout
+        from amplify import SWEEP, prepare_layout, scaled_layout
 
         base = prepare_layout(args.sf)
         args.sf = scaled_layout(base, factor=args.amplify)

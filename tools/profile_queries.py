@@ -45,7 +45,7 @@ def main() -> int:
 
     sf_dir = args.sf
     if args.amplify:
-        from bench import prepare_layout, scaled_layout
+        from amplify import prepare_layout, scaled_layout
 
         sf_dir = scaled_layout(prepare_layout(args.sf), factor=args.amplify)
 

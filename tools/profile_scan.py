@@ -30,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import prepare_layout, scaled_layout  # noqa: E402
+from amplify import prepare_layout, scaled_layout  # noqa: E402
 from cuny_courses_spark.common import fpavg, fpsum  # noqa: E402
 from cuny_courses_spark.registry import queries  # noqa: E402
 from cuny_courses_spark.session import get_session  # noqa: E402
