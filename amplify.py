@@ -11,19 +11,17 @@
 
 These are timing and plan-coverage corpora: values at amplified points are
 not oracle-checked here, DuckDB reads the same files. Every layout is
-published by ``_publish``, so concurrent builders (a bench run beside
-``tools/check.py --amplify``) never read each other's half-written files.
+published by ``lakeformat.publish_dir`` under ``ROOT``, so concurrent
+builders (a bench run beside ``tools/check.py --amplify``) never read
+each other's half-written files.
 Each function falls back to its source directory when synthesis fails.
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-import tempfile
 from pathlib import Path
-from typing import Callable, Iterable
+
+from cuny_courses_spark.lakeformat import content_signature, publish_dir, source_key
 
 ROOT = Path("/tmp") / "ccs_bench_layout"
 N_ROW_GROUPS = 32
@@ -51,66 +49,6 @@ _SCALE_KEYS = {
 }
 
 
-def _signature(tag: str, sf_dir: str, files: Iterable[Path]) -> str:
-    # Content identity (name/size/mtime per file), not just the path: a
-    # regenerated sf_dir must never serve a stale layout.
-    sig = hashlib.md5(f"{tag}:{sf_dir}".encode())
-    for f in files:
-        st = f.stat()
-        sig.update(f"{f.name}:{st.st_size}:{st.st_mtime_ns}".encode())
-    return sig.hexdigest()[:12]
-
-
-def _builder_alive(tmp: Path) -> bool:
-    # Temp dirs are named ``.<target>.<pid>.<random>``.
-    try:
-        os.kill(int(tmp.name.rsplit(".", 2)[-2]), 0)
-    except (ValueError, IndexError, ProcessLookupError):
-        return False
-    except PermissionError:
-        return True
-    return True
-
-
-def _publish(family: str, sig: str, build: Callable[[Path], None]) -> Path:
-    """Return ``ROOT/<family>_<sig>``, building it first if no process has.
-
-    ``build`` writes into a temp directory private to this process, beside
-    the target, and ``os.rename`` publishes it whole; a directory under the
-    target name is therefore always complete. A process that loses the
-    race discards its own copy. Before building, published layouts of the
-    same family with another signature (multi-GB, they must not pile up
-    across dataset regenerations) and temp directories whose builder has
-    exited are removed; an unpublished temp directory is never adopted.
-    """
-    out = ROOT / f"{family}_{sig}"
-    if out.is_dir():
-        return out
-    ROOT.mkdir(parents=True, exist_ok=True)
-    for old in ROOT.glob(f"{family}_*"):
-        if old != out:
-            shutil.rmtree(old, ignore_errors=True)
-    for tmp in ROOT.glob(f".{family}_*"):
-        if not _builder_alive(tmp):
-            shutil.rmtree(tmp, ignore_errors=True)
-    tmp = Path(tempfile.mkdtemp(prefix=f".{out.name}.{os.getpid()}.", dir=ROOT))
-    try:
-        build(tmp)
-        os.chmod(tmp, 0o755)  # mkdtemp's 0o700 is a temp-dir default, not a layout rule
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if not out.is_dir():
-                raise
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _source_key(sf_dir: str) -> str:
-    return hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-
-
 def prepare_layout(sf_dir: str) -> str:
     """``sf_dir`` re-chunked into ``N_ROW_GROUPS`` row groups per file;
     values are bit-identical, only the layout changes."""
@@ -127,8 +65,8 @@ def prepare_layout(sf_dir: str) -> str:
                 raise RuntimeError(f"schema drift re-chunking {f.name}")
 
     try:
-        sig = _signature("rg:v2", sf_dir, files)
-        return str(_publish(f"rg_{_source_key(sf_dir)}", sig, build))
+        sig = content_signature("rg:v2", sf_dir, files)
+        return str(publish_dir(ROOT, f"rg_{source_key(sf_dir)}", sig, build))
     except Exception:
         return sf_dir
 
@@ -173,8 +111,8 @@ def scaled_layout(sf_dir: str, factor: int = 10) -> str:
                     w.write_table(r, row_group_size=rg)
 
     try:
-        sig = _signature(f"scale{factor}:v3", sf_dir, files)
-        return str(_publish(f"scaled_x{factor}_{_source_key(sf_dir)}", sig, build))
+        sig = content_signature(f"scale{factor}:v3", sf_dir, files)
+        return str(publish_dir(ROOT, f"scaled_x{factor}_{source_key(sf_dir)}", sig, build))
     except Exception:
         return sf_dir
 
@@ -238,7 +176,7 @@ def scaled_docs_layout(sf_dir: str, factor: int = 10) -> str:
                 w.write_table(r, row_group_size=max(1, r.num_rows // 4))
 
     try:
-        sig = _signature(f"docscale{factor}:v4", sf_dir, files)
-        return str(_publish(f"docs_x{factor}_{_source_key(sf_dir)}", sig, build))
+        sig = content_signature(f"docscale{factor}:v4", sf_dir, files)
+        return str(publish_dir(ROOT, f"docs_x{factor}_{source_key(sf_dir)}", sig, build))
     except Exception:
         return sf_dir

@@ -27,6 +27,10 @@ link + fsync pair is the substitution point: a conditional PUT
 
 Readers take an ``opener`` (default ``open``) so a caller can count its
 metadata reads through its own seam.
+
+Derived directories (amplified corpora, bucketed mirrors, partitioned
+copies) are built once per content signature and published whole by
+``publish_dir``: a private temp directory, then rename(2).
 """
 
 from __future__ import annotations
@@ -34,8 +38,12 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
+import tempfile
 import time
 import uuid
+from pathlib import Path
+from typing import Callable, Iterable
 
 
 def manifest_dir(table_dir: str) -> str:
@@ -337,3 +345,73 @@ def head_version(table_dir: str, opener=open) -> int:
     while os.path.exists(manifest_path(table_dir, v + 1)):
         v += 1
     return v
+
+
+# -- derived directories ---------------------------------------------------
+
+
+def content_signature(tag: str, src: str, files: Iterable[str | os.PathLike]) -> str:
+    """Content identity of ``files`` under ``src`` (name, size, mtime per
+    file), not just the path: a regenerated source must never serve a
+    stale derived copy. ``tag`` names the derivation and its format."""
+    sig = hashlib.md5(f"{tag}:{src}".encode())
+    for f in files:
+        st = os.stat(f)
+        sig.update(f"{Path(f).name}:{st.st_size}:{st.st_mtime_ns}".encode())
+    return sig.hexdigest()[:12]
+
+
+def source_key(src: str) -> str:
+    """Short hash of ``src``'s absolute path, for family names: copies
+    derived from two source directories never evict each other."""
+    return hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:8]
+
+
+def _builder_alive(tmp: Path) -> bool:
+    # Temp dirs are named ``.<target>.<pid>.<random>``.
+    try:
+        os.kill(int(tmp.name.rsplit(".", 2)[-2]), 0)
+    except (ValueError, IndexError, ProcessLookupError):
+        return False
+    except PermissionError:
+        return True
+    return True
+
+
+def publish_dir(
+    root: str | os.PathLike, family: str, sig: str, build: Callable[[Path], None]
+) -> Path:
+    """Return ``root/<family>_<sig>``, building it first if no process has.
+
+    ``build`` writes into a temp directory private to this process, beside
+    the target, and ``os.rename`` publishes it whole; a directory under the
+    target name is therefore always complete. A process that loses the
+    race discards its own copy. Before building, published directories of
+    the same family with another signature (derived copies can be
+    multi-GB, they must not pile up across source regenerations) and temp
+    directories whose builder has exited are removed; an unpublished temp
+    directory is never adopted.
+    """
+    root = Path(root)
+    out = root / f"{family}_{sig}"
+    if out.is_dir():
+        return out
+    root.mkdir(parents=True, exist_ok=True)
+    for old in root.glob(f"{family}_*"):
+        if old != out:
+            shutil.rmtree(old, ignore_errors=True)
+    for tmp in root.glob(f".{family}_*"):
+        if not _builder_alive(tmp):
+            shutil.rmtree(tmp, ignore_errors=True)
+    tmp = Path(tempfile.mkdtemp(prefix=f".{out.name}.{os.getpid()}.", dir=root))
+    try:
+        build(tmp)
+        os.chmod(tmp, 0o755)  # mkdtemp's 0o700 is a temp-dir default, not a layout rule
+        try:
+            os.rename(tmp, out)
+        except OSError:
+            if not out.is_dir():
+                raise
+        return out
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

@@ -576,51 +576,6 @@ def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r.crossJoin(n).select("r_name", "n_name")
 
 
-def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str] | None:
-    """Materialize orders & customer as 8-bucket tables on o_custkey /
-    c_custkey (external parquet under /tmp). Returns the table names, or
-    None if the environment can't write (query then falls back to plain
-    frames — correctness never depends on the layout).
-
-    Paths are (content-sig, pid)-scoped: two processes benching the same
-    sf_dir never write the same directory, so a reader can't observe a
-    half-overwritten table. On any failure the partially-created catalog
-    entries are dropped before falling back, so nothing dangling remains.
-    """
-    import hashlib
-    import os as _os
-
-    from cuny_courses_spark.session import _dir_signature
-
-    sig = hashlib.md5(
-        repr((sf_dir, _dir_signature(sf_dir))).encode()
-    ).hexdigest()[:10]
-    scope = f"{sig}_{_os.getpid()}"
-    names = (f"ccs_bkt_orders_{scope}", f"ccs_bkt_customer_{scope}")
-    specs = (("orders", "o_custkey"), ("customer", "c_custkey"))
-    try:
-        for name, (table, key) in zip(names, specs):
-            if spark.catalog.tableExists(name):
-                continue
-            (
-                load(spark, sf_dir, table)
-                .write.bucketBy(8, key)
-                .sortBy(key)
-                .option("path", f"/tmp/ccs_bucketed/{scope}/{table}")
-                .mode("overwrite")
-                .format("parquet")
-                .saveAsTable(name)
-            )
-        return names
-    except Exception:
-        for name in names:  # drop partial state; fallback path needs none
-            try:
-                spark.sql(f"DROP TABLE IF EXISTS {name}")
-            except Exception:
-                pass
-        return None
-
-
 @register(
     "q_join_bucketed",
     oracle=f"""
@@ -633,20 +588,26 @@ GROUP BY c_mktsegment
 )
 def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-free co-located join via bucketing — THE pre-partitioning
-    lever for repeated fact⋈dim-key joins at 100 TB (SURVEY §4): both
-    sides are written bucketed (8 buckets, sorted) on the join key at
-    ingest, so the sort-merge join reads matching buckets directly with
-    ZERO exchange on either side — the only shuffle in this plan is the
-    final tiny groupBy(c_mktsegment). The ``merge`` hint pins SMJ (a
-    broadcast of customer would hide the bucketing demonstration; at real
-    scale the customer side isn't broadcastable anyway).
+    lever for repeated fact⋈dim-key joins at 100 TB (SURVEY §4): above
+    the mirror threshold both sides are the custkey-bucketed ingest
+    mirrors q13 also reads (sources/bucketed.py), so the sort-merge join
+    reads matching buckets directly with ZERO exchange on either side —
+    the only shuffle in this plan is the final tiny groupBy(c_mktsegment).
+    The ``merge`` hint pins SMJ (a broadcast of customer would hide the
+    bucketing; at real scale the customer side isn't broadcastable
+    anyway). Below the threshold, with ``SPARK_GRAFT_NO_BUCKETED=1`` or on
+    any mirror failure the same join runs over the plain scans.
 
-    plan-asserted in tests: exactly one Exchange (the final agg), none
-    feeding the join."""
-    t = _bucketed_tables(spark, sf_dir)
-    if t is not None:
-        o, c = spark.table(t[0]), spark.table(t[1])
-    else:  # read-only fallback: same semantics, shuffled join
+    plan-asserted in tests (mirror path): exactly one Exchange (the final
+    agg), none feeding the join."""
+    from cuny_courses_spark.sources.bucketed import clustered_views
+
+    m = clustered_views(
+        spark, sf_dir, [("orders", "o_custkey"), ("customer", "c_custkey")]
+    )
+    if m is not None:
+        o, c = spark.table(m["orders"]), spark.table(m["customer"])
+    else:
         o = load(spark, sf_dir, "orders")
         c = load(spark, sf_dir, "customer")
     j = o.join(c.hint("merge"), o.o_custkey == c.c_custkey)
@@ -678,20 +639,25 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     static optimizer cannot prune because the years arrive via the join,
     not as a literal predicate on the fact.
 
-    The partitioned copy is written once per sf_dir content signature
-    (same `_io_dir` layout the scan queries use)."""
+    The partitioned copy is published once per content signature of
+    ``orders.parquet`` (``lakeformat.publish_dir``, beside the `_io_dir`
+    copies the scan queries use), so a killed write or a regenerated
+    source is never read."""
+    from cuny_courses_spark.lakeformat import content_signature, publish_dir
     from cuny_courses_spark.operators.scans import _io_dir
+    from cuny_courses_spark.sources.bucketed import _table_files
 
-    out = _io_dir(sf_dir, "orders_dpp")
     o = load(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("long")
     )
-    import os
 
-    if not os.path.isdir(out):
+    def build(tmp) -> None:
         o.select("o_orderkey", "o_orderstatus", "o_year").write.mode(
             "overwrite"
-        ).partitionBy("o_year").parquet(out)
+        ).partitionBy("o_year").parquet(str(tmp))
+
+    sig = content_signature("dpp:v1", sf_dir, _table_files(sf_dir, "orders"))
+    out = str(publish_dir(_io_dir(sf_dir, ""), "orders_dpp", sig, build))
     # Explicit schema: a zero-file partitioned dataset (empty input) has
     # nothing to infer from (r3 verdict #6); partition discovery — and
     # with it the runtime pruning predicate — still applies.

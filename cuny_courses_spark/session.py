@@ -130,7 +130,7 @@ TEXT_EXPANSION = 96
 
 # Memoized per (path, top-level content signature): a regenerated/grown
 # dataset at the same path must re-derive the tuning decision (same contract
-# as bench.prepare_layout's size/mtime-keyed cache). Values are
+# as amplify.prepare_layout's size/mtime-keyed cache). Values are
 # (bytes, rows) pairs — see _input_stats.
 _DIR_BYTES: dict[tuple[str, tuple], tuple[int, int]] = {}
 

@@ -1,54 +1,39 @@
-"""Ingest-time clustered (bucketed) table mirrors — guide §2.4/§6.
+"""Bucketed mirrors: a source table's rows, bucketed on one join key.
 
-The round-15 bench sidecars proved that the remaining TPC-H gap after the
-broadcast work (q21/q16's shuffle-agg band, VERDICT r15 "Next round" #1)
-is LAYOUT, not plan: co-bucketing lineitem/orders on the order key makes
-the fact join and both per-order rollups exchange-free (q21 ×100
-3.88 → 2.13 s in the r15 sidecar A/B), and no hint/fold can delete that
-exchange from an unclustered scan. This module promotes that layout from
-a bench sidecar to a DECLARED ingest step the engine owns — the same
-"engine owns ingest" argument as bench.prepare_layout (row-group
-re-chunking): values are bit-identical (a bucketed mirror holds exactly
-the source table's rows), only the physical layout changes, and the
-mirror is keyed on the source's content signature so regenerated data
-can never serve a stale copy.
+Contract:
 
-At 100 TB this is exactly what a production deployment does: write the
-fact tables bucketed on their dominant join key at ingest (Spark
-``bucketBy``; Iceberg ``bucket(N, key)`` partition transforms), so every
-downstream per-key join/aggregate skips its shuffle forever. Two mirrors
-bucketed on the same key with the same bucket count join bucket by
-bucket: adopters pin a shuffled-hash join with a ``SHUFFLE_HASH``
-hint, which needs neither an Exchange nor a Sort. The mirrors
-are written WITHOUT ``sortBy``: Spark reads a bucket's sort order only
-under ``spark.sql.legacy.bucketedTableScan.outputOrdering`` (off by
-default, never set here), so a sorted write would be pure build cost and
-a sort-merge join over the mirrors still sorts both sides. The bucket
-count is scale-adaptive (~256 MB of source bytes per bucket, floor 32 —
-the local profile's shuffle partition count), parameterised via
-``SPARK_GRAFT_BUCKETS``.
+- Threshold: a table below ``_MIN_MIRROR_ROWS`` rows (parquet footers)
+  is never mirrored; its callers run their plain SQL text.
+- Signature: a mirror is named ``ccs_bkt_<table>_<key>_<source path
+  hash>_<sig>``, where ``sig`` covers the source files' names, sizes and
+  mtimes, the bucket count (~256 MB of source per bucket, floor 32) and
+  the mirror format tag. Regenerated data never serves a stale mirror.
+- Publish and adopt: the first process to ask writes one file per bucket
+  into a staging directory of the warehouse, and
+  ``lakeformat.publish_dir`` renames it into place whole. Every process,
+  the builder included, then registers the published directory as an
+  external bucketed table. A later process adopts it without writing.
+  Publishing removes the family's other signatures and the staging
+  directories of dead builders.
+- Kill switch: ``SPARK_GRAFT_NO_BUCKETED=1`` returns the plain name.
+- Failure: any error returns the plain name, so adopters run their plain
+  SQL text with the same rows.
 
-Cost/safety posture:
-- Mirrors are built lazily, once per (table, key, content signature) per
-  warehouse, by the first query that asks — a one-time shuffle+write of
-  the source table, amortized across every later per-key query exactly
-  like any ingest cost. Below ``_MIN_MIRROR_ROWS`` the mirror is skipped
-  outright: at that scale the exchange it would remove is sub-dispatch-
-  floor, and the driver's small-SF correctness gates keep exercising the
-  plain path.
-- EVERY failure (unwritable warehouse, races, missing footers, disabled
-  via ``SPARK_GRAFT_NO_BUCKETED=1``) falls back to the plain view name;
-  adopting queries then run their unchanged r15 SQL text.
-- No result caching: the mirror stores the BASE TABLE's rows (an ingest
-  artifact), never a query result or intermediate; every query over it
-  recomputes from (mirrored) parquet scans.
+Two mirrors bucketed on the same key with the same bucket count join
+bucket by bucket with no Exchange. The mirrors are unsorted: Spark reads
+a bucket's sort order only under a legacy conf that is never set here.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import uuid
+from urllib.parse import urlparse
+
 from pyspark.sql import SparkSession
+
+from cuny_courses_spark.lakeformat import content_signature, publish_dir, source_key
 
 # Below this the exchange a mirror would remove is sub-dispatch-floor
 # (and the driver's small-SF correctness gates keep exercising the plain
@@ -56,64 +41,41 @@ from pyspark.sql import SparkSession
 # point (orders 1.5 M / lineitem 6 M) and everything above — mirrored.
 _MIN_MIRROR_ROWS = 1_000_000
 
-# (session id, table, key, sig) -> mirror name, to skip catalog round trips.
-_KNOWN: dict[tuple, str] = {}
+# (application id, mirror name) pairs registered in this process.
+_KNOWN: set[tuple[str, str]] = set()
+
+
+def _table_files(sf_dir: str, table: str) -> list[str]:
+    path = f"{sf_dir}/{table}.parquet"
+    return sorted(glob.glob(path) or glob.glob(f"{path}/*.parquet"))
 
 
 def _source_stats(sf_dir: str, table: str) -> tuple[int, int] | None:
     """(rows, bytes) from parquet footers of ``table`` — metadata only."""
     import pyarrow.parquet as pq
 
-    path = f"{sf_dir}/{table}.parquet"
-    matches = sorted(glob.glob(path) or glob.glob(f"{path}/*.parquet"))
-    if not matches:
+    files = _table_files(sf_dir, table)
+    if not files:
         return None
     try:
-        rows = sum(pq.ParquetFile(m).metadata.num_rows for m in matches)
-        size = sum(os.path.getsize(m) for m in matches)
-        return rows, size
+        rows = sum(pq.ParquetFile(m).metadata.num_rows for m in files)
+        return rows, sum(os.path.getsize(m) for m in files)
     except OSError:
         return None
 
 
-def _signature(sf_dir: str, table: str) -> str | None:
-    import hashlib
-
-    path = f"{sf_dir}/{table}.parquet"
-    matches = sorted(glob.glob(path) or glob.glob(f"{path}/*.parquet"))
-    if not matches:
-        return None
-    sig = hashlib.md5(b"bkt:v1")
-    for m in matches:
-        try:
-            st = os.stat(m)
-        except OSError:
-            return None
-        sig.update(f"{m}:{st.st_size}:{st.st_mtime_ns}".encode())
-    return sig.hexdigest()[:12]
-
-
-def _n_buckets(src_bytes: int) -> int:
-    """Scale-adaptive bucket count: ~256 MB of source bytes per bucket,
-    floor 32 (the large profile's shuffle partition count, so local runs
-    keep full-core scan parallelism — bucketed files don't split). The
-    floor/override is a tuning default, not a local[32]-only constant: at
-    100 TB the bytes term dominates (e.g. 30 TB of lineitem → ~120k
-    buckets) and ``SPARK_GRAFT_BUCKETS`` pins it for a deployment."""
-    env = os.environ.get("SPARK_GRAFT_BUCKETS")
-    if env:
-        try:
-            return max(1, int(env))
-        except ValueError:
-            pass
-    return max(32, src_bytes // (256 << 20))
+def _warehouse(spark: SparkSession) -> str:
+    url = urlparse(spark.conf.get("spark.sql.warehouse.dir"))
+    if url.scheme not in ("", "file"):
+        raise ValueError(f"mirrors publish to a local warehouse, not {url.scheme}")
+    return url.path
 
 
 def clustered_view(
     spark: SparkSession, sf_dir: str, table: str, key: str
 ) -> str:
     """Name of a bucketed-by-``key`` mirror of ``table`` over ``sf_dir``,
-    creating it on first use — or the plain view name ``table`` when the
+    publishing it on first use — or the plain view name ``table`` when the
     mirror is unavailable (small input, disabled, or any failure).
 
     Callers substitute the returned name into their SQL text only when it
@@ -125,21 +87,42 @@ def clustered_view(
         stats = _source_stats(sf_dir, table)
         if stats is None or stats[0] < _MIN_MIRROR_ROWS:
             return table
-        sig = _signature(sf_dir, table)
-        if sig is None:
-            return table
-        name = f"ccs_bkt_{table}_{key}_{sig}"
-        # applicationId is unique per SparkContext (no id()-reuse footgun
-        # after a session is GC'd) and one py4j call — same cost class as
-        # the tableExists probe it short-circuits.
-        memo_key = (spark.sparkContext.applicationId, table, key, sig)
-        if _KNOWN.get(memo_key) == name:
+        n = max(32, stats[1] // (256 << 20))
+        family = f"ccs_bkt_{table}_{key}_{source_key(sf_dir)}"
+        sig = content_signature(f"bkt:v2:{n}", sf_dir, _table_files(sf_dir, table))
+        name = f"{family}_{sig}"
+        memo = (spark.sparkContext.applicationId, name)
+        if memo in _KNOWN:
             return name
-        if spark.catalog.tableExists(name):
-            _KNOWN[memo_key] = name
-            return name
-        _build_mirror(spark, sf_dir, table, key, name, stats[1])
-        _KNOWN[memo_key] = name
+        from cuny_courses_spark.sources.loaders import load
+
+        df = load(spark, sf_dir, table)
+
+        def build(tmp) -> None:
+            # repartition on the bucket key first, so each write task holds
+            # one bucket and writes one file. The staging table is external
+            # (``path``), so dropping it keeps the files.
+            stage = f"ccs_stage_{uuid.uuid4().hex}"
+            spark.sparkContext.setJobDescription(f"ingest: bucketed mirror {name}")
+            try:
+                (
+                    df.repartition(n, key)
+                    .write.format("parquet")
+                    .bucketBy(n, key)
+                    .mode("overwrite")
+                    .option("path", str(tmp))
+                    .saveAsTable(stage)
+                )
+            finally:
+                spark.sparkContext.setJobDescription(None)
+                spark.sql(f"DROP TABLE IF EXISTS {stage}")
+
+        out = publish_dir(_warehouse(spark), family, sig, build)
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {name} ({df._jdf.schema().toDDL()}) "
+            f"USING parquet CLUSTERED BY ({key}) INTO {n} BUCKETS LOCATION '{out}'"
+        )
+        _KNOWN.add(memo)
         return name
     except Exception:
         return table
@@ -169,68 +152,3 @@ def clustered_views(
         return out
     except Exception:
         return None
-
-
-def _build_mirror(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    key: str,
-    name: str,
-    src_bytes: int,
-) -> None:
-    """Write the mirror: DROP stale same-(table, key) signatures (and
-    forget them in ``_KNOWN``), clear leftover warehouse dirs from dead
-    sessions (an in-memory catalog forgets its tables; ``saveAsTable``
-    refuses an existing path), then one bucketed write of the full source
-    table."""
-    import shutil
-    from urllib.parse import urlparse
-
-    from cuny_courses_spark.sources.loaders import load
-
-    # Disk hygiene with working-set awareness: one bench run legitimately
-    # holds mirrors for SEVERAL corpora at once (the ×10 and ×100 sweep
-    # layouts of the same tables), so dropping every other signature
-    # would churn a full rebuild at each factor switch. Keep the 2 most
-    # recent other signatures per (table, key); drop older ones (stale
-    # regenerated-data leftovers). The target dir itself is always
-    # cleared (an in-memory catalog forgets its tables between sessions
-    # and saveAsTable refuses an existing path).
-    prefix = f"ccs_bkt_{table}_{key}_"
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    if wh:
-        others = sorted(
-            (
-                d
-                for d in glob.glob(os.path.join(wh, f"{prefix}*"))
-                if os.path.basename(d) != name
-            ),
-            key=lambda d: os.path.getmtime(d),
-            reverse=True,
-        )
-        for old in others[2:]:
-            dropped = os.path.basename(old)
-            spark.sql(f"DROP TABLE IF EXISTS {dropped}")
-            shutil.rmtree(old, ignore_errors=True)
-            for k in [k for k, v in _KNOWN.items() if v == dropped]:
-                del _KNOWN[k]
-        shutil.rmtree(os.path.join(wh, name), ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sparkContext.setJobDescription(f"ingest: bucketed mirror {name}")
-    try:
-        from pyspark.sql import functions as F
-
-        n = _n_buckets(src_bytes)
-        (
-            # Repartition on the bucket key FIRST so each write task holds
-            # exactly one bucket → ONE file per bucket instead of one per
-            # (task, bucket): fewer, larger files for every later scan.
-            load(spark, sf_dir, table)
-            .repartition(n, F.col(key))
-            .write.bucketBy(n, key)
-            .mode("overwrite")
-            .saveAsTable(name)
-        )
-    finally:
-        spark.sparkContext.setJobDescription(None)

@@ -31,3 +31,17 @@ def duck():
     from cuny_courses_spark.oracle import duck_con
 
     return duck_con(SF_DIR)
+
+
+@pytest.fixture()
+def mirror_enabled(monkeypatch):
+    """The bucketed-mirror path forced on at test scale (threshold 0)."""
+    import cuny_courses_spark.sources.bucketed as bucketed
+
+    monkeypatch.setattr(bucketed, "_MIN_MIRROR_ROWS", 0)
+    monkeypatch.delenv("SPARK_GRAFT_NO_BUCKETED", raising=False)
+    # The analyzed-plan memo keys on (name, sf_dir, content-sig) — it
+    # cannot see this fixture's threshold patch, so a previously cached
+    # plain-path plan would mask the mirror path (and vice versa).
+    monkeypatch.setenv("SPARK_GRAFT_NO_PLAN_CACHE", "1")
+    yield bucketed

@@ -13,6 +13,7 @@ import pyarrow.parquet as pq
 import pytest
 
 import amplify
+from cuny_courses_spark import lakeformat
 from tests.conftest import SF_DIR as SRC
 
 
@@ -70,7 +71,7 @@ def test_builder_that_loses_the_race_discards_its_copy(root):
         winner.mkdir()  # another process publishes while this one builds
         (winner / "theirs").write_text("winner")
 
-    assert amplify._publish("fam", "sig", build) == winner
+    assert lakeformat.publish_dir(root, "fam", "sig", build) == winner
     assert [p.name for p in winner.iterdir()] == ["theirs"]
     assert [p.name for p in root.iterdir()] == ["fam_sig"]
 

@@ -12,6 +12,9 @@ mirror path at test scale (threshold monkeypatched to 0) and pin:
 - the order-key adopters join their two mirrors bucket by bucket: a
   ShuffledHashJoin, no broadcast of the orders mirror, and no Sort;
 - the mirror table holds exactly the source table's rows;
+- a published mirror is adopted without a write, an unpublished staging
+  directory never is, a failed build leaves nothing and falls back to
+  the plain text, and a stale signature is collected;
 - the kill switch and the mirror memo never serve a stale layout.
 """
 
@@ -32,19 +35,6 @@ def _plan(spark, df):
             "formatted"
         )
     )
-
-
-@pytest.fixture()
-def mirror_enabled(monkeypatch):
-    import cuny_courses_spark.sources.bucketed as bucketed
-
-    monkeypatch.setattr(bucketed, "_MIN_MIRROR_ROWS", 0)
-    monkeypatch.delenv("SPARK_GRAFT_NO_BUCKETED", raising=False)
-    # The analyzed-plan memo keys on (name, sf_dir, content-sig) — it
-    # cannot see this fixture's threshold patch, so a previously cached
-    # plain-path plan would mask the mirror path (and vice versa).
-    monkeypatch.setenv("SPARK_GRAFT_NO_PLAN_CACHE", "1")
-    yield bucketed
 
 
 def test_mirror_rows_identical_to_source(spark, mirror_enabled):
@@ -175,39 +165,165 @@ def test_kill_switch_is_part_of_plan_cache_key(spark, monkeypatch):
     assert sorted(_rows(first)) == sorted(_rows(second))
 
 
-def test_dropped_mirror_leaves_the_memo(spark, mirror_enabled, monkeypatch):
-    """_build_mirror keeps the 2 most recent other signatures of a
-    (table, key) and drops the rest; a dropped mirror's memo entries go
-    with it, so a memo hit can never name a dropped table. The key is one
-    no query buckets on, so no real mirror shares the drop prefix."""
+@pytest.fixture()
+def own_warehouse(spark, mirror_enabled, monkeypatch, tmp_path):
+    """Mirrors published under a private warehouse directory, with no
+    mirror in the catalog or the memo before or after the test, so the
+    next ``clustered_view`` call acts like a new process's."""
+
+    def forget():
+        mirror_enabled._KNOWN.clear()
+        for t in spark.catalog.listTables():
+            if t.name.startswith(("ccs_bkt_", "ccs_stage_")):
+                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+
+    wh = tmp_path / "warehouse"
+    forget()
+    monkeypatch.setattr(mirror_enabled, "_warehouse", lambda _spark: str(wh))
+    yield wh
+    forget()
+
+
+def _files(root):
+    """{relative path: mtime_ns} of every file and directory under root."""
+    return {
+        str(p.relative_to(root)): p.stat().st_mtime_ns for p in root.rglob("*")
+    }
+
+
+def _last_job(spark) -> int:
+    return max((j.jobId() for j in _jobs(spark)), default=-1)
+
+
+def _jobs(spark):
+    it = spark._jsc.sc().statusStore().jobsList(None).iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _mirror_jobs_after(spark, job_id: int) -> list[str]:
+    out = []
+    for j in _jobs(spark):
+        d = j.description()
+        if j.jobId() > job_id and d.isDefined():
+            if d.get().startswith("ingest: bucketed mirror"):
+                out.append(d.get())
+    return out
+
+
+def _dead_pid() -> int:
+    import subprocess
+
+    p = subprocess.Popen(["true"])
+    p.wait()
+    return p.pid
+
+
+def _forget(spark, bucketed, name):
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    bucketed._KNOWN.clear()
+
+
+def test_published_mirror_is_adopted_without_writing(spark, own_warehouse):
+    """A process that finds a published mirror (no catalog entry, empty
+    memo: what a new process sees) registers it and writes nothing."""
+    from cuny_courses_spark.sources import bucketed
+    from cuny_courses_spark.sources.loaders import load
+
+    first = _last_job(spark)
+    name = bucketed.clustered_view(spark, SF_DIR, "orders", "o_orderkey")
+    assert name.startswith("ccs_bkt_orders_o_orderkey_")
+    assert _mirror_jobs_after(spark, first), "the first call builds"
+    before = _files(own_warehouse)
+    assert [p for p in before if "/" not in p] == [name]
+    _forget(spark, bucketed, name)
+    mark = _last_job(spark)
+    assert bucketed.clustered_view(spark, SF_DIR, "orders", "o_orderkey") == name
+    assert _mirror_jobs_after(spark, mark) == []
+    assert _files(own_warehouse) == before
+    src = sorted(_rows(load(spark, SF_DIR, "orders")))
+    assert sorted(_rows(spark.table(name))) == src
+
+
+def test_unpublished_staging_dir_is_never_adopted(spark, own_warehouse):
+    """A staging directory holding a truncated bucket file, of a dead or
+    a live builder, is never read as the mirror; the dead one is
+    removed and the live one left alone."""
     import os
     import shutil
-    import time
-    from urllib.parse import urlparse
 
-    bucketed = mirror_enabled
-    monkeypatch.setattr(bucketed, "_KNOWN", {})
-    prefix = "ccs_bkt_orders_o_totalprice_"
-    name = f"{prefix}current"
-    stale = [f"{prefix}stale{i}" for i in range(3)]  # stale0 is the oldest
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    now = time.time()
-    try:
-        for i, old in enumerate(stale):
-            os.makedirs(os.path.join(wh, old), exist_ok=True)
-            os.utime(os.path.join(wh, old), (now - 100 + i, now - 100 + i))
-            bucketed._KNOWN[("app", "orders", "o_totalprice", old)] = old
-        size = bucketed._source_stats(SF_DIR, "orders")[1]
-        bucketed._build_mirror(
-            spark, SF_DIR, "orders", "o_totalprice", name, size
-        )
-        assert spark.catalog.tableExists(name)
-        assert not os.path.exists(os.path.join(wh, stale[0]))
-        assert set(bucketed._KNOWN.values()) == set(stale[1:])
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        for d in [name, *stale]:
-            shutil.rmtree(os.path.join(wh, d), ignore_errors=True)
+    from cuny_courses_spark.sources import bucketed
+    from cuny_courses_spark.sources.loaders import load
+
+    name = bucketed.clustered_view(spark, SF_DIR, "orders", "o_orderkey")
+    assert name != "orders"
+    shutil.rmtree(own_warehouse / name)
+    _forget(spark, bucketed, name)
+    dead = own_warehouse / f".{name}.{_dead_pid()}.abcd1234"
+    live = own_warehouse / f".{name}.{os.getpid()}.efgh5678"
+    part = "part-00000-x_00000.c000.snappy.parquet"
+    for tmp in (dead, live):
+        tmp.mkdir()
+        (tmp / part).write_bytes(b"PAR1 truncated")
+    assert bucketed.clustered_view(spark, SF_DIR, "orders", "o_orderkey") == name
+    src = sorted(_rows(load(spark, SF_DIR, "orders")))
+    assert sorted(_rows(spark.table(name))) == src
+    assert not dead.exists(), "a dead builder's staging dir is removed"
+    assert (live / part).read_bytes() == b"PAR1 truncated"
+
+
+def test_failed_build_falls_back_to_plain(spark, own_warehouse, monkeypatch):
+    """A build that dies after its write returns the plain name: the
+    adopter runs its plain text with the same rows, and no mirror
+    directory, staging directory or catalog entry is left behind."""
+    from pyspark.sql import DataFrameWriter
+
+    from cuny_courses_spark.sources import bucketed
+    from cuny_courses_spark.sql import run_sql
+
+    save = DataFrameWriter.saveAsTable
+
+    def save_then_die(self, *a, **k):
+        save(self, *a, **k)
+        raise RuntimeError("killed after the write")
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", save_then_die)
+    assert bucketed.clustered_view(spark, SF_DIR, "orders", "o_orderkey") == "orders"
+    sql, fn = _query("q12")
+    df = fn(spark, SF_DIR)
+    assert "ccs_bkt_" not in _plan(spark, df)
+    assert sorted(_rows(df)) == sorted(_rows(run_sql(spark, SF_DIR, sql)))
+    left = [p.name for p in own_warehouse.iterdir()] if own_warehouse.exists() else []
+    assert not [n for n in left if "ccs_bkt_" in n], left
+    tables = [t.name for t in spark.catalog.listTables()]
+    assert not [t for t in tables if t.startswith(("ccs_bkt_", "ccs_stage_"))], tables
+
+
+def test_stale_signature_is_collected(spark, own_warehouse, tmp_path):
+    """A regenerated source gets a new mirror; publishing it removes the
+    old signature's directory, and the memo never names the old one."""
+    import pyarrow.parquet as pq
+
+    from cuny_courses_spark.sources import bucketed
+    from cuny_courses_spark.sources.loaders import load
+
+    src = tmp_path / "src"
+    src.mkdir()
+    orders = pq.read_table(f"{SF_DIR}/orders.parquet")
+    pq.write_table(orders, src / "orders.parquet")
+    old = bucketed.clustered_view(spark, str(src), "orders", "o_orderkey")
+    assert old != "orders" and (own_warehouse / old).is_dir()
+    half = orders.slice(0, orders.num_rows // 2)
+    pq.write_table(half, src / "orders.parquet")
+    spark._ccs_df_cache.pop((str(src), "orders"), None)  # load()'s memo
+    new = bucketed.clustered_view(spark, str(src), "orders", "o_orderkey")
+    assert new not in (old, "orders")
+    assert new.rsplit("_", 1)[0] == old.rsplit("_", 1)[0], "same family"
+    assert not (own_warehouse / old).exists(), "the stale signature is collected"
+    assert bucketed.clustered_view(spark, str(src), "orders", "o_orderkey") == new
+    got = sorted(_rows(spark.table(new)))
+    assert len(got) == half.num_rows
+    assert got == sorted(_rows(load(spark, str(src), "orders")))
 
 
 def test_q21_mirror_join_is_exchange_free(spark, mirror_enabled):

@@ -156,3 +156,51 @@ def test_centroid_affinity_lives_only_in_vector_index():
         path for path, text, _ in _package_calls() if "half_sq" in text
     )
     assert hits == ["operators/vector_index.py"], hits
+
+
+def test_bucket_by_lives_only_in_bucketed():
+    """The package has one bucketing mechanism, the published mirrors of
+    ``sources/bucketed.py``. A ``bucketBy(`` anywhere else is a second
+    set of bucketed copies with its own naming, lifetime and cleanup."""
+    hits = sorted(path for path, text, _ in _package_calls() if "bucketBy(" in text)
+    assert hits == ["sources/bucketed.py"], hits
+
+
+def test_dir_rename_lives_only_in_lakeformat():
+    """Derived directories (amplified corpora, bucketed mirrors, the DPP
+    copy) are published by ``lakeformat.publish_dir`` only. An
+    ``os.rename(`` elsewhere in the package or in ``amplify.py`` is a
+    second publish step that can drift from it."""
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    files = [*(repo / "cuny_courses_spark").rglob("*.py"), repo / "amplify.py"]
+    hits = sorted(
+        p.relative_to(repo).as_posix() for p in files if "os.rename(" in p.read_text()
+    )
+    assert hits == ["cuny_courses_spark/lakeformat.py"], hits
+
+
+def test_retired_bucketing_names_are_gone():
+    """The per-process bucketed copies under /tmp and the bucket-count
+    environment override are deleted; no program file or live document
+    names them. History files (CHANGES, VERDICT, OPTIMIZATION_r*) keep
+    their record."""
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    needles = ("/tmp/ccs_" + "bucketed", "SPARK_GRAFT_" + "BUCKETS")
+    files = [
+        *repo.glob("*.py"),
+        *(repo / d for d in ("README.md", "ROADMAP.md", "FIXTURES.md")),
+    ]
+    for d in ("cuny_courses_spark", "tools", "tests", "plans"):
+        files += (repo / d).rglob("*.py")
+    hits = sorted(
+        (p.relative_to(repo).as_posix(), n)
+        for p in files
+        if p.is_file()
+        for n in needles
+        if n in p.read_text()
+    )
+    assert hits == [], hits

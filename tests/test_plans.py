@@ -107,7 +107,7 @@ def test_sim_pairs_is_arrow_grouped_matmul(spark):
     assert "Join" not in plan, plan[:2000]
 
 
-def test_bucketed_join_no_shuffle(spark):
+def test_bucketed_join_no_shuffle(spark, mirror_enabled):
     # Both sides bucketed on the join key → SMJ with ZERO exchange feeding
     # it; the only Exchange is the final groupBy(c_mktsegment) agg.
     plan = _plan(spark, "q_join_bucketed")

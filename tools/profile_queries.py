@@ -4,13 +4,14 @@
 
 Usage:
   python tools/profile_queries.py [--sf DIR] [--amplify N] [--laps K]
-         [--plans-dir plans/r15] [--suffix before] [name ...]
+         [--plans-dir plans/r15] [--suffix before] [--arrow] [name ...]
 
 Timing: warm lap, then best-of-K laps of
 `df.write.format("noop").mode("overwrite").save()` — computes every
-column of every row, no sink cost, unlike toPandas() which also pays
-Arrow collection (recorded separately when --topandas is passed so the
-bench numbers stay comparable). Job-labelled per guide §1.5.
+column of every row, no sink cost, unlike toArrow() (the bench's timed
+action) which also pays Arrow collection to the driver (recorded
+separately when --arrow is passed so the bench numbers stay comparable).
+Job-labelled per guide §1.5.
 
 `compiled=N` is the number of generated classes Spark compiled during
 the timed laps. Nonzero means the laps paid Janino compilation and ran
@@ -38,8 +39,8 @@ def main() -> int:
     ap.add_argument("--laps", type=int, default=3)
     ap.add_argument("--plans-dir", default=None)
     ap.add_argument("--suffix", default="before")
-    ap.add_argument("--topandas", action="store_true",
-                    help="also time toPandas() (the bench's action)")
+    ap.add_argument("--arrow", action="store_true",
+                    help="also time toArrow() (the bench's action)")
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
@@ -78,14 +79,14 @@ def main() -> int:
             best = min(best, time.perf_counter() - t0)
         compiled = compiled_classes(spark) - compiled
         extra = ""
-        if args.topandas:
-            fn(spark, sf_dir).toPandas()
+        if args.arrow:
+            fn(spark, sf_dir).toArrow()
             bp = float("inf")
             for _ in range(args.laps):
                 t0 = time.perf_counter()
-                fn(spark, sf_dir).toPandas()
+                fn(spark, sf_dir).toArrow()
                 bp = min(bp, time.perf_counter() - t0)
-            extra = f"  toPandas={bp:.4f}s"
+            extra = f"  toArrow={bp:.4f}s"
         sc.setJobDescription(None)
         print(f"{name:40s} noop={best:.4f}s compiled={compiled}{extra}",
               flush=True)
