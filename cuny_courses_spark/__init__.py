@@ -33,7 +33,8 @@ from cuny_courses_spark.sql import register_views, run_sql
 # source — its stream reader runs in a worker-side python process; the
 # lakefeed connector carries the pyspark-free lakeformat protocol
 # module's functions with it; the vector-index assignment map carries
-# its numpy ranking kernel); relational operators never ship Python.
+# its numpy ranking kernel; the lakehouse's bucket-local rewrite tasks
+# carry the bucket_rewrite kernel); relational operators never ship Python.
 # Guarded: pickle-by-value is a portability improvement, not a
 # correctness dependency.
 try:  # pragma: no cover - trivially absent only on exotic pyspark builds
@@ -44,11 +45,12 @@ try:  # pragma: no cover - trivially absent only on exotic pyspark builds
     from cuny_courses_spark.functions import udfs as _udfs
     from cuny_courses_spark.operators import similarity as _sim
     from cuny_courses_spark.operators import vector_index as _vi
+    from cuny_courses_spark.sources import bucket_rewrite as _br
     from cuny_courses_spark.sources import lakefeed as _lakefeed
     from cuny_courses_spark.sources import pyds as _pyds
     from cuny_courses_spark.streaming import batch_twins as _bt
 
-    for _m in (_sim, _vi, _udfs, _mm, _bt, _pyds, _lakefeed, _lakeformat):
+    for _m in (_sim, _vi, _udfs, _mm, _bt, _pyds, _lakefeed, _lakeformat, _br):
         _cp.register_pickle_by_value(_m)
 except Exception:
     pass

@@ -127,6 +127,7 @@ from cuny_courses_spark.lakeformat import (
     stage_snapshot,
 )
 from cuny_courses_spark.registry import register
+from cuny_courses_spark.sources.bucket_rewrite import rewrite_buckets
 from cuny_courses_spark.sources.loaders import load
 
 _N_BUCKETS = 16
@@ -1018,7 +1019,11 @@ def _write_buckets(
     df: DataFrame, out_dir: str, n_buckets: int = _N_BUCKETS
 ) -> list[str]:
     """Write ``df`` bucket-partitioned, ONE file per occupied bucket;
-    return the data file paths.
+    return the data file paths. This is the Spark writer of the writes
+    whose rows are placed afresh (creation, appends, DV sidecars,
+    ``rebucket``, rewrites of a partition-spec table); a rewrite that
+    keeps the table's layout goes through the bucket-local kernel
+    (``sources/bucket_rewrite.py``) instead.
 
     The repartition on ``_b`` is what makes the physical layout (and the
     manifests' file counts) a pure function of the DATA: without it every
@@ -1074,21 +1079,38 @@ def _layout_col(doc: dict, pk: str):
     return _bucket_of(pk, _table_n_buckets(doc))
 
 
+def _staging_dir(table_dir: str, version: int, sub: str = "data") -> str:
+    """A fresh per-attempt ``<sub>/v{version}_{uuid8}`` directory for the
+    files of one commit attempt: a fixed ``v{N}`` dir written with
+    mode=overwrite would let a commit-race LOSER delete the winner's
+    already-referenced files before failing at publish (r9 ADVICE)."""
+    return os.path.join(table_dir, sub, f"v{version}_{uuid.uuid4().hex[:8]}")
+
+
 def _write_layout(
     df: DataFrame, doc: dict, pk: str, table_dir: str, version: int,
-    sub: str = "data", b=None,
+    sub: str = "data",
 ) -> tuple[str, list[str]]:
     """Stage ``df`` for a commit of ``version`` under ``doc``'s layout
-    rule (or the ``b`` Column of ``snapshot_write(bucket_col=…)``) in a
-    fresh per-attempt ``<sub>/v{version}_{uuid8}`` directory: a fixed
-    ``v{N}`` dir written with mode=overwrite would let a commit-race
-    LOSER delete the winner's already-referenced files before failing
-    at publish (r9 ADVICE). Returns ``(staging, files)``."""
-    staging = os.path.join(
-        table_dir, sub, f"v{version}_{uuid.uuid4().hex[:8]}"
-    )
-    df = df.withColumn("_b", _layout_col(doc, pk) if b is None else b)
+    rule in a fresh ``_staging_dir``. Returns ``(staging, files)``."""
+    staging = _staging_dir(table_dir, version, sub)
+    df = df.withColumn("_b", _layout_col(doc, pk))
     return staging, _write_buckets(df, staging, _table_n_buckets(doc))
+
+
+def _keeps_layout(parent: dict, props: dict | None) -> bool:
+    """Does a rewrite of ``parent`` into a child with ``props`` keep every
+    row in the bucket it was read from? True unless either side places
+    rows by a partition spec (files of a retired spec sit in other
+    buckets than the active spec gives their rows) or the child changes
+    the bucket count or ``bucket_expr`` (``rebucket``). A rewrite that
+    keeps the layout runs bucket-local (``bucket_rewrite.rewrite_buckets``)."""
+    pp, cp = parent.get("props") or {}, props or {}
+    return (
+        not pp.get("partition_spec") and not cp.get("partition_spec")
+        and _table_n_buckets(parent) == _table_n_buckets({"props": cp})
+        and pp.get("bucket_expr") == cp.get("bucket_expr")
+    )
 
 
 def _layout_stats(props: dict | None, files: list[str], pk: str):
@@ -1115,6 +1137,35 @@ def _refuse_partition_spec(doc: dict, verb: str) -> None:
             f"{spec['transform']}({spec['col']}); use merge_full_sync or "
             f"an append instead"
         )
+
+
+def _refuse_unkeyed_layout(
+    spark: SparkSession, doc: dict, pk: str, verb: str
+) -> None:
+    """Refuse a key-targeted verb on a table whose layout does not place
+    a row by its key alone: a partition spec (``_refuse_partition_spec``)
+    or a ``bucket_expr`` that reads another column (a Z-order cell). The
+    expression is analyzed over a frame holding only the key column,
+    which fails exactly when it reads anything else."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import types as T
+
+    _refuse_partition_spec(doc, verb)
+    expr = (doc.get("props") or {}).get("bucket_expr")
+    if not expr:
+        return
+    fields = T.StructType.fromJson(doc["schema"]).fields
+    key_only = spark.createDataFrame(
+        [], T.StructType([f for f in fields if f.name == pk])
+    )
+    try:
+        key_only.select(F.expr(expr))
+    except AnalysisException:
+        raise ValueError(
+            f"{verb} targets rows by key, but this table places rows by "
+            f"{expr}, which reads columns other than the key {pk!r}; use "
+            f"merge_full_sync or an append instead"
+        ) from None
 
 
 def _publish_child(
@@ -1429,7 +1480,6 @@ def snapshot_write(
     table_dir: str,
     key: str,
     version: int = 1,
-    bucket_col=None,
     stats_cols: list[str] | None = None,
     n_buckets: int = _N_BUCKETS,
     bucket_expr: str | None = None,
@@ -1448,23 +1498,24 @@ def snapshot_write(
     (stats_cols/bucket_expr/constraints) special-case. A creation with a
     ``partition_spec`` records ``meta.op = write_partitioned``.
 
-    ``bucket_expr`` is ``bucket_col`` as SQL TEXT — preferred for
-    non-default layouts because it is also recorded as the
-    ``bucket_expr`` table property, letting later bucket-rewriting
-    writers reproduce the physical layout (a Column object cannot be
-    persisted).
+    ``bucket_expr`` (SQL text over the table's columns) overrides the
+    default hash layout (``key % 16``) and is recorded as the
+    ``bucket_expr`` table property, so every later writer lays out rows
+    and DVs the same way — e.g. a RANGE layout (``key DIV width``) makes
+    per-file key stats tight, which is what gives ``key_range`` reads
+    real pruning power (hash layouts spread every key range across all
+    buckets); a Z-ORDER layout (Morton-interleaved range buckets of two
+    columns) bounds the file's range in BOTH dimensions at once. A
+    layout that reads a column other than the key places a row by more
+    than its key, so the key-targeted verbs (``merge_upsert``,
+    ``delete_merge_on_read``) refuse it.
 
     ``n_buckets`` is committed as a TABLE PROPERTY so every later writer
     buckets new rows (and deletion vectors) with the same modulus —
     changed later only through a REBUCKET commit (``rebucket``), never
     in place.
 
-    ``bucket_col`` overrides the default hash layout (``key % 16``) —
-    e.g. a RANGE layout (``key DIV width``) makes per-file key stats
-    tight, which is what gives ``key_range`` reads real pruning power
-    (hash layouts spread every key range across all buckets); a Z-ORDER
-    layout (Morton-interleaved range buckets of two columns) bounds the
-    file's range in BOTH dimensions at once. ``stats_cols`` harvests
+    ``stats_cols`` harvests
     footer min/max for those extra columns into the manifest's ``cols``
     stats, enabling ``col_range`` pruning on non-key predicates — and is
     committed as a TABLE PROPERTY (``props.stats_cols``, Delta's
@@ -1491,10 +1542,7 @@ def snapshot_write(
     spec = "partition_spec" in table["props"]
     meta = {"op": "write_partitioned"} if spec else None
     rows, pk, schema, props = _admit_batch(table, df, key)
-    staging, files = _write_layout(
-        rows, table, pk, table_dir, version,
-        b=bucket_col if bucket_expr is None else None,
-    )
+    staging, files = _write_layout(rows, table, pk, table_dir, version)
     _publish_child(
         table_dir, {}, version, [], files, staging, pk,
         schema=schema, props=props, meta=meta,
@@ -1512,27 +1560,35 @@ def _cow_merge(
     delete_col: str | None = None,
     scope=None,
 ) -> list[str]:
-    """The copy-on-write MERGE body of ``merge_upsert`` (``scope``
-    None) and ``merge_full_sync``. Hot buckets are rewritten whole, so
-    the child keeps exactly the parent DVs of the cold buckets: the
-    rewrite folds the hot buckets' pending DVs into its rows. A full
-    sync's in-scope buckets are the ``_b=`` path buckets of the files
-    holding an in-scope row, read from the scan's own file paths, so
-    files laid out under a retired partition spec are found too.
+    """The copy-on-write MERGE body of ``merge_upsert`` (``scope`` None)
+    and ``merge_full_sync``, as per-bucket remove and add sets. An upsert
+    removes every changeset key and adds the changeset rows that are not
+    deletes (``delete_col``); a full sync removes the keys of its
+    in-scope base rows (scope evaluated by Spark over the parent read,
+    bucketed by the ``_b=`` path bucket of the file holding the row, so
+    files of a retired partition spec are found too) and adds every
+    source row. Removal is by key, as a DV's is (the key-unique table
+    contract): on a table holding a key twice in one bucket (appends do
+    not dedupe), a full sync whose scope covers one copy removes both.
+    Added rows pass ``_admit_batch`` and take their bucket
+    from ``_layout_col``. Hot buckets are rewritten whole, so the child
+    keeps exactly the parent DVs of the cold buckets: the rewrite folds
+    the hot buckets' pending DVs into its rows.
 
-    The changeset is persisted before the hot-bucket collect so the rows
-    that drive the bucket set and the rows written are the SAME
-    materialization: a nondeterministic lineage could otherwise recompute
-    rows into a bucket outside ``hot`` and silently drop them at the
-    ``isin(hot)`` filter (r8 ADVICE). Hot files get ONE DV-aware read
-    under the parent MANIFEST schema (never footer inference, r9
-    ADVICE). Only rows that reach the files pass ``_admit_batch``. The
-    merge runs in LOGICAL column space (changesets and the scope are
-    logical); the layout bucket is attached on the PHYSICAL form."""
+    When the rewrite keeps the table's layout (``_keeps_layout``), Spark
+    ships only the changeset to its bucket and one Arrow task per hot
+    bucket rewrites it from its own files (``bucket_rewrite``): base rows
+    never cross a shuffle, and the hot set is the set of buckets that
+    job reports, so the rows written and the buckets replaced come from
+    one materialization. A full sync on a partition-spec table, where a
+    row can change bucket, reads its hot files under the parent MANIFEST
+    schema and writes through ``_write_layout``; its hot set is the
+    buckets of its source rows and in-scope files, and every source row
+    is written whatever bucket it lands in. The merge runs in LOGICAL
+    column space (changesets and the scope are logical); buckets are
+    computed on the PHYSICAL form."""
     parent = _read_manifest_doc(table_dir, parent_version)
     verb = "merge_upsert" if scope is None else "merge_full_sync"
-    if scope is None:
-        _refuse_partition_spec(parent, verb)
     if (parent.get("props") or {}).get("identity"):
         raise ValueError(
             f"{verb} cannot carry an identity table's ids for matched "
@@ -1540,57 +1596,73 @@ def _cow_merge(
         )
     cm = _colmap(parent)
     pk = _physical_key(key, cm)
-    upd = _to_logical(
-        _to_physical(rows, cm).withColumn("_b", _layout_col(parent, pk)),
-        cm,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    version = parent_version + 1
+    adds, removes = rows, None
+    if scope is None:
+        _refuse_unkeyed_layout(spark, parent, pk, verb)
+        if delete_col is not None:
+            ins = F.coalesce(~F.col(delete_col), F.lit(False))
+            adds = rows.filter(ins).drop(delete_col)
+            removes = _to_physical(rows.filter(~ins).select(key), cm)
+            removes = removes.withColumn("_b", _layout_col(parent, pk))
+    else:
+        scope_t = F.coalesce(scope, F.lit(False))  # NULL: out of scope
+        if parent["files"]:
+            scoped = _read_snapshot_files(
+                spark, parent, parent["files"], path_col="_path"
+            ).filter(scope_t)
+            removes = scoped.select(
+                F.col(key).alias(pk),
+                F.regexp_extract("_path", r"_b=(-?\d+)", 1).cast("int")
+                .alias("_b"),
+            )
+    adds, _, schema, props = _admit_batch(parent, adds, key)
+    adds = adds.withColumn("_b", _layout_col(parent, pk))
+    if _keeps_layout(parent, props):
+        changes = adds.withColumn("_rm", F.lit(scope is None)).withColumn(
+            "_add", F.lit(True)
+        )
+        if removes is not None:
+            changes = changes.unionByName(
+                removes.withColumn("_rm", F.lit(True))
+                .withColumn("_add", F.lit(False)),
+                allowMissingColumns=True,
+            )
+        buckets = {_bucket_of_path(p) for p in parent["files"]}
+        staging = _staging_dir(table_dir, version)
+        hot, new_files = rewrite_buckets(
+            spark, parent, parent["files"], changes, schema, pk, staging,
+            max(len(buckets), _table_n_buckets(parent)),
+        )
+        if None in hot:  # a null key has no bucket to live in
+            shutil.rmtree(staging, ignore_errors=True)
+            raise ValueError(f"{verb}: a changeset row has a null key {key!r}")
+    else:
         # bounded by the table's bucket count — never data-sized
-        hot = {r["_b"] for r in upd.select("_b").distinct().collect()}
-        if scope is not None:
-            scope_t = F.coalesce(scope, F.lit(False))  # NULL: out of scope
-            if parent["files"]:
-                scoped = _read_snapshot_files(
-                    spark, parent, parent["files"], path_col="_path"
-                ).filter(scope_t)
-                hot |= {
-                    _bucket_of_path(r["_path"])
-                    for r in scoped.select("_path").distinct().collect()
-                }
-        hot = sorted(hot)
-        reused = [p for p in parent["files"] if _bucket_of_path(p) not in hot]
+        hot_df = adds.select("_b")
+        if removes is not None:
+            hot_df = hot_df.union(removes.select("_b"))
+        hot = {r["_b"] for r in hot_df.distinct().collect()}
         hot_files = [p for p in parent["files"] if _bucket_of_path(p) in hot]
-        upd_hot = upd.filter(F.col("_b").isin(hot)).drop("_b")
-        inserts = upd_hot
-        if scope is None:
-            changeset_keys = upd_hot.select(F.col(key).alias("_uk"))
-            if delete_col is not None:
-                inserts = upd_hot.filter(~F.col(delete_col)).drop(delete_col)
-        inserts, _, schema, props = _admit_batch(parent, inserts, key)
-        merged = inserts
+        merged = adds.drop("_b")
         if hot_files:
-            base_hot = _read_snapshot_files(spark, parent, hot_files)
-            if scope is None:
-                keep = base_hot.join(
-                    changeset_keys, F.col(key) == F.col("_uk"), "left_anti"
-                )
-            else:
-                keep = base_hot.filter(~scope_t)
+            keep = _read_snapshot_files(spark, parent, hot_files).filter(
+                ~scope_t
+            )
             # allowMissingColumns both ways = additive evolution through
-            # MERGE: new changeset columns widen, absent ones fill null.
+            # MERGE: new source columns widen, absent ones fill null.
             merged = _to_physical(keep, cm).unionByName(
-                inserts, allowMissingColumns=True
+                merged, allowMissingColumns=True
             )
         staging, new_files = _write_layout(
-            merged, parent, pk, table_dir, parent_version + 1
+            merged, parent, pk, table_dir, version
         )
-    finally:
-        upd.unpersist()
+    reused = [p for p in parent["files"] if _bucket_of_path(p) not in hot]
     cold_dvs = {
         b: es for b, es in parent.get("dvs", {}).items() if int(b) not in hot
     }
     _publish_child(
-        table_dir, parent, parent_version + 1, reused, new_files, staging, pk,
+        table_dir, parent, version, reused, new_files, staging, pk,
         schema=schema, props=props, dvs=cold_dvs,
         rebase_from=parent_version,  # disjoint racers merge, no re-stage
     )
@@ -1622,7 +1694,8 @@ def merge_upsert(
     delete of an absent key is a no-op, matching SQL MERGE). The flag
     column itself never reaches the data files.
 
-    A partition-spec table is refused: there a key alone does not name
+    A table whose layout reads more than the key (a partition spec, or a
+    Z-order ``bucket_expr``) is refused: there a key alone does not name
     the file holding its row. An identity table is refused too."""
     return _cow_merge(
         spark, table_dir, parent_version, updates, key, delete_col=delete_col
@@ -1689,10 +1762,10 @@ def delete_merge_on_read(
     only remove rows, so min/max stay sound for pruning and ``rows``
     becomes a documented upper bound until the next compaction.
 
-    A partition-spec table is refused: its rows are placed by the
-    partition column, so a key's DV could not find its row's bucket."""
+    A table whose layout reads more than the key (a partition spec, or a
+    Z-order ``bucket_expr``) is refused: a key's DV could not find its
+    row's bucket."""
     parent = _read_manifest_doc(table_dir, parent_version)
-    _refuse_partition_spec(parent, "delete_merge_on_read")
     # DV sidecars must be bucketed with the TABLE'S physical layout
     # (``_layout_col``: a recorded bucket_expr, else the key hash):
     # _applicable_dvs matches a DV's bucket against the DATA FILES' path
@@ -1700,6 +1773,7 @@ def delete_merge_on_read(
     # silently miss their rows.
     cm = _colmap(parent)
     pk = _physical_key(key, cm)
+    _refuse_unkeyed_layout(spark, parent, pk, "delete_merge_on_read")
     # DV sidecars store the PHYSICAL key column: they are anti-joined
     # against raw file reads BEFORE logical aliasing.
     staging, dv_files = _write_layout(
@@ -1855,29 +1929,47 @@ def _rewrite_files(
     new file per bucket of the layout ``props`` declare (the parent's,
     or ``rebucket``'s child props), publish them with the ``reused``
     parent files and ``dvs`` as ``parent_version + 1``, and return the
-    new files.
+    new files. Every file is read under the parent MANIFEST schema, so
+    fragments that predate a schema evolution normalize to the current
+    shape (missing columns read as null), with each file's applicable
+    DVs folded in (per-file scoping: a post-delete append's re-inserted
+    keys survive the fold).
 
-    The files are read with ONE ``_read_snapshot_files`` call: under the
-    parent MANIFEST schema, so fragments that predate a schema evolution
-    normalize to the current shape (missing columns read as null), and
-    with each file's applicable DVs folded in (per-file scoping: a
-    post-delete append's re-inserted keys survive the fold). Each row's
-    bucket is re-derived with the table's layout rule (``_layout_col``),
-    as every other writer does: the ACTIVE partition spec's transform on
-    a partition-spec table (``_publish_child`` records that spec in the
-    new files' stats, so they stay prunable), else the recorded
-    ``bucket_expr``, else the key hash. On a layout that can carry DVs
-    that is the bucket the row was read from."""
+    When the rewrite keeps the layout (``_keeps_layout``: OPTIMIZE of a
+    hash or ``bucket_expr`` table), every row stays in the bucket it was
+    read from, so each bucket of ``files`` is rewritten by one Arrow
+    task from its own files (``bucket_rewrite``, with empty remove and
+    add sets) and no row crosses a shuffle. Otherwise (``rebucket``, or
+    a partition-spec table whose retired-spec files must move) the files
+    are read with ONE ``_read_snapshot_files`` call and each row's bucket
+    is re-derived with the table's layout rule (``_layout_col``): the
+    ACTIVE partition spec's transform on a partition-spec table
+    (``_publish_child`` records that spec in the new files' stats, so
+    they stay prunable), else the key hash."""
     cm = _colmap(parent)
     pk = _physical_key(key, cm)
+    version = parent_version + 1
     staging, new_files = None, []
-    if files:
+    if files and _keeps_layout(parent, props):
+        buckets = sorted({_bucket_of_path(p) for p in files})
+        # one row per bucket, made in the JVM: a frame of Python rows
+        # would start a second pool of Python workers to unpickle them
+        changes = spark.range(1).select(
+            F.explode(F.array(*map(F.lit, buckets))).alias("_b"),
+            F.lit(False).alias("_rm"), F.lit(False).alias("_add"),
+        )
+        staging = _staging_dir(table_dir, version)
+        _, new_files = rewrite_buckets(
+            spark, parent, files, changes, parent["schema"], pk, staging,
+            len(buckets),
+        )
+    elif files:
         df = _to_physical(_read_snapshot_files(spark, parent, files), cm)
         staging, new_files = _write_layout(
-            df, {"props": props}, pk, table_dir, parent_version + 1
+            df, {"props": props}, pk, table_dir, version
         )
     _publish_child(
-        table_dir, parent, parent_version + 1, reused, new_files, staging,
+        table_dir, parent, version, reused, new_files, staging,
         pk, schema=parent.get("schema"), props=props, dvs=dvs,
         rebase_from=rebase_from,
     )
@@ -1894,9 +1986,11 @@ def optimize_compact(
     time-travelable version like any other, and concurrent readers of the
     parent snapshot are untouched (their files are immutable; VACUUM
     reclaims the superseded fragments later). Rewrite volume is bounded
-    by the fragmented buckets only: they are read with ONE DV-aware
-    scan and written back through ``_write_buckets``, whose one hash
-    exchange on ``_b`` gathers each bucket's rows into its new file."""
+    by the fragmented buckets only, and each of them is rewritten by one
+    Arrow task from its own files with their DVs applied
+    (``_rewrite_files`` → ``bucket_rewrite``): one Spark job, no
+    exchange. On a partition-spec table, whose retired-spec files must
+    move, the rewrite goes through ``_write_buckets`` instead."""
     parent = _read_manifest_doc(table_dir, parent_version)
     parent_dvs = parent.get("dvs", {})
     by_bucket: dict[int, list[str]] = {}
@@ -2555,7 +2649,7 @@ def q_lake_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between a full-table scan and reading ~3/16 of the lake
     for a key-range query; hash layouts can't prune (every key range
     touches all buckets), which is why the layout is the query's choice
-    via ``bucket_col``."""
+    via ``bucket_expr``."""
     from cuny_courses_spark.operators.scans import _io_dir
 
     table_dir = _io_dir(sf_dir, "lake_orders_prune")
@@ -2572,7 +2666,7 @@ def q_lake_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_dir,
         key="k",
         version=1,
-        bucket_col=F.expr(f"CAST(k DIV {width} AS INT)"),
+        bucket_expr=f"CAST(k DIV {width} AS INT)",
     )
     rlo, rhi = 3 * width, 5 * width + width // 2
     selected, total = prune_files(table_dir, 1, rlo, rhi)
@@ -3379,7 +3473,7 @@ SELECT (SELECT count(DISTINCT zb) FROM z) AS n_files_total,
 def q_lake_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-ORDER layout wired into the lakehouse with MULTI-COLUMN file
     stats (r9 verdict missing #3): orders is snapshot-written with
-    ``bucket_col`` = the Morton interleave of 2-bit range-quartiles of
+    ``bucket_expr`` = the Morton interleave of 2-bit range-quartiles of
     (custkey, order-day), and ``stats_cols=["c", "d"]`` harvests footer
     min/max for BOTH dimensions into the manifest. Because every file
     is one z-cell, its bounding box is tight in both columns at once —
@@ -3418,13 +3512,13 @@ def q_lake_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the oracle text
     kb_s = f"least(3, (c * 4) DIV {cmax + 1})"
     db_s = f"least(3, ((d - {dmin}) * 4) DIV {w})"
-    zb = F.expr(
+    zb = (
         f"CAST(({kb_s}) % 2 + 2 * (({db_s}) % 2)"
         f" + 4 * ((({kb_s}) DIV 2) % 2)"
         f" + 8 * ((({db_s}) DIV 2) % 2) AS INT)"
     )
     snapshot_write(
-        src, table_dir, key="k", bucket_col=zb, stats_cols=["c", "d"]
+        src, table_dir, key="k", bucket_expr=zb, stats_cols=["c", "d"]
     )
     rlo = dmin + (2 * w + 3) // 4
     rhi = dmin + (3 * w + 3) // 4 - 1

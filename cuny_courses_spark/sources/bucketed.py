@@ -6,8 +6,9 @@ Contract:
   is never mirrored; its callers run their plain SQL text.
 - Signature: a mirror is named ``ccs_bkt_<table>_<key>_<source path
   hash>_<sig>``, where ``sig`` covers the source files' names, sizes and
-  mtimes, the bucket count (~256 MB of source per bucket, floor 32) and
-  the mirror format tag. Regenerated data never serves a stale mirror.
+  mtimes, the bucket count (~256 MB of source per bucket, floor 32; the
+  mirrors of one ``clustered_views`` call all take the count of its
+  largest source) and the mirror format tag. Regenerated data never serves a stale mirror.
 - Publish and adopt: the first process to ask writes one file per bucket
   into a staging directory of the warehouse, and
   ``lakeformat.publish_dir`` renames it into place whole. Every process,
@@ -71,12 +72,18 @@ def _warehouse(spark: SparkSession) -> str:
     return url.path
 
 
+def _n_buckets(source_bytes: int) -> int:
+    return max(32, source_bytes // (256 << 20))
+
+
 def clustered_view(
-    spark: SparkSession, sf_dir: str, table: str, key: str
+    spark: SparkSession, sf_dir: str, table: str, key: str,
+    n_buckets: int | None = None,
 ) -> str:
     """Name of a bucketed-by-``key`` mirror of ``table`` over ``sf_dir``,
     publishing it on first use — or the plain view name ``table`` when the
     mirror is unavailable (small input, disabled, or any failure).
+    ``n_buckets`` defaults to the count sized from ``table``'s own bytes.
 
     Callers substitute the returned name into their SQL text only when it
     differs from ``table``; the DuckDB oracle text always keeps the plain
@@ -87,7 +94,7 @@ def clustered_view(
         stats = _source_stats(sf_dir, table)
         if stats is None or stats[0] < _MIN_MIRROR_ROWS:
             return table
-        n = max(32, stats[1] // (256 << 20))
+        n = n_buckets or _n_buckets(stats[1])
         family = f"ccs_bkt_{table}_{key}_{source_key(sf_dir)}"
         sig = content_signature(f"bkt:v2:{n}", sf_dir, _table_files(sf_dir, table))
         name = f"{family}_{sig}"
@@ -135,17 +142,25 @@ def clustered_views(
     every (table, key) in ``specs``, or None if ANY table is ineligible
     or fails — checked via footer stats BEFORE any mirror is built, so a
     query that needs co-bucketed sides never pays for a build it cannot
-    use (e.g. lineitem qualifying while orders is below threshold)."""
+    use (e.g. lineitem qualifying while orders is below threshold).
+
+    Every mirror of the call gets the bucket count of its largest
+    source: two mirrors joined on their key plan no Exchange only when
+    their counts are equal. Each adopter pairs a family with one partner
+    only, so no two counts of one family evict each other."""
     try:
+        sizes = []
         for table, _key in specs:
             if os.environ.get("SPARK_GRAFT_NO_BUCKETED", "") == "1":
                 return None
             stats = _source_stats(sf_dir, table)
             if stats is None or stats[0] < _MIN_MIRROR_ROWS:
                 return None
+            sizes.append(stats[1])
+        n = _n_buckets(max(sizes))
         out = {}
         for table, key in specs:
-            name = clustered_view(spark, sf_dir, table, key)
+            name = clustered_view(spark, sf_dir, table, key, n)
             if name == table:
                 return None
             out[table] = name

@@ -118,6 +118,7 @@ from cuny_courses_spark.lakeformat import (
     resolve_list,
     stage_snapshot,
 )
+from cuny_courses_spark.sources.bucket_rewrite import live_row_groups
 
 _EMIT_CHUNK = 1 << 16  # rows per yielded RecordBatch (bounded transfer)
 
@@ -201,41 +202,15 @@ def _schema_struct(doc: dict):
 
 def _load_side(pairs, target, key: str):
     """One partition side as a pyarrow Table in the ``target`` schema:
-    parquet decode, per-file DV keys subtracted with a vectorized
-    ``is_in`` filter. Schema evolution: a file written before an
-    additive widen lacks the newer columns — read the intersection and
-    null-fill the rest, exactly as the lakehouse's manifest-schema read
-    path does (a column can't exist in data that predates it)."""
+    the live rows of each ``(file, DV paths)`` pair, read through the
+    lakehouse rewrite kernel's reader (``bucket_rewrite.live_row_groups``:
+    per-file DV keys subtracted with one vectorized filter; columns a
+    file predates read as null, exactly as the lakehouse's
+    manifest-schema read path does)."""
     import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    tabs = []
-    for path, dvs in pairs:
-        dead_chunks: list = []
-        for dv in dvs:
-            dead_chunks.extend(pq.read_table(dv).column(0).chunks)
-        have = set(pq.read_schema(path).names)
-        t = pq.read_table(
-            path, columns=[f.name for f in target if f.name in have]
-        )
-        n = t.num_rows
-        cols = {
-            f.name: t.column(f.name) if f.name in have else pa.nulls(n, f.type)
-            for f in target
-        }
-        t = pa.table(cols).cast(target)
-        if dead_chunks:
-            dead = pa.concat_arrays(
-                [c.cast(target.field(key).type) for c in dead_chunks]
-            )
-            t = t.filter(
-                pc.invert(pc.is_in(t.column(key), value_set=dead))
-            )
-        tabs.append(t)
-    if not tabs:
-        return target.empty_table()
-    return pa.concat_tables(tabs)
+    tabs = [t for path, dvs in pairs for t in live_row_groups(path, dvs, target, key)]
+    return pa.concat_tables(tabs) if tabs else target.empty_table()
 
 
 def _changed_mask(both, val_cols: list[str]):

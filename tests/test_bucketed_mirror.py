@@ -376,3 +376,33 @@ def test_checkpoint_probe_skipped_when_bound_is_large(spark, monkeypatch):
     assert "ExistingRDD" not in plan
     assert "ShuffledHashJoin" in plan
     assert _rows(df) == expected
+
+
+def test_co_bucketed_mirrors_share_the_largest_sources_count(
+    spark, own_warehouse, monkeypatch
+):
+    """Once one source of a co-bucketed pair is large enough to size
+    more than the 32-bucket floor (lineitem at 9 GB: 36 buckets), both
+    mirrors of the call take that count, so q21's order-key join still
+    plans no Exchange on the key."""
+    from cuny_courses_spark.operators.tpch_sql import q_sql_q21_waiting_supplier
+    from cuny_courses_spark.sources import bucketed
+
+    real = bucketed._source_stats
+
+    def stats(sf_dir, table):
+        got = real(sf_dir, table)
+        return (got[0], 9 << 30) if table == "lineitem" and got else got
+
+    monkeypatch.setattr(bucketed, "_source_stats", stats)
+    df = q_sql_q21_waiting_supplier(spark, SF_DIR)
+    df.collect()
+    counts = {
+        t.name.split("_")[2]: spark.sql(f"DESCRIBE TABLE EXTENDED {t.name}")
+        .filter("col_name = 'Num Buckets'").collect()[0]["data_type"]
+        for t in spark.catalog.listTables() if t.name.startswith("ccs_bkt_")
+    }
+    assert counts == {"orders": "36", "lineitem": "36"}, counts
+    plan = _plan(spark, df)
+    assert "Exchange hashpartitioning(l_orderkey" not in plan
+    assert "Exchange hashpartitioning(o_orderkey" not in plan

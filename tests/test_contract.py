@@ -204,3 +204,33 @@ def test_retired_bucketing_names_are_gone():
         if n in p.read_text()
     )
     assert hits == [], hits
+
+
+def test_bucket_rewrite_kernel_has_two_callers_and_one_dv_filter():
+    """Layout-keeping rewrites have one kernel: the per-bucket
+    ``bucket_rewrite.rewrite_bucket`` runs only inside the kernel job
+    ``rewrite_buckets``, which only ``_cow_merge`` (both merge verbs) and
+    ``_rewrite_files`` (both OPTIMIZE verbs) launch. The Arrow key filter
+    that applies deletion vectors is defined once, in that module, and
+    lakefeed's bucket diff reads its sides through the kernel's reader."""
+    callers, definers = {}, {}
+    for path, text, calls in _package_calls():
+        for name in ("drop_keys", "live_row_groups", "rewrite_bucket", "rewrite_buckets"):
+            if f"def {name}(" in text:
+                definers.setdefault(name, set()).add(path)
+        for fn, name in calls:
+            if name in ("rewrite_bucket", "rewrite_buckets", "live_row_groups", "is_in"):
+                callers.setdefault(name, set()).add((path, fn))
+    assert all(d == {"sources/bucket_rewrite.py"} for d in definers.values()), definers
+    assert len(definers) == 4, definers
+    assert callers["rewrite_bucket"] == {("sources/bucket_rewrite.py", "task")}
+    assert callers["rewrite_buckets"] == {
+        ("operators/lakehouse.py", "_cow_merge"),
+        ("operators/lakehouse.py", "_rewrite_files"),
+    }
+    assert ("sources/lakefeed.py", "_load_side") in callers["live_row_groups"]
+    # the sink's change-type mask is the one other Arrow membership test
+    assert callers["is_in"] == {
+        ("sources/bucket_rewrite.py", "drop_keys"),
+        ("sources/lakefeed.py", "write"),
+    }, callers["is_in"]

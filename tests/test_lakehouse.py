@@ -134,7 +134,7 @@ def test_stats_prune_reads_fewer_files_same_answer(spark, tmp_path):
     width = mx // 16 + 1
     lh.snapshot_write(
         o, table_dir, key="k", version=1,
-        bucket_col=F.expr(f"CAST(k DIV {width} AS INT)"),
+        bucket_expr=f"CAST(k DIV {width} AS INT)",
     )
     lo, hi = 3 * width, 5 * width + width // 2
     sel, total = lh.prune_files(table_dir, 1, lo, hi)
@@ -3412,3 +3412,366 @@ def test_change_feed_keeps_nan_rows_unchanged(spark, tmp_path):
     assert {r[:-1] for r in lf.feed_rows(rdr, parts)} == want
     got = lh.incremental_diff(spark, table_dir, 1, 2, key="k").collect()
     assert {tuple(r) for r in got} == want
+
+
+# -- bucket-local copy-on-write ----------------------------------------------
+#
+# Each history below runs the CoW verbs (merge_upsert, merge_full_sync,
+# optimize_compact) on a small table and keeps a Python model of every
+# version. ``_check_history`` then holds the table to the model: every
+# snapshot, every one-commit change feed, and the manifest's file layout
+# and key stats. The same checks pass on the Spark exchange-and-writer
+# form of those verbs, so they pin the bucket-local kernel to it.
+
+
+class _Model:
+    """Applies commits to a table and to ``{key: row dict}`` per version,
+    recording each CoW commit's hot bucket set."""
+
+    def __init__(self, spark, table_dir, key, bucket, rows, ddl, **write):
+        self.spark, self.dir, self.key, self.bucket = spark, table_dir, key, bucket
+        self.ddl = ddl
+        lh.snapshot_write(spark.createDataFrame(rows, ddl), table_dir, key=key, **write)
+        names = [f.split()[0] for f in ddl.split(",")]
+        self.versions = {1: {r[0]: dict(zip(names, r)) for r in rows}}
+        self.hot = {}  # version -> hot buckets of a CoW commit
+
+    @property
+    def head(self):
+        return max(self.versions)
+
+    def _next(self, state, hot=None):
+        v = lh.latest_version(self.dir)
+        assert v == self.head + 1
+        self.versions[v] = state
+        if hot is not None:
+            self.hot[v] = hot
+
+    def _frame(self, rows, ddl):
+        return self.spark.createDataFrame(rows, ddl)
+
+    def upsert(self, rows, ddl, delete_col=None):
+        names = [f.split()[0] for f in ddl.split(",")]
+        lh.merge_upsert(self.spark, self.dir, self.head, self._frame(rows, ddl),
+                        key=self.key, delete_col=delete_col)
+        state = dict(self.versions[self.head])
+        for r in rows:
+            d = dict(zip(names, r))
+            state.pop(d[self.key], None)
+            if d.pop(delete_col, False) is False:
+                state[d[self.key]] = d
+        self._next(state, {self.bucket(r[0]) for r in rows})
+
+    def sync(self, rows, ddl, scope, in_scope):
+        names = [f.split()[0] for f in ddl.split(",")]
+        lh.merge_full_sync(self.spark, self.dir, self.head, self._frame(rows, ddl),
+                           key=self.key, scope=scope)
+        old = self.versions[self.head]
+        gone = {k for k, d in old.items() if in_scope(d)}
+        state = {k: d for k, d in old.items() if k not in gone}
+        state.update({r[0]: dict(zip(names, r)) for r in rows})
+        self._next(state, {self.bucket(k) for k in gone} | {self.bucket(r[0]) for r in rows})
+
+    def delete(self, keys):
+        lh.delete_merge_on_read(
+            self.spark, self.dir, self.head,
+            self._frame([(k,) for k in keys], f"{self.key} long"), self.key,
+        )
+        self._next({k: d for k, d in self.versions[self.head].items() if k not in keys})
+
+    def append(self, rows, ddl):
+        names = [f.split()[0] for f in ddl.split(",")]
+        lh.append_snapshot(self.dir, self.head, self._frame(rows, ddl), self.key)
+        state = dict(self.versions[self.head])
+        state.update({r[0]: dict(zip(names, r)) for r in rows})
+        self._next(state)
+
+    def optimize(self):
+        doc = lh._read_manifest_doc(self.dir, self.head)
+        by_b = {}
+        for p in doc["files"]:
+            by_b.setdefault(lh._bucket_of_path(p), []).append(p)
+        hot = {b for b, ps in by_b.items() if len(ps) > 1 or str(b) in (doc.get("dvs") or {})}
+        lh.optimize_compact(self.spark, self.dir, self.head, self.key)
+        self._next(dict(self.versions[self.head]), hot)
+
+
+def _check_history(m: _Model, phys_key: str | None = None):
+    """Hold every version of ``m``'s table to its model (see above)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    pk = phys_key or m.key
+    for v, state in m.versions.items():
+        df = lh.snapshot_read(m.spark, m.dir, v)
+        got = {r[m.key]: r.asDict() for r in df.collect()}
+        want = {k: {c: d.get(c) for c in df.columns} for k, d in state.items()}
+        assert got == want, f"v{v}"
+        doc = lh._read_manifest_doc(m.dir, v)
+        by_b = {}
+        for p in doc["files"]:
+            by_b.setdefault(lh._bucket_of_path(p), []).append(p)
+            keys = pq.read_table(p, columns=[pk]).column(0)
+            st = doc["stats"][p]
+            assert (st["rows"], st["min"], st["max"]) == (
+                len(keys), pc.min(keys).as_py(), pc.max(keys).as_py()
+            ), p
+        if v in m.hot:
+            parent = lh._read_manifest_doc(m.dir, v - 1)
+            live = {m.bucket(k) for k in state}
+            for b in m.hot[v]:
+                assert len(by_b.get(b, [])) == (b in live), f"v{v} bucket {b}"
+            cold = {p for p in parent["files"] if lh._bucket_of_path(p) not in m.hot[v]}
+            assert cold == {p for b, ps in by_b.items() if b not in m.hot[v] for p in ps}
+        if v - 1 not in m.versions:
+            continue
+        old = m.versions[v - 1]
+        cols = lh.snapshot_read(m.spark, m.dir, v - 1).columns
+        want_diff = set()
+        for k in old.keys() | state.keys():
+            o = tuple(old[k].get(c) for c in cols) if k in old else None
+            n = tuple(state[k].get(c) for c in cols) if k in state else None
+            if o != n:
+                want_diff.add(n + ("insert",) if o is None else
+                              o + ("delete",) if n is None else
+                              n + ("update_postimage",))
+        got_diff = lh.incremental_diff(m.spark, m.dir, v - 1, v, key=m.key).collect()
+        assert {tuple(r) for r in got_diff} == want_diff, f"diff v{v}"
+
+
+_KV = "k long, v long, s string"
+
+
+@pytest.mark.parametrize("layout", ["hash", "range"])
+def test_cow_verbs_match_model_with_dvs_in_hot_buckets(spark, tmp_path, layout):
+    """Upserts with a delete clause, a DV delete into the buckets the
+    next upsert rewrites, an append and OPTIMIZE, on the hash layout and
+    on a recorded range ``bucket_expr``."""
+    if layout == "hash":
+        bucket, write = (lambda k: k % 16), {}
+    else:
+        bucket, write = (lambda k: k // 25), {"bucket_expr": "CAST(k DIV 25 AS INT)"}
+    m = _Model(spark, str(tmp_path / layout), "k", bucket,
+               [(k, k * 3, f"s{k}") for k in range(200)], _KV, **write)
+    m.delete([3, 19, 35, 60, 61])
+    m.upsert([(19, -1, "u", False), (35, -2, "u", False), (51, 0, None, True),
+              (60, -3, "u", False), (250, 5, "new", False)],
+             _KV + ", _del boolean", delete_col="_del")
+    m.append([(300 + k, k, "a") for k in range(0, 48, 3)], _KV)
+    m.delete([301, 4])
+    m.optimize()
+    m.upsert([(k, k, "w") for k in range(0, 400, 7)], _KV)
+    _check_history(m)
+
+
+def test_cow_verbs_match_model_under_schema_evolution(spark, tmp_path):
+    """A changeset that adds a column widens every rewritten file; one
+    that omits a column writes nulls there."""
+    m = _Model(spark, str(tmp_path / "evolve"), "k", lambda k: k % 16,
+               [(k, k, f"s{k}") for k in range(100)], _KV)
+    m.upsert([(k, -k, "x", k * 10) for k in range(0, 100, 9)], _KV + ", w long")
+    m.upsert([(k, 7) for k in range(1, 100, 11)], "k long, v long")
+    m.append([(500, 1, "a", 2)], _KV + ", w long")
+    m.optimize()
+    _check_history(m)
+
+
+def test_cow_verbs_match_model_on_mapped_generated_constrained_table(spark, tmp_path):
+    """A renamed key (column mapping), a generated column and a CHECK
+    constraint all hold through the bucket-local rewrite."""
+    table_dir = str(tmp_path / "mapped")
+    m = _Model(spark, table_dir, "k", lambda k: k % 16,
+               [(k, k, k + 1) for k in range(80)], "k long, v long, g long",
+               constraints=["v >= -100"], extra_props={"generated": {"g": "k + 1"}})
+    lh.rename_column(table_dir, 1, "k", "id")
+    m.key = "id"
+    m.versions[2] = {k: {"id": k, "v": d["v"], "g": d["g"]} for k, d in m.versions[1].items()}
+    del m.versions[1]  # the rename's diff crosses a column-mapping boundary
+    m.upsert([(k, -k) for k in range(0, 80, 6)] + [(90, 9)], "id long, v long")
+    for d in m.versions[m.head].values():
+        d.setdefault("g", d["id"] + 1)
+    with pytest.raises(lh.ConstraintViolation):
+        lh.merge_upsert(spark, table_dir, m.head,
+                        spark.createDataFrame([(1, -101)], "id long, v long"), key="id")
+    m.optimize()
+    assert lh._read_manifest_doc(table_dir, m.head)["props"]["colmap"] == {"id": "k"}
+    _check_history(m, phys_key="k")
+
+
+def test_cow_verbs_match_model_full_sync_and_emptied_bucket(spark, tmp_path):
+    """A full sync over part of a range-laid table deletes every row of
+    bucket 2 (which then has no file), replaces part of bucket 0 and
+    inserts into a new bucket; a timestamp column with nulls round-trips
+    through the rewrite."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    t0 = datetime.datetime(2020, 1, 1, 12, 30, 15, 123456)
+    ts = lambda k: None if k % 4 == 0 else t0 + datetime.timedelta(minutes=k)  # noqa: E731
+    ddl = "k long, v long, ts timestamp"
+    m = _Model(spark, str(tmp_path / "sync"), "k", lambda k: k // 10,
+               [(k, None if k % 3 == 0 else k, ts(k)) for k in range(40)], ddl,
+               bucket_expr="CAST(k DIV 10 AS INT)")
+    m.sync([(k, 100 + k, None) for k in (2, 3, 5)] + [(55, 1, t0)], ddl,
+           scope=(F.col("k") < 10) | F.col("k").between(20, 29),
+           in_scope=lambda d: d["k"] < 10 or 20 <= d["k"] <= 29)
+    assert not [p for p in lh.read_manifest(m.dir, 2) if "_b=2/" in p]
+    m.upsert([(11, None, None), (12, 5, t0)], ddl)
+    m.delete([31])
+    m.optimize()
+    _check_history(m)
+
+
+def test_cow_merge_kernel_stage_runs_min_hot_cores_tasks(spark, tmp_path):
+    """An upsert touching all 16 buckets rewrites them in one stage of
+    min(16, cores) tasks: an explicit repartition count that adaptive
+    execution cannot coalesce into one task."""
+    from pyspark.sql import functions as F
+
+    table_dir = str(tmp_path / "tasks")
+    base = spark.range(640).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    lh.snapshot_write(base, table_dir, key="k")
+    sc = spark.sparkContext
+    sc.setJobGroup("cow-kernel-tasks", "merge")
+    try:
+        lh.merge_upsert(spark, table_dir, 1, base.filter(F.col("k") % 3 == 0)
+                        .select("k", (F.col("v") + 1).alias("v")), key="k")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup("cow-kernel-tasks"))
+    last = tracker.getJobInfo(jobs[-1])
+    tasks = [tracker.getStageInfo(s).numTasks for s in last.stageIds
+             if tracker.getStageInfo(s) is not None]
+    assert tasks[-1] == min(16, sc.defaultParallelism), tasks
+
+
+def test_lost_cow_publish_race_removes_only_its_staging(spark, tmp_path):
+    """A merge and an OPTIMIZE that lose the publish race to a merge of
+    the same buckets each delete their own staging dir and nothing
+    else."""
+    from pyspark.sql import functions as F
+
+    table_dir = str(tmp_path / "race")
+    base = spark.range(200).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    lh.snapshot_write(base, table_dir, key="k")
+    lh.append_snapshot(table_dir, 1, spark.range(1000, 1032).select(
+        F.col("id").alias("k"), F.col("id").alias("v")), "k")
+    upd = base.select("k", (F.col("v") * 2).alias("v"))
+    lh.merge_upsert(spark, table_dir, 2, upd, key="k")  # the winner, v3
+    data = os.path.join(table_dir, "data")
+    before = sorted(os.listdir(data))
+    want = sorted(lh.snapshot_read(spark, table_dir, 3).collect())
+    with pytest.raises(FileExistsError):
+        lh.merge_upsert(spark, table_dir, 2, upd, key="k")
+    with pytest.raises(FileExistsError):
+        lh.optimize_compact(spark, table_dir, 2, key="k")
+    assert sorted(os.listdir(data)) == before
+    assert all(os.path.exists(p) for p in lh.read_manifest(table_dir, 3))
+    assert sorted(lh.snapshot_read(spark, table_dir, 3).collect()) == want
+
+
+def test_range_layout_is_recorded_so_key_verbs_keep_keys_unique(spark, tmp_path):
+    """A non-default layout is given only as SQL text and recorded, so
+    later writers place rows and DVs where the files hold their keys: an
+    upsert of k=5 leaves one row and a DV delete of k=7 removes it. (An
+    unrecorded ``bucket_col`` layout made the next writer hash the key
+    instead: the upsert left [(5, 1), (5, 2)] and the delete missed.)"""
+    from pyspark.sql import functions as F
+
+    rows = spark.createDataFrame([(k, 1) for k in range(40)], "k long, v long")
+    with pytest.raises(TypeError):
+        lh.snapshot_write(rows, str(tmp_path / "col"), key="k",
+                          bucket_col=F.expr("CAST(k DIV 10 AS INT)"))
+    table_dir = str(tmp_path / "rng")
+    lh.snapshot_write(rows, table_dir, key="k", bucket_expr="CAST(k DIV 10 AS INT)")
+    lh.merge_upsert(spark, table_dir, 1,
+                    spark.createDataFrame([(5, 2)], "k long, v long"), key="k")
+    assert [tuple(r) for r in lh.snapshot_read(spark, table_dir)
+            .filter("k = 5").collect()] == [(5, 2)]
+    lh.delete_merge_on_read(spark, table_dir, 2,
+                            spark.createDataFrame([(7,)], "k long"), "k")
+    assert lh.snapshot_read(spark, table_dir).filter("k = 7").count() == 0
+    assert lh.snapshot_read(spark, table_dir).count() == 39
+
+
+@pytest.mark.parametrize("verb", ["merge_upsert", "merge_full_sync"])
+def test_null_key_changeset_is_refused_and_leaves_nothing(spark, tmp_path, verb):
+    """A changeset row with a null key has no layout bucket: the merge
+    refuses it, commits nothing and removes its staged files (a file
+    under ``_b=None`` would break every later bucket lookup)."""
+    from pyspark.sql import functions as F
+
+    table_dir = str(tmp_path / "nullkey")
+    lh.snapshot_write(spark.createDataFrame([(k, k) for k in range(20)], "k long, v long"),
+                      table_dir, key="k")
+    data = os.path.join(table_dir, "data")
+    before = sorted(os.listdir(data))
+    rows = spark.createDataFrame([(None, 1), (3, 9)], "k long, v long")
+    kw = {"scope": F.col("k") < 5} if verb == "merge_full_sync" else {}
+    with pytest.raises(ValueError, match="null key"):
+        getattr(lh, verb)(spark, table_dir, 1, rows, key="k", **kw)
+    assert lh.latest_version(table_dir) == 1
+    assert sorted(os.listdir(data)) == before
+
+
+@pytest.mark.parametrize("name", ["q_lake_stats_prune", "q_lake_zorder_prune"])
+def test_layout_query_tables_take_key_verbs_soundly(spark, name):
+    """The registered layout queries give their range / Z-order layout
+    as recorded ``bucket_expr`` text. On the range table an upsert of a
+    stored key leaves one row and a DV delete removes its row; the
+    Z-order table is refused by both key verbs. (Given as an unrecorded
+    Column, the upsert left the key twice and the delete missed.) Each
+    query rebuilds its table, so these commits end at its next run."""
+    from pyspark.sql import functions as F
+
+    from cuny_courses_spark.operators.scans import _io_dir
+
+    _QS[name](spark, SF_DIR).collect()
+    sub = {"q_lake_stats_prune": "lake_orders_prune",
+           "q_lake_zorder_prune": "lake_zorder"}[name]
+    table_dir = _io_dir(SF_DIR, sub)
+    head = lh.snapshot_read(spark, table_dir)
+    # the two largest keys: the last range bucket, other hash buckets
+    top, nxt = [r.k for r in head.orderBy(F.desc("k")).limit(2).collect()]
+    upd = head.filter(F.col("k") == top).withColumn("cents", F.col("cents") + 1)
+    gone = spark.createDataFrame([(nxt,)], "k long")
+    if name == "q_lake_zorder_prune":
+        for verb in (lambda: lh.merge_upsert(spark, table_dir, 1, upd, key="k"),
+                     lambda: lh.delete_merge_on_read(spark, table_dir, 1, gone, "k")):
+            with pytest.raises(ValueError, match="reads columns other than the key"):
+                verb()
+        assert lh.latest_version(table_dir) == 1
+        return
+    n = head.count()
+    lh.merge_upsert(spark, table_dir, 1, upd, key="k")
+    lh.delete_merge_on_read(spark, table_dir, 2, gone, "k")
+    after = lh.snapshot_read(spark, table_dir)
+    assert after.filter(F.col("k") == top).count() == 1
+    assert after.filter(F.col("k") == nxt).count() == 0
+    assert after.count() == n - 1
+
+
+@pytest.mark.parametrize("verb", ["merge_upsert", "delete_merge_on_read"])
+def test_key_verbs_refuse_z_order_layout(spark, tmp_path, verb):
+    """On a layout that reads a column other than the key (a Morton
+    cell of (k, c)), a key alone does not name its row's bucket: each
+    key verb refuses and commits nothing."""
+    table_dir = str(tmp_path / "z")
+    rows = [(k, k % 7) for k in range(40)]
+    lh.snapshot_write(
+        spark.createDataFrame(rows, "k long, c long"), table_dir, key="k",
+        bucket_expr="CAST(least(3, k DIV 10) % 2 + 2 * (least(3, c DIV 2) % 2) AS INT)",
+    )
+    if verb == "merge_upsert":
+        call = lambda: lh.merge_upsert(  # noqa: E731
+            spark, table_dir, 1,
+            spark.createDataFrame([(5, 6)], "k long, c long"), key="k")
+    else:
+        call = lambda: lh.delete_merge_on_read(  # noqa: E731
+            spark, table_dir, 1, spark.createDataFrame([(5,)], "k long"), "k")
+    with pytest.raises(ValueError, match="reads columns other than the key"):
+        call()
+    assert lh.latest_version(table_dir) == 1
+    assert sorted(tuple(r) for r in lh.snapshot_read(spark, table_dir).collect()) == rows
